@@ -134,48 +134,19 @@ def main() -> None:
     _pin_to_fast_cores(cpus)
     sys.path.insert(0, REPO)
 
-    import __spark_entry__ as entry
     from codem_spark.session import get_spark
+    from perfbench.queries import bench_queries
 
     spark = get_spark(app_name="codem_spark_bench", cpus=cpus, shuffle_partitions=2 * cpus)
-
-    qs = dict(entry.queries())
 
     # The CONTRACT versions of the sketch/cluster queries carry O(n^2)
     # inline exact verifiers (cross-join hamming / cap=None banding /
     # driver union-find) so the driver can value-check them at sf0.01. A
     # benchmark must time the SCALE path — the guarded banded operators a
-    # 10^12-row run would use — so the bench overrides below time those
-    # directly (same operators, production config). This divergence is
-    # recorded in the output's "overridden_queries" key (ADVICE r3).
-    def bench_minhash(spark, sf_dir):
-        from codem_spark.operators import dedup
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        cands = dedup.minhash_lsh_candidates(docs, num_hashes=64, bands=16)
-        return dedup.jaccard_verify(cands, docs, threshold=0.7)
-
-    def bench_simhash(spark, sf_dir):
-        from codem_spark.operators import dedup
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return dedup.simhash_candidates(docs, band_bits=16, hamming_max=3)
-
-    def bench_cluster(spark, sf_dir):
-        # scale path: distributed union-find over lineitem-derived points
-        # (the contract entry's driver-side exact verifier is sf0.01-only)
-        from codem_spark import synth
-        from codem_spark.operators import cluster as cluster_mod
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        pts = synth.points_from_lineitem(li)
-        return cluster_mod.euclidean_cluster(
-            pts, synth.DEFAULT_EXTENT, tolerance=120.0, min_points=10
-        )
-
-    qs["minhash_lsh"] = bench_minhash
-    qs["simhash"] = bench_simhash
-    qs["euclidean_cluster"] = bench_cluster
+    # 10^12-row run would use — so perfbench.queries.SCALE_OVERRIDES times
+    # those directly (same operators, production config). This divergence
+    # is recorded in the output's "overridden_queries" key.
+    qs = bench_queries()
 
     # headline set: the scale-relevant operators (flagship join first);
     # r4 adds the heavy ops VERDICT item 6 called out

@@ -20,25 +20,12 @@ from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from codem_spark.io import tables
 
 
 def _stage_manifest_path(run_dir: str, stage: str) -> str:
     return os.path.join(run_dir, f"stage_{stage}.json")
-
-
-def partition_metrics(df: DataFrame) -> list[dict[str, Any]]:
-    """Per-partition row counts via a groupBy job. NOT used by run_stage
-    (which derives the same metric from the written parquet footers at zero
-    extra cost) — kept as a standalone probe for un-materialized frames."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition"))
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    )
-    return [{"partition": r["partition"], "rows": r["rows"]} for r in rows]
 
 
 def stage_complete(run_dir: str, stage: str, input_fingerprint: str | None = None) -> bool:

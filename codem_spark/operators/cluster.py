@@ -7,22 +7,31 @@ KD-tree; at 10^12 rows the engine instead:
 
 1. tiles points by cell (cell edge >= tolerance) and runs a vectorized
    union-find *inside* each tile (applyInPandas kernel — grid-hash buckets,
-   pairwise distance checks only between adjacent sub-buckets);
-2. finds cross-tile edges with the tile+halo kNN machinery (pairs within
-   tolerance whose members live in different tiles);
-3. contracts the graph to LABEL-level edges (one row per adjacent pair of
-   tile-local components — orders of magnitude fewer than points) and
-   resolves components on the contracted graph: exactly on the driver via
-   the vectorized hash-to-min when the edge count is small (capacity
-   switch, like the reference's brute-force->FLANN descriptor-match
-   switch), else by distributed min-label propagation with group
-   shortcutting (O(log diameter) rounds over label rows, the standard
-   Spark connected-components-without-GraphX pattern); the resulting root
-   map joins back to points in ONE pass (broadcast when driver-resolved).
+   pairwise distance checks only between adjacent sub-buckets). Each row
+   leaves the kernel with its tile-local label (min pid of its tile
+   component), a border-band flag, and — on one representative row per
+   component — the component size;
+2. takes ONE bounded collect of the rows the rest needs (border rows and
+   size representatives, ``limit(driver_max_rows + 1)``). That probe picks
+   the route, once, like the reference's single brute-force -> FLANN
+   descriptor-match switch:
+
+   - driver route (probe within the cap): the probe IS the data. Cross-tile
+     LABEL edges come from the grid-hash kernel in numpy, components from
+     the vectorized hash-to-min over the contracted label graph, sizes from
+     a bincount; the resulting (label, cluster_id) map joins back to points
+     in one broadcast join;
+   - distributed route (probe over the cap): cross-tile label edges from
+     the tile+halo radius join, components by min-label propagation with
+     group shortcutting (O(log diameter) rounds over label rows, the
+     standard Spark connected-components-without-GraphX pattern), sizes by
+     a label-level groupBy, then the same point join. Nothing is collected.
 
 Labels are deterministic: a cluster's id is the minimum point id it
 contains; singleton/small clusters get id -1 (the reference's convention:
-ClusterID -1/0 are culled, preprocess.py:228-231).
+ClusterID -1/0 are culled, preprocess.py:228-231). Repeated pids are
+allowed; components that share a min pid share a label and are counted
+as one cluster.
 """
 
 from __future__ import annotations
@@ -85,13 +94,13 @@ def _tile_union_find(tolerance: float):
         pids64 = pids.astype(np.int64)
         comp_min = np.full(n, np.iinfo(np.int64).max)
         np.minimum.at(comp_min, roots, pids64)
-        # label sizes are FULLY known here — labels are tile-local (min pid
-        # of the tile component), so the global per-label count is this
-        # component's size. It is emitted on exactly ONE representative row
-        # per component (first row carrying the min pid — input pids may
-        # repeat) and 0 elsewhere, so the caller reads the (label, n) table
-        # with a narrow lab_n > 0 filter instead of a groupBy shuffle, and
-        # the final broadcast join stays one-row-per-label by construction.
+        # label sizes are known here — labels are tile-local (min pid of the
+        # tile component), so a label's global count is the sum of its
+        # components' sizes. Each size is emitted on exactly ONE
+        # representative row per component (first row carrying the min pid)
+        # and 0 elsewhere. Two components that share a min pid (repeated
+        # input pids) emit two representatives with one label, so the
+        # caller sums lab_n per label.
         comp_n = np.bincount(roots, minlength=n)
         cand = np.flatnonzero(pids64 == comp_min[roots])
         rep_idx = np.full(n, n, dtype=np.int64)
@@ -114,29 +123,173 @@ def _tile_union_find(tolerance: float):
     return kernel
 
 
+
+
+def _driver_label_edges(bpts: np.ndarray, blab: np.ndarray, tol: float) -> np.ndarray:
+    """Unique cross-label edges among border rows, as sorted (min, max)
+    label pairs of shape (E, 2).
+
+    Any within-tolerance pair in the SAME tile is same-label by construction
+    (the tile kernel unioned it), so keeping pairs with different labels
+    yields exactly the cross-tile label edge set. exclude_same_group rejects
+    same-label candidates by an integer compare before the 3-D distance.
+    Large inputs are split into left-slices across threads (numpy releases
+    the GIL on the bulk ops; l_offset keeps the unordered mask exact per
+    slice). Each slice deduplicates its pairs before the concatenation, so
+    the driver holds unique label pairs, not point pairs."""
+    nb = len(bpts)
+    rix = np.arange(nb)
+
+    def edge_slice(s: int, e: int) -> np.ndarray:
+        bi, bj, _d, _rk = knn.grid_topk(
+            bpts[s:e],
+            bpts,
+            rix,
+            tol,
+            k=None,
+            unordered_pairs=True,
+            exclude_same_group=(blab[s:e], blab),
+            l_offset=s,
+        )
+        a, b = blab[bi + s], blab[bj]
+        return np.unique(np.stack([np.minimum(a, b), np.maximum(a, b)], axis=1), axis=0)
+
+    nthr = min(8, max(1, nb // 65536))
+    if nthr <= 1:
+        return edge_slice(0, nb)
+    from concurrent.futures import ThreadPoolExecutor
+
+    bounds = np.linspace(0, nb, nthr + 1).astype(np.int64)
+    with ThreadPoolExecutor(nthr) as pool:
+        parts = list(
+            pool.map(lambda i: edge_slice(int(bounds[i]), int(bounds[i + 1])), range(nthr))
+        )
+    return np.unique(np.concatenate(parts), axis=0)
+
+
+def _driver_label_map(probe: pd.DataFrame, tol: float, min_points: int) -> pd.DataFrame:
+    """(label, cluster_id) for every label, from the probe rows alone."""
+    lab = probe["label"].to_numpy(np.int64)
+    lab_n = probe["lab_n"].to_numpy(np.int64)
+    rep = lab_n > 0
+    # sorted unique labels; summing per label folds components that share
+    # a min pid into one size
+    labs, inv = np.unique(lab[rep], return_inverse=True)
+    sizes = np.bincount(inv, weights=lab_n[rep], minlength=len(labs))
+    border = probe["is_border"].to_numpy(bool)
+    edges = _driver_label_edges(
+        probe.loc[border, ["x", "y", "z"]].to_numpy(np.float64), lab[border], tol
+    )
+    # every border label has a representative row, so searchsorted is exact
+    roots = components_np(
+        len(labs), np.searchsorted(labs, edges[:, 0]), np.searchsorted(labs, edges[:, 1])
+    )
+    # labels are sorted, so the min index of a component is its min label
+    tot = np.bincount(roots, weights=sizes, minlength=len(labs))
+    cluster_id = np.where(tot[roots] >= min_points, labs[roots], np.int64(-1))
+    return pd.DataFrame({"label": labs, "cluster_id": cluster_id})
+
+
+def _distributed_label_map(
+    labeled: DataFrame, extent: Extent, tol: float, level: int, min_points: int
+) -> DataFrame:
+    """(label, cluster_id) for every label, without a driver collect."""
+    border = labeled.filter(F.col("is_border")).select(
+        F.col("label").alias("lab"), "x", "y", "z"
+    )
+    # cross_tile_only: intra-tile connectivity is already resolved by the
+    # kernel. unordered_ids: each cross-tile pair comes in both orientations
+    # (once per endpoint's home tile), and the kernel-side lab < n_lab mask
+    # keeps one; the loop below symmetrizes.
+    ledges = (
+        knn.radius_join(
+            border,
+            border,
+            extent,
+            radius=tol,
+            lid="lab",
+            rid="lab",
+            level=level,
+            cross_tile_only=True,
+            unordered_ids=True,
+        )
+        .select(F.col("lab").alias("la"), F.col("n_lab").alias("lb"))
+        .distinct()
+    )
+    sym = ledges.unionByName(
+        ledges.select(F.col("lb").alias("la"), F.col("la").alias("lb"))
+    ).localCheckpoint(eager=True)
+    rm = (
+        sym.groupBy("la").agg(F.min("lb").alias("root"))
+        .select("la", F.least("la", "root").alias("root"))
+        .localCheckpoint(eager=True)
+    )
+    # Convergence via a monotone scalar: roots only decrease, so the loop
+    # terminates, and fixpoint <=> root-sum unchanged. (A join-based
+    # old-vs-new compare would hit the shared-lineage attribute collapse —
+    # see operators/knn.py — and silently always 'converge'.)
+    prev_sum = rm.agg(F.sum("root")).collect()[0][0]
+    while True:
+        ra = rm.withColumnsRenamed({"la": "a_", "root": "ra"})
+        rb = rm.withColumnsRenamed({"la": "lb", "root": "rb"})
+        prop = (
+            sym.join(ra, sym.la == ra.a_)
+            .join(rb, "lb")
+            .select(F.col("la"), F.least("ra", "rb").alias("nr"))
+            .groupBy("la")
+            .agg(F.min("nr").alias("nr"))
+        )
+        stepped = rm.join(prop, "la", "left").select(
+            "la",
+            F.col("root").alias("old_root"),
+            F.least(F.col("root"), F.coalesce("nr", F.col("root"))).alias("nr"),
+        )
+        gmap = stepped.groupBy("old_root").agg(F.min("nr").alias("gmin"))
+        rm = (
+            stepped.join(gmap, "old_root")
+            .select("la", F.least("nr", "gmin").alias("root"))
+            .localCheckpoint(eager=True)
+        )
+        new_sum = rm.agg(F.sum("root")).collect()[0][0]
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    # summing per label folds components that share a min pid into one size
+    lsize = labeled.filter(F.col("lab_n") > 0).groupBy("label").agg(F.sum("lab_n").alias("n"))
+    labmap = lsize.join(rm.withColumnsRenamed({"la": "label"}), "label", "left").select(
+        "label", F.coalesce("root", "label").alias("root"), "n"
+    )
+    rsize = labmap.groupBy("root").agg(F.sum("n").alias("tot"))
+    return labmap.join(rsize, "root").select(
+        "label",
+        F.when(F.col("tot") >= min_points, F.col("root")).otherwise(F.lit(-1)).alias("cluster_id"),
+    )
+
+
 def euclidean_cluster(
     points: DataFrame,
     extent: Extent,
     tolerance: float = 2.0,
     min_points: int = 30,
-    max_rounds: int = 20,
-    driver_cc_max_edges: int = 1 << 21,
+    driver_max_rows: int = 1 << 21,
 ) -> DataFrame:
     """points(pid, x, y, z) -> (pid, cluster_id); cluster_id = min pid of the
-    cluster, or -1 for clusters smaller than min_points."""
+    cluster, or -1 for clusters smaller than min_points.
+
+    ``driver_max_rows`` caps the one driver collect (border rows plus one
+    size row per tile component); above it the distributed route runs."""
     # The input has exactly ONE data consumer (the tile kernel — border rows
     # and labels all derive from the checkpointed kernel output), so no
     # persist: a cache pass here is a pure extra materialization.
-    # n_points only feeds parallelism and capacity knobs, where a
-    # plan-statistics estimate is enough (an overestimate errs toward more
-    # tiles / the shuffle join, both correct).
+    # n_points only feeds the tile level, where a plan-statistics estimate
+    # is enough (an overestimate errs toward more tiles, still correct).
     from codem_spark.util import approx_row_count
 
     points = points.select("pid", "x", "y", "z")
-    par = points.sparkSession.sparkContext.defaultParallelism
-    n_points = approx_row_count(points)
-    level = knn.auto_level(extent, tolerance, n_points, parallelism=par)
-    tiled = cells.with_cell(points.select("pid", "x", "y", "z"), "x", "y", extent, level)
+    spark = points.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    level = knn.auto_level(extent, tolerance, approx_row_count(points), parallelism=par)
+    tiled = cells.with_cell(points, "x", "y", extent, level)
     # border-band membership is decided BEFORE the kernel (same predicate
     # as cells.border_band) and carried through it, so the labeled frame
     # already knows which rows can participate in cross-tile edges
@@ -148,7 +301,7 @@ def euclidean_cluster(
         (fx <= rtol) | ((F.lit(size) - fx) <= rtol)
         | (fy <= rtol) | ((F.lit(size) - fy) <= rtol)
     )
-    local = (
+    labeled = (
         tiled.withColumn("_border", border_pred)
         .drop("_ix", "_iy")
         .groupBy("cell_id")
@@ -157,242 +310,24 @@ def euclidean_cluster(
             schema="pid long, label long, lab_n long, "
             "x double, y double, z double, is_border boolean",
         )
+        .localCheckpoint(eager=True)
     )
-    labeled = local.localCheckpoint(eager=True)
-    labels = labeled.select("pid", "label")
-    # cross-tile edges ONLY: intra-tile connectivity is already resolved by
-    # the kernel above, so (a) both radius-join sides pre-filter to the
-    # border band (points within tolerance of a tile border — everything
-    # deeper cannot form a cross-tile pair) and (b) the join keeps only
-    # pairs whose endpoints live in different tiles. A dense m-point blob in
-    # a tile interior now contributes ZERO edge rows (was ~m²).
-    # Two-level connected components: contract the point graph to LABEL
-    # edges — the radius join runs on LABELED border rows, so each
-    # within-tolerance cross-tile pair emits its (label_a, label_b) edge
-    # directly. (The previous plan joined the 600k-row label table onto the
-    # edge endpoints — two full-table shuffles to annotate a few thousand
-    # edges, because the cogroup outputs carry no size statistics and never
-    # auto-broadcast.) Distinct label pairs are orders of magnitude fewer
-    # than points, so the iterative part of CC runs on the contracted
-    # graph, never on the 10^12-row point set.
-    border = labeled.filter(F.col("is_border")).select(
-        F.col("label").alias("lab"), "x", "y", "z"
+    # The single route decision: border rows feed the edges, lab_n > 0 rows
+    # the sizes. Within the cap, the probe holds everything the driver
+    # route needs.
+    probe = (
+        labeled.filter(F.col("is_border") | (F.col("lab_n") > 0))
+        .select("label", "lab_n", "x", "y", "z", "is_border")
+        .limit(driver_max_rows + 1)
+        .toPandas()
     )
-    # Capacity switch #1 (the common path): the border band is a thin
-    # fraction of the cloud, so under the probe cap the whole cross-tile
-    # edge computation runs in numpy on the DRIVER with the same grid_topk
-    # kernel the tiles use. Any within-tolerance pair in the SAME tile is
-    # same-label by construction (the tile kernel unioned it), so filtering
-    # driver pairs to label_a != label_b yields exactly the cross-tile label
-    # edge set — replacing a cogroup radius join + distinct shuffle + edge
-    # probe (several driver round-trips of pure plumbing for a few thousand
-    # edges) with one bounded collect. Above the cap, the distributed
-    # radius-join edge path below is unchanged.
-    edges_np = None
-    ledges = None
-    bp = border.limit(driver_cc_max_edges + 1).toPandas()
-    if len(bp) <= driver_cc_max_edges:
-        bpts = bp[["x", "y", "z"]].to_numpy(np.float64)
-        blab = bp["lab"].to_numpy(np.int64)
-        nb = len(bp)
-        rix = np.arange(nb)
-
-        # exclude_same_group: same-label border pairs (the dense within-blob
-        # bulk) are rejected by an integer compare at candidate level —
-        # only genuinely cross-component candidates pay the 3-D distance.
-        # Large border bands are split into left-slices across driver
-        # threads (numpy releases the GIL on the bulk ops; l_offset keeps
-        # the candidate-level unordered mask exact per slice, so the union
-        # of slice outputs IS the single-call pair set).
-        def _edge_slice(s: int, e: int) -> tuple[np.ndarray, np.ndarray]:
-            bi, bj, _d, _rk = knn.grid_topk(
-                bpts[s:e],
-                bpts,
-                rix,
-                tolerance,
-                k=None,
-                unordered_pairs=True,
-                exclude_same_group=(blab[s:e], blab),
-                l_offset=s,
-            )
-            return blab[bi + s], blab[bj]
-
-        nthr = min(8, max(1, nb // 65536))
-        if nthr <= 1:
-            ea_np, eb_np = _edge_slice(0, nb)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            bounds = np.linspace(0, nb, nthr + 1).astype(np.int64)
-            with ThreadPoolExecutor(nthr) as pool:
-                parts = list(
-                    pool.map(
-                        lambda i: _edge_slice(int(bounds[i]), int(bounds[i + 1])),
-                        range(nthr),
-                    )
-                )
-            ea_np = np.concatenate([p[0] for p in parts])
-            eb_np = np.concatenate([p[1] for p in parts])
-        # duplicates are fine: components_np is idempotent over repeated
-        # edges, and the arrays are already in memory
-        edges_np = (ea_np, eb_np)
-    else:
-        # unordered_ids: each cross-tile pair is generated in both
-        # orientations (once per endpoint's home tile) and same-label pairs
-        # carry no connectivity — the kernel-side lab < n_lab mask halves
-        # the rows reaching this distinct(); the driver CC and the
-        # distributed fallback both symmetrize, so one orientation per edge
-        # is sufficient.
-        ledges = (
-            knn.radius_join(
-                border,
-                border,
-                extent,
-                radius=tolerance,
-                lid="lab",
-                rid="lab",
-                level=level,
-                cross_tile_only=True,
-                unordered_ids=True,
-            )
-            .select(F.col("lab").alias("la"), F.col("n_lab").alias("lb"))
-            .distinct()
-        )
-        # Capacity switch #2, like the brute-force->LSH descriptor-match
-        # switch (registration/coarse.py): a contracted graph under ~2^21
-        # edges is resolved exactly on the driver with the vectorized
-        # hash-to-min (components_np — the same routine the tile kernels
-        # run). The limit(cap+1) PROBE (same pattern as similarity.py's
-        # matmul top-k) is the only materialization of the edge frame:
-        # <= cap rows back means the probe IS the complete edge set. Larger
-        # graphs fall through to distributed min-label propagation with
-        # group shortcutting over the contracted edges — O(log diameter)
-        # rounds, each a bounded shuffle over LABEL rows, not point rows.
-        ep = ledges.limit(driver_cc_max_edges + 1).toPandas()
-        if len(ep) <= driver_cc_max_edges:
-            edges_np = (ep["la"].to_numpy(np.int64), ep["lb"].to_numpy(np.int64))
-    spark = points.sparkSession
-    nodes = node_root = None
-    rootmap = None
-    if edges_np is not None and len(edges_np[0]) == 0:
-        pass
-    elif edges_np is not None:
-        ea, eb = edges_np
-        nodes = np.unique(np.concatenate([ea, eb]))
-        idx = {int(v): i for i, v in enumerate(nodes)}
-        ii = np.array([idx[int(v)] for v in ea], dtype=np.int64)
-        jj = np.array([idx[int(v)] for v in eb], dtype=np.int64)
-        roots = components_np(len(nodes), ii, jj)
-        # component root = min LABEL in component (labels are min pids, so
-        # this is exactly the global min-pid label)
-        comp_min = np.full(len(nodes), np.iinfo(np.int64).max)
-        np.minimum.at(comp_min, roots, nodes)
-        node_root = comp_min[roots]
-    else:
-        sym = (
-            ledges.unionByName(
-                ledges.select(F.col("lb").alias("la"), F.col("la").alias("lb"))
-            ).localCheckpoint(eager=True)
-        )
-        rm = (
-            sym.groupBy("la").agg(F.min("lb").alias("root"))
-            .select("la", F.least("la", "root").alias("root"))
-            .localCheckpoint(eager=True)
-        )
-        prev_sum = None
-        for _ in range(max_rounds):
-            ra = rm.withColumnsRenamed({"la": "a_", "root": "ra"})
-            rb = rm.withColumnsRenamed({"la": "lb", "root": "rb"})
-            prop = (
-                sym.join(ra, sym.la == ra.a_)
-                .join(rb, "lb")
-                .select(F.col("la"), F.least("ra", "rb").alias("nr"))
-                .groupBy("la")
-                .agg(F.min("nr").alias("nr"))
-            )
-            stepped = rm.join(prop, "la", "left").select(
-                "la",
-                F.col("root").alias("old_root"),
-                F.least(F.col("root"), F.coalesce("nr", F.col("root"))).alias("nr"),
-            )
-            gmap = stepped.groupBy("old_root").agg(F.min("nr").alias("gmin"))
-            new_rm = (
-                stepped.join(gmap, "old_root")
-                .select("la", F.least("nr", "gmin").alias("root"))
-                .localCheckpoint(eager=True)
-            )
-            # Convergence via a monotone scalar: roots only decrease, so
-            # fixpoint <=> root-sum unchanged. (A join-based old-vs-new
-            # compare would hit the shared-lineage attribute collapse — see
-            # operators/knn.py — and silently always 'converge'.)
-            if prev_sum is None:
-                prev_sum = rm.agg(F.sum("root")).collect()[0][0]
-            new_sum = new_rm.agg(F.sum("root")).collect()[0][0]
-            rm = new_rm
-            if prev_sum == new_sum:
-                break
-            prev_sum = new_sum
-        rootmap = rm.withColumnsRenamed({"la": "label"})
-    # Size filter folded into a LABEL-level map (VERDICT r4 item 4). Labels
-    # are tile-local, so the kernel already computed every label's global
-    # size — the (label, n) table is read off the single representative row
-    # per label the kernel marked (lab_n > 0) with a narrow checkpoint
-    # filter, no groupBy shuffle. On the common path (driver-resolved roots AND label
-    # table under the probe cap) root resolution and the min_points cull
-    # run in numpy on the DRIVER from that one probe — replacing the
-    # label-level join/agg/join chain with zero extra shuffles — and the
-    # single point-level join broadcasts by construction, keyed on the
-    # actual LABEL count rather than the point count (labels are bounded
-    # by tiles × components-per-tile, so at 10× rows the old n_points-based
-    # switch forced a full point shuffle for a map of a few thousand rows).
-    lsize = labeled.filter(F.col("lab_n") > 0).select(
-        "label", F.col("lab_n").alias("n")
-    )
-    lp = None
-    if rootmap is None:  # no edges, or roots already resolved on the driver
-        lp = lsize.limit(driver_cc_max_edges + 1).toPandas()
-        if len(lp) > driver_cc_max_edges:
-            lp = None
-    if lp is not None:
-        labs = lp["label"].to_numpy(np.int64)
-        ns = lp["n"].to_numpy(np.int64)
-        if nodes is None:
-            root = labs
-        else:
-            pos = np.minimum(np.searchsorted(nodes, labs), len(nodes) - 1)
-            hit = nodes[pos] == labs
-            root = np.where(hit, node_root[pos], labs)
-        uroot, inv = np.unique(root, return_inverse=True)
-        tot = np.bincount(inv, weights=ns).astype(np.int64)
-        cluster_id = np.where(tot[inv] >= min_points, root, np.int64(-1))
+    if len(probe) <= driver_max_rows:
         final_map = F.broadcast(
             spark.createDataFrame(
-                pd.DataFrame({"label": labs, "cluster_id": cluster_id})
+                _driver_label_map(probe, tolerance, min_points),
+                schema="label long, cluster_id long",
             )
         )
-        return labels.join(final_map, "label").select("pid", "cluster_id")
-    # fallback: label table over the probe cap (sparse dust can make every
-    # isolated point its own label) — distributed label-level resolution
-    if rootmap is None and nodes is not None:
-        rootmap = F.broadcast(
-            spark.createDataFrame(pd.DataFrame({"label": nodes, "root": node_root}))
-        )
-    if rootmap is None:
-        labmap = lsize.select("label", F.col("label").alias("root"), "n")
     else:
-        labmap = lsize.join(rootmap, "label", "left").select(
-            "label", F.coalesce("root", "label").alias("root"), "n"
-        )
-    rsize = labmap.groupBy("root").agg(F.sum("n").alias("tot"))
-    final_map = labmap.join(rsize, "root").select(
-        "label",
-        F.when(F.col("tot") >= min_points, F.col("root"))
-        .otherwise(F.lit(-1))
-        .alias("cluster_id"),
-    )
-    # capacity switch for the one point-level join: broadcast only when the
-    # label map is provably small; here the label count exceeded the probe
-    # cap, so fall back to the n_points heuristic
-    if n_points <= 5_000_000:
-        final_map = F.broadcast(final_map)
-    return labels.join(final_map, "label").select("pid", "cluster_id")
+        final_map = _distributed_label_map(labeled, extent, tolerance, level, min_points)
+    return labeled.select("pid", "label").join(final_map, "label").select("pid", "cluster_id")

@@ -85,7 +85,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # local mode: the driver heap IS the executor heap. Measured on the
-        # scaling workload (scripts/diag_agg.py): a 48g heap with ParallelGC
+        # scaling workload: a 48g heap with ParallelGC
         # made a pure-JVM hash agg 8x SLOWER at local[32] than local[8]
         # (GC threads x huge young gen thrash); G1 (the JVM default) with a
         # heap sized to the task-thread count is uniformly fastest. ~1 GiB

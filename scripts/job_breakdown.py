@@ -21,41 +21,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    import __spark_entry__ as entry
     from codem_spark.session import get_spark
+    from perfbench.queries import bench_queries
 
     spark = get_spark(
         app_name="codem_spark_jobs", cpus=cpus, shuffle_partitions=2 * cpus
     )
     sc = spark.sparkContext
-    qs = dict(entry.queries())
-
-    def bench_minhash(spark, sf_dir):
-        from codem_spark.operators import dedup
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        cands = dedup.minhash_lsh_candidates(docs, num_hashes=64, bands=16)
-        return dedup.jaccard_verify(cands, docs, threshold=0.7)
-
-    def bench_simhash(spark, sf_dir):
-        from codem_spark.operators import dedup
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return dedup.simhash_candidates(docs, band_bits=16, hamming_max=3)
-
-    def bench_cluster(spark, sf_dir):
-        from codem_spark import synth
-        from codem_spark.operators import cluster as cluster_mod
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        pts = synth.points_from_lineitem(li)
-        return cluster_mod.euclidean_cluster(
-            pts, synth.DEFAULT_EXTENT, tolerance=120.0, min_points=10
-        )
-
-    qs["minhash_lsh"] = bench_minhash
-    qs["simhash"] = bench_simhash
-    qs["euclidean_cluster"] = bench_cluster
+    qs = bench_queries()
 
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 

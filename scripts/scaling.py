@@ -84,7 +84,7 @@ def workload(cpus: int, sf_dir: str, rep: int = 24) -> dict:
     # satisfies the rollup groupBys' clustering; grid.cell_pyramid). r3's
     # union-of-4-independent-aggs scaled only 2.37x at 1->4 cores because
     # 3/4 of its shuffled bytes were redundant; the pyramid measured 3.86x
-    # on the same input (scripts/diag_gridscale4.py, interleaved A/B).
+    # on the same input (interleaved A/B runs).
     grid.cell_pyramid(warm, ext, level=12, coarsest=9, num_partitions=4 * cpus).count()
     t0 = time.time()
     pyr = grid.cell_pyramid(

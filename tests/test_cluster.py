@@ -3,15 +3,28 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pytest
 
 from codem_spark.operators import cluster
 from tests.conftest import SMALL_EXTENT, union_find_oracle
 
+# Both routes of euclidean_cluster face every exact test: None keeps the
+# default cap (driver route at these sizes), 0 forces the distributed route.
+ROUTES = pytest.mark.parametrize("driver_max_rows", [None, 0])
 
-def test_cluster_matches_union_find_oracle(spark, blob_points):
+
+def _cap(driver_max_rows):
+    return {} if driver_max_rows is None else {"driver_max_rows": driver_max_rows}
+
+
+@ROUTES
+def test_cluster_matches_union_find_oracle(spark, blob_points, driver_max_rows):
     df = spark.createDataFrame(blob_points)
     got = (
-        cluster.euclidean_cluster(df, SMALL_EXTENT, tolerance=3.0, min_points=2)
+        cluster.euclidean_cluster(
+            df, SMALL_EXTENT, tolerance=3.0, min_points=2, **_cap(driver_max_rows)
+        )
         .toPandas()
         .sort_values("pid")
         .reset_index(drop=True)
@@ -29,9 +42,12 @@ def test_cluster_matches_union_find_oracle(spark, blob_points):
     assert (got.cluster_id.values == exp).all()
 
 
-def test_cluster_min_points_filter(spark, blob_points):
+@ROUTES
+def test_cluster_min_points_filter(spark, blob_points, driver_max_rows):
     df = spark.createDataFrame(blob_points)
-    got = cluster.euclidean_cluster(df, SMALL_EXTENT, tolerance=3.0, min_points=30).toPandas()
+    got = cluster.euclidean_cluster(
+        df, SMALL_EXTENT, tolerance=3.0, min_points=30, **_cap(driver_max_rows)
+    ).toPandas()
     labelled = got[got.cluster_id >= 0]
     counts = labelled.groupby("cluster_id").size()
     assert (counts >= 30).all()
@@ -42,7 +58,6 @@ def test_dense_blob_emits_no_interior_edges(spark):
     """A dense blob strictly inside one tile contributes ZERO cross-tile
     edge rows (was ~m^2 before cross_tile_only): the in-tile kernel resolves
     it alone, so the edge pass stays O(boundary) at scale."""
-    import pandas as pd
     from codem_spark.functions import cells
     from codem_spark.operators import knn
 
@@ -74,10 +89,10 @@ def test_dense_blob_emits_no_interior_edges(spark):
     assert (got.cluster_id == 0).all()
 
 
-def test_cross_tile_chain_still_connects(spark):
+@ROUTES
+def test_cross_tile_chain_still_connects(spark, driver_max_rows):
     """A chain of points crossing a tile border must still merge into one
     cluster through the border-band edge pass."""
-    import pandas as pd
     from codem_spark.functions import cells
 
     level_size = cells.cell_size(SMALL_EXTENT, 4)
@@ -86,50 +101,8 @@ def test_cross_tile_chain_still_connects(spark):
     pdf = pd.DataFrame({"pid": np.arange(len(xs)), "x": xs, "y": np.full(len(xs), 40.0), "z": 0.0})
     got = (
         cluster.euclidean_cluster(
-            spark.createDataFrame(pdf), SMALL_EXTENT, tolerance=1.5, min_points=2
-        )
-        .toPandas()
-        .sort_values("pid")
-    )
-    assert (got.cluster_id == 0).all()
-
-
-def test_distributed_label_cc_fallback_matches_driver_path(spark, blob_points):
-    """driver_cc_max_edges=0 forces the distributed min-label loop over the
-    contracted label graph; labels must be identical to the driver-resolved
-    capacity path (deterministic min-pid labels either way)."""
-    df = spark.createDataFrame(blob_points)
-    a = (
-        cluster.euclidean_cluster(df, SMALL_EXTENT, tolerance=8.0, min_points=5)
-        .toPandas()
-        .sort_values("pid")
-        .reset_index(drop=True)
-    )
-    b = (
-        cluster.euclidean_cluster(
-            df, SMALL_EXTENT, tolerance=8.0, min_points=5, driver_cc_max_edges=0
-        )
-        .toPandas()
-        .sort_values("pid")
-        .reset_index(drop=True)
-    )
-    assert (a.pid == b.pid).all() and (a.cluster_id == b.cluster_id).all()
-    assert (a.cluster_id >= 0).sum() > 0
-
-
-def test_cross_tile_chain_distributed_fallback(spark):
-    """The border-crossing chain through the distributed label-CC loop."""
-    import pandas as pd
-    from codem_spark.functions import cells
-
-    level_size = cells.cell_size(SMALL_EXTENT, 4)
-    xb = 3 * level_size
-    xs = np.arange(xb - 10, xb + 10, 1.0)
-    pdf = pd.DataFrame({"pid": np.arange(len(xs)), "x": xs, "y": np.full(len(xs), 40.0), "z": 0.0})
-    got = (
-        cluster.euclidean_cluster(
             spark.createDataFrame(pdf), SMALL_EXTENT, tolerance=1.5, min_points=2,
-            driver_cc_max_edges=0,
+            **_cap(driver_max_rows),
         )
         .toPandas()
         .sort_values("pid")
@@ -137,13 +110,11 @@ def test_cross_tile_chain_distributed_fallback(spark):
     assert (got.cluster_id == 0).all()
 
 
-def test_cluster_duplicate_pids_preserve_cardinality(spark):
+@ROUTES
+def test_cluster_duplicate_pids_preserve_cardinality(spark, driver_max_rows):
     """Inputs may carry repeated pids (the bench's lineitem-derived cloud
-    does): the per-label size table must stay one-row-per-label (the kernel
-    marks a single representative row even when the min pid repeats), so
-    the final broadcast join cannot fan out rows."""
-    import pandas as pd
-
+    does): the label map must stay one-row-per-label, so the final join
+    cannot fan out rows."""
     rng = np.random.default_rng(7)
     base = pd.DataFrame(
         {
@@ -156,7 +127,8 @@ def test_cluster_duplicate_pids_preserve_cardinality(spark):
     dup = pd.concat([base, base.iloc[:15]], ignore_index=True)  # repeated pids
     got = (
         cluster.euclidean_cluster(
-            spark.createDataFrame(dup), SMALL_EXTENT, tolerance=3.0, min_points=2
+            spark.createDataFrame(dup), SMALL_EXTENT, tolerance=3.0, min_points=2,
+            **_cap(driver_max_rows),
         )
         .toPandas()
         .sort_values(["pid", "cluster_id"])
@@ -166,3 +138,34 @@ def test_cluster_duplicate_pids_preserve_cardinality(spark):
     # duplicate pid rows agree with their originals
     per_pid = got.groupby("pid").cluster_id.nunique()
     assert (per_pid == 1).all()
+
+    # Two components far apart that share their min pid: each emits a size
+    # row for label 5. The sizes must be summed per label, not joined twice.
+    far = pd.DataFrame(
+        {
+            "pid": [5, 10, 11, 5, 20, 21],
+            "x": [100.0, 101.0, 102.0, 800.0, 801.0, 802.0],
+            "y": 40.0,
+            "z": 0.0,
+        }
+    )
+    got = cluster.euclidean_cluster(
+        spark.createDataFrame(far), SMALL_EXTENT, tolerance=3.0, min_points=2,
+        **_cap(driver_max_rows),
+    ).toPandas()
+    assert len(got) == len(far)
+    assert sorted(got.pid) == sorted(far.pid)
+    assert (got.cluster_id == 5).all()
+
+
+def test_driver_label_edges_dedups_point_pairs():
+    """Two dense blobs touching across one tile border give ~m^2 point
+    pairs but exactly one label edge."""
+    rng = np.random.default_rng(5)
+    m = 400
+    left = np.column_stack([rng.uniform(98.0, 100.0, m), rng.uniform(0.0, 2.0, m), np.zeros(m)])
+    right = np.column_stack([rng.uniform(100.0, 102.0, m), rng.uniform(0.0, 2.0, m), np.zeros(m)])
+    pts = np.concatenate([left, right])
+    labs = np.concatenate([np.full(m, 700, np.int64), np.full(m, 3, np.int64)])
+    edges = cluster._driver_label_edges(pts, labs, 3.0)
+    assert edges.tolist() == [[3, 700]]
