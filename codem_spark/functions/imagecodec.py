@@ -1,22 +1,16 @@
-"""From-scratch image codecs (PNG / PPM / BMP) — stdlib zlib + numpy only.
+"""From-scratch PNG codec — stdlib zlib + numpy only.
 
-Retires the last stub in the package (VERDICT r3 'What's missing' #1): the
-container has no PIL/cv2, but PNG is just zlib-inflated scanlines with five
-per-scanline predictors, and PPM/BMP are headers + raw pixels. These codecs
-run INSIDE Arrow-batched mapInPandas workers (operators/multimodal.py), so
-per-image Python cost is amortized across the executor fleet — the decode
-is embarrassingly parallel per row, exactly the shape the north rule's
-html:binary column needs.
+The container has no PIL/cv2, but PNG is just zlib-inflated scanlines with
+five per-scanline predictors. ``encode_png`` writes the registration
+match-visualization image (registration/viz.py); ``decode_png`` reads it
+back in tests.
 
-Scope (clear ValueError outside it, never a silent wrong answer):
-  PNG: 8-bit depth, color types 0/2/3/4/6, non-interlaced, filters 0-4.
-  PPM: P5/P6 binary and P2/P3 ascii, maxval <= 255.
-  BMP: BITMAPINFOHEADER, uncompressed 8(palette)/24/32 bpp, bottom-up or
-       top-down.
+Scope (clear ValueError outside it, never a silent wrong answer): 8-bit
+depth, color types 0/2/3/4/6, non-interlaced, filters 0-4.
 
-Reference parity note: the reference reads rasters via GDAL and writes a
-match-visualization PNG via OpenCV (codem/registration/apply.py /
-dsm_registration docs); this module is the sanctioned in-container analog.
+Reference parity note: the reference writes its match-visualization PNG
+via OpenCV (codem/registration/apply.py / dsm_registration docs); this
+module is the sanctioned in-container analog.
 """
 
 from __future__ import annotations
@@ -180,125 +174,3 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
 
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
     return _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zdata) + chunk(b"IEND", b"")
-
-
-# --------------------------------------------------------------------- PPM
-def _ppm_tokens(data: bytes, n: int, pos: int) -> tuple[list[bytes], int]:
-    """Read n whitespace-separated header tokens, skipping # comments."""
-    toks: list[bytes] = []
-    while len(toks) < n:
-        while pos < len(data) and data[pos : pos + 1].isspace():
-            pos += 1
-        if pos < len(data) and data[pos : pos + 1] == b"#":
-            while pos < len(data) and data[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(data) and not data[pos : pos + 1].isspace():
-            pos += 1
-        if start == pos:
-            raise ValueError("PPM: truncated header")
-        toks.append(data[start:pos])
-    return toks, pos
-
-
-def decode_ppm(data: bytes) -> np.ndarray:
-    """P2/P3 (ascii) and P5/P6 (binary) netpbm -> (H, W, C) uint8."""
-    magic = data[:2]
-    if magic not in (b"P2", b"P3", b"P5", b"P6"):
-        raise ValueError(f"PPM: unsupported magic {magic!r}")
-    ch = 3 if magic in (b"P3", b"P6") else 1
-    toks, pos = _ppm_tokens(data, 3, 2)
-    w, h, maxval = (int(t) for t in toks)
-    if not (0 < maxval <= 255):
-        raise ValueError(f"PPM: unsupported maxval {maxval}")
-    n = w * h * ch
-    if magic in (b"P5", b"P6"):
-        pos += 1  # single whitespace after maxval
-        px = np.frombuffer(data, dtype=np.uint8, count=n, offset=pos)
-    else:
-        vals = data[pos:].split()
-        if len(vals) < n:
-            raise ValueError("PPM: truncated ascii pixel data")
-        px = np.array([int(v) for v in vals[:n]], dtype=np.uint8)
-    return px.reshape(h, w, ch)
-
-
-def encode_ppm(img: np.ndarray) -> bytes:
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, ch = img.shape
-    magic = b"P6" if ch == 3 else b"P5"
-    if ch not in (1, 3):
-        raise ValueError("PPM: 1 or 3 channels only")
-    return magic + f"\n{w} {h}\n255\n".encode() + np.ascontiguousarray(img, np.uint8).tobytes()
-
-
-# --------------------------------------------------------------------- BMP
-def decode_bmp(data: bytes) -> np.ndarray:
-    """Uncompressed BITMAPINFOHEADER BMP (8 bpp palette / 24 / 32 bpp) ->
-    (H, W, C) uint8 in RGB(A) order."""
-    if data[:2] != b"BM":
-        raise ValueError("BMP: bad signature")
-    (pix_off,) = struct.unpack("<I", data[10:14])
-    (hdr_size,) = struct.unpack("<I", data[14:18])
-    if hdr_size < 40:
-        raise ValueError(f"BMP: unsupported DIB header size {hdr_size}")
-    w, h_signed = struct.unpack("<ii", data[18:26])
-    planes, bpp = struct.unpack("<HH", data[26:30])
-    (compression,) = struct.unpack("<I", data[30:34])
-    if compression not in (0, 3):
-        raise ValueError(f"BMP: unsupported compression {compression}")
-    if bpp not in (8, 24, 32):
-        raise ValueError(f"BMP: unsupported bpp {bpp}")
-    top_down = h_signed < 0
-    h = abs(h_signed)
-    stride = (w * (bpp // 8) + 3) & ~3
-    rows = np.frombuffer(data, np.uint8, count=stride * h, offset=pix_off).reshape(h, stride)
-    if not top_down:
-        rows = rows[::-1]
-    if bpp == 8:
-        (n_colors,) = struct.unpack("<I", data[46:50])
-        n_colors = n_colors or 256
-        pal = np.frombuffer(data, np.uint8, count=4 * n_colors, offset=14 + hdr_size)
-        pal = pal.reshape(-1, 4)[:, [2, 1, 0]]  # BGRA -> RGB
-        return pal[rows[:, :w]]
-    px = rows[:, : w * (bpp // 8)].reshape(h, w, bpp // 8)
-    order = [2, 1, 0] if bpp == 24 else [2, 1, 0, 3]  # BGR(A) -> RGB(A)
-    return np.ascontiguousarray(px[:, :, order])
-
-
-def encode_bmp(img: np.ndarray) -> bytes:
-    """(H, W, 3|4) uint8 RGB(A) -> bottom-up uncompressed BMP."""
-    if img.ndim == 2:
-        img = np.repeat(img[:, :, None], 3, axis=2)
-    h, w, ch = img.shape
-    if ch not in (3, 4):
-        raise ValueError("BMP: 3 or 4 channels only")
-    bpp = ch * 8
-    stride = (w * ch + 3) & ~3
-    order = [2, 1, 0] if ch == 3 else [2, 1, 0, 3]
-    bgr = np.ascontiguousarray(img[:, :, order], np.uint8)
-    body = bytearray()
-    pad = b"\x00" * (stride - w * ch)
-    for y in range(h - 1, -1, -1):
-        body += bgr[y].tobytes() + pad
-    pix_off = 14 + 40
-    header = (
-        b"BM"
-        + struct.pack("<IHHI", pix_off + len(body), 0, 0, pix_off)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, bpp, 0, len(body), 2835, 2835, 0, 0)
-    )
-    return bytes(header) + bytes(body)
-
-
-# ----------------------------------------------------------------- dispatch
-def decode_image(data: bytes) -> tuple[np.ndarray, str]:
-    """Sniff + decode -> ((H, W, C) uint8, format name)."""
-    if data[:8] == _PNG_SIG:
-        return decode_png(data), "png"
-    if data[:2] in (b"P2", b"P3", b"P5", b"P6"):
-        return decode_ppm(data), "ppm"
-    if data[:2] == b"BM":
-        return decode_bmp(data), "bmp"
-    raise ValueError(f"unrecognized image signature {data[:8]!r}")

@@ -62,17 +62,6 @@ def run_stage(
         return tables.read_table(spark, out_path)
     t0 = time.time()
     df = fn()
-    # dedup-family operators tag their result with the banded frame that
-    # fed the hot-bucket guard; surface the truncation stats in the stage
-    # manifest so star-pair recall loss is measured, not assumed (VERDICT r3
-    # item 8). One tiny extra agg, only on stages that carry the probe.
-    probe = getattr(df, "_codem_hot_bucket_probe", None)
-    hb_stats = None
-    if probe is not None:
-        from codem_spark.operators.dedup import hot_bucket_stats
-
-        banded, cap = probe
-        hb_stats = {**hot_bucket_stats(banded, cap), "bucket_cap": cap}
     tm = tables.write_table(df, out_path, partition_by=partition_by, properties=properties)
     # per-partition lineage metrics come from the write's own parquet
     # footers (tables.parquet_file_metrics) — ONE Spark job per stage, where
@@ -89,7 +78,7 @@ def run_stage(
         "n_partitions": len(pm),
         "partition_metrics": pm,
         "wall_sec": round(time.time() - t0, 3),
-        "metrics": {**(metrics or {}), **({"hot_bucket_stats": hb_stats} if hb_stats else {})},
+        "metrics": metrics or {},
         "completed_at": time.time(),
     }
     with open(_stage_manifest_path(run_dir, stage), "w") as f:

@@ -260,24 +260,6 @@ def minhash_band_keys_col(
     return bkeys(shingles)
 
 
-def _attach_probe(out: DataFrame, banded: DataFrame, cap: int | None) -> DataFrame:
-    """Tag the result frame with the banded frame + cap so downstream
-    lineage (io/lineage.run_stage) can surface hot_bucket_stats in the
-    stage manifest without the hot path paying for the extra agg."""
-    if cap is not None:
-        out._codem_hot_bucket_probe = (banded, cap)  # type: ignore[attr-defined]
-    return out
-
-
-def carry_probe(src: DataFrame, out: DataFrame) -> DataFrame:
-    """Propagate the hot-bucket probe through a wrapping transformation
-    (verify joins, anti-join dedup) so run_stage still sees it."""
-    probe = getattr(src, "_codem_hot_bucket_probe", None)
-    if probe is not None:
-        out._codem_hot_bucket_probe = probe  # type: ignore[attr-defined]
-    return out
-
-
 def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
     """(band, bkey, did) -> candidate pairs (id_a < id_b) with a hot-bucket
     guard. Buckets of size <= ``cap`` emit every pair (exact banded-LSH
@@ -290,8 +272,8 @@ def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
     NOTE: the star fallback WEAKENS pairwise completeness — two hot-bucket
     members near-dup of each other but not of the representative are never
     paired. Pass ``cap=None`` for exact (all-pairs) banded-LSH semantics,
-    and use :func:`hot_bucket_stats` to measure how many buckets/rows the
-    cap actually truncated on a given input.
+    and call :func:`hot_bucket_stats` on the same ``banded`` frame to
+    measure how many buckets/rows the cap truncates on a given input.
 
     Plan shape: ONE shuffle. groupBy(band, bkey) collects each bucket's
     sorted member array, and the pair list (all-pairs or star) is generated
@@ -320,12 +302,11 @@ def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
             lambda y: F.struct(F.element_at(arr, 1).alias("id_a"), y.alias("id_b")),
         )
         pairs = F.when(F.size(arr) <= F.lit(cap), all_pairs).otherwise(star)
-    out = (
+    return (
         buckets.select(F.explode(pairs).alias("p"))
         .select(F.col("p.id_a"), F.col("p.id_b"))
         .distinct()
     )
-    return _attach_probe(out, banded, cap)
 
 
 def hot_bucket_stats(banded: DataFrame, cap: int = 64) -> dict[str, int]:
@@ -334,7 +315,8 @@ def hot_bucket_stats(banded: DataFrame, cap: int = 64) -> dict[str, int]:
     them. Run on the ``banded`` frame (did, band, bkey) that feeds
     _bucket_pairs; one extra agg job, opt-in, so the hot path stays
     single-pass. A nonzero count quantifies the recall loss surface of the
-    star fallback (see _bucket_pairs)."""
+    star fallback (see _bucket_pairs). To record it in a stage manifest,
+    pass the result through ``lineage.run_stage(..., metrics=...)``."""
     r = (
         banded.groupBy("band", "bkey")
         .agg(F.count("*").alias("n"))
@@ -343,6 +325,19 @@ def hot_bucket_stats(banded: DataFrame, cap: int = 64) -> dict[str, int]:
         .collect()[0]
     )
     return {"hot_buckets": int(r["hot_buckets"]), "hot_rows": int(r["hot_rows"])}
+
+
+def _shingle_frame(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:
+    """(did, sh) shingle sets of ``df`` — the one place this plan is
+    written. Candidates need the banded minhash keys OF the shingles and
+    verification needs the shingle sets themselves; because both build the
+    identical plan for the same (df, text_col, id_col, shingle_n), the
+    frame jaccard_verify persists is substituted by Spark's cache manager
+    for every matching subtree at execution, the one inside the candidate
+    plan included, so one minhash_lsh query runs the shingle UDF once."""
+    return rebalance(df).select(
+        F.col(id_col).alias("did"), shingles_col(F.col(text_col), shingle_n).alias("sh")
+    )
 
 
 def minhash_lsh_candidates(
@@ -356,26 +351,14 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Banded-LSH candidate pairs (id_a < id_b), deduplicated across bands.
     Standard MinHash banding: docs sharing any full band collide; buckets
-    above ``bucket_cap`` fall back to star pairs (see _bucket_pairs)."""
-    src = df
-    df = rebalance(df)
-    # Shingles are materialized ONCE and shared with the verify stage
-    # (optimization round r6): candidates need the banded minhash keys OF
-    # the shingles, verification needs the shingle sets themselves, and the
-    # two stages previously each ran the full normalize+tokenize+n-gram UDF
-    # pass over the corpus. The persisted shingle frame rides along on the
-    # returned DataFrame (same plumbing as the hot-bucket probe) and
-    # jaccard_verify picks it up only when handed the SAME source frame.
-    sh_frame = df.select(
-        F.col(id_col).alias("did"), shingles_col(F.col(text_col), shingle_n).alias("sh")
-    ).persist()
-    keys = sh_frame.select(
+    above ``bucket_cap`` fall back to star pairs (see _bucket_pairs).
+    Persists nothing: a following jaccard_verify shares the shingles
+    through the cache (see _shingle_frame)."""
+    keys = _shingle_frame(df, text_col, id_col, shingle_n).select(
         "did", minhash_band_keys_col(F.col("sh"), num_hashes, bands).alias("bkeys")
     )
     banded = keys.select("did", F.posexplode("bkeys").alias("band", "bkey"))
-    out = _bucket_pairs(banded, cap=bucket_cap)
-    out._codem_shingle_frame = (sh_frame, src, text_col, id_col, shingle_n)  # type: ignore[attr-defined]
-    return out
+    return _bucket_pairs(banded, cap=bucket_cap)
 
 
 def jaccard_verify(
@@ -387,22 +370,10 @@ def jaccard_verify(
     shingle_n: int = 3,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs (JVM array intersect/union).
-    pairs: (id_a, id_b)."""
-    shared = getattr(pairs, "_codem_shingle_frame", None)
-    if (
-        shared is not None
-        and shared[1] is df
-        and shared[2] == text_col
-        and shared[3] == id_col
-        and shared[4] == shingle_n
-    ):
-        # candidates already materialized this exact shingle frame — reuse
-        # it instead of a second full shingle-UDF pass over the corpus
-        sh = shared[0]
-    else:
-        sh = rebalance(df).select(
-            F.col(id_col).alias("did"), shingles_col(F.col(text_col), shingle_n).alias("sh")
-        ).persist()  # joined on both pair sides
+    pairs: (id_a, id_b). The shingle frame is persisted (joined on both
+    pair sides, and shared with the candidate plan of the same source);
+    the caller owns the cache lifecycle."""
+    sh = _shingle_frame(df, text_col, id_col, shingle_n).persist()
     j = (
         pairs.join(sh.withColumnsRenamed({"did": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"did": "id_b", "sh": "sh_b"}), "id_b")
@@ -410,10 +381,9 @@ def jaccard_verify(
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    out = j.select("id_a", "id_b", F.round(jac, 6).alias("jaccard")).filter(
+    return j.select("id_a", "id_b", F.round(jac, 6).alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-    return carry_probe(pairs, out)
 
 
 def minhash_dedup(
@@ -428,7 +398,7 @@ def minhash_dedup(
     cands = minhash_lsh_candidates(df, text_col, id_col, **kw)
     dups = jaccard_verify(cands, df, text_col, id_col, threshold, kw.get("shingle_n", 3))
     drop = dups.select(F.col("id_b").alias(id_col)).distinct()
-    return carry_probe(dups, df.join(drop, id_col, "left_anti"))
+    return df.join(drop, id_col, "left_anti")
 
 
 # ------------------------------------------------------------------ simhash
@@ -545,7 +515,7 @@ def simhash_candidates_from(
     pairs = _bucket_pairs(banded, cap=bucket_cap)
     sh_a = d.select(F.col("did").alias("id_a"), F.col("sh").alias("_sha"))
     sh_b = d.select(F.col("did").alias("id_b"), F.col("sh").alias("_shb"))
-    out = (
+    return (
         pairs.join(sh_a, "id_a")
         .join(sh_b, "id_b")
         .select(
@@ -555,4 +525,3 @@ def simhash_candidates_from(
         )
         .filter(F.col("hamming") <= F.lit(hamming_max))
     )
-    return carry_probe(pairs, out)

@@ -154,7 +154,6 @@ def cell_pyramid(
     y: str = "y",
     z: str = "z",
     num_partitions: int | None = None,
-    persist_shuffled: bool = False,
 ) -> DataFrame:
     """Multi-resolution cell aggregation — the DSM pyramid (G1 at every
     level of the cell hierarchy, reference 'resampled to match the lower'
@@ -170,13 +169,7 @@ def cell_pyramid(
     repartition is the table's native clustering, i.e. free.
 
     The returned frame unions one branch per level, each reading the same
-    shuffled input; AQE exchange-reuse dedupes the shuffle at runtime, and
-    ``persist_shuffled=True`` makes the sharing explicit by caching the
-    post-shuffle cells (measured best: interleaved A/B on 7.3M pts, pinned
-    cores — r3's 4 independent grid aggs 26.0 s -> 7.6 s (1 -> 4 cores,
-    3.41x); this operator with persist 20.3 s -> 5.26 s (3.86x)). The
-    caller owns the cache lifecycle: unpersist via the frame attached as
-    ``result._codem_persisted`` when done.
+    shuffled input; AQE exchange-reuse dedupes the shuffle at runtime.
 
     Returns (level, cell, z_max, n) long-format pyramid.
     """
@@ -190,8 +183,6 @@ def cell_pyramid(
     pre = (
         pre.repartition(num_partitions, "_ck") if num_partitions else pre.repartition("_ck")
     )
-    if persist_shuffled:
-        pre = pre.persist()
     cur = pre.groupBy("_ck", "cell").agg(
         F.max("z").alias("z_max"), F.count("*").alias("n")
     )
@@ -201,10 +192,7 @@ def cell_pyramid(
             F.max("z_max").alias("z_max"), F.sum("n").alias("n")
         )
         out = out.unionByName(cur.withColumn("level", F.lit(lv)))
-    result = out.select("level", "cell", "z_max", "n")
-    if persist_shuffled:
-        result._codem_persisted = pre  # type: ignore[attr-defined]
-    return result
+    return out.select("level", "cell", "z_max", "n")
 
 
 def cell_pyramid_sql(points_sql: str, extent: Extent, level: int, coarsest: int) -> str:

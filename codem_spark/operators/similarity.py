@@ -2,13 +2,12 @@
 
 Engine-new operators for the training-data tier: brute-force cosine top-k as
 the correctness baseline, and an LSH-bucketed (random-hyperplane) variant as
-the 100 TB scale path — the same adaptive brute-force/LSH switch the
+the 100 TB scale path — the same adaptive brute-force/LSH split the
 reference applies to descriptor matching (dsm.py:175-187: BF under 2^17
 rows, LSH above).
 
-Dot products run through ``F.aggregate``/``F.zip_with`` (JVM, codegen) for
-the SQL-checkable path; batch matmul in a pandas UDF is used by the bulk
-(all-pairs) variant where the quadratic term dominates and BLAS wins.
+Dot products run through ``F.aggregate``/``F.zip_with`` (JVM, codegen);
+LSH bucketing is one Arrow matmul pass per batch against all plane sets.
 """
 
 from __future__ import annotations
@@ -69,130 +68,16 @@ def cosine_topk_bruteforce(
     )
 
 
-# Broadcast-side row cap for the matmul path — the same 2^17 brute-force /
-# LSH switch point the reference uses for descriptor matching
-# (dsm.py:175-183) and the engine uses for keypoints (coarse.py
-# BF_MATCH_CAPACITY). Above it, an uncapped driver collect of the data side
-# is the classic 10^8-embedding driver OOM, so we fall through to the
-# bucketed LSH path instead.
-MATMUL_BROADCAST_CAP = 1 << 17
-
-
-def cosine_topk_matmul(
-    queries: DataFrame,
-    data: DataFrame,
-    k: int = 10,
-    qid: str = "vec_id",
-    did: str = "vec_id",
-    vec: str = "embedding",
-    cap: int = MATMUL_BROADCAST_CAP,
-    lsh_kwargs: dict | None = None,
-) -> DataFrame:
-    """Exact top-k via per-partition BLAS matmul against a broadcast,
-    pre-normalized data matrix — the throughput path when data fits in one
-    broadcast (same role as the reference's brute-force Hamming matmul,
-    dsm.py:185-187). Queries stream through mapInPandas in Arrow batches.
-
-    The data side is collected to the driver ONLY after a row-cap probe
-    (``limit(cap+1).count()`` — no full scan): above ``cap`` rows the call
-    falls through to :func:`cosine_topk_lsh` (approximate, bucketed — the
-    scale path), mirroring the reference's BF/LSH capacity switch."""
-    over_cap = data.limit(cap + 1).count() > cap
-    if over_cap:
-        # ADVICE r3: an empty data side can't reach here (count==0 <= cap),
-        # but a head() on a just-over-cap frame could race a concurrently
-        # shrinking source — guard dim=0 explicitly, and make the silent
-        # exact->approximate switch visible in the logs.
-        first = data.select(vec).head()
-        qt = {f.name: f.dataType.simpleString() for f in queries.schema.fields}[qid]
-        empty_schema = f"q_id {qt}, d_id {qt}, cos_sim double, rank int"
-        if first is None:
-            return queries.sparkSession.createDataFrame([], empty_schema)
-        dim = len(first[0])
-        import warnings
-
-        warnings.warn(
-            f"cosine_topk_matmul: data side exceeds cap={cap} rows — falling "
-            "through to the approximate bucketed LSH path (cosine_topk_lsh)",
-            stacklevel=2,
-        )
-        kw = dict(n_planes=8, n_tables=8)
-        kw.update(lsh_kwargs or {})
-        return cosine_topk_lsh(
-            queries, data, dim=dim, k=k, qid=qid, did=did, vec=vec, **kw
-        )
-    d_pdf = data.select(did, vec).toPandas()
-    if len(d_pdf) == 0:
-        # empty data side: empty result with the contract schema instead of
-        # an obscure downstream vstack failure (ADVICE r3)
-        qt = {f.name: f.dataType.simpleString() for f in queries.schema.fields}[qid]
-        return queries.sparkSession.createDataFrame(
-            [], f"q_id {qt}, d_id {qt}, cos_sim double, rank int"
-        )
-    assert len(d_pdf) <= cap  # probe above guarantees this
-    d_ids = d_pdf[did].to_numpy()
-    dmat = np.vstack(d_pdf[vec].to_numpy()).astype(np.float64)
-    dmat /= np.linalg.norm(dmat, axis=1, keepdims=True) + 1e-30
-    sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((d_ids, dmat))
-
-    def batches(it):
-        d_ids_, dmat_ = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            qmat = np.vstack(pdf[vec].to_numpy()).astype(np.float64)
-            qmat /= np.linalg.norm(qmat, axis=1, keepdims=True) + 1e-30
-            sims = qmat @ dmat_.T  # (Q, D)
-            qids_ = pdf[qid].to_numpy()
-            same = qids_[:, None] == d_ids_[None, :]
-            sims[same] = -np.inf
-            kk = min(k, sims.shape[1] - 1)
-            cand = min(sims.shape[1], kk + 8)
-            part = np.argpartition(-sims, cand - 1, axis=1)[:, :cand]
-            rows = np.arange(len(qmat))[:, None]
-            simc = sims[rows, part]
-            order = np.lexsort((d_ids_[part], -simc), axis=1)[:, :kk]
-            sel = part[rows[:, :kk], order]
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(qids_, kk),
-                    "d_id": d_ids_[sel].ravel(),
-                    "cos_sim": np.round(sims[rows[:, :kk], sel].ravel(), 6),
-                    "rank": np.tile(np.arange(1, kk + 1), len(qmat)),
-                }
-            )
-
-    qt = {f.name: f.dataType.simpleString() for f in queries.schema.fields}[qid]
-    return queries.select(qid, vec).mapInPandas(
-        batches, schema=f"q_id {qt}, d_id {qt}, cos_sim double, rank int"
-    )
-
-
-def lsh_bucket_col(vec: Column, dim: int, n_planes: int = 16, seed: int = 13) -> Column:
-    """Random-hyperplane LSH bucket id: sign pattern of n_planes fixed
-    (deterministically generated) hyperplanes — a JVM expression: each plane
-    is a literal array; dot via zip_with/aggregate; bits packed into a long."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(float(v)) for v in planes[i]])
-        d = dot_col(vec, plane)
-        bucket = bucket + F.when(d > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
 def lsh_buckets_udf_col(
     vec: Column, dim: int, n_planes: int, n_tables: int, seed: int = 13
 ) -> Column:
-    """All ``n_tables`` bucket ids in ONE Arrow pass: batch matmul against
-    the full (n_tables*n_planes, dim) plane matrix held in the UDF closure.
-    The scale path for high-dim embeddings — the JVM expression variant
-    (lsh_bucket_col) unrolls dim*n_planes*n_tables literals into the plan,
-    which bloats codegen past ~dim 64. Plane generation is identical to
-    lsh_bucket_col (same per-table seeds), so bucket ids agree up to
-    floating-point sign ties on near-zero projections."""
+    """All ``n_tables`` random-hyperplane bucket ids in ONE Arrow pass:
+    batch matmul against the full (n_tables*n_planes, dim) plane matrix
+    held in the UDF closure; table t's planes are drawn with seed
+    ``seed + 101*t`` and its bucket id is the sign pattern packed into a
+    long. A JVM expression form would unroll dim*n_planes*n_tables plane
+    literals into the plan (3,072 at dim 64 x 6 planes x 8 tables), whose
+    analysis and codegen alone measured ~20-40 s before any data moved."""
     mats = [
         np.random.default_rng(seed + 101 * t).standard_normal((n_planes, dim))
         for t in range(n_tables)
@@ -213,6 +98,19 @@ def lsh_buckets_udf_col(
     return bk(vec)
 
 
+def _lsh_banded(
+    df: DataFrame, id_col: str, vec: str, dim: int, n_planes: int, n_tables: int
+) -> DataFrame:
+    """(did, vec, band, bkey): one row per vector and LSH table (band =
+    table index, bkey = that table's bucket id)."""
+    b = df.select(
+        F.col(id_col).alias("did"),
+        F.col(vec).alias("vec"),
+        lsh_buckets_udf_col(F.col(vec), dim, n_planes, n_tables).alias("_bks"),
+    )
+    return b.select("did", "vec", F.posexplode("_bks").alias("band", "bkey"))
+
+
 def cosine_topk_lsh(
     queries: DataFrame,
     data: DataFrame,
@@ -223,19 +121,21 @@ def cosine_topk_lsh(
     qid: str = "vec_id",
     did: str = "vec_id",
     vec: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH. Both sides are
     bucketed under ``n_tables`` independent plane sets; candidates = union of
     per-table bucket collisions (the shuffle is keyed by (table, bucket) —
-    the IVF-style 100 TB path); exact cosine re-rank on the candidates.
-    Recall rises with n_tables, cost with n_tables / 2^n_planes.
-
-    impl: "expr" = JVM literal-plane expressions (whole-stage codegen; fine
-    to ~dim 64), "udf" = one Arrow matmul pass (high-dim scale path),
-    "auto" = switch on total plane-literal count."""
-    pairs = lsh_candidate_pairs(
-        queries, data, dim, n_planes, n_tables, qid=qid, did=did, vec=vec, impl=impl
+    the IVF-style 100 TB path), deduplicated across tables; exact cosine
+    re-rank on the candidates. Recall rises with n_tables, cost with
+    n_tables / 2^n_planes."""
+    qb = _lsh_banded(queries, qid, vec, dim, n_planes, n_tables)
+    db = _lsh_banded(data, did, vec, dim, n_planes, n_tables)
+    pairs = (
+        qb.withColumnsRenamed({"did": "q_id", "vec": "q_vec"})
+        .join(db.withColumnsRenamed({"did": "d_id", "vec": "d_vec"}), ["band", "bkey"])
+        .filter(F.col("q_id") != F.col("d_id"))
+        .select("q_id", "q_vec", "d_id", "d_vec")
+        .dropDuplicates(["q_id", "d_id"])
     )
     sim = cosine_col(F.col("q_vec"), F.col("d_vec"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("d_id"))
@@ -243,66 +143,6 @@ def cosine_topk_lsh(
         pairs.select("q_id", "d_id", F.round(sim, 6).alias("cos_sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def lsh_candidate_pairs(
-    queries: DataFrame,
-    data: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    n_tables: int = 8,
-    qid: str = "vec_id",
-    did: str = "vec_id",
-    vec: str = "embedding",
-    impl: str = "auto",
-) -> DataFrame:
-    """Multi-table LSH bucket-collision candidate pairs
-    (q_id, q_vec, d_id, d_vec), deduplicated across tables — the shared
-    shuffle core of :func:`cosine_topk_lsh` and
-    :func:`embedding_cosine_dedup`. Shuffle is keyed by (table, bucket)."""
-    if impl == "auto":
-        # measured at dim=64, 6 planes x 8 tables (3072 literals): the expr
-        # path spends ~20-40 s in analysis/codegen of the unrolled literal
-        # trees before any data moves — the one-Arrow-matmul-pass UDF path
-        # wins well below the old 4096 cutoff
-        impl = "udf" if dim * n_planes * n_tables > 1024 else "expr"
-
-    def bucketize(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
-        src_id = qid if id_alias == "q_id" else did
-        if impl == "udf":
-            b = df.select(
-                F.col(src_id).alias(id_alias),
-                F.col(vec).alias(vec_alias),
-                lsh_buckets_udf_col(F.col(vec), dim, n_planes, n_tables).alias("_bks"),
-            )
-            return b.select(
-                id_alias, vec_alias, F.posexplode("_bks").alias("tbl", "bucket")
-            )
-        tbl = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        lsh_bucket_col(F.col(vec), dim, n_planes, seed=13 + 101 * t).alias("bucket"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        )
-        return df.select(
-            F.col(src_id).alias(id_alias),
-            F.col(vec).alias(vec_alias),
-            tbl.alias("tb"),
-        ).select(id_alias, vec_alias, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
-
-    qb = bucketize(queries, "q_id", "q_vec")
-    db = bucketize(data, "d_id", "d_vec")
-    return (
-        qb.join(db, ["tbl", "bucket"])
-        .filter(F.col("q_id") != F.col("d_id"))
-        .select("q_id", "q_vec", "d_id", "d_vec")
-        .dropDuplicates(["q_id", "d_id"])
     )
 
 
@@ -314,7 +154,6 @@ def embedding_cosine_dedup(
     vec: str = "embedding",
     n_planes: int = 6,
     n_tables: int = 8,
-    impl: str = "auto",
     bucket_cap: int | None = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate removal — the dedup-family member
@@ -331,27 +170,7 @@ def embedding_cosine_dedup(
     thresholds is not the recall of top-k search."""
     from codem_spark.operators.dedup import _bucket_pairs
 
-    if impl == "auto":
-        impl = "udf" if dim * n_planes * n_tables > 1024 else "expr"
-    if impl == "udf":
-        b = df.select(
-            F.col(id_col).alias("did"),
-            lsh_buckets_udf_col(F.col(vec), dim, n_planes, n_tables).alias("_bks"),
-        )
-        banded = b.select("did", F.posexplode("_bks").alias("band", "bkey"))
-    else:
-        tbl = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("band"),
-                    lsh_bucket_col(F.col(vec), dim, n_planes, seed=13 + 101 * t).alias("bkey"),
-                )
-                for t in range(n_tables)
-            ]
-        )
-        banded = df.select(F.col(id_col).alias("did"), F.explode(tbl).alias("b")).select(
-            "did", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
-        )
+    banded = _lsh_banded(df, id_col, vec, dim, n_planes, n_tables)
     pairs = _bucket_pairs(banded, cap=bucket_cap)
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec).alias("_va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec).alias("_vb"))
@@ -363,6 +182,4 @@ def embedding_cosine_dedup(
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    from codem_spark.operators.dedup import carry_probe
-
-    return carry_probe(pairs, df.join(dup, id_col, "left_anti"))
+    return df.join(dup, id_col, "left_anti")

@@ -4,8 +4,7 @@ Two families:
 
 * ``pages(spark, n)`` — the input_hint table ``(url, warc_ts, html, text,
   lang)``; html is the invertible wrap of text (functions/text.py), so the
-  byte-identical-extraction invariant is testable end-to-end. A ``skew``
-  fraction of urls maps into one hot cell to exercise salting.
+  byte-identical-extraction invariant is testable end-to-end.
 * ``points_from_pages(df)`` / ``points_from_lineitem(df)`` — georeferenced
   point clouds: pseudo (x, y) from the url hash (or deterministic id lanes
   when an arithmetic oracle is needed), z from the synthetic surface, plus
@@ -41,16 +40,13 @@ def pages(
     spark: SparkSession,
     n: int,
     n_hosts: int = 97,
-    skew_fraction: float = 0.0,
     partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic Common-Crawl-style pages table.
 
     text = a deterministic word sequence keyed by row id (varying length);
     html = '<html>...<article>{escaped text}</article>...' so the extractor
-    inverse holds byte-for-byte. skew_fraction of rows get urls that all
-    hash-land wherever host0/page0's neighborhood is (hot-cell injection for
-    salting tests, FIXTURES.md §1).
+    inverse holds byte-for-byte.
     """
     df = spark.range(0, n, 1, partitions or spark.sparkContext.defaultParallelism)
     rid = F.col("id")
@@ -70,17 +66,9 @@ def pages(
     lang = F.element_at(
         F.array(*[F.lit(lg) for lg in _LANGS]), (F.pmod(rid, F.lit(len(_LANGS)))).cast("int") + 1
     )
-    if skew_fraction > 0:
-        hot = (geo.id_lane_col(rid, 3) < F.lit(skew_fraction))
-        url = F.when(
-            hot, F.concat(F.lit("https://hot.example/h"), (rid % 50).cast("string"))
-        ).otherwise(
-            F.concat(F.lit("https://host"), host.cast("string"), F.lit(".example/p/"), rid.cast("string"))
-        )
-    else:
-        url = F.concat(
-            F.lit("https://host"), host.cast("string"), F.lit(".example/p/"), rid.cast("string")
-        )
+    url = F.concat(
+        F.lit("https://host"), host.cast("string"), F.lit(".example/p/"), rid.cast("string")
+    )
     html_str = F.concat(
         F.lit("<html><head><title>page "),
         rid.cast("string"),

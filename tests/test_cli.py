@@ -56,8 +56,8 @@ def test_cli_register_writes_artifacts_and_resumes(spark, scene):
     from codem_spark.functions import imagecodec
 
     with open(os.path.join(out_dir, "dsm_feature_matches.png"), "rb") as fh:
-        img, fmt = imagecodec.decode_image(fh.read())
-    assert fmt == "png" and img.ndim == 3 and img.shape[2] == 3
+        img = imagecodec.decode_png(fh.read())
+    assert img.ndim == 3 and img.shape[2] == 3
     assert img.shape[1] > img.shape[0]  # two half-images + gap: wide canvas
     is_green = (img[:, :, 1] == 255) & (img[:, :, 0] == 0) & (img[:, :, 2] == 0)
     assert is_green.sum() > 50  # match lines drawn

@@ -120,6 +120,68 @@ def test_bucket_cap_none_is_exact_and_stats_observable(spark):
     assert big == {"hot_buckets": 0, "hot_rows": 0}
 
 
+def test_hot_bucket_stats_counts_boilerplate_cluster(spark):
+    """A 50-copy boilerplate cluster lands in one bucket per band; at
+    cap=8 hot_bucket_stats reports the truncated buckets and their rows."""
+    import pandas as pd
+
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(200),
+        "text": [f"unique document number {i} with its own words" for i in range(150)]
+        + ["identical boilerplate text shared by many pages"] * 50,
+    }))
+    keys = docs.select(
+        F.col("doc_id").alias("did"),
+        dedup.minhash_band_keys_col(dedup.shingles_col(F.col("text"), 3), 64, 16).alias("bkeys"),
+    )
+    banded = keys.select("did", F.posexplode("bkeys").alias("band", "bkey"))
+    stats = dedup.hot_bucket_stats(banded, cap=8)
+    assert stats["hot_buckets"] >= 1
+    assert stats["hot_rows"] >= 50
+
+
+def _persisted(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _leaf_names(p) -> list[str]:
+    """Leaf operators of a physical plan (InMemoryTableScan is a leaf of
+    the live plan, so a cached subtree counts once, as its scan)."""
+    if p.nodeName() == "AdaptiveSparkPlan":  # children() is empty; descend
+        return _leaf_names(p.initialPlan())
+    ch = p.children()
+    if ch.size() == 0:
+        return [p.nodeName()]
+    return [n for i in range(ch.size()) for n in _leaf_names(ch.apply(i))]
+
+
+def test_verify_shares_one_persisted_shingle_frame(spark):
+    """candidates + verify over two reads of the same parquet persist ONE
+    shingle frame, and every shingle subtree of the verify plan (the
+    candidate side and both pair sides) reads it from the cache."""
+    spark.catalog.clearCache()
+    before = _persisted(spark)
+    try:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        docs2 = spark.read.parquet(f"{SF}/documents.parquet")
+        out = dedup.jaccard_verify(dedup.minhash_lsh_candidates(docs), docs2, threshold=0.5)
+        out.collect()
+        assert _persisted(spark) - before == 1
+        leaves = _leaf_names(out._jdf.queryExecution().executedPlan())
+        assert leaves == ["InMemoryTableScan"] * 3, leaves
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_candidates_alone_persist_nothing(spark):
+    """A candidates-only call leaves no persisted frame behind."""
+    spark.catalog.clearCache()
+    before = _persisted(spark)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    dedup.minhash_lsh_candidates(docs).count()
+    assert _persisted(spark) - before == 0
+
+
 def test_minhash_mersenne_fold_matches_modulo():
     """The lane loop's Mersenne shift-add reduction must be bit-identical
     to the integer remainder it replaced, for every coefficient lane and

@@ -1,4 +1,4 @@
-"""From-scratch PNG/PPM/BMP codec: byte-exact roundtrips vs numpy arrays."""
+"""From-scratch PNG codec: byte-exact roundtrips vs numpy arrays."""
 
 from __future__ import annotations
 
@@ -64,49 +64,3 @@ def test_png_rejects_exotic():
         ic.decode_png(bytes(data))
     with pytest.raises(ValueError, match="signature"):
         ic.decode_png(b"notapng" + bytes(16))
-
-
-@pytest.mark.parametrize("ch", [1, 3])
-def test_ppm_binary_roundtrip(ch):
-    img = _img(9, 7, ch, seed=3)
-    back = ic.decode_ppm(ic.encode_ppm(img))
-    assert np.array_equal(back, img)
-
-
-def test_ppm_ascii_and_comments():
-    data = b"P3\n# a comment\n2 2\n255\n255 0 0  0 255 0\n0 0 255  10 20 30\n"
-    back = ic.decode_ppm(data)
-    assert back.shape == (2, 2, 3)
-    assert list(back[1, 1]) == [10, 20, 30]
-    gray = b"P2\n2 1\n255\n7 250\n"
-    assert list(ic.decode_ppm(gray).reshape(-1)) == [7, 250]
-
-
-@pytest.mark.parametrize("ch", [3, 4])
-def test_bmp_roundtrip(ch):
-    img = _img(5, 6, ch, seed=11)  # width 6*3=18 -> stride padding exercised
-    back = ic.decode_bmp(ic.encode_bmp(img))
-    assert np.array_equal(back, img)
-
-
-def test_bmp_top_down_and_palette():
-    img = _img(3, 3, 3, seed=5)
-    data = bytearray(ic.encode_bmp(img))
-    # make it top-down: negate height, re-order rows accordingly
-    h = struct.unpack("<i", data[22:26])[0]
-    struct.pack_into("<i", data, 22, -h)
-    back = ic.decode_bmp(bytes(data))
-    assert np.array_equal(back, img[::-1])
-
-
-def test_dispatch_sniffs_format():
-    img = _img(4, 4, 3)
-    for blob, fmt in [
-        (ic.encode_png(img, 2), "png"),
-        (ic.encode_ppm(img), "ppm"),
-        (ic.encode_bmp(img), "bmp"),
-    ]:
-        arr, f = ic.decode_image(blob)
-        assert f == fmt and np.array_equal(arr, img)
-    with pytest.raises(ValueError, match="unrecognized"):
-        ic.decode_image(b"IMG:123456")

@@ -125,35 +125,3 @@ def test_quantized_write_int32_overflow_raises(spark, tmp_path):
         tables.quantized_point_write(
             spark.createDataFrame(pdf), str(tmp_path / "q_overflow")
         )
-
-
-def test_dedup_stage_manifest_carries_hot_bucket_stats(spark, tmp_path):
-    """VERDICT r3 item 8: a minhash dedup stage run under run_stage surfaces
-    the hot-bucket truncation stats in its manifest — star-pair recall loss
-    is measured, not assumed."""
-    import pandas as pd
-
-    from codem_spark.operators import dedup
-
-    # 200 docs: 150 unique + one 50-member boilerplate cluster that lands in
-    # a single hot bucket (cap=8 forces the star fallback)
-    docs = pd.DataFrame({
-        "doc_id": range(200),
-        "text": [f"unique document number {i} with its own words" for i in range(150)]
-        + ["identical boilerplate text shared by many pages"] * 50,
-    })
-    src = spark.createDataFrame(docs)
-
-    run_dir = str(tmp_path / "run_dedup")
-    lineage.run_stage(
-        spark,
-        run_dir,
-        "minhash_cands",
-        lambda: dedup.minhash_lsh_candidates(src, bucket_cap=8),
-        input_fingerprint="d1",
-    )
-    ms = lineage.run_manifest(run_dir)
-    hb = ms[-1]["metrics"]["hot_bucket_stats"]
-    assert hb["bucket_cap"] == 8
-    assert hb["hot_buckets"] >= 1  # the boilerplate cluster tripped the cap
-    assert hb["hot_rows"] >= 50

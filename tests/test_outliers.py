@@ -1,4 +1,4 @@
-"""Outlier marking, salted repartitioning, residual columns."""
+"""Outlier marking, residual columns."""
 
 from __future__ import annotations
 
@@ -7,8 +7,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from codem_spark import synth
-from codem_spark.functions import cells
-from codem_spark.operators import salting
 from tests.conftest import EXTENT, SMALL_EXTENT
 
 
@@ -42,29 +40,6 @@ def test_local_minimum_outliers(spark):
     got = out.toPandas().set_index("pid").is_low_noise
     assert bool(got.loc[5000])
     assert not got.loc[np.arange(400)].any()
-
-
-def test_salted_repartition_balances_hot_cell(spark):
-    pages = synth.pages(spark, 20_000, skew_fraction=0.4)
-    geo = synth.georeference_pages(pages, EXTENT)
-    cell = cells.cell_encode_col(F.col("x"), F.col("y"), EXTENT, 8)
-    d = geo.select(F.col("url"), cell.alias("cell_id"))
-    # hot cells exist by construction
-    hot = salting.hot_cells(d, "cell_id", threshold=100)
-    assert hot.count() >= 1
-    salted = salting.salted_repartition(d, "cell_id", threshold=100, id_col="url")
-    # per-(cell, salt) group sizes stay near the threshold
-    sizes = salted.groupBy("cell_id", "salt").count().toPandas()
-    assert sizes["count"].max() <= 200
-    # salted two-phase agg equals the direct agg
-    direct = d.groupBy("cell_id").count().toPandas().sort_values("cell_id").reset_index(drop=True)
-    two = (
-        salting.salted_grid_agg(d, "cell_id", {"url": "count"}, threshold=100, id_col="url")
-        .toPandas()
-        .sort_values("cell_id")
-        .reset_index(drop=True)
-    )
-    assert (direct["count"].values == two["count_url"].values).all()
 
 
 def test_with_residuals(spark):

@@ -1,29 +1,8 @@
-"""Similarity search: brute-force SQL path == matmul path; LSH recall."""
+"""Similarity search: LSH recall against brute force; embedding dedup."""
 
 from __future__ import annotations
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_bruteforce_equals_matmul(spark):
-    from codem_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.limit(40)
-    a = (
-        similarity.cosine_topk_bruteforce(q, emb, k=5)
-        .toPandas()
-        .sort_values(["q_id", "rank"])
-        .reset_index(drop=True)
-    )
-    b = (
-        similarity.cosine_topk_matmul(q, emb, k=5)
-        .toPandas()
-        .sort_values(["q_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert (a.d_id.values == b.d_id.values).all()
-    assert (abs(a.cos_sim.values - b.cos_sim.values) < 1e-5).all()
 
 
 def test_lsh_recall_reasonable(spark):
@@ -37,63 +16,6 @@ def test_lsh_recall_reasonable(spark):
     appr_nn = dict(zip(approx[approx["rank"] == 1].q_id, approx[approx["rank"] == 1].d_id))
     hits = sum(1 for k_, v in exact_nn.items() if appr_nn.get(k_) == v)
     assert hits / len(exact_nn) > 0.5  # multi-table LSH recall on random vectors
-
-
-def test_lsh_udf_impl_matches_expr_impl(spark):
-    """High-dim Arrow-matmul bucketing must produce the same candidates/
-    ranking as the JVM literal-plane expressions (same seeds, same planes);
-    sign ties on near-zero projections are measure-zero on random data."""
-    import numpy as np
-    import pandas as pd
-    from codem_spark.operators import similarity
-
-    rng = np.random.default_rng(3)
-    n, dim = 400, 32
-    emb = pd.DataFrame(
-        {"vec_id": np.arange(n), "embedding": list(rng.standard_normal((n, dim)))}
-    )
-    df = spark.createDataFrame(emb)
-    q = df.filter("vec_id < 30")
-    a = similarity.cosine_topk_lsh(q, df, dim=dim, k=3, n_planes=6, n_tables=4, impl="expr").toPandas()
-    b = similarity.cosine_topk_lsh(q, df, dim=dim, k=3, n_planes=6, n_tables=4, impl="udf").toPandas()
-    ka = set(zip(a.q_id, a.d_id, a["rank"]))
-    kb = set(zip(b.q_id, b.d_id, b["rank"]))
-    assert ka == kb
-
-
-def test_matmul_cap_boundary_and_lsh_fallthrough(spark, monkeypatch):
-    """At the cap boundary the matmul (driver-broadcast) path runs and
-    matches brute force; one row above the cap the call must fall through
-    to the bucketed LSH path instead of collecting the data side
-    (VERDICT round-2 'What's wrong' #1)."""
-    from codem_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(64)
-    n = emb.count()
-    q = emb.limit(10)
-
-    called = {}
-    orig = similarity.cosine_topk_lsh
-
-    def spy(*a, **kw):
-        called["lsh"] = True
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(similarity, "cosine_topk_lsh", spy)
-
-    # exactly at cap: matmul path, exact results
-    at_cap = similarity.cosine_topk_matmul(q, emb, k=3, cap=n).toPandas()
-    assert "lsh" not in called
-    bf = similarity.cosine_topk_bruteforce(q, emb, k=3).toPandas()
-    a = at_cap.sort_values(["q_id", "rank"]).reset_index(drop=True)
-    b = bf.sort_values(["q_id", "rank"]).reset_index(drop=True)
-    assert (a.d_id.values == b.d_id.values).all()
-
-    # one over cap: LSH engages, no full collect reachable
-    over = similarity.cosine_topk_matmul(q, emb, k=3, cap=n - 1)
-    assert called.get("lsh") is True
-    assert over.columns == ["q_id", "d_id", "cos_sim", "rank"]
-    assert over.count() > 0
 
 
 def test_embedding_cosine_dedup_drops_planted_copies(spark):
@@ -149,19 +71,3 @@ def test_embedding_dedup_hot_bucket_star_guard(spark):
     ).toPandas()
     # survivor of the 60-copy cluster is exactly vec_id 0; distinct rows kept
     assert set(kept.vec_id) == {0} | set(range(60, 80))
-
-
-def test_matmul_empty_data_side_returns_empty(spark):
-    """ADVICE r3: an empty data frame short-circuits to an empty result
-    with the contract schema instead of failing in vstack/LSH."""
-    import pandas as pd
-
-    from codem_spark.operators import similarity
-
-    q = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [1, 2], "embedding": [[1.0, 0.0], [0.0, 1.0]]})
-    )
-    empty = q.filter("vec_id < 0")
-    out = similarity.cosine_topk_matmul(q, empty, k=3)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["q_id", "d_id", "cos_sim", "rank"]
