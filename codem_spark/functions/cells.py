@@ -10,8 +10,7 @@ L-bit quantized (x, y) within the dataset extent, so:
 * parent/child is a shift by 2 bits (hierarchical coarsening = DSM
   resolution pyramid);
 * neighbor cells are (ix±1, iy±1) re-interleaved — the tile+halo pattern
-  for kNN/IDW/infill kernels duplicates rows into their 3x3 (or wider)
-  neighbor ring.
+  (operators/knn.tile_right) duplicates rows into their 3x3 neighbor ring.
 
 Everything here is implemented three ways, bit-for-bit identical:
 ``*_col``   — Spark Column expressions (JVM whole-stage codegen, no Python);
@@ -86,93 +85,65 @@ def with_cell(df, x: str, y: str, extent: Extent, level: int, out: str = "cell_i
     )
 
 
-def explode_halo(
-    df,
-    level: int,
-    ring: int = 1,
-    out: str = "halo_cell",
-    extent: Extent | None = None,
-    radius: float | None = None,
-    x: str = "x",
-    y: str = "y",
-):
-    """Duplicate every row into its neighbor cells (the halo-exchange side
-    of the tile+halo kNN/IDW pattern; the radius bounds the shuffle volume
-    exactly as the reference bounds kNN by rmse_3d, icp.py:133-135).
-    Requires the _ix/_iy columns from with_cell; out-of-extent duplicates
+def _cell_offsets(extent: Extent, level: int):
+    """(cell edge, x offset, y offset) of each row inside its cell (requires
+    the x/y columns and the _ix/_iy columns from with_cell)."""
+    size = cell_size(extent, level)
+    fx = F.col("x") - (F.col("_ix").cast("double") * F.lit(size) + F.lit(extent[0]))
+    fy = F.col("y") - (F.col("_iy").cast("double") * F.lit(size) + F.lit(extent[1]))
+    return size, fx, fy
+
+
+def explode_halo(df, level: int, extent: Extent, radius: float):
+    """Duplicate every row into the 1-ring neighbor cells within ``radius``
+    of it (the halo-exchange side of the tile+halo pattern; the radius
+    bounds the shuffle volume exactly as the reference bounds kNN by
+    rmse_3d, icp.py:133-135). Requires the x/y columns and the _ix/_iy
+    columns from with_cell; adds ``halo_cell``; out-of-extent duplicates
     are dropped.
 
-    When ``extent`` and ``radius`` are given, a row is duplicated into a
-    neighbor cell ONLY if it lies within ``radius`` of the border facing
-    that neighbor (diagonals: both borders) — correctness is unchanged (a
-    left point in cell C within radius of a right point r implies r is
-    within radius of C's border toward r's cell), but the duplication
-    factor drops from (2r+1)^2 to ~(1 + 2*radius/cell_edge)^2, which is the
-    difference between a 9x and a ~1.7x shuffle at typical radii.
+    A row is duplicated into a neighbor cell ONLY if it lies within
+    ``radius`` of the border facing that neighbor (diagonals: both borders)
+    — a left point in cell C within radius of a right point r implies r is
+    within radius of C's border toward r's cell, so with cell edge >= radius
+    the 1-ring covers every neighbor, and the duplication factor is
+    ~(1 + 2*radius/cell_edge)^2 instead of 9.
     """
     n = 1 << level
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]
-    border = None
-    if extent is not None and radius is not None:
-        size = cell_size(extent, level)
-        fx = F.col(x) - (F.col("_ix").cast("double") * F.lit(size) + F.lit(extent[0]))
-        fy = F.col(y) - (F.col("_iy").cast("double") * F.lit(size) + F.lit(extent[1]))
+    size, fx, fy = _cell_offsets(extent, level)
+    r = F.lit(float(radius))
 
-        def near(dv: int, f) -> Column:
-            # reach toward a cell |dv| steps away: the first |dv|-1 cells are
-            # crossed whole, the remainder must cover the in-cell offset
-            if dv == 0:
-                return F.lit(True)
-            reach = float(radius) - (abs(dv) - 1) * size
-            if reach <= 0:
-                return F.lit(False)
-            if dv < 0:
-                return f <= F.lit(reach)
-            return (F.lit(size) - f) <= F.lit(reach)
+    def near(dv: int, f) -> Column:
+        if dv == 0:
+            return F.lit(True)
+        return f <= r if dv < 0 else (F.lit(size) - f) <= r
 
-        structs = []
-        for dx, dy in offsets:
-            cond = near(dx, fx) & near(dy, fy)
-            structs.append(
-                F.when(cond, F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")))
-            )
-        off = F.explode(
-            F.filter(F.array(*structs), lambda s: s.isNotNull())
+    structs = [
+        F.when(
+            near(dx, fx) & near(dy, fy),
+            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")),
         )
-    else:
-        off = F.explode(
-            F.array(
-                *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offsets]
-            )
-        )
+        for dx in (-1, 0, 1)
+        for dy in (-1, 0, 1)
+    ]
+    off = F.explode(F.filter(F.array(*structs), lambda s: s.isNotNull()))
     out_df = df.withColumn("_off", off)
     jx = F.col("_ix") + F.col("_off.dx")
     jy = F.col("_iy") + F.col("_off.dy")
     out_df = out_df.filter((jx >= 0) & (jx < n) & (jy >= 0) & (jy < n))
-    return out_df.withColumn(out, interleave_col(jx, jy)).drop("_off")
+    return out_df.withColumn("halo_cell", interleave_col(jx, jy)).drop("_off")
 
 
-def border_band(
-    df,
-    extent: Extent,
-    level: int,
-    radius: float,
-    x: str = "x",
-    y: str = "y",
-):
-    """Rows within ``radius`` of their cell's border (requires the _ix/_iy
-    columns from with_cell). A point deeper than ``radius`` inside its tile
-    cannot participate in any cross-tile pair within ``radius`` — this is
-    the pre-filter that keeps cross-tile edge generation O(boundary), not
-    O(points²), for the distributed connected-components pass."""
-    size = cell_size(extent, level)
-    fx = F.col(x) - (F.col("_ix").cast("double") * F.lit(size) + F.lit(extent[0]))
-    fy = F.col(y) - (F.col("_iy").cast("double") * F.lit(size) + F.lit(extent[1]))
+def border_col(extent: Extent, level: int, radius: float) -> Column:
+    """True for rows within ``radius`` of their cell's border (requires the
+    x/y columns and the _ix/_iy columns from with_cell). A point deeper
+    than ``radius`` inside its tile cannot participate in any cross-tile
+    pair within ``radius`` — the predicate that keeps cross-tile edge
+    generation O(boundary), not O(points²), for the connected-components
+    pass."""
+    size, fx, fy = _cell_offsets(extent, level)
     r = F.lit(float(radius))
-    near = (
-        (fx <= r) | ((F.lit(size) - fx) <= r) | (fy <= r) | ((F.lit(size) - fy) <= r)
-    )
-    return df.filter(near)
+    return (fx <= r) | ((F.lit(size) - fx) <= r) | (fy <= r) | ((F.lit(size) - fy) <= r)
 
 
 # ---------------------------------------------------------------- numpy side

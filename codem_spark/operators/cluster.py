@@ -290,19 +290,11 @@ def euclidean_cluster(
     par = spark.sparkContext.defaultParallelism
     level = knn.auto_level(extent, tolerance, approx_row_count(points), parallelism=par)
     tiled = cells.with_cell(points, "x", "y", extent, level)
-    # border-band membership is decided BEFORE the kernel (same predicate
-    # as cells.border_band) and carried through it, so the labeled frame
-    # already knows which rows can participate in cross-tile edges
-    size = cells.cell_size(extent, level)
-    fx = F.col("x") - (F.col("_ix").cast("double") * F.lit(size) + F.lit(extent[0]))
-    fy = F.col("y") - (F.col("_iy").cast("double") * F.lit(size) + F.lit(extent[1]))
-    rtol = F.lit(float(tolerance))
-    border_pred = (
-        (fx <= rtol) | ((F.lit(size) - fx) <= rtol)
-        | (fy <= rtol) | ((F.lit(size) - fy) <= rtol)
-    )
+    # border-band membership is decided BEFORE the kernel and carried
+    # through it, so the labeled frame already knows which rows can
+    # participate in cross-tile edges
     labeled = (
-        tiled.withColumn("_border", border_pred)
+        tiled.withColumn("_border", cells.border_col(extent, level, tolerance))
         .drop("_ix", "_iy")
         .groupBy("cell_id")
         .applyInPandas(

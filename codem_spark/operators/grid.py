@@ -498,9 +498,6 @@ def tile_explode(df: DataFrame, tile_px: int, halo: int, carry=("z",)) -> DataFr
 
 def infill(
     dsm: DataFrame,
-    extent: Extent,
-    resolution: float,
-    tile_level: int | None = None,
     max_rounds: int = 8,
     tile_px: int = 128,
 ) -> DataFrame:
@@ -521,55 +518,18 @@ def infill(
     pixels stay void, exactly like the capped loop.
     """
     filled = dsm.select("gx", "gy", "z")
-    b = filled.agg(
-        F.min("gx").alias("x0"), F.max("gx").alias("x1"),
-        F.min("gy").alias("y0"), F.max("gy").alias("y1"),
-    ).collect()[0]
-    if b["x0"] is None:
+    bb = _raster_bbox(filled)
+    if bb is None:
         return filled
-    bb = (int(b["x0"]), int(b["x1"]), int(b["y0"]), int(b["y1"]))
     H = int(max_rounds)
     exploded = tile_explode(filled, tile_px, H)
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        x0 = htx * tile_px - H
-        y0 = hty * tile_px - H
-        w = tile_px + 2 * H
-        arr = np.zeros((w, w))
-        have = np.zeros((w, w), dtype=bool)
-        ix = (pdf["gx"].to_numpy() - x0).astype(np.int64)
-        iy = (pdf["gy"].to_numpy() - y0).astype(np.int64)
-        arr[ix, iy] = pdf["z"].to_numpy(np.float64)
-        have[ix, iy] = True
-        # cells outside the global raster bbox must never fill
-        gxs = x0 + np.arange(w)
-        gys = y0 + np.arange(w)
-        in_bb = (
-            ((gxs >= bb[0]) & (gxs <= bb[1]))[:, None]
-            & ((gys >= bb[2]) & (gys <= bb[3]))[None, :]
-        )
-        offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
-        for _ in range(H):
-            num = np.zeros((w, w))
-            den = np.zeros((w, w))
-            for dx, dy in offs:
-                wgt = 1.0 / float(dx * dx + dy * dy)
-                src_x = slice(max(dx, 0), w + min(dx, 0))
-                src_y = slice(max(dy, 0), w + min(dy, 0))
-                dst_x = slice(max(-dx, 0), w + min(-dx, 0))
-                dst_y = slice(max(-dy, 0), w + min(-dy, 0))
-                hv = have[src_x, src_y]
-                num[dst_x, dst_y] += np.where(hv, arr[src_x, src_y], 0.0) * wgt
-                den[dst_x, dst_y] += hv * wgt
-            newly = (~have) & (den > 0) & in_bb
-            if not newly.any():
-                break
-            arr[newly] = num[newly] / den[newly]
-            have |= newly
-        core = np.zeros((w, w), dtype=bool)
-        core[H : H + tile_px, H : H + tile_px] = True
-        ex, ey = np.nonzero(have & core)
+        x0 = int(key[0]) * tile_px - H
+        y0 = int(key[1]) * tile_px - H
+        arr, have, _ix, _iy = _dense_tile(pdf, x0, y0, tile_px + 2 * H)
+        _fill_voids(arr, have, x0, y0, bb, H)
+        ex, ey = np.nonzero(have & _core(arr.shape[0], H, tile_px))
         return pd.DataFrame(
             {"gx": ex + x0, "gy": ey + y0, "z": arr[ex, ey]}
         )
@@ -577,6 +537,70 @@ def infill(
     return exploded.groupBy("htx", "hty").applyInPandas(
         kernel, schema="gx long, gy long, z double"
     )
+
+
+def _raster_bbox(filled: DataFrame) -> tuple[int, int, int, int] | None:
+    """(gx0, gx1, gy0, gy1) of the filled cells, None for an empty raster."""
+    b = filled.agg(
+        F.min("gx").alias("x0"), F.max("gx").alias("x1"),
+        F.min("gy").alias("y0"), F.max("gy").alias("y1"),
+    ).collect()[0]
+    if b["x0"] is None:
+        return None
+    return (int(b["x0"]), int(b["x1"]), int(b["y0"]), int(b["y1"]))
+
+
+def _dense_tile(pdf: pd.DataFrame, x0: int, y0: int, w: int):
+    """Scatter a tile's (gx, gy, z) rows into a dense (w, w) array whose
+    [0, 0] is cell (x0, y0). Returns (z array, filled mask, ix, iy)."""
+    arr = np.zeros((w, w))
+    have = np.zeros((w, w), dtype=bool)
+    ix = (pdf["gx"].to_numpy() - x0).astype(np.int64)
+    iy = (pdf["gy"].to_numpy() - y0).astype(np.int64)
+    arr[ix, iy] = pdf["z"].to_numpy(np.float64)
+    have[ix, iy] = True
+    return arr, have, ix, iy
+
+
+def _core(w: int, halo: int, tile_px: int) -> np.ndarray:
+    core = np.zeros((w, w), dtype=bool)
+    core[halo : halo + tile_px, halo : halo + tile_px] = True
+    return core
+
+
+def _fill_voids(
+    arr: np.ndarray, have: np.ndarray, x0: int, y0: int,
+    bb: tuple[int, int, int, int], rounds: int,
+) -> None:
+    """In place: up to ``rounds`` rounds of the G4 fill — every empty cell
+    inside the raster bbox ``bb`` with >= 1 filled 8-neighbor takes the
+    inverse-squared-distance weighted mean of its filled neighbors."""
+    w = arr.shape[0]
+    # cells outside the global raster bbox must never fill
+    gxs = x0 + np.arange(w)
+    gys = y0 + np.arange(w)
+    in_bb = (
+        ((gxs >= bb[0]) & (gxs <= bb[1]))[:, None]
+        & ((gys >= bb[2]) & (gys <= bb[3]))[None, :]
+    )
+    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
+    for _ in range(rounds):
+        num = np.zeros((w, w))
+        den = np.zeros((w, w))
+        for dx, dy in offs:
+            wgt = 1.0 / float(dx * dx + dy * dy)
+            src_x = slice(max(dx, 0), w + min(dx, 0))
+            src_y = slice(max(dy, 0), w + min(dy, 0))
+            dst_x = slice(max(-dx, 0), w + min(-dx, 0))
+            dst_y = slice(max(-dy, 0), w + min(-dy, 0))
+            hv = have[src_x, src_y]
+            num[dst_x, dst_y] += np.where(hv, arr[src_x, src_y], 0.0) * wgt
+            den[dst_x, dst_y] += hv * wgt
+        newly = (~have) & (den > 0) & in_bb
+        if not newly.any():
+            break
+        arr[newly] = num[newly] / den[newly]
+        have |= newly
 
 
 def resample_raster(
@@ -714,6 +738,21 @@ def _sep_conv(a: np.ndarray, k: np.ndarray) -> np.ndarray:
     return out2
 
 
+def _band_pass_np(
+    arr: np.ndarray, have: np.ndarray, kw: np.ndarray, ks: np.ndarray
+) -> np.ndarray:
+    """Weak-minus-strong Gaussian blur of ``arr`` over its filled cells
+    ``have``; each blur is mask-normalized, so raster edges and voids
+    renormalize over valid pixels instead of bleeding zeros."""
+    m = have.astype(np.float64)
+    blurred = []
+    for k in (kw, ks):
+        num = _sep_conv(arr * m, k)
+        den = _sep_conv(m, k)
+        blurred.append(np.where(den > 1e-12, num / np.maximum(den, 1e-12), 0.0))
+    return blurred[0] - blurred[1]
+
+
 def band_pass(
     dsm: DataFrame,
     weak_sigma_px: float,
@@ -737,29 +776,16 @@ def band_pass(
     exploded = tile_explode(dsm.select("gx", "gy", "z"), tile_px, halo)
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        x0 = htx * tile_px - halo
-        y0 = hty * tile_px - halo
-        w = tile_px + 2 * halo
-        arr = np.zeros((w, w))
-        m = np.zeros((w, w))
-        ix = (pdf["gx"].to_numpy() - x0).astype(np.int64)
-        iy = (pdf["gy"].to_numpy() - y0).astype(np.int64)
-        z = pdf["z"].to_numpy(np.float64)
-        arr[ix, iy] = z
-        m[ix, iy] = 1.0
-        out = {}
-        for name, k in (("wk", kw), ("st", ks)):
-            num = _sep_conv(arr * m, k)
-            den = _sep_conv(m, k)
-            out[name] = np.where(den > 1e-12, num / np.maximum(den, 1e-12), 0.0)
-        bp = out["wk"] - out["st"]
+        x0 = int(key[0]) * tile_px - halo
+        y0 = int(key[1]) * tile_px - halo
+        arr, have, ix, iy = _dense_tile(pdf, x0, y0, tile_px + 2 * halo)
+        bp = _band_pass_np(arr, have, kw, ks)
         core = (ix >= halo) & (ix < halo + tile_px) & (iy >= halo) & (iy < halo + tile_px)
         return pd.DataFrame(
             {
                 "gx": pdf["gx"].to_numpy()[core],
                 "gy": pdf["gy"].to_numpy()[core],
-                "z": z[core],
+                "z": pdf["z"].to_numpy(np.float64)[core],
                 "bp": bp[ix[core], iy[core]],
             }
         )
@@ -771,8 +797,6 @@ def band_pass(
 
 def infill_band_pass(
     dsm: DataFrame,
-    extent: Extent,
-    resolution: float,
     weak_sigma_px: float,
     strong_sigma_px: float,
     tile_px: int = 256,
@@ -792,13 +816,9 @@ def infill_band_pass(
     tests/test_grid.py). Output: (gx, gy, z, bp) over all filled core
     cells, exactly like band_pass(infill(dsm))."""
     filled = dsm.select("gx", "gy", "z")
-    b = filled.agg(
-        F.min("gx").alias("x0"), F.max("gx").alias("x1"),
-        F.min("gy").alias("y0"), F.max("gy").alias("y1"),
-    ).collect()[0]
-    if b["x0"] is None:
+    bb = _raster_bbox(filled)
+    if bb is None:
         return filled.withColumn("bp", F.lit(0.0))
-    bb = (int(b["x0"]), int(b["x1"]), int(b["y0"]), int(b["y1"]))
     h_inf = int(max_rounds)
     h_bp = max(1, int(math.ceil(4.0 * strong_sigma_px)) + 1)
     halo = h_inf + h_bp
@@ -807,57 +827,14 @@ def infill_band_pass(
     exploded = tile_explode(filled, tile_px, halo)
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        x0 = htx * tile_px - halo
-        y0 = hty * tile_px - halo
-        w = tile_px + 2 * halo
-        arr = np.zeros((w, w))
-        have = np.zeros((w, w), dtype=bool)
-        ix = (pdf["gx"].to_numpy() - x0).astype(np.int64)
-        iy = (pdf["gy"].to_numpy() - y0).astype(np.int64)
-        arr[ix, iy] = pdf["z"].to_numpy(np.float64)
-        have[ix, iy] = True
-        gxs = x0 + np.arange(w)
-        gys = y0 + np.arange(w)
-        in_bb = (
-            ((gxs >= bb[0]) & (gxs <= bb[1]))[:, None]
-            & ((gys >= bb[2]) & (gys <= bb[3]))[None, :]
-        )
-        offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
-        for _ in range(h_inf):
-            num = np.zeros((w, w))
-            den = np.zeros((w, w))
-            for dx, dy in offs:
-                wgt = 1.0 / float(dx * dx + dy * dy)
-                src_x = slice(max(dx, 0), w + min(dx, 0))
-                src_y = slice(max(dy, 0), w + min(dy, 0))
-                dst_x = slice(max(-dx, 0), w + min(-dx, 0))
-                dst_y = slice(max(-dy, 0), w + min(-dy, 0))
-                hv = have[src_x, src_y]
-                num[dst_x, dst_y] += np.where(hv, arr[src_x, src_y], 0.0) * wgt
-                den[dst_x, dst_y] += hv * wgt
-            newly = (~have) & (den > 0) & in_bb
-            if not newly.any():
-                break
-            arr[newly] = num[newly] / den[newly]
-            have |= newly
-        m = have.astype(np.float64)
-        out = {}
-        for name, k in (("wk", kw), ("st", ks)):
-            num = _sep_conv(arr * m, k)
-            den = _sep_conv(m, k)
-            out[name] = np.where(den > 1e-12, num / np.maximum(den, 1e-12), 0.0)
-        bp = out["wk"] - out["st"]
-        core = np.zeros((w, w), dtype=bool)
-        core[halo : halo + tile_px, halo : halo + tile_px] = True
-        ex, ey = np.nonzero(have & core)
+        x0 = int(key[0]) * tile_px - halo
+        y0 = int(key[1]) * tile_px - halo
+        arr, have, _ix, _iy = _dense_tile(pdf, x0, y0, tile_px + 2 * halo)
+        _fill_voids(arr, have, x0, y0, bb, h_inf)
+        bp = _band_pass_np(arr, have, kw, ks)
+        ex, ey = np.nonzero(have & _core(arr.shape[0], halo, tile_px))
         return pd.DataFrame(
-            {
-                "gx": ex + x0,
-                "gy": ey + y0,
-                "z": arr[ex, ey],
-                "bp": bp[ex, ey],
-            }
+            {"gx": ex + x0, "gy": ey + y0, "z": arr[ex, ey], "bp": bp[ex, ey]}
         )
 
     return exploded.groupBy("htx", "hty").applyInPandas(

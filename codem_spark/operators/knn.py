@@ -9,14 +9,19 @@ exist at 10^12 rows, so the engine:
 1. picks a cell level whose cell edge >= search radius (so a 1-ring halo
    provably covers every true neighbor within radius — same role as the
    reference's ``distance_upper_bound`` pruning, icp.py:133-135);
-2. partitions the query side by its own cell, duplicates the data side into
-   each cell's (2r+1)^2 neighbor ring (bounded shuffle fan-out);
-3. cogroups the two sides per cell and runs a vectorized numpy kernel
-   (chunked pairwise distances + argpartition top-k) via applyInPandas —
-   Arrow batches, no per-row Python;
-4. (optional completeness pass) queries that found no neighbor inside the
-   radius re-run at an escalated radius — a driver loop over a shrinking
-   residual set, the distributed replacement for an unbounded KD-tree query.
+2. partitions the query side by its own cell and duplicates the data side
+   into the neighbor cells within radius of each row (:func:`tile_right`,
+   the one builder of the halo'd data side — bounded shuffle fan-out);
+3. cogroups the two sides per cell (:func:`_tile_cogroup`, the one join
+   runner) and runs a vectorized numpy kernel — :func:`grid_topk`, the one
+   neighbour search — via applyInPandas: Arrow batches, no per-row Python.
+   kNN, radius join, normals (registration/icp.compute_normals) and point
+   resampling (operators/resample.resample_to_points) are all this plan;
+4. (completeness pass, :func:`knn_join_complete`) queries that found no
+   neighbor inside the radius re-run at an escalated radius — a driver loop
+   over a shrinking residual set, read off the kernel's ``nn_rank = 0``
+   sentinel rows; the distributed replacement for an unbounded KD-tree
+   query.
 
 Determinism: ties in distance break by ascending data-point id, so output
 rows are identical run-to-run and partitioning-to-partitioning (a north-rule
@@ -252,8 +257,8 @@ def grid_topk(
         # that order), so per-left segment boundaries come from one diff
         if k is None:
             # radius-join mode: every within-radius pair, no ranking — the
-            # callers (radius_join, IDW neighborhoods) ignore rank, so the
-            # lexsort the generic path pays is pure waste here
+            # callers (radius_join, the cluster edge kernels) ignore rank, so
+            # the lexsort the generic path pays is pure waste here
             li_parts.append(li_w)
             ri_parts.append(ri_w)
             d_parts.append(np.sqrt(d2_w))
@@ -328,56 +333,33 @@ def _topk_kernel_builder(
     row lives in exactly one home tile, so no duplicates arise."""
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        out_cols = (
-            [lid, "n_" + rid, "nn_dist", "nn_rank"]
-            + ["l_" + c for c in l_carry]
-            + ["r_" + c for c in r_carry]
-        )
-        if len(left) == 0 or len(right) == 0:
-            if emit_unmatched and len(left):
-                data = {
-                    lid: left[lid].to_numpy(),
-                    "n_" + rid: np.full(len(left), -1, dtype=np.int64),
-                    "nn_dist": np.full(len(left), np.nan),
-                    "nn_rank": np.zeros(len(left), dtype=np.int32),
-                }
-                for c in l_carry:
-                    data["l_" + c] = left[c].to_numpy()
-                for c in r_carry:
-                    data["r_" + c] = np.full(len(left), np.nan)
-                return pd.DataFrame(data)
-            return pd.DataFrame({c: [] for c in out_cols})
-        lpts = np.column_stack([left[d].to_numpy(np.float64) for d in dims])
-        rpts = np.column_stack([right[d].to_numpy(np.float64) for d in dims])
-        rids = right[rid].to_numpy()
-        li, ri, dist, rank = grid_topk(lpts, rpts, rids, radius, k)
-        data = {
-            lid: left[lid].to_numpy()[li],
-            "n_" + rid: rids[ri],
-            "nn_dist": dist,
-            "nn_rank": rank.astype(np.int32),
-        }
-        for c in l_carry:
-            data["l_" + c] = left[c].to_numpy()[li]
-        for c in r_carry:
-            data["r_" + c] = right[c].to_numpy()[ri]
+        if len(left) and len(right):
+            lpts = np.column_stack([left[d].to_numpy(np.float64) for d in dims])
+            rpts = np.column_stack([right[d].to_numpy(np.float64) for d in dims])
+            li, ri, dist, rank = grid_topk(lpts, rpts, right[rid].to_numpy(), radius, k)
+        else:
+            li, ri, dist, rank = _EMPTY
+        n_ids = right[rid].to_numpy()[ri]
+        r_vals = {c: right[c].to_numpy()[ri] for c in r_carry}
         if emit_unmatched:
             un = np.ones(len(left), dtype=bool)
             un[li] = False
-            if un.any():
-                extra = {
-                    lid: left[lid].to_numpy()[un],
-                    "n_" + rid: np.full(int(un.sum()), -1, dtype=np.int64),
-                    "nn_dist": np.full(int(un.sum()), np.nan),
-                    "nn_rank": np.zeros(int(un.sum()), dtype=np.int32),
-                }
-                for c in l_carry:
-                    extra["l_" + c] = left[c].to_numpy()[un]
-                for c in r_carry:
-                    extra["r_" + c] = np.full(int(un.sum()), np.nan)
-                return pd.concat(
-                    [pd.DataFrame(data), pd.DataFrame(extra)], ignore_index=True
-                )
+            extra = np.flatnonzero(un)
+            li = np.concatenate([li, extra])
+            n_ids = np.concatenate([n_ids, np.full(len(extra), -1)])
+            dist = np.concatenate([dist, np.full(len(extra), np.nan)])
+            rank = np.concatenate([rank, np.zeros(len(extra), dtype=np.int64)])
+            r_vals = {
+                c: np.concatenate([v, np.full(len(extra), np.nan)]) for c, v in r_vals.items()
+            }
+        data = {
+            lid: left[lid].to_numpy()[li],
+            "n_" + rid: n_ids,
+            "nn_dist": dist,
+            "nn_rank": rank.astype(np.int32),
+        }
+        data.update({"l_" + c: left[c].to_numpy()[li] for c in l_carry})
+        data.update({"r_" + c: v for c, v in r_vals.items()})
         return pd.DataFrame(data)
 
     return kernel
@@ -389,29 +371,68 @@ def tile_right(
     radius: float,
     level: int,
     dims: tuple[str, ...] = ("x", "y", "z"),
-    rid: str = "pid",
+    rid: str | None = "pid",
     r_carry: tuple[str, ...] = (),
-    ring: int = 1,
 ) -> DataFrame:
-    """Pre-tile the data side of :func:`knn_join` — with_cell + halo
-    explosion + the ``_r_`` column aliasing — for reuse across REPEATED
-    joins against the same fixed frame (the ICP loop joins the moving cloud
-    against one fixed cloud up to 100 times; re-tiling + re-shuffling the
-    fixed side per iteration was the dominant per-iteration cost).
+    """The data side of the tile+halo plan — with_cell + halo explosion,
+    keyed by ``cell_id``, with the ``rid``/``dims``/``r_carry`` columns
+    aliased to ``_r_<col>`` (``rid=None`` carries no id). Every tile+halo
+    operator builds its data side here; :func:`_tile_cogroup` joins it.
 
-    The caller should ``.repartition('cell_id').persist()`` the result: the
-    cached hash partitioning satisfies the cogroup's clustered-distribution
+    The ``_r_`` aliases matter: a self-join (left is right, or shares
+    lineage) otherwise resolves both cogroup children to the SAME attribute
+    ids and Catalyst prunes the right side down to the key.
+
+    Loop callers build it once: the ICP loop joins the moving cloud against
+    one fixed cloud up to 100 times, and re-tiling + re-shuffling the fixed
+    side per iteration was the dominant per-iteration cost. Such a caller
+    should ``.repartition('cell_id').persist()`` the result: the cached
+    hash partitioning satisfies the cogroup's clustered-distribution
     requirement, so each subsequent ``knn_join(..., right_tiled=...)``
     exchanges ONLY the left side (asserted in tests/test_plans.py)."""
     rc = cells.with_cell(right, "x", "y", extent, level)
-    rh = cells.explode_halo(
-        rc, level, ring=ring, out="halo_cell", extent=extent, radius=radius
-    ).drop("_ix", "_iy", "cell_id")
-    r_cols = [rid, *dims, *[c for c in r_carry if c not in dims and c != rid]]
+    rh = cells.explode_halo(rc, level, extent, radius).drop("_ix", "_iy", "cell_id")
+    r_cols = [*([rid] if rid else []), *dims, *r_carry]
     return rh.select(
         F.col("halo_cell").alias("cell_id"),
         *[F.col(c).alias(f"_r_{c}") for c in dict.fromkeys(r_cols)],
     )
+
+
+def _tile_cogroup(
+    left: DataFrame,
+    right_tiled: DataFrame,
+    extent: Extent,
+    level: int,
+    l_cols: list[str],
+    kernel: "Callable[[int, pd.DataFrame, pd.DataFrame], pd.DataFrame]",
+    schema: str,
+) -> DataFrame:
+    """The tile+halo join: ``left`` rows go to their home cell, the
+    :func:`tile_right` side to every cell its halo reaches; per cell,
+    ``kernel(cell_id, left_pdf, right_pdf)`` runs on the two pandas frames
+    (right columns with their ``_r_`` prefix stripped) — Arrow batches, no
+    per-row Python. ``l_cols`` lists the left columns to shuffle, in row
+    order, with the ``cell_id`` this adds among them."""
+    lsel = cells.with_cell(left, "x", "y", extent, level).select(*dict.fromkeys(l_cols))
+
+    def run(key, lpdf, rpdf):
+        rpdf = rpdf.rename(columns={c: c[3:] for c in rpdf.columns if c.startswith("_r_")})
+        return kernel(key[0], lpdf, rpdf)
+
+    return (
+        lsel.groupBy("cell_id")
+        .cogroup(right_tiled.groupBy("cell_id"))
+        .applyInPandas(run, schema=schema)
+    )
+
+
+def _types(df: DataFrame, prefix: str = "") -> dict[str, str]:
+    return {
+        f.name[len(prefix):]: f.dataType.simpleString()
+        for f in df.schema.fields
+        if f.name.startswith(prefix)
+    }
 
 
 def knn_join(
@@ -425,9 +446,7 @@ def knn_join(
     rid: str = "pid",
     l_carry: tuple[str, ...] = (),
     r_carry: tuple[str, ...] = (),
-    ring: int = 1,
     level: int | None = None,
-    n_left: int | None = None,
     right_tiled: DataFrame | None = None,
     post: "Callable[[pd.DataFrame], pd.DataFrame] | None" = None,
     post_schema: str | None = None,
@@ -439,12 +458,11 @@ def knn_join(
     Output columns: lid, n_<rid>, nn_dist, nn_rank, l_<carry...>, r_<carry...>.
 
     ``level=None`` sizes tiles from the left-side row count, which costs a
-    count() job — loop callers should pass ``level`` (the ICP loop does) or
-    the ``n_left`` hint when the count is already known.
+    count() job — loop callers should pass ``level`` (the ICP loop does).
 
     ``right_tiled``: a pre-tiled data side from :func:`tile_right` (built at
-    the SAME level/radius/ring); ``right`` is then ignored. Loop callers
-    cache it once so only the left side shuffles per join.
+    the SAME level/radius); ``right`` is then ignored. Loop callers cache it
+    once so only the left side shuffles per join.
 
     ``post``: a per-tile reducer applied to the kNN kernel's output pandas
     frame INSIDE the cogroup (output schema ``post_schema``). Iterative
@@ -455,57 +473,23 @@ def knn_join(
     """
     if level is None:
         par = left.sparkSession.sparkContext.defaultParallelism
-        if n_left is None:
-            n_left = left.count()
-        level = auto_level(extent, radius / max(ring, 1), n_left, parallelism=par)
-    lc = cells.with_cell(left, "x", "y", extent, level).drop("_ix", "_iy")
-    if right_tiled is not None:
-        rsel = right_tiled
-        rf = {
-            f.name[3:]: f.dataType.simpleString()
-            for f in right_tiled.schema.fields
-            if f.name.startswith("_r_")
-        }
-    else:
-        rc = cells.with_cell(right, "x", "y", extent, level)
-        rh = cells.explode_halo(
-            rc, level, ring=ring, out="halo_cell", extent=extent, radius=radius
-        ).drop("_ix", "_iy", "cell_id")
-        r_cols = [rid, *dims, *[c for c in r_carry if c not in dims and c != rid]]
-        # Alias right-side columns to fresh names: a self-join (left is
-        # right, or shares lineage) otherwise resolves both cogroup children
-        # to the SAME attribute ids and Catalyst prunes the right side down
-        # to the key.
-        rsel = rh.select(
-            F.col("halo_cell").alias("cell_id"),
-            *[F.col(c).alias(f"_r_{c}") for c in dict.fromkeys(r_cols)],
-        )
-        rf = {f.name: f.dataType.simpleString() for f in right.schema.fields}
-
-    l_cols = [lid, *dims, *[c for c in l_carry if c not in dims and c != lid]]
-    lsel = lc.select("cell_id", *dict.fromkeys(l_cols))
-
+        level = auto_level(extent, radius, left.count(), parallelism=par)
+    if right_tiled is None:
+        right_tiled = tile_right(right, extent, radius, level, dims, rid, r_carry)
     kernel = _topk_kernel_builder(
         k, radius, dims, lid, rid, list(l_carry), list(r_carry),
         emit_unmatched=emit_unmatched,
     )
-
-    def run(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        r = r.rename(columns={c: c[3:] for c in r.columns if c.startswith("_r_")})
-        out = kernel(l, r)
-        return post(out) if post is not None else out
-
-    # Build the output schema explicitly from the input schemas.
-    lf = {f.name: f.dataType.simpleString() for f in left.schema.fields}
-    parts = [f"{lid} {lf[lid]}", f"n_{rid} {rf[rid]}", "nn_dist double", "nn_rank int"]
-    parts += [f"l_{c} {lf[c]}" for c in l_carry]
-    parts += [f"r_{c} {rf[c]}" for c in r_carry]
-    out_schema = post_schema if post is not None else ", ".join(parts)
-
-    return (
-        lsel.groupBy("cell_id")
-        .cogroup(rsel.groupBy("cell_id"))
-        .applyInPandas(lambda _key, l, r: run(l, r), schema=out_schema)
+    if post is None:
+        lf, rf = _types(left), _types(right_tiled, "_r_")
+        parts = [f"{lid} {lf[lid]}", f"n_{rid} {rf[rid]}", "nn_dist double", "nn_rank int"]
+        parts += [f"l_{c} {lf[c]}" for c in l_carry]
+        parts += [f"r_{c} {rf[c]}" for c in r_carry]
+        post_schema = ", ".join(parts)
+    run = kernel if post is None else lambda l, r: post(kernel(l, r))
+    return _tile_cogroup(
+        left, right_tiled, extent, level, ["cell_id", lid, *dims, *l_carry],
+        lambda _cell, l, r: run(l, r), post_schema,
     )
 
 
@@ -517,20 +501,22 @@ def radius_join(
     dims: tuple[str, ...] = ("x", "y", "z"),
     lid: str = "pid",
     rid: str = "pid",
-    ring: int = 1,
     level: int | None = None,
     cross_tile_only: bool = False,
     unordered_ids: bool = False,
 ) -> DataFrame:
-    """ALL pairs within ``radius`` (not top-k) — the distance-join used for
-    clustering edges (J8) and IDW neighborhoods. Same tile+halo plan as
-    knn_join; kernel emits every within-radius pair exactly once (each right
-    row lands in a given halo cell once, each left row has one home cell).
+    """ALL pairs within ``radius`` (not top-k) — the distance join behind
+    the distributed clustering edges (J8). Same tile+halo plan as
+    knn_join; the kernel emits every within-radius pair exactly once (each
+    right row lands in a given halo cell once, each left row has one home
+    cell).
 
     cross_tile_only=True keeps only pairs whose endpoints live in DIFFERENT
     tiles — the connected-components edge mode: intra-tile connectivity is
     already resolved by the in-tile kernel, so emitting intra-tile pairs
     again would make a dense m-point blob cost m² edge rows at the shuffle.
+    The kernel recomputes each right row's home cell from its x/y
+    (cells.cell_encode_np, bit-identical to the Spark-side with_cell).
 
     unordered_ids=True (for self-joins whose consumer symmetrizes, i.e. the
     CC edge phase) keeps only pairs with lid < rid, masked in the kernel
@@ -542,24 +528,15 @@ def radius_join(
     """
     if level is None:
         par = left.sparkSession.sparkContext.defaultParallelism
-        level = auto_level(extent, radius / max(ring, 1), left.count(), parallelism=par)
-    lc = cells.with_cell(left, "x", "y", extent, level).drop("_ix", "_iy")
-    rc = cells.with_cell(right, "x", "y", extent, level)
-    rh = cells.explode_halo(
-        rc, level, ring=ring, out="halo_cell", extent=extent, radius=radius
-    ).drop("_ix", "_iy")
-    lsel = lc.select("cell_id", lid, *dims)
-    home = [F.col("cell_id").alias("_r_home")] if cross_tile_only else []
-    rsel = rh.select(
-        F.col("halo_cell").alias("cell_id"),
-        *home,
-        *[F.col(c).alias(f"_r_{c}") for c in dict.fromkeys([rid, *dims])],
-    )
+        level = auto_level(extent, radius, left.count(), parallelism=par)
 
-    def kernel(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(cell: int, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if cross_tile_only and len(rpdf):
-            rpdf = rpdf[rpdf["_r_home"].to_numpy() != key[0]]
-        rpdf = rpdf.rename(columns={c: c[3:] for c in rpdf.columns if c.startswith("_r_")})
+            home = cells.cell_encode_np(
+                rpdf["x"].to_numpy(np.float64), rpdf["y"].to_numpy(np.float64),
+                extent, level,
+            )
+            rpdf = rpdf[home != cell]
         if len(lpdf) == 0 or len(rpdf) == 0:
             return pd.DataFrame({lid: [], "n_" + rid: [], "nn_dist": []})
         lp = np.column_stack([lpdf[d].to_numpy(np.float64) for d in dims])
@@ -575,14 +552,20 @@ def radius_join(
             li, ri, dist = li[keep], ri[keep], dist[keep]
         return pd.DataFrame({lid: lids_[li], "n_" + rid: rids_[ri], "nn_dist": dist})
 
-    lf = {f.name: f.dataType.simpleString() for f in left.schema.fields}
-    rf = {f.name: f.dataType.simpleString() for f in right.schema.fields}
-    out_schema = f"{lid} {lf[lid]}, n_{rid} {rf[rid]}, nn_dist double"
-    return (
-        lsel.groupBy("cell_id")
-        .cogroup(rsel.groupBy("cell_id"))
-        .applyInPandas(kernel, schema=out_schema)
+    right_tiled = tile_right(right, extent, radius, level, dims, rid)
+    lt, rt = _types(left)[lid], _types(right_tiled, "_r_")[rid]
+    out_schema = f"{lid} {lt}, n_{rid} {rt}, nn_dist double"
+    return _tile_cogroup(
+        left, right_tiled, extent, level, ["cell_id", lid, *dims], kernel, out_schema
     )
+
+
+# knn_join_complete: at most this many radius-bounded rounds, the radius
+# growing by _ESCALATE per round; the first radius is at most
+# _ADAPTIVE_FACTOR x the right cloud's mean point spacing
+_MAX_ROUNDS = 8
+_ESCALATE = 4.0
+_ADAPTIVE_FACTOR = 3.0
 
 
 def knn_join_complete(
@@ -590,9 +573,6 @@ def knn_join_complete(
     right: DataFrame,
     extent: Extent,
     radius: float,
-    max_rounds: int = 8,
-    escalate: float = 4.0,
-    adaptive_factor: float | None = 3.0,
     **kw,
 ) -> DataFrame:
     """Unbounded nearest-neighbor (k=1) join: radius-bounded rounds with
@@ -632,27 +612,25 @@ def knn_join_complete(
     # caller's radius is a constant, but the right cloud's density is not —
     # at 10x the bench rows the same 2.5 km start meant ~300 candidate
     # pairs per query point (measured 36 s at 6M rows). Shrink round 1 to
-    # ``adaptive_factor`` x the mean point spacing (never grow past the
+    # _ADAPTIVE_FACTOR x the mean point spacing (never grow past the
     # caller's radius): for near-uniform data P(no neighbor) ~ e^(-pi f^2)
     # is negligible at f = 3, and any stragglers are exactly what the
     # escalation rounds are for — the RESULT is radius-unbounded either
     # way, only the work changes.
-    if adaptive_factor and n_right > 0:
+    if n_right > 0:
         area = max((extent[2] - extent[0]) * (extent[3] - extent[1]), 1e-12)
         spacing = math.sqrt(area / n_right)
-        radius = min(radius, max(adaptive_factor * spacing, 1e-9))
+        radius = min(radius, max(_ADAPTIVE_FACTOR * spacing, 1e-9))
     residual = left
     n_res = approx_row_count(left)  # parallelism knob only — no count job
     rounds: list[DataFrame] = []
     r = radius
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         # halo-covers-radius invariant: even a caller-pinned level must
-        # coarsen as the radius escalates (cell edge >= radius/ring)
-        lr = level_for_radius(extent, r / max(kw.get("ring", 1), 1))
+        # coarsen as the radius escalates (cell edge >= radius)
         level = min(
-            kw.get("level")
-            or auto_level(extent, r / max(kw.get("ring", 1), 1), n_res, parallelism=par),
-            lr,
+            kw.get("level") or auto_level(extent, r, n_res, parallelism=par),
+            level_for_radius(extent, r),
         )
         out = knn_join(
             residual, right, extent, r,
@@ -665,7 +643,7 @@ def knn_join_complete(
         residual = out.filter(F.col("nn_rank") == 0).select(
             lid, *[F.col(f"l_{c}").alias(c) for c in l_carry_full]
         )
-        r *= escalate
+        r *= _ESCALATE
     result = rounds[0]
     for m in rounds[1:]:
         result = result.unionByName(m)

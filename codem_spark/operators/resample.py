@@ -6,17 +6,18 @@ arbitrary (x, y), NaN -> -9999; the DSM resample path (preprocess.py:409-441)
 cubic-resamples a raster to pipeline resolution.
 
 Engine design: the query points and the sample points are co-partitioned by
-cell (tile + halo on the sample side so every query sees all samples within
-the interpolation radius), then a vectorized kernel interpolates per tile:
+cell — the tile+halo plan of operators/knn.py (``knn.tile_right`` halo's
+the sample side so every query sees all samples within the interpolation
+radius) — then a vectorized kernel interpolates per tile:
 
-* ``idw``  — inverse-distance-weighted k-neighbor interpolation (the
-  robust default; the reference itself rasterizes with IDW, S8/G3);
-* ``tin`` — local Delaunay via the Bowyer-Watson construction is overkill
-  per-tile without scipy; we implement *barycentric-on-3-nearest*: the
-  plane through the 3 nearest non-collinear samples — on a dense
-  quasi-uniform sample set this equals TIN linear interpolation in the
-  interior and degrades to IDW at edges, matching the reference's
-  NaN -> nodata convention outside the hull radius.
+* ``idw`` — inverse-distance-weighted interpolation over the k nearest
+  samples within the radius (``knn.grid_topk``; the robust default — the
+  reference itself rasterizes with IDW, S8/G3);
+* ``tin`` — true Delaunay TIN linear interpolation (operators/tin.py: one
+  Bowyer-Watson triangulation per tile over its halo'd samples), exact on
+  planar fields; NaN outside the hull -> NODATA, matching the reference.
+
+Queries with no sample within ``radius`` get NODATA.
 """
 
 from __future__ import annotations
@@ -24,9 +25,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from codem_spark.functions import cells
 from codem_spark.operators import knn
 
 Extent = tuple[float, float, float, float]
@@ -67,28 +66,16 @@ def resample_to_points(
         extent, radius, max(approx_row_count(queries), approx_row_count(samples)),
         parallelism=par,
     )
-    q = cells.with_cell(queries.select(qid, "x", "y"), "x", "y", extent, level).drop("_ix", "_iy")
-    s = cells.with_cell(samples.select("x", "y", *value_cols), "x", "y", extent, level)
-    # fresh aliases on the sample side: shared lineage with `queries` would
-    # otherwise collapse both cogroup children onto the same attribute ids
-    # (see operators/knn.py)
-    sh = (
-        cells.explode_halo(s, level, ring=1, out="halo_cell", extent=extent, radius=radius)
-        .drop("_ix", "_iy", "cell_id")
-        .select("halo_cell", *[F.col(c).alias(f"_s_{c}") for c in ("x", "y", *value_cols)])
-    )
-
+    if method not in ("idw", "tin"):
+        raise ValueError(f"unknown method {method!r}")
     vcols = list(value_cols)
-    r2 = radius * radius
 
-    def kernel(qpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_cell, qpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
         cols = {qid: qpdf[qid].to_numpy(), "x": qpdf["x"].to_numpy(), "y": qpdf["y"].to_numpy()}
         nq = len(qpdf)
-        if nq == 0:
-            return pd.DataFrame({**{c: [] for c in cols}, **{v: [] for v in vcols}})
-        if len(spdf) == 0:
-            for v in vcols:
-                cols[v] = np.full(nq, NODATA)
+        for v in vcols:
+            cols[v] = np.full(nq, NODATA)
+        if nq == 0 or len(spdf) == 0:
             return pd.DataFrame(cols)
         qp = qpdf[["x", "y"]].to_numpy(np.float64)
         sp = spdf[["x", "y"]].to_numpy(np.float64)
@@ -101,74 +88,30 @@ def resample_to_points(
 
             uniq, uidx = np.unique(sp, axis=0, return_index=True)
             tris = tin_mod.delaunay_np(uniq) if len(uniq) >= 3 else None
+            if tris is None or len(tris) == 0:
+                return pd.DataFrame(cols)
             for v in vcols:
-                if tris is None or len(tris) == 0:
-                    cols[v] = np.full(nq, NODATA)
-                    continue
                 zi = tin_mod.tin_interpolate_np(uniq, vals[v][uidx], qp, tris)
                 cols[v] = np.where(np.isnan(zi), NODATA, zi)
             return pd.DataFrame(cols)
-        chunk = max(1, int(4_000_000 // max(len(sp), 1)))
-        outs = {v: np.full(nq, NODATA) for v in vcols}
-        kk = min(k, len(sp))
-        for st in range(0, nq, chunk):
-            qc = qp[st : st + chunk]
-            d2 = ((qc[:, None, :] - sp[None, :, :]) ** 2).sum(2)
-            if kk < d2.shape[1]:
-                part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-            else:
-                part = np.broadcast_to(np.arange(d2.shape[1]), (len(qc), d2.shape[1])).copy()
-            rows = np.arange(len(qc))[:, None]
-            dk = d2[rows, part]
-            within = dk <= r2
-            if method == "idw":
-                w = np.where(within, 1.0 / (np.sqrt(dk) + 1e-9) ** power, 0.0)
-                wsum = w.sum(axis=1)
-                ok = wsum > 0
-                for v in vcols:
-                    num = (w * vals[v][part]).sum(axis=1)
-                    res = np.full(len(qc), NODATA)
-                    res[ok] = num[ok] / wsum[ok]
-                    outs[v][st : st + chunk] = res
-            elif method == "plane":
-                # plane through the 3 nearest valid samples (TIN-like)
-                ordk = np.argsort(dk, axis=1)
-                for v in vcols:
-                    res = np.full(len(qc), NODATA)
-                    for i in range(len(qc)):
-                        sel = part[i, ordk[i]][within[i, ordk[i]]]
-                        if len(sel) == 0:
-                            continue
-                        if len(sel) < 3:
-                            res[i] = vals[v][sel[0]]
-                            continue
-                        p3 = sp[sel[:3]]
-                        z3 = vals[v][sel[:3]]
-                        a = np.column_stack([p3, np.ones(3)])
-                        det = np.linalg.det(a)
-                        if abs(det) < 1e-9:
-                            w3 = 1.0 / (np.sqrt(((qp[st + i] - p3) ** 2).sum(1)) + 1e-9)
-                            res[i] = (w3 * z3).sum() / w3.sum()
-                        else:
-                            coef = np.linalg.solve(a, z3)
-                            res[i] = coef[0] * qc[i, 0] + coef[1] * qc[i, 1] + coef[2]
-                    outs[v][st : st + chunk] = res
-            else:
-                raise ValueError(f"unknown method {method!r}")
+        # IDW over the k nearest samples within the radius; neighbours of
+        # one query are contiguous in li, so the weighted sums are segment
+        # sums
+        li, ri, dist, _rank = knn.grid_topk(qp, sp, np.arange(len(sp)), radius, k=k)
+        if len(li) == 0:
+            return pd.DataFrame(cols)
+        starts = np.flatnonzero(np.diff(li, prepend=-1))
+        w = 1.0 / (dist + 1e-9) ** power
+        wsum = np.add.reduceat(w, starts)
         for v in vcols:
-            cols[v] = outs[v]
+            cols[v][li[starts]] = np.add.reduceat(w * vals[v][ri], starts) / wsum
         return pd.DataFrame(cols)
 
     qt = {f.name: f.dataType.simpleString() for f in queries.schema.fields}[qid]
     schema = f"{qid} {qt}, x double, y double, " + ", ".join(f"{v} double" for v in vcols)
-    def run(a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
-        b = b.rename(columns={c: c[3:] for c in b.columns if c.startswith("_s_")})
-        return kernel(a, b)
-
-    return (
-        q.groupBy("cell_id")
-        .cogroup(sh.groupBy("halo_cell"))
-        .applyInPandas(lambda _k, a, b: run(a, b), schema=schema)
+    tiled = knn.tile_right(samples, extent, radius, level, ("x", "y"), None, value_cols)
+    return knn._tile_cogroup(
+        queries, tiled, extent, level, [qid, "x", "y", "cell_id"], kernel, schema
     )
 
 

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codem_spark.config import EngineConfig, RegistrationParameters
-from codem_spark.functions import cells
 from codem_spark.functions.geo import apply_transform_cols, decompose_similarity
 from codem_spark.operators import knn
 
@@ -60,18 +59,8 @@ def compute_normals(
 
     par = points.sparkSession.sparkContext.defaultParallelism
     level = knn.auto_level(extent, radius, approx_row_count(points), parallelism=par)
-    q = cells.with_cell(points.select(pid, "x", "y", "z"), "x", "y", extent, level).drop(
-        "_ix", "_iy"
-    )
-    s = cells.with_cell(points.select("x", "y", "z"), "x", "y", extent, level)
-    sh = (
-        cells.explode_halo(s, level, ring=1, out="halo_cell", extent=extent, radius=radius)
-        .drop("_ix", "_iy", "cell_id")
-        .select("halo_cell", *[F.col(c).alias(f"_s_{c}") for c in ("x", "y", "z")])
-    )
 
-    def kernel(qpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-        spdf = spdf.rename(columns={c: c[3:] for c in spdf.columns if c.startswith("_s_")})
+    def kernel(_cell, qpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
         cols = ["pid", "x", "y", "z", "nx", "ny", "nz"]
         if len(qpdf) == 0:
             return pd.DataFrame({c: [] for c in cols})
@@ -111,7 +100,7 @@ def compute_normals(
                     nz[qi] = nv[:, 2]
         return pd.DataFrame(
             {
-                "pid": qpdf["pid"].to_numpy(),
+                "pid": qpdf[pid].to_numpy(),
                 "x": qp[:, 0],
                 "y": qp[:, 1],
                 "z": qp[:, 2],
@@ -123,12 +112,10 @@ def compute_normals(
 
     pt = {f.name: f.dataType.simpleString() for f in points.schema.fields}[pid]
     schema = f"pid {pt}, x double, y double, z double, nx double, ny double, nz double"
-    out = (
-        q.groupBy("cell_id")
-        .cogroup(sh.groupBy("halo_cell"))
-        .applyInPandas(lambda _k, a, b: kernel(a, b), schema=schema)
+    samples = knn.tile_right(points, extent, radius, level, rid=None)
+    return knn._tile_cogroup(
+        points, samples, extent, level, [pid, "x", "y", "z", "cell_id"], kernel, schema
     )
-    return out
 
 
 # ------------------------------------------------------- normal eq partials

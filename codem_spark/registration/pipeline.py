@@ -85,8 +85,6 @@ def _prep_dsm(
     # bit-identical to the sequential chain, asserted in tests).
     bp = grid.infill_band_pass(
         dsm,
-        extent,
-        resolution,
         weak_sigma_px=max(cfg.dsm_weak_filter / resolution, 1.0),
         strong_sigma_px=cfg.dsm_strong_filter / resolution,
     ).persist()
@@ -200,14 +198,17 @@ def coarse_registration(
 
     fnd_kp = features.extract_features(prep.fnd_dsm, prep.extent, prep.resolution).persist()
     aoi_kp = features.extract_features(prep.aoi_dsm, prep.extent, prep.resolution).persist()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(fnd_kp.count), pool.submit(aoi_kp.count)]:
-            f.result()
-    # the keypoint counts just materialized both DSM caches end-to-end —
-    # the preprocess intermediates (raw + band-passed DSM caches) are no
-    # longer needed by anything
-    prep.release_upstream()
     try:
+        try:
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                for f in [pool.submit(fnd_kp.count), pool.submit(aoi_kp.count)]:
+                    f.result()
+        finally:
+            # the keypoint counts just materialized both DSM caches
+            # end-to-end — the preprocess intermediates (raw + band-passed
+            # DSM caches) are no longer needed by anything, and on failure
+            # nothing will ever release them
+            prep.release_upstream()
         return coarse_mod.coarse_registration(fnd_kp, aoi_kp, cfg, capture=capture)
     finally:
         fnd_kp.unpersist(False)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -16,21 +18,24 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     then trivially small by construction.
 
     Plan-aware short-circuit (guide §2.4/§7.2): if the physical plan already
-    contains an Exchange, downstream stages run at spark.sql.shuffle
+    contains a shuffle Exchange, downstream stages run at spark.sql.shuffle
     .partitions (>= parallelism in this engine's sessions), so rebalancing
     is a no-op BY CONSTRUCTION — and probing ``df.rdd.getNumPartitions()``
     on such a plan is far from free: with AQE enabled, materializing the
     RDD eagerly EXECUTES every shuffle stage of the query just to learn the
     partition count, and that work is thrown away and repeated by the real
     action (measured: ~0.3-0.5 s per bench query at sf0.1, one redundant
-    scan+shuffle each for every _points()-derived query). Only exchange-free
-    (narrow, scan-rooted) plans fall through to the RDD probe, where
-    materialization is free because there is no stage to execute.
+    scan+shuffle each for every _points()-derived query). Only shuffle-free
+    plans fall through to the RDD probe. A BroadcastExchange does not count:
+    a broadcast join keeps its streamed side's partitioning, so a 1-split
+    scan joined to a broadcast table still runs single-threaded.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" in plan:
+        # a shuffle renders as "Exchange <partitioning>" (a reused one keeps
+        # that text after "ReusedExchange [...], "); \b skips BroadcastExchange
+        if re.search(r"\bExchange\b", plan):
             return df
     except Exception:
         pass  # fall through to the RDD probe on any introspection failure

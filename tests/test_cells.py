@@ -52,7 +52,8 @@ def test_halo_counts_interior(spark):
     # interior points produce exactly 9 halo rows; edge points fewer
     pc = synth.point_cloud(spark, 1000)
     d = cells.with_cell(pc, "x", "y", EXTENT, 8)
-    h = cells.explode_halo(d, 8, ring=1)
+    # a radius of one cell edge reaches every 1-ring neighbour
+    h = cells.explode_halo(d, 8, extent=EXTENT, radius=cells.cell_size(EXTENT, 8))
     counts = h.groupBy("pid").count().toPandas()
     assert counts["count"].max() == 9
     assert counts["count"].min() >= 4

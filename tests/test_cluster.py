@@ -78,12 +78,20 @@ def test_dense_blob_emits_no_interior_edges(spark):
     )
     df = spark.createDataFrame(pdf)
     tiled = cells.with_cell(df, "x", "y", SMALL_EXTENT, level)
-    border = cells.border_band(tiled, SMALL_EXTENT, level, tol).select("pid", "x", "y", "z")
+    border = tiled.filter(cells.border_col(SMALL_EXTENT, level, tol)).select(
+        "pid", "x", "y", "z"
+    )
     assert border.count() == 0  # interior blob: nothing near a tile border
     edges = knn.radius_join(
         border, border, SMALL_EXTENT, radius=tol, level=level, cross_tile_only=True
     )
     assert edges.count() == 0
+    # without the border pre-filter, the kernel's home-cell filter alone
+    # drops all m^2 intra-tile pairs
+    edges_all = knn.radius_join(
+        df, df, SMALL_EXTENT, radius=tol, level=level, cross_tile_only=True
+    )
+    assert edges_all.count() == 0
     # and the full operator still clusters the blob exactly as one component
     got = cluster.euclidean_cluster(df, SMALL_EXTENT, tolerance=tol, min_points=2).toPandas()
     assert (got.cluster_id == 0).all()

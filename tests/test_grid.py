@@ -92,7 +92,7 @@ def test_infill_fills_all_interior_voids(spark):
     rows = [(gx, gy, float(gx + gy)) for gx in range(10) for gy in range(10)
             if not (4 <= gx <= 5 and 4 <= gy <= 5)]
     dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
-    filled = grid.infill(dsm, (0, 0, 10, 10), 1.0, tile_level=2)
+    filled = grid.infill(dsm)
     pdf = filled.toPandas()
     assert len(pdf) == 100
     hole = pdf[(pdf.gx.between(4, 5)) & (pdf.gy.between(4, 5))]
@@ -113,11 +113,11 @@ def test_infill_band_pass_fused_equals_sequential(spark):
     ]
     dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
     seq = grid.band_pass(
-        grid.infill(dsm, (0, 0, 70, 60), 1.0, tile_px=32),
+        grid.infill(dsm, tile_px=32),
         weak_sigma_px=1.0, strong_sigma_px=2.5, tile_px=32,
     ).toPandas().sort_values(["gx", "gy"]).reset_index(drop=True)
     fus = grid.infill_band_pass(
-        dsm, (0, 0, 70, 60), 1.0, weak_sigma_px=1.0, strong_sigma_px=2.5, tile_px=32,
+        dsm, weak_sigma_px=1.0, strong_sigma_px=2.5, tile_px=32,
     ).toPandas().sort_values(["gx", "gy"]).reset_index(drop=True)
     assert len(seq) == len(fus)
     assert (seq.gx.values == fus.gx.values).all() and (seq.gy.values == fus.gy.values).all()

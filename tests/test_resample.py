@@ -1,4 +1,5 @@
-"""Raster<->vector resampling: exact on planar fields, NODATA outside radius."""
+"""Raster<->vector resampling: IDW close on planar fields, NODATA outside radius
+(TIN exactness on planar fields: tests/test_tin.py)."""
 
 from __future__ import annotations
 
@@ -16,14 +17,18 @@ def _plane_samples(n=5000, seed=3):
     return sp
 
 
-def test_plane_interpolation_exact(spark):
-    sp = _plane_samples()
-    rng = np.random.default_rng(4)
-    qp = pd.DataFrame({"pid": np.arange(100), "x": rng.uniform(100, 900, 100), "y": rng.uniform(100, 900, 100)})
-    got = resample.resample_to_points(
-        spark.createDataFrame(sp), spark.createDataFrame(qp), SMALL_EXTENT, radius=50.0, method="plane"
-    ).toPandas()
-    assert np.abs(got.z - (2.0 * got.x + 1.0 * got.y)).max() < 1e-6
+def _idw_reference(sp: pd.DataFrame, qp: pd.DataFrame, radius: float, k=8, power=2.0):
+    """Per-query loop over a dense distance matrix: IDW of the k nearest
+    samples within ``radius``, NODATA when there is none."""
+    d = np.hypot(qp.x.values[:, None] - sp.x.values[None, :], qp.y.values[:, None] - sp.y.values[None, :])
+    out = np.full(len(qp), resample.NODATA)
+    for i in range(len(qp)):
+        nb = np.argsort(d[i], kind="stable")[:k]
+        nb = nb[d[i, nb] <= radius]
+        if len(nb):
+            w = 1.0 / (d[i, nb] + 1e-9) ** power
+            out[i] = (w * sp.z.values[nb]).sum() / w.sum()
+    return out
 
 
 def test_idw_interpolation_close(spark):
@@ -32,8 +37,11 @@ def test_idw_interpolation_close(spark):
     qp = pd.DataFrame({"pid": np.arange(100), "x": rng.uniform(100, 900, 100), "y": rng.uniform(100, 900, 100)})
     got = resample.resample_to_points(
         spark.createDataFrame(sp), spark.createDataFrame(qp), SMALL_EXTENT, radius=50.0, method="idw"
-    ).toPandas()
+    ).toPandas().sort_values("pid")
     assert np.abs(got.z - (2.0 * got.x + 1.0 * got.y)).max() < 50.0
+    # the grid-hash top-k kernel sums in its own order: equal up to rounding
+    exp = _idw_reference(sp, qp, radius=50.0)
+    assert np.allclose(got.z.values, exp, rtol=1e-12, atol=0.0)
 
 
 def test_nodata_outside_radius(spark):
