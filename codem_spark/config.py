@@ -6,7 +6,7 @@ VCD variant in src/vcd/main.py:20-73; the pytest suite exercises the raises
 (tests/test_registration.py:93-98). This module re-creates that contract for
 the Spark engine: same parameter names (lower-cased), same ranges, same
 error-on-violation behavior, plus the engine-specific knobs (cell level,
-halo radius, shuffle partitions) that the distributed runtime needs.
+shuffle partitions, extent) that the distributed runtime needs.
 """
 
 from __future__ import annotations
@@ -62,11 +62,9 @@ class EngineConfig:
     scale_z: str | float = "auto"
     # --- engine-specific distributed knobs (new; no reference analog) ---
     cell_level: int = 12  # Z-order level for tile partitioning
-    halo_cells: int = 1  # neighbor-ring width for tile+halo kernels
     shuffle_partitions: int = 64
     extent: tuple[float, float, float, float] = (0.0, 0.0, 100_000.0, 100_000.0)
     output_dir: str | None = None
-    verbose: bool = False
 
     def __post_init__(self) -> None:
         # Range checks mirror reference main.py:108-163 one-for-one.
@@ -105,8 +103,6 @@ class EngineConfig:
         # Engine knobs.
         if not 1 <= self.cell_level <= 30:
             raise ValueError("cell_level must be between 1 and 30.")
-        if self.halo_cells < 1:
-            raise ValueError("halo_cells must be >= 1.")
         x0, y0, x1, y1 = self.extent
         if not (x1 > x0 and y1 > y0):
             raise ValueError("extent must be (x0, y0, x1, y1) with x1>x0, y1>y0.")

@@ -69,10 +69,6 @@ def cell_encode_col(x: Column, y: Column, extent: Extent, level: int) -> Column:
     return interleave_col(ix, iy)
 
 
-def cell_parent_col(cell: Column, steps: int = 1) -> Column:
-    return F.shiftright(cell, 2 * steps)
-
-
 def with_cell(df, x: str, y: str, extent: Extent, level: int, out: str = "cell_id"):
     """Attach cell_id + integer cell coords (kept for cheap neighbor math)."""
     size = cell_size(extent, level)

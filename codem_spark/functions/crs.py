@@ -1,4 +1,4 @@
-"""CRS handling: linear-unit scaling (F3) and UTM inference/projection (S7).
+"""CRS handling: linear-unit scaling (F3) and UTM projection (S7).
 
 Reference analogs:
 * F3 — every dataset is converted to meters before registration
@@ -7,11 +7,11 @@ Reference analogs:
   the final output transform composes the unit matrices back
   (apply.py:116-123 ``meters_to_fnd @ registration_transform @
   aoi_to_meters``).
-* S7 — lon/lat inputs are projected to the best-guess UTM zone
-  (preprocess.py:564-585 via pyproj/rasterio; here: the standard zone
-  formula + the Snyder series transverse-Mercator forward projection,
-  USGS Professional Paper 1395 pp. 60-64 — public-domain formulas, no
-  external geodesy dependency).
+* S7 — lon/lat inputs are projected to a UTM zone (preprocess.py:564-585
+  via pyproj/rasterio; here: the Snyder series transverse-Mercator
+  forward projection, USGS Professional Paper 1395 pp. 60-64 —
+  public-domain formulas, no external geodesy dependency). The caller
+  names the zone.
 
 The projection formula is written ONCE and evaluated by three backends
 (the cells.py pattern): Spark Columns (pure JVM, whole-stage codegen —
@@ -76,27 +76,6 @@ def registration_to_native(
     m_to_fnd = np.eye(4) * (1.0 / fnd_factor)
     m_to_fnd[3, 3] = 1.0
     return m_to_fnd @ np.asarray(matrix_meters, np.float64) @ aoi_to_m
-
-
-# ------------------------------------------------------------ UTM zone pick
-def utm_zone(lon: float, lat: float) -> tuple[int, int]:
-    """(zone, EPSG) for a lon/lat (degrees) — the standard 6-degree zones;
-    EPSG 326xx north / 327xx south (what the reference's
-    query_utm_crs_info best-guess resolves to for WGS84)."""
-    zone = int(math.floor((lon + 180.0) / 6.0)) + 1
-    zone = min(max(zone, 1), 60)
-    epsg = (32600 if lat >= 0 else 32700) + zone
-    return zone, epsg
-
-
-def infer_utm_crs(df: DataFrame, lon: str = "lon", lat: str = "lat") -> tuple[int, int]:
-    """S7: best-guess UTM zone from the dataset centroid (one agg job —
-    the reference infers one CRS per dataset from its origin,
-    preprocess.py:564-585)."""
-    r = df.agg(F.avg(lon).alias("lon"), F.avg(lat).alias("lat")).collect()[0]
-    if r["lon"] is None:
-        raise ValueError("cannot infer UTM CRS of an empty dataset")
-    return utm_zone(float(r["lon"]), float(r["lat"]))
 
 
 # ------------------------------------- transverse Mercator forward (Snyder)
@@ -202,83 +181,3 @@ def utm_project_sql(lon_expr: str, lat_expr: str, zone: int, south: bool = False
     """(easting_sql, northing_sql) strings — the DuckDB oracle twin."""
     e, n = _utm_formula(_Sql(f"({lon_expr})"), _Sql(f"({lat_expr})"), zone, south, _NS["sql"])
     return e.s, n.s
-
-
-def warp_raster_to_utm(
-    dsm: DataFrame,
-    extent_deg: tuple[float, float, float, float],
-    res_deg: float,
-    res_out_m: float,
-    zone: int | None = None,
-    south: bool = False,
-) -> tuple[DataFrame, int]:
-    """S3: raster reprojection (warp) of a geographic-CRS raster into UTM
-    meters (the reference reprojects a lon/lat AOI into the foundation CRS,
-    preprocess.py:455-484 via rasterio.warp). Spark-first composition, two
-    jobs: (1) cells -> lon/lat center points (pure column exprs) ->
-    transverse-Mercator projection (pure column exprs, whole-stage codegen)
-    -> (2) re-bin onto the metric grid with a max aggregate (the engine's
-    rasterize primitive; swap grid_max for grid_idw for smoother output).
-    Returns ((gx, gy, z) raster in UTM pixels of ``res_out_m``, zone)."""
-    from codem_spark.operators import grid
-
-    lon = (F.col("gx").cast("double") + F.lit(0.5)) * F.lit(res_deg) + F.lit(extent_deg[0])
-    lat = (F.col("gy").cast("double") + F.lit(0.5)) * F.lit(res_deg) + F.lit(extent_deg[1])
-    pts = dsm.select(lon.alias("lon"), lat.alias("lat"), "z")
-    if zone is None:
-        clon = (extent_deg[0] + extent_deg[2]) / 2.0
-        clat = (extent_deg[1] + extent_deg[3]) / 2.0
-        zone, _epsg = utm_zone(clon, clat)
-        south = clat < 0
-    e, n = utm_project_cols(F.col("lon"), F.col("lat"), zone, south)
-    metric = pts.select(e.alias("x"), n.alias("y"), "z")
-    # UTM-space bbox: sample all four EDGES, not just corners — for a window
-    # straddling the zone's central meridian the min northing sits on the
-    # bottom edge at the meridian (the projection bows edges), so a
-    # corners-only bbox can exclude real cells (gy=-1).
-    t = np.linspace(0.0, 1.0, 33)
-    lon_edges = np.concatenate([
-        extent_deg[0] + t * (extent_deg[2] - extent_deg[0]),  # bottom
-        extent_deg[0] + t * (extent_deg[2] - extent_deg[0]),  # top
-        np.full_like(t, extent_deg[0]),                        # left
-        np.full_like(t, extent_deg[2]),                        # right
-    ])
-    lat_edges = np.concatenate([
-        np.full_like(t, extent_deg[1]),
-        np.full_like(t, extent_deg[3]),
-        extent_deg[1] + t * (extent_deg[3] - extent_deg[1]),
-        extent_deg[1] + t * (extent_deg[3] - extent_deg[1]),
-    ])
-    ce, cn = utm_project_np(lon_edges, lat_edges, zone, south)
-    # floor/ceil to a whole output pixel for residual edge-curvature slack
-    out_extent = (
-        float(np.floor(ce.min() / res_out_m) * res_out_m),
-        float(np.floor(cn.min() / res_out_m) * res_out_m),
-        float(np.ceil(ce.max() / res_out_m) * res_out_m),
-        float(np.ceil(cn.max() / res_out_m) * res_out_m),
-    )
-    return grid.grid_max(metric, out_extent, res_out_m), zone
-
-
-def project_to_utm(
-    df: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    zone: int | None = None,
-) -> tuple[DataFrame, int, int]:
-    """S7 end-to-end: infer the zone (unless given), append x/y meter
-    columns. Returns (df, zone, epsg)."""
-    r = df.agg(F.avg(lon).alias("lon"), F.avg(lat).alias("lat")).collect()[0]
-    if r["lat"] is None or r["lon"] is None:
-        if zone is None:
-            raise ValueError("cannot infer UTM CRS of an empty dataset")
-        clat = 0.0
-    else:
-        clat = float(r["lat"])
-    if zone is None:
-        zone, epsg = utm_zone(float(r["lon"]), clat)
-    else:
-        epsg = (32600 if clat >= 0 else 32700) + zone
-    south = clat < 0
-    e, n = utm_project_cols(F.col(lon), F.col(lat), zone, south)
-    return df.withColumn("x", e).withColumn("y", n), zone, epsg

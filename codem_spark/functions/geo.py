@@ -1,9 +1,9 @@
-"""Georeferencing of web-page rows + synthetic elevation surface.
+"""Deterministic pseudo-coordinates + synthetic elevation surface.
 
-Per the driver input_hint, the engine's primary input is a table of
-Common-Crawl-style pages ``(url, warc_ts, html, text, lang)``. Pages get
-deterministic pseudo-coordinates from a hash of ``url`` — after that they
-behave exactly like the reference's point clouds (GeoData.point_cloud,
+Synthetic point clouds get coordinates from integer id lanes
+(``id_lane_col`` / ``id_lane_sql``), which Spark and DuckDB evaluate
+identically, so oracles reproduce them exactly — after that they behave
+like the reference's point clouds (GeoData.point_cloud,
 preprocess.py:138,285-315). The synthetic elevation surface gives the
 "terrain + buildings" signal the registration pipeline needs (analog of
 the demo data described in reference docs/details.md:30-46): a smooth
@@ -11,7 +11,6 @@ low-frequency ground plus rectangular building bumps anchored on a
 deterministic grid, so DSM feature detection has corners to find.
 
 All production-path functions are Spark Column expressions (JVM-side).
-``*_np`` twins are bit/float-identical for kernel and oracle use.
 """
 
 from __future__ import annotations
@@ -24,37 +23,9 @@ from pyspark.sql import functions as F
 
 Extent = tuple[float, float, float, float]
 
-_MASK32 = 0xFFFFFFFF
-_INV32 = 1.0 / 4294967296.0  # 2^-32
 
-
-def pseudo_xy_cols(url: Column, extent: Extent) -> tuple[Column, Column]:
-    """(x, y) uniform in extent from xxhash64(url) — the production path
-    (Spark's built-in xxHash64, JVM-side). Deterministic per url."""
-    x0, y0, x1, y1 = extent
-    h = F.xxhash64(url)
-    # Split the 64-bit hash into two 32-bit lanes; map to [0,1).
-    hx = h.bitwiseAND(F.lit(_MASK32))
-    hy = F.shiftrightunsigned(h, 32).bitwiseAND(F.lit(_MASK32))
-    x = F.lit(x0) + hx.cast("double") * F.lit(_INV32) * F.lit(x1 - x0)
-    y = F.lit(y0) + hy.cast("double") * F.lit(_INV32) * F.lit(y1 - y0)
-    return x, y
-
-
-# Deterministic integer mix (splitmix64 finalizer) — used when coordinates
-# must be derivable from an integer id identically in Spark SQL, numpy and
-# DuckDB (the oracle path; DuckDB lacks Spark's xxhash64).
-_SM_M1 = -0x40A7B892E31B1A47  # 0xBF58476D1CE4E5B9 as signed int64
-_SM_M2 = -0x6B2FB644ECCEEE15  # 0x94D049BB133111EB as signed int64
-
-
-def splitmix64_col(v: Column) -> Column:
-    z = v + F.lit(-0x61C8864680B583EB)  # 0x9E3779B97F4A7C15
-    z = (z.bitwiseXOR(F.shiftrightunsigned(z, 30))) * F.lit(_SM_M1)
-    z = (z.bitwiseXOR(F.shiftrightunsigned(z, 27))) * F.lit(_SM_M2)
-    return z.bitwiseXOR(F.shiftrightunsigned(z, 31))
-
-
+# Deterministic integer mix (splitmix64 finalizer) — spreads 31-bit shingle
+# hashes to a full 64-bit avalanche for simhash.
 def splitmix64_np(v: np.ndarray) -> np.ndarray:
     z = v.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
@@ -63,7 +34,7 @@ def splitmix64_np(v: np.ndarray) -> np.ndarray:
 
 
 # Oracle-friendly per-id uniform lanes: simple multiplicative hashing that
-# is exactly representable in BIGINT in Spark, numpy and DuckDB without
+# is exactly representable in BIGINT in Spark and DuckDB without
 # overflow. lane(id, k) in [0, 1).
 _LANE_P = 2_147_483_629  # large prime < 2^31
 _LANE_A = (1_103_515_245, 1_229_782_938, 1_653_271_865, 1_973_272_811)
@@ -75,11 +46,6 @@ def id_lane_col(idc: Column, k: int) -> Column:
     return (((idc % F.lit(_LANE_P)) * F.lit(a) + F.lit(b)) % F.lit(_LANE_P)).cast(
         "double"
     ) / F.lit(float(_LANE_P))
-
-
-def id_lane_np(ids: np.ndarray, k: int) -> np.ndarray:
-    a, b = _LANE_A[k % 4], _LANE_B[k % 4]
-    return (((ids.astype(np.int64) % _LANE_P) * a + b) % _LANE_P) / float(_LANE_P)
 
 
 def id_lane_sql(id_expr: str, k: int) -> str:
@@ -124,25 +90,6 @@ def surface_z_col(x: Column, y: Column) -> Column:
     key = gx * F.lit(73_856_093) + gy * F.lit(19_349_663)
     h = id_lane_col(key, 2) * F.lit(_B_HMAX)
     return z + F.when(inside, h).otherwise(F.lit(0.0)) + F.lit(60.0)
-
-
-def surface_z_np(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    z = np.zeros_like(x, dtype=np.float64)
-    for amp, fx, fy, ph in _G:
-        z += amp * np.sin(x * (2 * math.pi * fx) + ph) * np.cos(y * (2 * math.pi * fy) - ph)
-    gx = np.floor(x / _B_SPACING).astype(np.int64)
-    gy = np.floor(y / _B_SPACING).astype(np.int64)
-    fx_ = x - gx * _B_SPACING
-    fy_ = y - gy * _B_SPACING
-    inside = (
-        (fx_ > (_B_SPACING - _B_SIZE) / 2)
-        & (fx_ < (_B_SPACING + _B_SIZE) / 2)
-        & (fy_ > (_B_SPACING - _B_SIZE) / 2)
-        & (fy_ < (_B_SPACING + _B_SIZE) / 2)
-    )
-    key = gx * 73_856_093 + gy * 19_349_663
-    h = id_lane_np(key, 2) * _B_HMAX
-    return z + np.where(inside, h, 0.0) + 60.0
 
 
 # --------------------------------------------------- rigid/similarity apply

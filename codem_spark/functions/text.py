@@ -64,20 +64,11 @@ _LANG_MARKERS: dict[str, list[str]] = {
 
 
 def token_count_col(text: Column) -> Column:
-    """Whitespace tokenization count (BPE-ish regex variant below)."""
+    """Whitespace tokenization count."""
     t = F.trim(text)
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, r"\s+"))
     )
-
-
-def word_tokens_col(text: Column) -> Column:
-    """BPE-ish tokens: runs of word chars or single punctuation marks."""
-    return F.regexp_extract_all(text, F.lit(r"\w+|[^\w\s]"), 0)
-
-
-def bpeish_token_count_col(text: Column) -> Column:
-    return F.size(word_tokens_col(text))
 
 
 def stopword_ratio_col(text: Column) -> Column:
@@ -122,12 +113,15 @@ def lang_id_col(text: Column) -> Column:
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def fingerprint_col(text: Column, modulus: int = 1_000_000_007) -> Column:
+_FP_MODULUS = 1_000_000_007
+
+
+def fingerprint_col(text: Column) -> Column:
     """Deterministic document fingerprint: polynomial rolling hash of the
     lower-cased, whitespace-normalized text, via xxhash64 of the normalized
     form (JVM-side, stable across partitions/runs)."""
     norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.pmod(F.xxhash64(norm), F.lit(modulus))
+    return F.pmod(F.xxhash64(norm), F.lit(_FP_MODULUS))
 
 
 def normalized_text_col(text: Column) -> Column:

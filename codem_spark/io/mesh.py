@@ -30,7 +30,6 @@ Parsers here are from scratch (trimesh is not in the environment):
 from __future__ import annotations
 
 import os
-import re
 from typing import Any
 
 import numpy as np

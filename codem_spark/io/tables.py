@@ -51,14 +51,13 @@ def write_table(
     path: str,
     partition_by: list[str] | None = None,
     properties: dict[str, Any] | None = None,
-    mode: str = "overwrite",
 ) -> dict[str, Any]:
     """Write a partitioned Parquet table + manifest; returns the manifest.
 
     ONE Spark job: the write itself. Row counts and per-file metrics come
     from the written parquet footers (no read-back count job — at 100 TB a
     post-write count() doubles every stage's scan cost)."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -122,7 +121,9 @@ def quantized_point_write(
         *[F.floor(F.min(a)).alias(f"min_{a}") for a in ("x", "y", "z")],
         *[F.max(a).alias(f"max_{a}") for a in ("x", "y", "z")],
         *[F.min(a).alias(f"rmin_{a}") for a in ("x", "y", "z")],
-    ).collect()[0]
+    ).collect()[0].asDict()
+    if stats["rmin_x"] is None:  # empty input: nothing to place or range-check
+        stats = dict.fromkeys(stats, 0.0)
     axes = ("x", "y", "z")
     off = {a: float(stats[f"min_{a}"]) if o == "auto" else float(o) for a, o in zip(axes, offsets)}
     scl = {a: 0.01 if s == "auto" else float(s) for a, s in zip(axes, scales)}
@@ -167,6 +168,23 @@ def quantized_point_read(spark: SparkSession, path: str) -> DataFrame:
             a, F.col(a).cast("double") * F.lit(q["scales"][a]) + F.lit(q["offsets"][a])
         )
     return df
+
+
+def read_points(spark: SparkSession, path: str) -> DataFrame:
+    """Point-input dispatch shared by the CLI and the pipeline-JSON reader
+    stages: .ply/.obj are mesh vertices; a table with a manifest is read
+    through it (a quantized point table comes back as its original
+    coordinates); anything else is a plain parquet table."""
+    if os.path.splitext(path)[1].lower() in (".ply", ".obj"):
+        from codem_spark.io import mesh
+
+        return mesh.read_mesh_vertices(spark, path)
+    m = table_manifest(path)
+    if m is None:
+        return spark.read.parquet(path)
+    if "point_quantization" in m.get("properties", {}):
+        return quantized_point_read(spark, path)
+    return read_table(spark, path)
 
 
 def cell_partitioned_write(

@@ -109,19 +109,17 @@ def _add_vcd_args(p: argparse.ArgumentParser) -> None:
 def _read_points(spark: SparkSession, path: str):
     """Point input dispatch, mirroring the reference's PipelineReader
     (preprocess.py:601-635): a .json input is a PDAL-style pipeline spec
-    (reader + filter stages; writers stripped), .ply/.obj are mesh
-    vertices, anything else is a parquet point table."""
-    ext = os.path.splitext(path)[1].lower()
-    if ext == ".json":
+    (reader + filter stages; writers stripped); anything else goes through
+    io/tables.read_points (mesh vertices, manifest tables incl. quantized
+    ones, plain parquet)."""
+    if os.path.splitext(path)[1].lower() == ".json":
         from codem_spark.plans.pipeline_json import pipeline_from_json
 
         df, _writers = pipeline_from_json(spark, path)
-    elif ext in (".ply", ".obj"):
-        from codem_spark.io import mesh
-
-        df = mesh.read_mesh_vertices(spark, path)
     else:
-        df = spark.read.parquet(path)
+        from codem_spark.io import tables
+
+        df = tables.read_points(spark, path)
     if "pid" not in df.columns:
         df = df.withColumn("pid", F.xxhash64("x", "y", "z"))
     return df.select("pid", "x", "y", "z")

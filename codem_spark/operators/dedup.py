@@ -214,30 +214,13 @@ def _minhash_matrix(
     return out
 
 
-def minhash_signature_col(shingles: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-lane minhash signature: min over shingles of
-    (a * h + b) mod p per lane.
-
-    Implemented as ONE Arrow-vectorized pandas UDF over the shingle array
-    (flatten batch -> chunked (N, num_hashes) modular products -> per-row
-    minimum.reduceat): a 64-lane JVM expression tree is ~50x slower here and
-    the UDF is still scan-side (no shuffle), deterministic arithmetic."""
-    coeffs = _mh_coeffs(num_hashes)
-    a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)
-    b_vec = np.array([b for _, b in coeffs], dtype=np.int64)
-
-    @F.pandas_udf("array<long>")
-    def sig(s: pd.Series) -> pd.Series:
-        return pd.Series(list(_minhash_matrix(s, a_vec, b_vec)))
-
-    return sig(shingles)
-
-
 def minhash_band_keys_col(
     shingles: Column, num_hashes: int = 64, bands: int = 16
 ) -> Column:
-    """Banded-LSH keys in ONE pandas UDF: minhash signature (as above) then
-    an FNV-1a fold of each band's lanes -> array<long> of ``bands`` keys.
+    """Banded-LSH keys in ONE pandas UDF: the ``num_hashes``-lane minhash
+    signature (``_minhash_matrix``: min over shingles of (a * h + b) mod p
+    per lane) then an FNV-1a fold of each band's lanes -> array<long> of
+    ``bands`` keys.
     Folding the band hash into the same Arrow pass avoids a 64-element_at
     JVM expression tree that measured ~0.8 ms/row."""
     coeffs = _mh_coeffs(num_hashes)
@@ -386,28 +369,16 @@ def jaccard_verify(
     )
 
 
-def minhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    **kw,
-) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates -> Jaccard verify -> drop the
-    higher id of each confirmed pair (greedy, deterministic)."""
-    cands = minhash_lsh_candidates(df, text_col, id_col, **kw)
-    dups = jaccard_verify(cands, df, text_col, id_col, threshold, kw.get("shingle_n", 3))
-    drop = dups.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "left_anti")
-
-
 # ------------------------------------------------------------------ simhash
-def simhash_col(text_col: Column, bits: int = 64, shingle_n: int = 2) -> Column:
+_SIMHASH_SHINGLE_N = 2
+
+
+def simhash_col(text_col: Column) -> Column:
     """64-bit SimHash: per token-shingle hash, each bit votes +1/-1; the
     fingerprint is the sign vector. One Arrow-vectorized pandas UDF over the
     shingle array (batch-flattened bit unpack + add.reduceat) — scan-side,
     deterministic; shingle hashes themselves stay JVM-side (xxhash64)."""
-    sh = shingles_col(text_col, shingle_n)
+    sh = shingles_col(text_col, _SIMHASH_SHINGLE_N)
 
     @F.pandas_udf("long")
     def simhash(s: pd.Series) -> pd.Series:
@@ -427,7 +398,7 @@ def simhash_col(text_col: Column, bits: int = 64, shingle_n: int = 2) -> Column:
         # matrix wrote+read multi-GB DRAM temporaries per Arrow batch at
         # corpus scale. tot = sum(±1) = 2*count_set - n_shingles, computed
         # per row at the end — bit-identical fingerprints.
-        cnt = np.zeros((n, bits), dtype=np.int64)
+        cnt = np.zeros((n, 64), dtype=np.int64)
         cum = np.cumsum(lens)
         chunk_flat = 256_000
         row_lo = 0
@@ -443,7 +414,7 @@ def simhash_col(text_col: Column, bits: int = 64, shingle_n: int = 2) -> Column:
                 safe = lsl > 0
                 safe_starts = starts if safe.all() else starts[safe]
                 tmp = np.empty_like(fl)
-                for bit in range(bits):
+                for bit in range(64):
                     np.right_shift(fl, np.uint64(bit), out=tmp)
                     tmp &= np.uint64(1)
                     m = np.add.reduceat(tmp.view(np.int64), safe_starts)
@@ -454,7 +425,7 @@ def simhash_col(text_col: Column, bits: int = 64, shingle_n: int = 2) -> Column:
             row_lo = row_hi
         tot = 2 * cnt - lens[:, None]
         bitsm = (tot > 0).astype(np.uint64)
-        weights = np.left_shift(np.uint64(1), np.arange(bits, dtype=np.uint64))
+        weights = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
         packed = (bitsm * weights[None, :]).sum(axis=1, dtype=np.uint64)
         return pd.Series(packed.view(np.int64))
 

@@ -30,6 +30,18 @@ from codem_spark.functions import cells
 
 Extent = tuple[float, float, float, float]
 
+# G3 IDW weight exponent: w = 1/d^_IDW_POWER
+_IDW_POWER = 2.0
+# G5 clip percentiles (reference preprocess.py:278-283: 1st/99th)
+_CLIP_Q = (0.01, 0.99)
+# exact_percentiles: histogram buckets per refinement round, and the round
+# cap after which the remaining ranges are collected regardless of size
+_PCT_BINS = 8192
+_PCT_MAX_ROUNDS = 8
+# G4 fill rounds (voids wider than 2 * _INFILL_ROUNDS pixels stay void);
+# also the infill halo in pixels
+_INFILL_ROUNDS = 8
+
 
 def grid_max(
     df: DataFrame,
@@ -70,7 +82,6 @@ def grid_idw(
     extent: Extent,
     resolution: float,
     radius_cells: int = 1,
-    power: float = 2.0,
     x: str = "x",
     y: str = "y",
     z: str = "z",
@@ -80,9 +91,9 @@ def grid_idw(
     Each point contributes to every cell whose *center* lies within the
     (2r+1)x(2r+1) neighborhood of the point's own cell — the halo-exchange
     pattern: explode points into neighbor cells (bounded shuffle fan-out =
-    (2r+1)^2), then one hash agg of sum(w*z)/sum(w), w = 1/d^power with the
+    (2r+1)^2), then one hash agg of sum(w*z)/sum(w), w = 1/d^2 with the
     reference's convention that a point inside the cell at d<eps contributes
-    with weight capped at 1/eps^p.
+    with weight capped at 1/eps^2.
     """
     eps = 1e-9
     offs = [
@@ -106,7 +117,7 @@ def grid_idw(
     cxc = (F.col("gx0") + F.col("_o.dx") + F.lit(0.5)) * F.lit(resolution) + F.lit(extent[0])
     cyc = (F.col("gy0") + F.col("_o.dy") + F.lit(0.5)) * F.lit(resolution) + F.lit(extent[1])
     d2 = (F.col("px") - cxc) * (F.col("px") - cxc) + (F.col("py") - cyc) * (F.col("py") - cyc)
-    w = F.lit(1.0) / F.pow(F.sqrt(d2) + F.lit(eps), F.lit(power))
+    w = F.lit(1.0) / F.pow(F.sqrt(d2) + F.lit(eps), F.lit(_IDW_POWER))
     return (
         e.select(gx, gy, (w * F.col("pz")).alias("wz"), w.alias("w"))
         .groupBy("gx", "gy")
@@ -115,7 +126,7 @@ def grid_idw(
 
 
 def grid_idw_sql(
-    points_sql: str, extent: Extent, resolution: float, radius_cells: int = 1, power: float = 2.0
+    points_sql: str, extent: Extent, resolution: float, radius_cells: int = 1
 ) -> str:
     offs = [
         (dx, dy)
@@ -138,7 +149,7 @@ def grid_idw_sql(
       SELECT gx0 + dx AS gx, gy0 + dy AS gy, pz,
              1.0 / pow(sqrt(pow(px - ((gx0 + dx + 0.5) * {resolution!r} + {extent[0]!r}), 2)
                           + pow(py - ((gy0 + dy + 0.5) * {resolution!r} + {extent[1]!r}), 2)) + 1e-9,
-                       {power!r}) AS w
+                       {_IDW_POWER!r}) AS w
       FROM ex
     )
     SELECT gx, gy, sum(w * pz) / sum(w) AS z FROM wgt GROUP BY gx, gy
@@ -282,9 +293,7 @@ def exact_percentiles(
     df: DataFrame,
     col: str,
     probs: "list[float]",
-    bins: int = 8192,
     collect_cap: int = 262_144,
-    max_rounds: int = 8,
 ) -> "list[float]":
     """Exact percentiles (Spark ``percentile()`` / DuckDB ``quantile_cont``
     semantics, bit-for-bit) via distributed histogram refinement.
@@ -356,7 +365,7 @@ def exact_percentiles(
         # active ranges: (value_lo, value_hi, rank_of_first_value_in_range,
         # count_in_range, indices needing resolution inside)
         ranges = [(glo, ghi, 0, n, needed)]
-        for round_no in range(max_rounds + 1):
+        for round_no in range(_PCT_MAX_ROUNDS + 1):
             if not ranges:
                 break
             terminal, refine = [], []
@@ -365,7 +374,7 @@ def exact_percentiles(
                 if lo == hi:
                     for i in idxs:
                         stats[i] = lo
-                elif cnt <= collect_cap or round_no == max_rounds:
+                elif cnt <= collect_cap or round_no == _PCT_MAX_ROUNDS:
                     terminal.append(rng_)
                 else:
                     refine.append(rng_)
@@ -375,9 +384,9 @@ def exact_percentiles(
             for lo, hi, base, cnt, idxs in refine:
                 width = hi - lo
                 b = F.least(
-                    F.lit(bins - 1),
+                    F.lit(_PCT_BINS - 1),
                     F.floor(
-                        (F.col("_v") - F.lit(lo)) / F.lit(width) * F.lit(bins)
+                        (F.col("_v") - F.lit(lo)) / F.lit(width) * F.lit(_PCT_BINS)
                     ).cast("int"),
                 )
                 hist = (
@@ -423,7 +432,7 @@ def exact_percentiles(
 
 
 def quantize_normalize(
-    df: DataFrame, col: str = "z", lo_q: float = 0.01, hi_q: float = 0.99, exact: bool = False,
+    df: DataFrame, col: str = "z", exact: bool = False,
     bounds: "tuple[float, float] | None" = None,
 ) -> DataFrame:
     """G5: percentile clip -> uint8 [1, 255] (0 reserved for nodata), the
@@ -439,9 +448,9 @@ def quantize_normalize(
         # histogram-refined exact percentiles: identical values to the
         # built-in percentile() aggregate (asserted in tests) at a fraction
         # of its cost — see exact_percentiles
-        lo, hi = exact_percentiles(df, col, [lo_q, hi_q])
+        lo, hi = exact_percentiles(df, col, list(_CLIP_Q))
     else:
-        lo, hi = df.approxQuantile(col, [lo_q, hi_q], 0.001)
+        lo, hi = df.approxQuantile(col, list(_CLIP_Q), 0.001)
     rng = max(hi - lo, 1e-12)
     clipped = F.least(F.lit(hi), F.greatest(F.lit(lo), F.col(col)))
     q = (F.round((clipped - F.lit(lo)) / F.lit(rng) * F.lit(254.0)) + F.lit(1.0)).cast("int")
@@ -496,11 +505,7 @@ def tile_explode(df: DataFrame, tile_px: int, halo: int, carry=("z",)) -> DataFr
     )
 
 
-def infill(
-    dsm: DataFrame,
-    max_rounds: int = 8,
-    tile_px: int = 128,
-) -> DataFrame:
+def infill(dsm: DataFrame, tile_px: int = 128) -> DataFrame:
     """G4: iterative void infill. The reference loops rasterio.fillnodata
     until no nodata pixels remain (preprocess.py:236-259): each round fills
     empty cells that have >=1 filled neighbor with the IDW of their filled
@@ -508,20 +513,20 @@ def infill(
     (sparse representation — nulls never stored).
 
     ONE Spark job, not a driver loop: cells are tiled into ``tile_px``-pixel
-    squares with a ``max_rounds``-pixel halo (a round-k fill depends only on
-    original cells within Chebyshev distance k, so a halo of max_rounds
+    squares with a ``_INFILL_ROUNDS``-pixel halo (a round-k fill depends only
+    on original cells within Chebyshev distance k, so a halo of that many
     pixels makes every in-tile iteration exact), and a per-tile kernel runs
     the whole fill iteration on a dense local array. The previous
     formulation — a driver loop of (explode-join + anti-join + count) per
     round — cost dozens of tiny jobs and ~25 s of the coarse-registration
-    stage; this is one shuffle keyed by tile. Voids wider than 2*max_rounds
-    pixels stay void, exactly like the capped loop.
+    stage; this is one shuffle keyed by tile. Voids wider than
+    2*_INFILL_ROUNDS pixels stay void, exactly like the capped loop.
     """
     filled = dsm.select("gx", "gy", "z")
     bb = _raster_bbox(filled)
     if bb is None:
         return filled
-    H = int(max_rounds)
+    H = _INFILL_ROUNDS
     exploded = tile_explode(filled, tile_px, H)
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -601,119 +606,6 @@ def _fill_voids(
             break
         arr[newly] = num[newly] / den[newly]
         have |= newly
-
-
-def resample_raster(
-    dsm: DataFrame,
-    extent: Extent,
-    res_in: float,
-    res_out: float,
-    method: str = "cubic",
-    tile_px: int = 128,
-) -> DataFrame:
-    """S2: raster -> raster resample to a new resolution with a Catmull-Rom
-    bicubic kernel (a = -0.5, the GDAL/rasterio `cubic` kernel the reference
-    uses to bring rasters to pipeline resolution, preprocess.py:409-441).
-
-    Output cell centers map into input pixel space (u = (ogx+0.5)*r - 0.5,
-    r = res_out/res_in); each takes a 4x4 tap neighborhood. Distributed as
-    one job: input cells are exploded into every OUTPUT tile whose support
-    window touches them (JVM sequence-explode, fan-out ~(1 + 4*res_in/
-    res_out/tile_px)^2), then a per-tile kernel evaluates all output pixels
-    vectorized. Taps are mask-normalized, so edge pixels and pixels next to
-    voids renormalize over available taps (voids stay absent when NO tap
-    exists). `method="bilinear"` uses the 2x2 linear kernel instead.
-    """
-    if method not in ("cubic", "bilinear"):
-        raise ValueError(f"unknown method {method!r}")
-    r = res_out / res_in
-    support = 2 if method == "cubic" else 1
-    # output-pixel index range influenced by input cell gx:
-    # u in [gx-support, gx+support] -> ogx in [(gx-support+0.5)/? ...]
-    lo_f = lambda g: (g - support + 0.5) / r - 0.5  # noqa: E731
-    hi_f = lambda g: (g + support + 0.5) / r - 0.5  # noqa: E731
-    tx0 = F.floor(F.ceil(lo_f(F.col("gx"))) / F.lit(tile_px)).cast("long")
-    tx1 = F.floor(F.floor(hi_f(F.col("gx"))) / F.lit(tile_px)).cast("long")
-    ty0 = F.floor(F.ceil(lo_f(F.col("gy"))) / F.lit(tile_px)).cast("long")
-    ty1 = F.floor(F.floor(hi_f(F.col("gy"))) / F.lit(tile_px)).cast("long")
-    exploded = (
-        dsm.select("gx", "gy", "z", tx0.alias("_tx0"), tx1.alias("_tx1"),
-                   ty0.alias("_ty0"), ty1.alias("_ty1"))
-        .withColumn("htx", F.explode(F.sequence("_tx0", "_tx1")))
-        .withColumn("hty", F.explode(F.sequence("_ty0", "_ty1")))
-        .select("htx", "hty", "gx", "gy", "z")
-    )
-
-    def cm_weights(t: np.ndarray) -> tuple[np.ndarray, ...]:
-        # Catmull-Rom (a=-0.5) weights for taps at offsets -1, 0, +1, +2
-        # of the fractional position t in [0, 1)
-        a = -0.5
-        t2, t3 = t * t, t * t * t
-        w0 = a * t3 - 2 * a * t2 + a * t
-        w1 = (a + 2) * t3 - (a + 3) * t2 + 1
-        w2 = -(a + 2) * t3 + (2 * a + 3) * t2 - a * t
-        w3 = -a * t3 + a * t2
-        return w0, w1, w2, w3
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        htx, hty = int(key[0]), int(key[1])
-        ogx = np.arange(htx * tile_px, (htx + 1) * tile_px)
-        ogy = np.arange(hty * tile_px, (hty + 1) * tile_px)
-        u = (ogx + 0.5) * r - 0.5  # input-pixel coords per output x index
-        v = (ogy + 0.5) * r - 0.5
-        bu = np.floor(u).astype(np.int64)
-        bv = np.floor(v).astype(np.int64)
-        fu = u - bu
-        fv = v - bv
-        # dense local input array over the taps this tile needs
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        x0, y0 = gx.min(), gy.min()
-        w_ = gx.max() - x0 + 1
-        h_ = gy.max() - y0 + 1
-        arr = np.zeros((w_, h_))
-        m = np.zeros((w_, h_))
-        arr[gx - x0, gy - y0] = pdf["z"].to_numpy(np.float64)
-        m[gx - x0, gy - y0] = 1.0
-        if method == "cubic":
-            wu = np.stack(cm_weights(fu), axis=1)  # (T, 4) offsets -1..2
-            wv = np.stack(cm_weights(fv), axis=1)
-            offs = (-1, 0, 1, 2)
-        else:
-            wu = np.stack([1.0 - fu, fu], axis=1)
-            wv = np.stack([1.0 - fv, fv], axis=1)
-            offs = (0, 1)
-        num = np.zeros((tile_px, tile_px))
-        den = np.zeros((tile_px, tile_px))
-        for i, du in enumerate(offs):
-            ix = np.clip(bu + du - x0, -1, w_)  # -1 / w_ mark out-of-array
-            okx = (ix >= 0) & (ix < w_)
-            ixc = np.clip(ix, 0, w_ - 1)
-            for j, dv in enumerate(offs):
-                iy = np.clip(bv + dv - y0, -1, h_)
-                oky = (iy >= 0) & (iy < h_)
-                iyc = np.clip(iy, 0, h_ - 1)
-                tap_m = m[np.ix_(ixc, iyc)] * okx[:, None] * oky[None, :]
-                tap_v = arr[np.ix_(ixc, iyc)]
-                w2d = wu[:, i : i + 1] * wv[None, :, j].reshape(1, -1)
-                num += w2d * tap_m * tap_v
-                den += w2d * tap_m
-        # full-support Catmull-Rom weights sum to exactly 1; partial-support
-        # sums can be small or negative (negative lobes), where renormalizing
-        # would explode — require most of the kernel mass to be present
-        ok = den > 0.5
-        ex, ey = np.nonzero(ok)
-        return pd.DataFrame(
-            {
-                "gx": ogx[ex],
-                "gy": ogy[ey],
-                "z": num[ok] / den[ok],
-            }
-        )
-
-    return exploded.groupBy("htx", "hty").applyInPandas(
-        kernel, schema="gx long, gy long, z double"
-    )
 
 
 def _gauss_kernel1d(sigma: float) -> np.ndarray:
@@ -800,7 +692,6 @@ def infill_band_pass(
     weak_sigma_px: float,
     strong_sigma_px: float,
     tile_px: int = 256,
-    max_rounds: int = 8,
 ) -> DataFrame:
     """Fused G4+band-pass: void infill followed by the Gaussian band-pass in
     ONE tile kernel (optimization round r6) — the registration preprocess
@@ -819,7 +710,7 @@ def infill_band_pass(
     bb = _raster_bbox(filled)
     if bb is None:
         return filled.withColumn("bp", F.lit(0.0))
-    h_inf = int(max_rounds)
+    h_inf = _INFILL_ROUNDS
     h_bp = max(1, int(math.ceil(4.0 * strong_sigma_px)) + 1)
     halo = h_inf + h_bp
     kw = _gauss_kernel1d(weak_sigma_px)

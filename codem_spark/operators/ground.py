@@ -20,8 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from codem_spark.operators import grid as grid_mod
-
 Extent = tuple[float, float, float, float]
 
 TILE = 256

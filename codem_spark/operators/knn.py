@@ -41,6 +41,20 @@ from codem_spark.functions import cells
 
 Extent = tuple[float, float, float, float]
 
+# auto_level's data-size bound: aim for ~this many rows per tile
+_TARGET_PER_TILE = 1500
+# Candidate generation allocates ~56 B/pair of temporaries (index arrays +
+# the (chunk, 3) diff). 1M-pair chunks = ~56 MB of streaming temps PER
+# worker — DRAM-bound; on a host whose aggregate copy bandwidth scales only
+# ~3.3x for 4x cores that capped the kNN stage at 2.75x core-scaling
+# (BENCH r4 run 1). 128k-pair chunks keep the working set ~7 MB (L2/L3-
+# resident): with the k=1 reduceat path in grid_topk, the 7.3M-pt harness
+# stage measured 245.9 -> 105.6 s at 1 core and 89.4 -> 30.8 s at 4
+# (2.75x -> 3.43x core-scaling), identical output.
+_PAIR_CHUNK = 131_072
+# radius_join's distance space
+_XYZ = ("x", "y", "z")
+
 
 def level_for_radius(extent: Extent, radius: float, max_level: int = 16) -> int:
     """Finest level whose cell edge >= radius (1-ring halo covers radius)."""
@@ -53,13 +67,11 @@ def auto_level(
     extent: Extent,
     radius: float,
     n_rows: int | None,
-    target_per_tile: int = 1500,
-    max_level: int = 16,
     parallelism: int | None = None,
 ) -> int:
     """Tile level for a kNN/radius join: bounded above by the radius rule
     (cell edge >= radius so a 1-ring halo provably covers the search ball)
-    AND by the data size (≈target_per_tile rows per tile), with a floor of
+    AND by the data size (≈_TARGET_PER_TILE rows per tile), with a floor of
     ~4x ``parallelism`` tiles so the cogroup stage can actually use every
     task slot (rows permitting).
 
@@ -72,10 +84,10 @@ def auto_level(
     level 1 -> 4 cogroup groups on 32 cores). Any level <= the radius bound
     is CORRECT — this only tunes parallelism vs per-tile overhead.
     """
-    lr = level_for_radius(extent, radius, max_level)
+    lr = level_for_radius(extent, radius)
     if not n_rows or n_rows <= 0:
         return lr
-    lc = max(1, int(0.5 * math.log2(max(n_rows / target_per_tile, 1.0))))
+    lc = max(1, int(0.5 * math.log2(max(n_rows / _TARGET_PER_TILE, 1.0))))
     if parallelism and parallelism > 0:
         # enough tiles to fill 4x the task slots, but never so fine that
         # average occupancy drops below ~64 rows/tile
@@ -99,15 +111,6 @@ def grid_topk(
     rids: np.ndarray,
     radius: float,
     k: int | None,
-    # Candidate generation allocates ~56 B/pair of temporaries (index
-    # arrays + the (chunk, 3) diff). 1M-pair chunks = ~56 MB of streaming
-    # temps PER worker — DRAM-bound, and this box's aggregate copy
-    # bandwidth scales only ~3.3x for 4x cores, which capped the kNN stage
-    # at 2.75x core-scaling (BENCH r4 run 1). 128k-pair chunks keep the
-    # working set ~7 MB (L2/L3-resident): with the k=1 reduceat path below,
-    # the 7.3M-pt harness stage measured 245.9 -> 105.6 s at 1 core and
-    # 89.4 -> 30.8 s at 4 (2.75x -> 3.43x core-scaling), identical output.
-    pair_chunk: int = 131_072,
     # unordered_pairs=True (self-join connectivity mode; REQUIRES lpts and
     # rpts to be the same array in the same order, and k=None): keep each
     # unordered pair once (right index > left index), masked BEFORE the
@@ -187,7 +190,7 @@ def grid_topk(
     est_per_left = max(
         1.0, ring * ring * 0.66 * n_r / max(len(np.unique(rkey_s)), 1)
     )
-    lchunk = max(1, int(pair_chunk / est_per_left))
+    lchunk = max(1, int(_PAIR_CHUNK / est_per_left))
     for s in range(0, n_l, lchunk):
         lsl = slice(s, min(s + lchunk, n_l))
         nlc = lsl.stop - lsl.start
@@ -498,7 +501,6 @@ def radius_join(
     right: DataFrame,
     extent: Extent,
     radius: float,
-    dims: tuple[str, ...] = ("x", "y", "z"),
     lid: str = "pid",
     rid: str = "pid",
     level: int | None = None,
@@ -539,8 +541,8 @@ def radius_join(
             rpdf = rpdf[home != cell]
         if len(lpdf) == 0 or len(rpdf) == 0:
             return pd.DataFrame({lid: [], "n_" + rid: [], "nn_dist": []})
-        lp = np.column_stack([lpdf[d].to_numpy(np.float64) for d in dims])
-        rp = np.column_stack([rpdf[d].to_numpy(np.float64) for d in dims])
+        lp = np.column_stack([lpdf[d].to_numpy(np.float64) for d in _XYZ])
+        rp = np.column_stack([rpdf[d].to_numpy(np.float64) for d in _XYZ])
         lids_ = lpdf[lid].to_numpy()
         rids_ = rpdf[rid].to_numpy()
         excl = (lids_, rids_) if unordered_ids else None
@@ -552,11 +554,11 @@ def radius_join(
             li, ri, dist = li[keep], ri[keep], dist[keep]
         return pd.DataFrame({lid: lids_[li], "n_" + rid: rids_[ri], "nn_dist": dist})
 
-    right_tiled = tile_right(right, extent, radius, level, dims, rid)
+    right_tiled = tile_right(right, extent, radius, level, _XYZ, rid)
     lt, rt = _types(left)[lid], _types(right_tiled, "_r_")[rid]
     out_schema = f"{lid} {lt}, n_{rid} {rt}, nn_dist double"
     return _tile_cogroup(
-        left, right_tiled, extent, level, ["cell_id", lid, *dims], kernel, out_schema
+        left, right_tiled, extent, level, ["cell_id", lid, *_XYZ], kernel, out_schema
     )
 
 

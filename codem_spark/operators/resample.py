@@ -113,18 +113,3 @@ def resample_to_points(
     return knn._tile_cogroup(
         queries, tiled, extent, level, [qid, "x", "y", "cell_id"], kernel, schema
     )
-
-
-def raster_to_points(
-    dsm: DataFrame,
-    queries: DataFrame,
-    extent: Extent,
-    resolution: float,
-    radius: float | None = None,
-    **kw,
-) -> DataFrame:
-    """Sample a (gx, gy, z) raster at arbitrary points — raster->vector."""
-    from codem_spark.operators.grid import dsm_to_points
-
-    pts = dsm_to_points(dsm, extent, resolution)
-    return resample_to_points(pts, queries, extent, radius or 2.0 * resolution, **kw)

@@ -68,18 +68,19 @@ def cosine_topk_bruteforce(
     )
 
 
-def lsh_buckets_udf_col(
-    vec: Column, dim: int, n_planes: int, n_tables: int, seed: int = 13
-) -> Column:
+_LSH_SEED = 13
+
+
+def lsh_buckets_udf_col(vec: Column, dim: int, n_planes: int, n_tables: int) -> Column:
     """All ``n_tables`` random-hyperplane bucket ids in ONE Arrow pass:
     batch matmul against the full (n_tables*n_planes, dim) plane matrix
     held in the UDF closure; table t's planes are drawn with seed
-    ``seed + 101*t`` and its bucket id is the sign pattern packed into a
+    ``_LSH_SEED + 101*t`` and its bucket id is the sign pattern packed into a
     long. A JVM expression form would unroll dim*n_planes*n_tables plane
     literals into the plan (3,072 at dim 64 x 6 planes x 8 tables), whose
     analysis and codegen alone measured ~20-40 s before any data moved."""
     mats = [
-        np.random.default_rng(seed + 101 * t).standard_normal((n_planes, dim))
+        np.random.default_rng(_LSH_SEED + 101 * t).standard_normal((n_planes, dim))
         for t in range(n_tables)
     ]
     allplanes = np.vstack(mats)  # (T*P, dim)

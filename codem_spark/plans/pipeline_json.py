@@ -54,6 +54,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from codem_spark.io import tables
+
 # PDAL dimension names -> engine columns
 _DIMS = {
     "X": "x",
@@ -153,23 +155,6 @@ def _apply_assign(df: DataFrame, assignment: str) -> DataFrame:
 _CROP_RE = re.compile(
     r"\(\s*\[\s*([-\d.eE]+)\s*,\s*([-\d.eE]+)\s*\]\s*,\s*\[\s*([-\d.eE]+)\s*,\s*([-\d.eE]+)\s*\]\s*\)"
 )
-
-
-def _read_stage(spark: SparkSession, stage: dict[str, Any]) -> DataFrame:
-    from codem_spark.io import mesh, tables
-
-    filename = stage.get("filename")
-    if filename is None:
-        raise ValueError(f"reader stage without filename: {stage}")
-    ext = os.path.splitext(filename)[1].lower()
-    if ext in (".ply", ".obj"):
-        return mesh.read_mesh_vertices(spark, filename)
-    if tables.table_exists(filename):
-        m = tables.table_manifest(filename)
-        if "point_quantization" in m.get("properties", {}):
-            return tables.quantized_point_read(spark, filename)
-        return tables.read_table(spark, filename)
-    return spark.read.parquet(filename)
 
 
 def _stage_filter(df: DataFrame, stage: dict[str, Any], extent) -> DataFrame:
@@ -378,7 +363,9 @@ def pipeline_from_json(
         family = kind.split(".", 1)[0]
         if family == "readers" or ("filename" in stage and family not in ("filters", "writers")):
             if reader is None:
-                df = _read_stage(spark, stage)
+                if stage.get("filename") is None:
+                    raise ValueError(f"reader stage without filename: {stage}")
+                df = tables.read_points(spark, stage["filename"])
             continue
         if family == "writers":
             writers.append(stage)  # stripped, reference preprocess.py:628-633

@@ -27,6 +27,9 @@ from codem_spark.config import EngineConfig, RegistrationParameters
 from codem_spark.functions.geo import decompose_similarity
 
 _POP = np.array([bin(i).count("1") for i in range(65536)], dtype=np.int64)
+# RANSAC: points per similarity sample, and the seed of the sample draw
+_MIN_SAMPLES = 3
+_RANSAC_SEED = 0
 
 
 def _popcount64(a: np.ndarray) -> np.ndarray:
@@ -107,7 +110,7 @@ def _match_features_bf(
             yield out
 
     cols = ["fx", "fy", "fz", "ax", "ay", "az", "dist"]
-    # Keypoint tables are tile-bounded (max_kp_per_tile x tiles), so BOTH
+    # Keypoint tables are tile-bounded (MAX_KP_PER_TILE x tiles), so BOTH
     # sides usually fit on the driver: run the identical batch kernel
     # in-process and skip a whole distributed Python stage (mapInPandas +
     # collect measured ~0.6 s of the coarse solve for a 237-row AOI side).
@@ -236,7 +239,6 @@ def _ransac_consensus_batch(
     dst: np.ndarray,
     samples: np.ndarray,
     threshold: float,
-    min_samples: int,
     solve_scale: bool,
     chunk: int = 512,
 ) -> tuple[int, "np.ndarray | None"]:
@@ -260,7 +262,7 @@ def _ransac_consensus_batch(
         mu_d = d3.mean(axis=1)
         ss = s3 - mu_s[:, None, :]
         ds = d3 - mu_d[:, None, :]
-        cov = np.einsum("tki,tkj->tij", ds, ss) / min_samples  # (t, 3, 3)
+        cov = np.einsum("tki,tkj->tij", ds, ss) / _MIN_SAMPLES  # (t, 3, 3)
         try:
             u, s, vt = np.linalg.svd(cov)
         except np.linalg.LinAlgError:
@@ -306,9 +308,7 @@ def ransac_similarity(
     pairs: pd.DataFrame,
     threshold: float = 10.0,
     max_iter: int = 10000,
-    min_samples: int = 3,
     solve_scale: bool = True,
-    seed: int = 0,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Max-consensus similarity fit over putative pairs (reference
     dsm.py:232-257; residual threshold 10 m, <=10^4 trials, 3-point
@@ -316,11 +316,11 @@ def ransac_similarity(
     src = pairs[["ax", "ay", "az"]].to_numpy(np.float64)
     dst = pairs[["fx", "fy", "fz"]].to_numpy(np.float64)
     n = len(src)
-    if n < min_samples:
+    if n < _MIN_SAMPLES:
         raise ValueError(f"not enough putative matches for RANSAC: {n}")
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(_RANSAC_SEED)
     trials = min(max_iter, 4 * n * n if n < 50 else max_iter)
-    samples = rng.integers(0, n, size=(trials, min_samples))
+    samples = rng.integers(0, n, size=(trials, _MIN_SAMPLES))
     # Vectorized trial loop (optimization round r6): the per-trial Python
     # loop (3-point umeyama + residual scan per trial) measured 1.25 s of
     # driver-serial time per coarse solve at 10^4 trials. All trials now run
@@ -329,16 +329,16 @@ def ransac_similarity(
     # skip, numpy's own matrix_rank tolerance, and first-maximum selection
     # exactly like the loop's strict '>' update rule.
     best_count, best_inliers = _ransac_consensus_batch(
-        src, dst, samples, threshold, min_samples, solve_scale
+        src, dst, samples, threshold, solve_scale
     )
-    if best_inliers is None or best_count < min_samples:
+    if best_inliers is None or best_count < _MIN_SAMPLES:
         raise ValueError("RANSAC failed to find a consensus set")
     m = umeyama(src[best_inliers], dst[best_inliers], solve_scale)
     # one refinement pass on the refit inliers (standard; reference's
     # skimage ransac does the same internally)
     res = np.linalg.norm(src @ m[:3, :3].T + m[:3, 3] - dst, axis=1)
     inl = res < threshold
-    if inl.sum() >= min_samples:
+    if inl.sum() >= _MIN_SAMPLES:
         m = umeyama(src[inl], dst[inl], solve_scale)
         best_inliers = inl
     return m, best_inliers

@@ -33,6 +33,9 @@ HALO = 24  # overlap ring, pixels (descriptor support 16px * sqrt2 / 2 + smoothi
 DESC_BITS = 256  # packed into 4 int64
 PATCH = 16  # descriptor sampling grid (PATCH x PATCH = DESC_BITS)
 PATCH_RADIUS = 7.5  # sampling radius in pixels
+MAX_KP_PER_TILE = 400  # strongest keypoints kept per tile
+HARRIS_K = 0.05  # det - k * trace^2
+HARRIS_REL_THRESHOLD = 0.001  # min response, relative to the tile's max
 
 
 def _smooth(a: np.ndarray, passes: int = 2) -> np.ndarray:
@@ -50,17 +53,11 @@ def _smooth(a: np.ndarray, passes: int = 2) -> np.ndarray:
     return a
 
 
-def harris_keypoints(
-    img: np.ndarray,
-    valid: np.ndarray,
-    max_kp: int = 400,
-    k: float = 0.05,
-    rel_threshold: float = 0.001,
-) -> np.ndarray:
+def harris_keypoints(img: np.ndarray, valid: np.ndarray) -> np.ndarray:
     """Harris corner response + 3x3 non-max suppression.
 
-    Returns (n, 3) array of (row, col, response), strongest first, ties
-    broken by (row, col) for determinism.
+    Returns (n, 3) array of (row, col, response), at most MAX_KP_PER_TILE
+    rows, strongest first, ties broken by (row, col) for determinism.
     """
     a = img.astype(np.float64)
     a = _smooth(a, passes=1)
@@ -70,7 +67,7 @@ def harris_keypoints(
     sxy = _smooth(ix * iy)
     det = sxx * syy - sxy * sxy
     tr = sxx + syy
-    r = det - k * tr * tr
+    r = det - HARRIS_K * tr * tr
     # suppress responses near invalid (void) pixels
     ok = _smooth(valid.astype(np.float64), passes=2) > 0.999
     r = np.where(ok, r, -np.inf)
@@ -82,10 +79,10 @@ def harris_keypoints(
             if dr == 0 and dc == 0:
                 continue
             nms &= r >= rp[1 + dr : r.shape[0] + 1 + dr, 1 + dc : r.shape[1] + 1 + dc]
-    thresh = rel_threshold * max(r.max(initial=-np.inf), 1e-12)
+    thresh = HARRIS_REL_THRESHOLD * max(r.max(initial=-np.inf), 1e-12)
     rows, cols = np.nonzero(nms & (r > thresh) & np.isfinite(r))
     resp = r[rows, cols]
-    order = np.lexsort((cols, rows, -resp))[:max_kp]
+    order = np.lexsort((cols, rows, -resp))[:MAX_KP_PER_TILE]
     return np.column_stack([rows[order], cols[order], resp[order]]).astype(np.float64)
 
 
@@ -145,7 +142,6 @@ def extract_features(
     dsm: DataFrame,
     extent: Extent,
     resolution: float,
-    max_kp_per_tile: int = 400,
 ) -> DataFrame:
     """DSM table (gx, gy, z, z_u8) -> keypoint table
     (gx, gy, x, y, z, response, d0, d1, d2, d3).
@@ -200,7 +196,7 @@ def extract_features(
         valid[rr, cc] = True
         zs = np.zeros((w, w), dtype=np.float64)
         zs[rr, cc] = pdf["z"].to_numpy(np.float64)
-        kps = harris_keypoints(det, valid, max_kp=max_kp_per_tile)
+        kps = harris_keypoints(det, valid)
         if len(kps):
             # keep only keypoints whose center lies in the tile core
             core = (

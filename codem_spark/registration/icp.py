@@ -204,7 +204,6 @@ def fine_registration(
     cfg: EngineConfig | None = None,
     initial: np.ndarray | None = None,
     knn_radius: float | None = None,
-    fixed_normals: DataFrame | None = None,
 ) -> RegistrationParameters:
     """Distributed point-to-plane ICP. fixed/moving: (pid, x, y, z).
 
@@ -218,144 +217,147 @@ def fine_registration(
     radius = knn_radius if knn_radius is not None else max(2.0 * resolution, 1.0)
 
     # normals on the fixed cloud (once; reference preprocess.py:317-350)
-    if fixed_normals is None:
-        fixed_normals = compute_normals(fixed, extent, radius=4.0 * resolution)
-    fixed_n = fixed_normals.persist()  # materialized by the mean agg below
+    fixed_n = compute_normals(fixed, extent, radius=4.0 * resolution).persist()
     r_carry = ("x", "y", "z", "nx", "ny", "nz")
-
-    # mean-centering offset for conditioning (reference icp.py:116-119) —
-    # computed from the CACHED normals frame (same x/y/z rows as `fixed`),
-    # not the raw input, whose unpersisted derivation chain would re-scan
-    mu_row = fixed_n.agg(
-        F.avg("x").alias("mx"), F.avg("y").alias("my"), F.avg("z").alias("mz")
-    ).collect()[0]
-    mu = np.array([mu_row["mx"], mu_row["my"], mu_row["mz"]])
-    demean = np.eye(4)
-    demean[:3, 3] = -mu
-    remean = np.eye(4)
-    remean[:3, 3] = mu
-
-    fixed_c = apply_transform_cols(fixed_n, demean)
-    # center the *extent* too so tiling stays aligned
-    c_extent = (extent[0] - mu[0], extent[1] - mu[1], extent[2] - mu[0], extent[3] - mu[1])
-
-    from codem_spark.util import approx_row_count
-
-    moving_base = moving.select("pid", "x", "y", "z").persist()
-    n_moving = approx_row_count(moving_base)  # parallelism knob only
-    join_level = knn.auto_level(
-        c_extent, radius, n_moving,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-    # Tile + halo-explode the fixed side ONCE, hash-partitioned by cell and
-    # cached: the fixed cloud and the level never change across iterations,
-    # so each iteration's cogroup re-uses the cached partitioning and
-    # exchanges ONLY the moving side (asserted in tests/test_plans.py). The
-    # per-iteration fixed-side reshuffle this replaces was the dominant loop
-    # cost at the 1M-point bench scale.
-    fixed_tiled = (
-        knn.tile_right(fixed_c, c_extent, radius, join_level, rid="pid", r_carry=r_carry)
-        .repartition(F.col("cell_id"))
-        .persist()
-    )
-    # the count doubles as materialization of the tiled cache THROUGH the
-    # normals cache, which can then be released before the loop
-    fixed_tiled.count()
-    fixed_n.unpersist(False)
-
-    alpha = 2.0  # IRLS shape, decays by 0.2/iter (reference icp.py:128-131,151)
-    n_iters = 0
-    beta = resolution / 2.0 + 0.5
-    prev_rmse = None
-    n_pairs = 0
-    rmse = (0.0, 0.0, 0.0, 0.0)
-    t_c = demean @ t_total @ remean  # work in centered frame
-
-    _acc_cols = [f"m{i}" for i in range(28)] + [f"b{i}" for i in range(7)] + [
-        "wr2", "r2", "sw", "n",
-    ]
-    _corr_renames = {
-        "l_x": "mx", "l_y": "my", "l_z": "mz",
-        "r_x": "fx", "r_y": "fy", "r_z": "fz",
-        "r_nx": "nx", "r_ny": "ny", "r_nz": "nz",
-    }
-    for it in range(cfg.icp_max_iter):
-        n_iters = it + 1
-        # transform ORIGINAL moving points into the centered current pose
-        cur = apply_transform_cols(moving_base, t_c @ demean)
-        # FUSED iteration (one Python stage, one job): the kNN cogroup
-        # kernel matches correspondences per tile and the fused `post`
-        # reducer immediately collapses them to ONE constant-size partial
-        # row (upper triangle of A^T W A, A^T W b, residual sums) — the
-        # full correspondence frame never crosses a stage boundary. The
-        # partial rows are tree-reduced JVM-side (partial_sum map-side
-        # combine + final agg: Spark's hash agg IS the treeReduce here).
-        kern = _partials_kernel_builder(cfg.icp_solve_scale, alpha, beta, cfg.icp_robust)
-        partials = knn.knn_join(
-            cur,
-            None,
-            c_extent,
-            radius=radius,
-            k=1,
-            lid="pid",
-            rid="pid",
-            l_carry=("x", "y", "z"),
-            r_carry=r_carry,
-            level=join_level,
-            right_tiled=fixed_tiled,
-            post=lambda pdf, _k=kern: _k(pdf.rename(columns=_corr_renames)),
-            post_schema=_PARTIAL_SCHEMA,
-        )
-        row = partials.agg(
-            *[F.sum(c).alias(c) for c in _acc_cols]
+    moving_base = fixed_tiled = None
+    # every cache this solve creates is released on the way out, on error
+    # paths too (e.g. too few correspondences)
+    try:
+        # mean-centering offset for conditioning (reference icp.py:116-119) —
+        # computed from the CACHED normals frame (same x/y/z rows as `fixed`),
+        # not the raw input, whose unpersisted derivation chain would re-scan
+        mu_row = fixed_n.agg(
+            F.avg("x").alias("mx"), F.avg("y").alias("my"), F.avg("z").alias("mz")
         ).collect()[0]
-        acc = np.array([float(row[c] or 0.0) for c in _acc_cols], dtype=np.float64)
-        n_pairs = int(acc[-1])
-        if n_pairs < 10:
-            raise ValueError(f"ICP found too few correspondences ({n_pairs})")
-        cur_rmse = math.sqrt(acc[36] / n_pairs)  # sqrt(sum r^2 / n)
-        upd = _solve_update(acc, cfg.icp_solve_scale)
-        t_c = upd @ t_c
-        # convergence checks (reference icp.py:173-185)
-        dec = decompose_similarity(upd)
-        angles = (dec["omega"], dec["phi"], dec["kappa"])
-        tvec = (dec["trans_x"], dec["trans_y"], dec["trans_z"])
-        if prev_rmse is not None:
-            d_rmse = abs(prev_rmse - cur_rmse) / max(prev_rmse, 1e-300)
-            d_angle = max(abs(a) for a in angles)
-            d_dist = max(abs(v) for v in tvec)
-            if d_rmse < cfg.icp_rmse_threshold or (
-                d_angle < cfg.icp_angle_threshold and d_dist < cfg.icp_distance_threshold
-            ):
-                prev_rmse = cur_rmse
-                break
-        prev_rmse = cur_rmse
-        if cfg.icp_robust and alpha > 0:
-            alpha = max(alpha - 0.2, 0.0)  # reference decay icp.py:151
+        mu = np.array([mu_row["mx"], mu_row["my"], mu_row["mz"]])
+        demean = np.eye(4)
+        demean[:3, 3] = -mu
+        remean = np.eye(4)
+        remean[:3, 3] = mu
 
-    # final residual stats per axis: one more correspondence pass
-    cur = apply_transform_cols(moving_base, t_c @ demean)
-    corr = knn.knn_join(
-        cur, None, c_extent, radius=radius, k=1,
-        lid="pid", rid="pid", l_carry=("x", "y", "z"), r_carry=("x", "y", "z"),
-        level=join_level, right_tiled=fixed_tiled,
-    )
-    stats = corr.agg(
-        F.sqrt(F.avg(F.pow(F.col("l_x") - F.col("r_x"), 2))).alias("rx"),
-        F.sqrt(F.avg(F.pow(F.col("l_y") - F.col("r_y"), 2))).alias("ry"),
-        F.sqrt(F.avg(F.pow(F.col("l_z") - F.col("r_z"), 2))).alias("rz"),
-        F.sqrt(
-            F.avg(
-                F.pow(F.col("l_x") - F.col("r_x"), 2)
-                + F.pow(F.col("l_y") - F.col("r_y"), 2)
-                + F.pow(F.col("l_z") - F.col("r_z"), 2)
+        fixed_c = apply_transform_cols(fixed_n, demean)
+        # center the *extent* too so tiling stays aligned
+        c_extent = (extent[0] - mu[0], extent[1] - mu[1], extent[2] - mu[0], extent[3] - mu[1])
+
+        from codem_spark.util import approx_row_count
+
+        moving_base = moving.select("pid", "x", "y", "z").persist()
+        n_moving = approx_row_count(moving_base)  # parallelism knob only
+        join_level = knn.auto_level(
+            c_extent, radius, n_moving,
+            parallelism=spark.sparkContext.defaultParallelism,
+        )
+        # Tile + halo-explode the fixed side ONCE, hash-partitioned by cell and
+        # cached: the fixed cloud and the level never change across iterations,
+        # so each iteration's cogroup re-uses the cached partitioning and
+        # exchanges ONLY the moving side (asserted in tests/test_plans.py). The
+        # per-iteration fixed-side reshuffle this replaces was the dominant loop
+        # cost at the 1M-point bench scale.
+        fixed_tiled = (
+            knn.tile_right(fixed_c, c_extent, radius, join_level, rid="pid", r_carry=r_carry)
+            .repartition(F.col("cell_id"))
+            .persist()
+        )
+        # the count doubles as materialization of the tiled cache THROUGH the
+        # normals cache, which can then be released before the loop
+        fixed_tiled.count()
+        fixed_n.unpersist(False)
+
+        alpha = 2.0  # IRLS shape, decays by 0.2/iter (reference icp.py:128-131,151)
+        n_iters = 0
+        beta = resolution / 2.0 + 0.5
+        prev_rmse = None
+        n_pairs = 0
+        rmse = (0.0, 0.0, 0.0, 0.0)
+        t_c = demean @ t_total @ remean  # work in centered frame
+
+        _acc_cols = [f"m{i}" for i in range(28)] + [f"b{i}" for i in range(7)] + [
+            "wr2", "r2", "sw", "n",
+        ]
+        _corr_renames = {
+            "l_x": "mx", "l_y": "my", "l_z": "mz",
+            "r_x": "fx", "r_y": "fy", "r_z": "fz",
+            "r_nx": "nx", "r_ny": "ny", "r_nz": "nz",
+        }
+        for it in range(cfg.icp_max_iter):
+            n_iters = it + 1
+            # transform ORIGINAL moving points into the centered current pose
+            cur = apply_transform_cols(moving_base, t_c @ demean)
+            # FUSED iteration (one Python stage, one job): the kNN cogroup
+            # kernel matches correspondences per tile and the fused `post`
+            # reducer immediately collapses them to ONE constant-size partial
+            # row (upper triangle of A^T W A, A^T W b, residual sums) — the
+            # full correspondence frame never crosses a stage boundary. The
+            # partial rows are tree-reduced JVM-side (partial_sum map-side
+            # combine + final agg: Spark's hash agg IS the treeReduce here).
+            kern = _partials_kernel_builder(cfg.icp_solve_scale, alpha, beta, cfg.icp_robust)
+            partials = knn.knn_join(
+                cur,
+                None,
+                c_extent,
+                radius=radius,
+                k=1,
+                lid="pid",
+                rid="pid",
+                l_carry=("x", "y", "z"),
+                r_carry=r_carry,
+                level=join_level,
+                right_tiled=fixed_tiled,
+                post=lambda pdf, _k=kern: _k(pdf.rename(columns=_corr_renames)),
+                post_schema=_PARTIAL_SCHEMA,
             )
-        ).alias("r3"),
-        F.count("*").alias("n"),
-    ).collect()[0]
+            row = partials.agg(
+                *[F.sum(c).alias(c) for c in _acc_cols]
+            ).collect()[0]
+            acc = np.array([float(row[c] or 0.0) for c in _acc_cols], dtype=np.float64)
+            n_pairs = int(acc[-1])
+            if n_pairs < 10:
+                raise ValueError(f"ICP found too few correspondences ({n_pairs})")
+            cur_rmse = math.sqrt(acc[36] / n_pairs)  # sqrt(sum r^2 / n)
+            upd = _solve_update(acc, cfg.icp_solve_scale)
+            t_c = upd @ t_c
+            # convergence checks (reference icp.py:173-185)
+            dec = decompose_similarity(upd)
+            angles = (dec["omega"], dec["phi"], dec["kappa"])
+            tvec = (dec["trans_x"], dec["trans_y"], dec["trans_z"])
+            if prev_rmse is not None:
+                d_rmse = abs(prev_rmse - cur_rmse) / max(prev_rmse, 1e-300)
+                d_angle = max(abs(a) for a in angles)
+                d_dist = max(abs(v) for v in tvec)
+                if d_rmse < cfg.icp_rmse_threshold or (
+                    d_angle < cfg.icp_angle_threshold and d_dist < cfg.icp_distance_threshold
+                ):
+                    prev_rmse = cur_rmse
+                    break
+            prev_rmse = cur_rmse
+            if cfg.icp_robust and alpha > 0:
+                alpha = max(alpha - 0.2, 0.0)  # reference decay icp.py:151
 
-    fixed_tiled.unpersist()
-    moving_base.unpersist()
+        # final residual stats per axis: one more correspondence pass
+        cur = apply_transform_cols(moving_base, t_c @ demean)
+        corr = knn.knn_join(
+            cur, None, c_extent, radius=radius, k=1,
+            lid="pid", rid="pid", l_carry=("x", "y", "z"), r_carry=("x", "y", "z"),
+            level=join_level, right_tiled=fixed_tiled,
+        )
+        stats = corr.agg(
+            F.sqrt(F.avg(F.pow(F.col("l_x") - F.col("r_x"), 2))).alias("rx"),
+            F.sqrt(F.avg(F.pow(F.col("l_y") - F.col("r_y"), 2))).alias("ry"),
+            F.sqrt(F.avg(F.pow(F.col("l_z") - F.col("r_z"), 2))).alias("rz"),
+            F.sqrt(
+                F.avg(
+                    F.pow(F.col("l_x") - F.col("r_x"), 2)
+                    + F.pow(F.col("l_y") - F.col("r_y"), 2)
+                    + F.pow(F.col("l_z") - F.col("r_z"), 2)
+                )
+            ).alias("r3"),
+            F.count("*").alias("n"),
+        ).collect()[0]
+    finally:
+        fixed_n.unpersist(False)
+        for df in (fixed_tiled, moving_base):
+            if df is not None:
+                df.unpersist()
 
     t_final = remean @ t_c @ demean  # back to world frame
     dec = decompose_similarity(t_final)

@@ -5,9 +5,9 @@ Two families:
 * ``pages(spark, n)`` — the input_hint table ``(url, warc_ts, html, text,
   lang)``; html is the invertible wrap of text (functions/text.py), so the
   byte-identical-extraction invariant is testable end-to-end.
-* ``points_from_pages(df)`` / ``points_from_lineitem(df)`` — georeferenced
-  point clouds: pseudo (x, y) from the url hash (or deterministic id lanes
-  when an arithmetic oracle is needed), z from the synthetic surface, plus
+* ``point_cloud(spark, n)`` / ``points_from_lineitem(df)`` — point
+  clouds: pseudo (x, y) from deterministic id lanes (an arithmetic oracle
+  can reproduce them), z from the synthetic surface; ``point_cloud`` adds
   the LAS-style attribute columns the reference filters on
   (classification / return_number / intensity — FIXTURES.md §2,
   reference src/vcd/preprocessing/preprocess.py:163-166).
@@ -36,21 +36,19 @@ _WORDS = (
 ).split()
 
 
-def pages(
-    spark: SparkSession,
-    n: int,
-    n_hosts: int = 97,
-    partitions: int | None = None,
-) -> DataFrame:
+_N_HOSTS = 97
+
+
+def pages(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic Common-Crawl-style pages table.
 
     text = a deterministic word sequence keyed by row id (varying length);
     html = '<html>...<article>{escaped text}</article>...' so the extractor
     inverse holds byte-for-byte.
     """
-    df = spark.range(0, n, 1, partitions or spark.sparkContext.defaultParallelism)
+    df = spark.range(0, n, 1, spark.sparkContext.defaultParallelism)
     rid = F.col("id")
-    host = rid % F.lit(n_hosts)
+    host = rid % F.lit(_N_HOSTS)
     # Deterministic text: 5..40 words chosen by id lanes.
     n_words = (F.pmod(rid * F.lit(2654435761), F.lit(36)) + F.lit(5)).cast("int")
     words = F.transform(
@@ -86,14 +84,6 @@ def pages(
         body.alias("text"),
         lang.alias("lang"),
     )
-
-
-def georeference_pages(df: DataFrame, extent: Extent = DEFAULT_EXTENT) -> DataFrame:
-    """pages -> points: the production path (xxhash64 pseudo-coords +
-    synthetic surface z). Analog of raster->points (preprocess.py:285-315)."""
-    x, y = geo.pseudo_xy_cols(F.col("url"), extent)
-    out = df.withColumn("x", x).withColumn("y", y)
-    return out.withColumn("z", geo.surface_z_col(F.col("x"), F.col("y")))
 
 
 def point_cloud(
@@ -145,28 +135,3 @@ def points_from_lineitem(df: DataFrame, extent: Extent = DEFAULT_EXTENT) -> Data
     out = out.withColumn("y", F.lit(y0) + geo.id_lane_col(F.col("pid"), 1) * F.lit(y1 - y0))
     return out.withColumn("z", geo.surface_z_col(F.col("x"), F.col("y")))
 
-
-# SQL twins (DuckDB oracle) for the arithmetic paths above.
-def point_cloud_sql(n: int, extent: Extent = DEFAULT_EXTENT) -> str:
-    from codem_spark.functions.geo import id_lane_sql
-
-    x0, y0, x1, y1 = extent
-    return f"""
-    SELECT pid,
-           {x0!r} + ({id_lane_sql('pid', 0)}) * {x1 - x0!r} AS x,
-           {y0!r} + ({id_lane_sql('pid', 1)}) * {y1 - y0!r} AS y
-    FROM (SELECT range AS pid FROM range(0, {n}))
-    """
-
-
-def points_from_lineitem_sql(extent: Extent = DEFAULT_EXTENT) -> str:
-    from codem_spark.functions.geo import id_lane_sql
-
-    x0, y0, x1, y1 = extent
-    pid = "(l_orderkey * 8 + l_linenumber)"
-    return f"""
-    SELECT {pid} AS pid,
-           {x0!r} + ({id_lane_sql(pid, 0)}) * {x1 - x0!r} AS x,
-           {y0!r} + ({id_lane_sql(pid, 1)}) * {y1 - y0!r} AS y
-    FROM lineitem
-    """

@@ -6,8 +6,11 @@ import re
 
 from pyspark.sql import DataFrame
 
+# approx_row_count: bytes per row assumed at least this, whatever the schema
+_ROW_WIDTH_FLOOR = 16
 
-def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+
+def rebalance(df: DataFrame) -> DataFrame:
     """Ensure scan-side parallelism before heavy per-row work.
 
     At 100 TB the scan has thousands of input splits and this no-ops; tiny
@@ -30,7 +33,7 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     a broadcast join keeps its streamed side's partitioning, so a 1-split
     scan joined to a broadcast table still runs single-threaded.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
         # a shuffle renders as "Exchange <partitioning>" (a reused one keeps
@@ -44,7 +47,7 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
-def approx_row_count(df: DataFrame, row_width_floor: int = 16) -> int:
+def approx_row_count(df: DataFrame) -> int:
     """Cheap row-count ESTIMATE from Catalyst plan statistics — no job.
 
     For parallelism knobs only (tile-level selection in knn.auto_level and
@@ -61,7 +64,7 @@ def approx_row_count(df: DataFrame, row_width_floor: int = 16) -> int:
         if rc.isDefined():
             return int(rc.get().longValue())
         size = int(stats.sizeInBytes())
-        width = max(row_width_floor, sum(
+        width = max(_ROW_WIDTH_FLOOR, sum(
             8 if f.dataType.simpleString() in ("double", "bigint", "long") else 4
             for f in df.schema.fields
         ))

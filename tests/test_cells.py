@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from codem_spark import synth
 from codem_spark.functions import cells
@@ -32,20 +31,6 @@ def test_cell_decode_roundtrip(spark):
     ix, iy = cells.cell_decode_np(pdf.cell_id.values.astype(np.int64), 14)
     assert (ix == pdf._ix.values).all()
     assert (iy == pdf._iy.values).all()
-
-
-def test_cell_parent_consistency(spark):
-    pc = synth.point_cloud(spark, 300)
-    fine = cells.with_cell(pc, "x", "y", EXTENT, 12).select("pid", "cell_id")
-    coarse = cells.with_cell(pc, "x", "y", EXTENT, 10).select(
-        "pid", F.col("cell_id").alias("coarse_id")
-    )
-    j = (
-        fine.withColumn("parent", cells.cell_parent_col(F.col("cell_id"), 2))
-        .join(coarse, "pid")
-        .filter(F.col("parent") != F.col("coarse_id"))
-    )
-    assert j.count() == 0
 
 
 def test_halo_counts_interior(spark):

@@ -32,7 +32,6 @@ def test_defaults_valid():
         {"scale_z": -3.0},
         {"cell_level": 0},
         {"cell_level": 31},
-        {"halo_cells": 0},
         {"extent": (10.0, 0.0, 0.0, 5.0)},
     ],
 )

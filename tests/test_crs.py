@@ -1,4 +1,4 @@
-"""F3 unit scaling + S7 UTM inference/projection (reference
+"""F3 unit scaling + S7 UTM projection (reference
 preprocess.py:486-512,564-594, apply.py:116-123)."""
 
 from __future__ import annotations
@@ -30,13 +30,6 @@ def test_registration_to_native_composition():
     assert np.allclose(out[:3], np.array([3.0, 4.0, 5.0]) / 0.3048)
 
 
-def test_utm_zone_selection():
-    assert crs.utm_zone(-105.0, 40.0) == (13, 32613)
-    assert crs.utm_zone(151.2, -33.9) == (56, 32756)
-    assert crs.utm_zone(-179.9, 10.0) == (1, 32601)
-    assert crs.utm_zone(179.9, -10.0) == (60, 32760)
-
-
 def test_utm_central_meridian_and_known_point():
     e, n = crs.utm_project_np(np.array([-105.0]), np.array([40.0]), 13)
     assert e[0] == pytest.approx(500000.0, abs=1e-6)
@@ -66,68 +59,3 @@ def test_utm_backends_agree(spark, duck):
     d = duck.sql(f"SELECT {esql} AS e, {nsql} AS n FROM utm_t").df()
     assert np.allclose(d.e.values, en, atol=1e-6)
     assert np.allclose(d.n.values, nn, atol=1e-6)
-
-
-def test_project_to_utm_infers_zone(spark):
-    pdf = pd.DataFrame({"lon": [-105.1, -104.9], "lat": [39.9, 40.1]})
-    out, zone, epsg = crs.project_to_utm(spark.createDataFrame(pdf))
-    assert (zone, epsg) == (13, 32613)
-    got = out.toPandas()
-    assert {"x", "y"} <= set(got.columns)
-    # southern-hemisphere false northing
-    pdf_s = pd.DataFrame({"lon": [151.2], "lat": [-33.9]})
-    out_s, zone_s, epsg_s = crs.project_to_utm(spark.createDataFrame(pdf_s))
-    assert epsg_s == 32756
-    assert out_s.toPandas().y.iloc[0] > 6_000_000
-
-
-def test_warp_raster_to_utm(spark):
-    """S3 (reference preprocess.py:455-484): a lon/lat raster warps into UTM
-    meters; elevations survive and the output grid spans the projected bbox."""
-    # 0.01-degree raster around (-105, 40): ~1.1 km x 0.85 km pixels
-    rows = [
-        (gx, gy, float(gx * 10 + gy))
-        for gx in range(20)
-        for gy in range(20)
-    ]
-    dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
-    ext_deg = (-105.1, 39.9, -104.9, 40.1)
-    out, zone = crs.warp_raster_to_utm(dsm, ext_deg, res_deg=0.01, res_out_m=1000.0)
-    assert zone == 13
-    pdf = out.toPandas()
-    assert len(pdf) > 200
-    assert pdf.z.min() >= 0.0 and pdf.z.max() <= 209.0
-    # output pixel indices correspond to ~17 km x 22 km of UTM extent
-    assert 10 <= pdf.gx.max() - pdf.gx.min() <= 25
-    assert 15 <= pdf.gy.max() - pdf.gy.min() <= 30
-
-
-def test_project_to_utm_empty_raises(spark):
-    import pandas as pd
-
-    empty = spark.createDataFrame(pd.DataFrame({"lon": [1.0], "lat": [1.0]})).filter(
-        F.col("lon") > 99
-    )
-    with pytest.raises(ValueError, match="empty"):
-        crs.project_to_utm(empty)
-
-
-def test_warp_extent_covers_meridian_straddling_window(spark):
-    """A lon/lat window straddling the zone-13 central meridian (-105):
-    the min northing is on the bottom edge AT the meridian, not a corner —
-    every output cell must still land at gy >= 0 (ADVICE crs.py:239)."""
-    import pandas as pd
-
-    # dense raster over [-105.4,-104.6] x [39.9, 40.1]
-    res_deg = 0.01
-    gx, gy = np.meshgrid(np.arange(80), np.arange(20))
-    dsm = spark.createDataFrame(
-        pd.DataFrame({"gx": gx.ravel(), "gy": gy.ravel(), "z": np.ones(gx.size)})
-    )
-    out, zone = crs.warp_raster_to_utm(
-        dsm, (-105.4, 39.9, -104.6, 40.1), res_deg, res_out_m=500.0
-    )
-    assert zone == 13
-    pdf = out.toPandas()
-    assert (pdf["gx"] >= 0).all() and (pdf["gy"] >= 0).all()
-    assert len(pdf) > 0

@@ -40,25 +40,6 @@ def test_minhash_finds_planted_near_dups(spark):
     assert found >= 45  # LSH recall on ~1.0-jaccard pairs is near-total
 
 
-def test_minhash_dedup_drops_planted(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(30).select("doc_id", "text")
-    dups = docs.select((F.col("doc_id") + 100_000).alias("doc_id"), "text")
-    alld = docs.unionByName(dups)
-    kept = dedup.minhash_dedup(alld, threshold=0.9)
-    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    # every planted copy (higher id of an identical pair) must be dropped
-    assert not any(i >= 100_000 for i in kept_ids)
-    # originals survive unless they are genuine near-dups of a smaller
-    # original already in the driver data (e.g. docs 8 and 12 at sf0.001
-    # have jaccard ~0.97 — the engine correctly drops the higher id)
-    genuine = dedup.jaccard_verify(
-        dedup.minhash_lsh_candidates(docs), docs, threshold=0.9
-    ).toPandas()
-    genuinely_dropped = set(genuine.id_b)
-    orig_ids = {r["doc_id"] for r in docs.select("doc_id").collect()}
-    assert kept_ids == orig_ids - genuinely_dropped
-
-
 def test_simhash_hamming_zero_for_identical(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(20).select("doc_id", "text")
     dups = docs.select((F.col("doc_id") + 100_000).alias("doc_id"), "text")

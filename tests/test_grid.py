@@ -151,45 +151,6 @@ def test_dsm_to_points_area_point_shift(spark):
     assert a["y"] - p["y"] == pytest.approx(0.5)
 
 
-def test_resample_raster_identity_and_linear(spark):
-    """S2 cubic resample (reference preprocess.py:409-441): identity-ratio
-    resample reproduces the input exactly; a downsample of a linear surface
-    is exact at output cell centers (Catmull-Rom reproduces degree<=1)."""
-    rows = [(gx, gy, 2.0 * gx - 3.0 * gy + 7.0) for gx in range(40) for gy in range(40)]
-    dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
-    ident = grid.resample_raster(dsm, (0, 0, 40, 40), 1.0, 1.0).toPandas()
-    src = {(gx, gy): z for gx, gy, z in rows}
-    assert len(ident) == 1600
-    for _, r in ident.sample(min(100, len(ident)), random_state=0).iterrows():
-        assert abs(r.z - src[(r.gx, r.gy)]) < 1e-9
-    # 2x downsample: output center (ogx+0.5)*2-0.5 in input px
-    down = grid.resample_raster(dsm, (0, 0, 40, 40), 1.0, 2.0).toPandas()
-    interior = down[(down.gx >= 1) & (down.gx <= 18) & (down.gy >= 1) & (down.gy <= 18)]
-    assert len(interior) > 200
-    u = (interior.gx + 0.5) * 2.0 - 0.5
-    v = (interior.gy + 0.5) * 2.0 - 0.5
-    exp = 2.0 * u - 3.0 * v + 7.0
-    assert np.allclose(interior.z.values, exp.values, atol=1e-9)
-
-
-def test_resample_raster_upsample_interpolates(spark):
-    """2x upsample of a linear surface: Catmull-Rom is exact for degree<=1
-    at ANY fractional position, so every full-support output pixel matches
-    the plane; bilinear mode agrees on the same surface."""
-    rows = [(gx, gy, 0.5 * gx + 1.25 * gy - 3.0) for gx in range(20) for gy in range(20)]
-    dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
-    for method in ("cubic", "bilinear"):
-        up = grid.resample_raster(dsm, (0, 0, 20, 20), 1.0, 0.5, method=method).toPandas()
-        u = (up.gx + 0.5) * 0.5 - 0.5
-        v = (up.gy + 0.5) * 0.5 - 0.5
-        interior = up[(u >= 2) & (u <= 17) & (v >= 2) & (v <= 17)]
-        ui = (interior.gx + 0.5) * 0.5 - 0.5
-        vi = (interior.gy + 0.5) * 0.5 - 0.5
-        exp = 0.5 * ui + 1.25 * vi - 3.0
-        assert len(interior) > 500, method
-        assert np.allclose(interior.z.values, exp.values, atol=1e-9), method
-
-
 def test_cell_pyramid_matches_per_level_aggs_one_exchange(spark, duck):
     """cell_pyramid: values equal independent per-level aggs AND the whole
     pyramid plans with exactly ONE Exchange (the coarse-ancestor

@@ -110,6 +110,18 @@ def test_quantized_point_roundtrip(spark, tmp_path):
     assert np.abs(back2.z.values - pdf.sort_values("pid").z.values).max() <= 0.0005 + 1e-9
 
 
+def test_quantized_write_of_empty_frame(spark, tmp_path):
+    """An empty point frame (e.g. vcd with no significant change) writes an
+    empty quantized table instead of failing on the null min/max."""
+    from codem_spark.io import tables
+
+    empty = spark.createDataFrame([], "pid long, x double, y double, z double")
+    path = str(tmp_path / "q_empty")
+    m = tables.quantized_point_write(empty, path)
+    assert m["row_count"] == 0
+    assert tables.quantized_point_read(spark, path).count() == 0
+
+
 def test_quantized_write_int32_overflow_raises(spark, tmp_path):
     import numpy as np
     import pandas as pd

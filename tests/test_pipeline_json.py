@@ -175,6 +175,28 @@ def test_cli_read_points_dispatch(spark, cloud_path, tmp_path):
     assert dfm.count() == 9 and dfm.columns == ["pid", "x", "y", "z"]
 
 
+def test_cli_read_points_dequantizes_quantized_table(spark, tmp_path):
+    """A quantized point table (register's registered_aoi_quantized, vcd's
+    points/clusters) read back by the CLI gives the original coordinates
+    within half a quantization step, not the stored int32 counts."""
+    import numpy as np
+
+    from codem_spark.io import tables
+    from codem_spark.main import _read_points
+
+    rows = [(1, 1000.25, 2000.0, 10.0), (2, 1003.504, 2007.75, 12.123)]
+    src = spark.createDataFrame(rows, "pid long, x double, y double, z double")
+    scale = 0.01
+    path = str(tmp_path / "quantized")
+    tables.quantized_point_write(
+        src, path, offsets=(1000, 2000, 0), scales=(scale, scale, scale)
+    )
+    got = _read_points(spark, path).orderBy("pid").toPandas()
+    assert list(got.pid) == [1, 2]
+    want = np.array([r[1:] for r in rows])
+    assert np.abs(got[["x", "y", "z"]].to_numpy() - want).max() <= scale / 2 + 1e-9
+
+
 def test_vcd_filter_chain_from_json_matches_direct_api(spark):
     """VERDICT r3 item 5: the reference's full VCD preprocessing chain
     (vcd/preprocessing/preprocess.py:163-249) expressed as a JSON spec —

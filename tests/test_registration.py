@@ -374,6 +374,28 @@ def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
         prep.aoi_dsm.unpersist()
 
 
+def test_failed_icp_releases_its_caches(spark):
+    """fine_registration releases every cache it created (fixed normals,
+    tiled fixed side, moving base) when it raises for lack of
+    correspondences."""
+    from codem_spark.registration import icp
+
+    rng = np.random.default_rng(7)
+    n = 5_000
+    x = rng.uniform(0, 200, n)
+    y = rng.uniform(0, 200, n)
+    pdf = pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": _surface(x, y)})
+    fixed = spark.createDataFrame(pdf)
+    # 50 m above the fixed cloud: no moving point has a fixed point within
+    # the default kNN radius (2 * resolution)
+    moving = spark.createDataFrame(pdf.assign(z=pdf.z + 50.0))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(ValueError, match="too few correspondences"):
+        icp.fine_registration(fixed, moving, (0.0, 0.0, 200.0, 200.0), RES)
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
 def test_capture_plane_collect_is_capped(spark):
     """The match-viz DSM capture must not collect unboundedly many cells to
     the driver (VERDICT r5 'weak'): above the cap the plane is block-max
