@@ -798,7 +798,7 @@ def _q_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_fine_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fine (point-to-plane ICP) registration demo — the north-star
-    treeReduce op: recover a small rigid shift on a 20k-point scene and
+    distributed-normal-equations op: recover a small rigid shift on a 20k-point scene and
     return the one-row parameter record (rows-only; the solve is iterative,
     not SQL-expressible). Exactness envelope is pinned by
     tests/test_registration.py."""

@@ -69,24 +69,44 @@ def cell_encode_col(x: Column, y: Column, extent: Extent, level: int) -> Column:
     return interleave_col(ix, iy)
 
 
+def _dbl(v: float) -> str:
+    """``v`` as an exact Spark SQL DOUBLE literal (repr round-trips; the D
+    suffix keeps Spark from reading it as a DECIMAL)."""
+    return f"{float(v)!r}D"
+
+
+def _spread_sql(e: str) -> str:
+    for shift, mask in _SPREAD:
+        e = f"(({e} | ({e} << {shift})) & {mask})"
+    return e
+
+
+def _interleave_sql(ix: str, iy: str) -> str:
+    """Morton interleave of two integer SQL expressions — valid in both
+    Spark SQL and DuckDB. The named-column helpers below (with_cell,
+    explode_halo, border_col) build their expressions as ONE SQL string:
+    a Column tree costs a py4j round trip per node (~1 ms each, hundreds
+    per cell id), the string one parse."""
+    return f"({_spread_sql(ix)} | ({_spread_sql(iy)} << 1))"
+
+
 def with_cell(df, x: str, y: str, extent: Extent, level: int, out: str = "cell_id"):
     """Attach cell_id + integer cell coords (kept for cheap neighbor math)."""
     size = cell_size(extent, level)
-    ix = quantize_col(F.col(x), extent[0], size, level)
-    iy = quantize_col(F.col(y), extent[1], size, level)
-    return (
-        df.withColumn("_ix", ix)
-        .withColumn("_iy", iy)
-        .withColumn(out, interleave_col(F.col("_ix"), F.col("_iy")))
-    )
+    return df.withColumns(
+        {
+            "_ix": quantize_col(F.col(x), extent[0], size, level),
+            "_iy": quantize_col(F.col(y), extent[1], size, level),
+        }
+    ).withColumn(out, F.expr(_interleave_sql("`_ix`", "`_iy`")))
 
 
-def _cell_offsets(extent: Extent, level: int):
-    """(cell edge, x offset, y offset) of each row inside its cell (requires
-    the x/y columns and the _ix/_iy columns from with_cell)."""
-    size = cell_size(extent, level)
-    fx = F.col("x") - (F.col("_ix").cast("double") * F.lit(size) + F.lit(extent[0]))
-    fy = F.col("y") - (F.col("_iy").cast("double") * F.lit(size) + F.lit(extent[1]))
+def _cell_offsets_sql(extent: Extent, level: int) -> tuple[str, str, str]:
+    """(cell edge, x offset, y offset) of each row inside its cell, as SQL
+    (requires the x/y columns and the _ix/_iy columns from with_cell)."""
+    size = _dbl(cell_size(extent, level))
+    fx = f"(`x` - (CAST(`_ix` AS DOUBLE) * {size} + {_dbl(extent[0])}))"
+    fy = f"(`y` - (CAST(`_iy` AS DOUBLE) * {size} + {_dbl(extent[1])}))"
     return size, fx, fy
 
 
@@ -106,28 +126,27 @@ def explode_halo(df, level: int, extent: Extent, radius: float):
     ~(1 + 2*radius/cell_edge)^2 instead of 9.
     """
     n = 1 << level
-    size, fx, fy = _cell_offsets(extent, level)
-    r = F.lit(float(radius))
+    size, fx, fy = _cell_offsets_sql(extent, level)
+    r = _dbl(radius)
 
-    def near(dv: int, f) -> Column:
+    def near(dv: int, f: str) -> str:
         if dv == 0:
-            return F.lit(True)
-        return f <= r if dv < 0 else (F.lit(size) - f) <= r
+            return "true"
+        return f"{f} <= {r}" if dv < 0 else f"({size} - {f}) <= {r}"
 
-    structs = [
-        F.when(
-            near(dx, fx) & near(dy, fy),
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")),
-        )
+    structs = ", ".join(
+        f"CASE WHEN {near(dx, fx)} AND {near(dy, fy)} "
+        f"THEN named_struct('dx', {dx}, 'dy', {dy}) END"
         for dx in (-1, 0, 1)
         for dy in (-1, 0, 1)
-    ]
-    off = F.explode(F.filter(F.array(*structs), lambda s: s.isNotNull()))
-    out_df = df.withColumn("_off", off)
-    jx = F.col("_ix") + F.col("_off.dx")
-    jy = F.col("_iy") + F.col("_off.dy")
-    out_df = out_df.filter((jx >= 0) & (jx < n) & (jy >= 0) & (jy < n))
-    return out_df.withColumn("halo_cell", interleave_col(jx, jy)).drop("_off")
+    )
+    jx, jy = "(`_ix` + `_off`.`dx`)", "(`_iy` + `_off`.`dy`)"
+    return (
+        df.withColumn("_off", F.expr(f"explode(filter(array({structs}), s -> s IS NOT NULL))"))
+        .filter(F.expr(f"{jx} >= 0 AND {jx} < {n} AND {jy} >= 0 AND {jy} < {n}"))
+        .withColumn("halo_cell", F.expr(_interleave_sql(jx, jy)))
+        .drop("_off")
+    )
 
 
 def border_col(extent: Extent, level: int, radius: float) -> Column:
@@ -137,9 +156,11 @@ def border_col(extent: Extent, level: int, radius: float) -> Column:
     pair within ``radius`` — the predicate that keeps cross-tile edge
     generation O(boundary), not O(points²), for the connected-components
     pass."""
-    size, fx, fy = _cell_offsets(extent, level)
-    r = F.lit(float(radius))
-    return (fx <= r) | ((F.lit(size) - fx) <= r) | (fy <= r) | ((F.lit(size) - fy) <= r)
+    size, fx, fy = _cell_offsets_sql(extent, level)
+    r = _dbl(radius)
+    return F.expr(
+        f"{fx} <= {r} OR ({size} - {fx}) <= {r} OR {fy} <= {r} OR ({size} - {fy}) <= {r}"
+    )
 
 
 # ---------------------------------------------------------------- numpy side
@@ -191,11 +212,4 @@ def cell_encode_sql(x_expr: str, y_expr: str, extent: Extent, level: int) -> str
             f"greatest(0, least({n}, cast(floor(({e} - {origin!r}) / {size!r}) as bigint)))"
         )
 
-    def spread(e: str) -> str:
-        for shift, mask in _SPREAD:
-            e = f"(({e} | ({e} << {shift})) & {mask})"
-        return e
-
-    ix = q(x_expr, extent[0])
-    iy = q(y_expr, extent[1])
-    return f"({spread(ix)} | ({spread(iy)} << 1))"
+    return _interleave_sql(q(x_expr, extent[0]), q(y_expr, extent[1]))

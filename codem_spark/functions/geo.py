@@ -93,6 +93,18 @@ def surface_z_col(x: Column, y: Column) -> Column:
 
 
 # --------------------------------------------------- rigid/similarity apply
+def transform_xyz(matrix: np.ndarray, x, y, z) -> tuple:
+    """The affine part of a 4x4 applied to (x, y, z) — Spark Columns or
+    numpy arrays alike, in ONE evaluation order (x*m0 + y*m1 + z*m2 + t,
+    left to right), so a numpy kernel reproduces the JVM's posed
+    coordinates bit for bit."""
+    m = np.asarray(matrix, dtype=np.float64)
+    return tuple(
+        x * float(m[i, 0]) + y * float(m[i, 1]) + z * float(m[i, 2]) + float(m[i, 3])
+        for i in range(3)
+    )
+
+
 def apply_transform_cols(
     df: DataFrame, matrix: np.ndarray, x: str = "x", y: str = "y", z: str = "z"
 ) -> DataFrame:
@@ -100,18 +112,9 @@ def apply_transform_cols(
     column expressions (the reference pipes points through a PDAL
     transformation filter, apply.py:314-335; here Catalyst codegens the
     same affine math over the whole table, no Python in the loop)."""
-    m = np.asarray(matrix, dtype=np.float64)
-    cx, cy, cz = F.col(x), F.col(y), F.col(z)
-    nx = cx * float(m[0, 0]) + cy * float(m[0, 1]) + cz * float(m[0, 2]) + float(m[0, 3])
-    ny = cx * float(m[1, 0]) + cy * float(m[1, 1]) + cz * float(m[1, 2]) + float(m[1, 3])
-    nz = cx * float(m[2, 0]) + cy * float(m[2, 1]) + cz * float(m[2, 2]) + float(m[2, 3])
-    return (
-        df.withColumn("_nx", nx)
-        .withColumn("_ny", ny)
-        .withColumn("_nz", nz)
-        .drop(x, y, z)
-        .withColumnsRenamed({"_nx": x, "_ny": y, "_nz": z})
-    )
+    nx, ny, nz = transform_xyz(matrix, F.col(x), F.col(y), F.col(z))
+    keep = [c for c in df.columns if c not in (x, y, z)]
+    return df.select(*keep, nx.alias(x), ny.alias(y), nz.alias(z))
 
 
 def similarity_matrix(

@@ -386,13 +386,12 @@ def tile_right(
     lineage) otherwise resolves both cogroup children to the SAME attribute
     ids and Catalyst prunes the right side down to the key.
 
-    Loop callers build it once: the ICP loop joins the moving cloud against
-    one fixed cloud up to 100 times, and re-tiling + re-shuffling the fixed
-    side per iteration was the dominant per-iteration cost. Such a caller
-    should ``.repartition('cell_id').persist()`` the result: the cached
-    hash partitioning satisfies the cogroup's clustered-distribution
-    requirement, so each subsequent ``knn_join(..., right_tiled=...)``
-    exchanges ONLY the left side (asserted in tests/test_plans.py)."""
+    Loop callers build it once: ICP (registration/icp.py) tiles its fixed
+    cloud here once per solve with a halo widened by a drift margin,
+    ``.repartition('cell_id').persist()``s it, and cogroups it with a moving
+    side cached under the same hash partitioning — the cogroup's
+    clustered-distribution requirement is then met by both caches, and each
+    ICP pass plans no Exchange (asserted in tests/test_plans.py)."""
     rc = cells.with_cell(right, "x", "y", extent, level)
     rh = cells.explode_halo(rc, level, extent, radius).drop("_ix", "_iy", "cell_id")
     r_cols = [*([rid] if rid else []), *dims, *r_carry]
@@ -440,7 +439,7 @@ def _types(df: DataFrame, prefix: str = "") -> dict[str, str]:
 
 def knn_join(
     left: DataFrame,
-    right: DataFrame | None,
+    right: DataFrame,
     extent: Extent,
     radius: float,
     k: int = 1,
@@ -450,9 +449,6 @@ def knn_join(
     l_carry: tuple[str, ...] = (),
     r_carry: tuple[str, ...] = (),
     level: int | None = None,
-    right_tiled: DataFrame | None = None,
-    post: "Callable[[pd.DataFrame], pd.DataFrame] | None" = None,
-    post_schema: str | None = None,
     emit_unmatched: bool = False,
 ) -> DataFrame:
     """Radius-bounded k-nearest-neighbor join (left row -> up to k nearest
@@ -461,38 +457,23 @@ def knn_join(
     Output columns: lid, n_<rid>, nn_dist, nn_rank, l_<carry...>, r_<carry...>.
 
     ``level=None`` sizes tiles from the left-side row count, which costs a
-    count() job — loop callers should pass ``level`` (the ICP loop does).
-
-    ``right_tiled``: a pre-tiled data side from :func:`tile_right` (built at
-    the SAME level/radius); ``right`` is then ignored. Loop callers cache it
-    once so only the left side shuffles per join.
-
-    ``post``: a per-tile reducer applied to the kNN kernel's output pandas
-    frame INSIDE the cogroup (output schema ``post_schema``). Iterative
-    solvers (the ICP loop) fuse their partial-sums kernel here, so one
-    Python stage per iteration both matches correspondences and reduces
-    them to a constant-size partial row — no full correspondence frame ever
-    crosses a stage boundary.
+    count() job — callers that know the size should pass ``level``.
     """
     if level is None:
         par = left.sparkSession.sparkContext.defaultParallelism
         level = auto_level(extent, radius, left.count(), parallelism=par)
-    if right_tiled is None:
-        right_tiled = tile_right(right, extent, radius, level, dims, rid, r_carry)
+    right_tiled = tile_right(right, extent, radius, level, dims, rid, r_carry)
     kernel = _topk_kernel_builder(
         k, radius, dims, lid, rid, list(l_carry), list(r_carry),
         emit_unmatched=emit_unmatched,
     )
-    if post is None:
-        lf, rf = _types(left), _types(right_tiled, "_r_")
-        parts = [f"{lid} {lf[lid]}", f"n_{rid} {rf[rid]}", "nn_dist double", "nn_rank int"]
-        parts += [f"l_{c} {lf[c]}" for c in l_carry]
-        parts += [f"r_{c} {rf[c]}" for c in r_carry]
-        post_schema = ", ".join(parts)
-    run = kernel if post is None else lambda l, r: post(kernel(l, r))
+    lf, rf = _types(left), _types(right_tiled, "_r_")
+    parts = [f"{lid} {lf[lid]}", f"n_{rid} {rf[rid]}", "nn_dist double", "nn_rank int"]
+    parts += [f"l_{c} {lf[c]}" for c in l_carry]
+    parts += [f"r_{c} {rf[c]}" for c in r_carry]
     return _tile_cogroup(
         left, right_tiled, extent, level, ["cell_id", lid, *dims, *l_carry],
-        lambda _cell, l, r: run(l, r), post_schema,
+        lambda _cell, l, r: kernel(l, r), ", ".join(parts),
     )
 
 

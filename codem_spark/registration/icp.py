@@ -9,20 +9,24 @@ conditioning (icp.py:116-119), convergence on relative dRMSE < 1e-4 or
 (dangle < 0.001 deg and ddist < 0.001 m), <= 100 iterations
 (icp.py:173-185, main.py:70-73).
 
-Engine design (the north-star op): the fixed cloud is tiled once per run
-(cell + 1-ring halo duplication via knn.tile_right, radius = the kNN bound),
-hash-partitioned by cell and *cached*, so each iteration exchanges only the
-moving side; each iteration is ONE Spark job with ONE Python stage:
-transform moving points (pure column exprs of the current 4x4), cogroup
-with the cached fixed tiles, and a FUSED vectorized kernel that both
-matches kNN correspondences and collapses them to one constant-size
-partial row per tile — the flattened upper triangle of A^T W A (7x7 ->
-28), A^T W b (7), sum w*r^2, sum r^2, n. The full correspondence frame
-never crosses a stage boundary. Partial rows are tree-reduced JVM-side
-(hash agg with map-side partial sums) and one 39-float row is collected;
-the driver solves the 7x7 system, composes the update, and re-broadcasts
-— identical math to the reference, distributed sums. Weights stay a
-column; W is never materialized (reference keeps it a sparse diagonal,
+Engine design (the north-star op): both clouds are tiled ONCE per run and
+cached, hash-partitioned on the same ``cell_id`` — the fixed cloud (with
+its normals) with a halo of radius + delta (knn.tile_right), the moving
+cloud keyed by the cell of its starting pose but carrying its original
+x/y/z. Every pass is then ONE Spark job with no Exchange: a cogroup of the
+two caches whose vectorized kernel poses the moving points with the
+current 4x4 (geo.transform_xyz, bit-identical to apply_transform_cols),
+matches each to its nearest fixed point within the radius
+(knn.grid_topk), and collapses the matches to ONE row per tile — the
+flattened upper triangle of A^T W A (7x7 -> 28), A^T W b (7), sum w*r^2,
+sum r^2, sum w, n, the per-axis squared residual sums, and the largest
+horizontal drift of a point from its tiled pose. The driver sums the rows
+in cell order, solves the 7x7 system and composes the update — identical
+math to the reference, distributed sums. A pass whose drift exceeds delta
+(= the radius) could have missed neighbours past the halo, so the moving
+side is re-tiled at the current pose and the pass runs again. The final
+residual stats are one more pass of the same job. Weights stay a vector;
+W is never materialized (reference keeps it a sparse diagonal,
 icp.py:285).
 """
 
@@ -36,7 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codem_spark.config import EngineConfig, RegistrationParameters
-from codem_spark.functions.geo import apply_transform_cols, decompose_similarity
+from codem_spark.functions import cells
+from codem_spark.functions.geo import apply_transform_cols, decompose_similarity, transform_xyz
 from codem_spark.operators import knn
 
 Extent = tuple[float, float, float, float]
@@ -120,54 +125,122 @@ def compute_normals(
 
 # ------------------------------------------------------- normal eq partials
 _NP7 = 7  # omega, phi, kappa (linearized), tx, ty, tz, scale
+_ACC_COLS = (
+    [f"m{i}" for i in range(28)] + [f"b{i}" for i in range(_NP7)] + ["wr2", "r2", "sw", "n"]
+)
+# one row per tile with moving points: the 39 partial sums, the per-axis
+# squared residual sums and the largest horizontal drift from the tiled pose
+_PASS_COLS = ["cell_id", *_ACC_COLS, "sdx2", "sdy2", "sdz2", "drift"]
+_PASS_SCHEMA = ", ".join(
+    f"{c} {'long' if c in ('cell_id', 'n') else 'double'}" for c in _PASS_COLS
+)
+# the drift margin delta = _DRIFT_FACTOR * radius widens the fixed halo, so
+# a moving point tiled at one pose keeps every fixed neighbour within radius
+# in its tile while its later poses stay within delta (horizontally)
+_DRIFT_FACTOR = 1.0
 
 
-def _partials_kernel_builder(solve_scale: bool, alpha: float, beta: float, robust: bool):
-    """Per-tile partial normal equations for the point-to-plane linearization.
-
-    For a correspondence (p moving, q fixed, n unit normal):
+def _partials(
+    p: np.ndarray, q: np.ndarray, nrm: np.ndarray,
+    solve_scale: bool, alpha: float, beta: float, robust: bool,
+) -> np.ndarray:
+    """Partial normal equations of the point-to-plane linearization over
+    correspondences p (moving) -> q (fixed, unit normal nrm):
       r = (p - q) . n
       a = [ (p x n), n, (p . n) ]  (7 terms; scale term dropped if unscaled)
     Weights (reference _get_weights, icp.py:246-285):
       w = (1 + (r/beta)^2)^(alpha/2 - 1)
-    Emits one row per tile: upper triangle of A^T W A (28), A^T W b (7),
-    sum w r^2, sum r^2, n."""
+    Returns the 39 sums of ``_ACC_COLS``: upper triangle of A^T W A (28),
+    A^T W b (7), sum w r^2, sum r^2, sum w, n."""
+    r = ((p - q) * nrm).sum(axis=1)
+    if robust:
+        w = (1.0 + (r / beta) ** 2) ** (alpha / 2.0 - 1.0)
+    else:
+        w = np.ones_like(r)
+    cx = np.cross(p, nrm)  # (n,3)
+    a = np.column_stack([cx, nrm, (p * nrm).sum(axis=1)])  # (n,7)
+    if not solve_scale:
+        a[:, 6] = 0.0
+    aw = a * w[:, None]
+    ata = a.T @ aw  # (7,7)
+    atb = aw.T @ (-r)  # (7,)
+    return np.concatenate([
+        ata[np.triu_indices(_NP7)], atb,
+        [(w * r * r).sum(), (r * r).sum(), w.sum(), len(r)],
+    ])
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = pdf[["mx", "my", "mz"]].to_numpy(np.float64)
-        q = pdf[["fx", "fy", "fz"]].to_numpy(np.float64)
-        nrm = pdf[["nx", "ny", "nz"]].to_numpy(np.float64)
-        r = ((p - q) * nrm).sum(axis=1)
-        if robust:
-            w = (1.0 + (r / beta) ** 2) ** (alpha / 2.0 - 1.0)
-        else:
-            w = np.ones_like(r)
-        cx = np.cross(p, nrm)  # (n,3)
-        a = np.column_stack([cx, nrm, (p * nrm).sum(axis=1)])  # (n,7)
-        if not solve_scale:
-            a[:, 6] = 0.0
-        aw = a * w[:, None]
-        ata = a.T @ aw  # (7,7)
-        atb = aw.T @ (-r)  # (7,)
-        iu = np.triu_indices(_NP7)
-        out = {f"m{i}": [ata[iu[0][i], iu[1][i]]] for i in range(len(iu[0]))}
-        for i in range(_NP7):
-            out[f"b{i}"] = [atb[i]]
-        out["wr2"] = [float((w * r * r).sum())]
-        out["r2"] = [float((r * r).sum())]
-        out["sw"] = [float(w.sum())]
-        out["n"] = [len(r)]
-        return pd.DataFrame(out)
+
+def _pass_kernel_builder(
+    pose: np.ndarray, tile_pose: np.ndarray, radius: float,
+    solve_scale: bool, alpha: float, beta: float, robust: bool,
+):
+    """Per-tile cogroup kernel of one ICP pass: pose the tile's moving
+    points (original x/y/z) with ``pose``, match each to its nearest fixed
+    point within ``radius`` (ties by ascending pid), and reduce to ONE row
+    of ``_PASS_COLS``. ``drift`` is the largest horizontal distance of a
+    moving point from where ``tile_pose`` put it when it was tiled."""
+
+    def kernel(key, mpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(mpdf) == 0:
+            return pd.DataFrame({c: [] for c in _PASS_COLS})
+        xyz = [mpdf[c].to_numpy(np.float64) for c in ("x", "y", "z")]
+        p = np.column_stack(transform_xyz(pose, *xyz))
+        tx, ty, _tz = transform_xyz(tile_pose, *xyz)
+        drift = float(np.sqrt((p[:, 0] - tx) ** 2 + (p[:, 1] - ty) ** 2).max())
+        fpts = fpdf[["_r_x", "_r_y", "_r_z"]].to_numpy(np.float64)
+        li, ri, _d, _rk = knn.grid_topk(p, fpts, fpdf["_r_pid"].to_numpy(), radius, k=1)
+        pm, q = p[li], fpts[ri]
+        nrm = fpdf[["_r_nx", "_r_ny", "_r_nz"]].to_numpy(np.float64)[ri]
+        acc = _partials(pm, q, nrm, solve_scale, alpha, beta, robust)
+        d = pm - q
+        row = [key[0], *acc, *(d * d).sum(axis=0), drift]
+        return pd.DataFrame([row], columns=_PASS_COLS).astype({"cell_id": "int64", "n": "int64"})
 
     return kernel
 
 
-_PARTIAL_SCHEMA = (
-    ", ".join(f"m{i} double" for i in range(28))
-    + ", "
-    + ", ".join(f"b{i} double" for i in range(7))
-    + ", wr2 double, r2 double, sw double, n long"
-)
+def _tile_fixed(fixed: DataFrame, extent: Extent, reach: float, level: int) -> DataFrame:
+    """The fixed side (with normals) tiled with a ``reach``-wide halo,
+    hash-partitioned on ``cell_id`` and cached."""
+    return (
+        knn.tile_right(
+            fixed, extent, reach, level, rid="pid", r_carry=("x", "y", "z", "nx", "ny", "nz")
+        )
+        .repartition(F.col("cell_id"))
+        .persist()
+    )
+
+
+def _tile_moving(moving: DataFrame, pose: np.ndarray, extent: Extent, level: int) -> DataFrame:
+    """The moving side, keyed by the cell of its ``pose``d x/y but carrying
+    its ORIGINAL x/y/z (the pass kernel poses it), hash-partitioned on
+    ``cell_id`` like the fixed tiles and cached."""
+    px, py, _pz = transform_xyz(pose, F.col("x"), F.col("y"), F.col("z"))
+    posed = moving.select("pid", "x", "y", "z", px.alias("_px"), py.alias("_py"))
+    return (
+        cells.with_cell(posed, "_px", "_py", extent, level)
+        .select("cell_id", "pid", "x", "y", "z")
+        .repartition(F.col("cell_id"))
+        .persist()
+    )
+
+
+def _pass_frame(moving_tiled: DataFrame, fixed_tiled: DataFrame, kernel) -> DataFrame:
+    """One ICP pass: both sides are cached with the same hash partitioning
+    on ``cell_id``, so once the first pass has filled the caches the
+    cogroup plans no Exchange (tests/test_plans.py)."""
+    return (
+        moving_tiled.groupBy("cell_id")
+        .cogroup(fixed_tiled.groupBy("cell_id"))
+        .applyInPandas(kernel, schema=_PASS_SCHEMA)
+    )
+
+
+def _sum_tiles(rows) -> tuple[np.ndarray, float]:
+    """Driver-side reduce of one pass: the per-tile rows summed in cell_id
+    order (deterministic), and the largest drift."""
+    arr = np.array(sorted(tuple(r) for r in rows), dtype=np.float64).reshape(-1, len(_PASS_COLS))
+    return arr[:, 1:-1].sum(axis=0), float(arr[:, -1].max(initial=0.0))
 
 
 def _solve_update(acc: np.ndarray, solve_scale: bool) -> np.ndarray:
@@ -211,15 +284,19 @@ def fine_registration(
     returned matrix already includes ``initial`` composed in, matching the
     reference where ICP starts from the coarse transform and outputs the
     total fine matrix, icp.py:116-119,195-202)."""
+    from codem_spark.util import approx_row_count
+
     cfg = cfg or EngineConfig()
-    spark = fixed.sparkSession
+    sc = fixed.sparkSession.sparkContext
     t_total = np.eye(4) if initial is None else np.asarray(initial, np.float64).copy()
     radius = knn_radius if knn_radius is not None else max(2.0 * resolution, 1.0)
+    drift_margin = _DRIFT_FACTOR * radius
+    beta = resolution / 2.0 + 0.5
 
     # normals on the fixed cloud (once; reference preprocess.py:317-350)
+    sc.setJobDescription("icp: normals")
     fixed_n = compute_normals(fixed, extent, radius=4.0 * resolution).persist()
-    r_carry = ("x", "y", "z", "nx", "ny", "nz")
-    moving_base = fixed_tiled = None
+    fixed_tiled = moving_tiled = None
     # every cache this solve creates is released on the way out, on error
     # paths too (e.g. too few correspondences)
     try:
@@ -234,86 +311,55 @@ def fine_registration(
         demean[:3, 3] = -mu
         remean = np.eye(4)
         remean[:3, 3] = mu
-
-        fixed_c = apply_transform_cols(fixed_n, demean)
         # center the *extent* too so tiling stays aligned
         c_extent = (extent[0] - mu[0], extent[1] - mu[1], extent[2] - mu[0], extent[3] - mu[1])
+        t_c = demean @ t_total @ remean  # work in centered frame
 
-        from codem_spark.util import approx_row_count
+        level = knn.auto_level(
+            c_extent, radius + drift_margin, approx_row_count(moving.select("pid", "x", "y", "z")),
+            parallelism=sc.defaultParallelism,
+        )
+        # Both sides are tiled ONCE, hash-partitioned by cell and cached; the
+        # first pass fills both caches, and every later pass is one
+        # Exchange-free cogroup job. The fixed halo reaches radius + drift
+        # margin; the moving side is tiled at its starting pose and posed
+        # inside the kernel.
+        fixed_tiled = _tile_fixed(
+            apply_transform_cols(fixed_n, demean), c_extent, radius + drift_margin, level
+        )
+        tile_pose = t_c @ demean
+        moving_tiled = _tile_moving(moving, tile_pose, c_extent, level)
 
-        moving_base = moving.select("pid", "x", "y", "z").persist()
-        n_moving = approx_row_count(moving_base)  # parallelism knob only
-        join_level = knn.auto_level(
-            c_extent, radius, n_moving,
-            parallelism=spark.sparkContext.defaultParallelism,
-        )
-        # Tile + halo-explode the fixed side ONCE, hash-partitioned by cell and
-        # cached: the fixed cloud and the level never change across iterations,
-        # so each iteration's cogroup re-uses the cached partitioning and
-        # exchanges ONLY the moving side (asserted in tests/test_plans.py). The
-        # per-iteration fixed-side reshuffle this replaces was the dominant loop
-        # cost at the 1M-point bench scale.
-        fixed_tiled = (
-            knn.tile_right(fixed_c, c_extent, radius, join_level, rid="pid", r_carry=r_carry)
-            .repartition(F.col("cell_id"))
-            .persist()
-        )
-        # the count doubles as materialization of the tiled cache THROUGH the
-        # normals cache, which can then be released before the loop
-        fixed_tiled.count()
-        fixed_n.unpersist(False)
+        def run_pass(label: str, alpha: float) -> np.ndarray:
+            """One pass at the current pose -> the summed tile rows. A pass
+            whose points drifted past the margin may have missed neighbours:
+            re-tile the moving side at the current pose and run it again."""
+            nonlocal moving_tiled, tile_pose
+            pose = t_c @ demean
+            while True:
+                sc.setJobDescription(label)
+                kern = _pass_kernel_builder(
+                    pose, tile_pose, radius, cfg.icp_solve_scale, alpha, beta, cfg.icp_robust
+                )
+                acc, drift = _sum_tiles(_pass_frame(moving_tiled, fixed_tiled, kern).collect())
+                # the first pass filled the fixed tiles from the normals cache
+                fixed_n.unpersist(False)
+                if drift <= drift_margin:
+                    return acc
+                moving_tiled.unpersist()
+                moving_tiled = _tile_moving(moving, pose, c_extent, level)
+                tile_pose = pose
 
         alpha = 2.0  # IRLS shape, decays by 0.2/iter (reference icp.py:128-131,151)
         n_iters = 0
-        beta = resolution / 2.0 + 0.5
         prev_rmse = None
-        n_pairs = 0
-        rmse = (0.0, 0.0, 0.0, 0.0)
-        t_c = demean @ t_total @ remean  # work in centered frame
-
-        _acc_cols = [f"m{i}" for i in range(28)] + [f"b{i}" for i in range(7)] + [
-            "wr2", "r2", "sw", "n",
-        ]
-        _corr_renames = {
-            "l_x": "mx", "l_y": "my", "l_z": "mz",
-            "r_x": "fx", "r_y": "fy", "r_z": "fz",
-            "r_nx": "nx", "r_ny": "ny", "r_nz": "nz",
-        }
         for it in range(cfg.icp_max_iter):
             n_iters = it + 1
-            # transform ORIGINAL moving points into the centered current pose
-            cur = apply_transform_cols(moving_base, t_c @ demean)
-            # FUSED iteration (one Python stage, one job): the kNN cogroup
-            # kernel matches correspondences per tile and the fused `post`
-            # reducer immediately collapses them to ONE constant-size partial
-            # row (upper triangle of A^T W A, A^T W b, residual sums) — the
-            # full correspondence frame never crosses a stage boundary. The
-            # partial rows are tree-reduced JVM-side (partial_sum map-side
-            # combine + final agg: Spark's hash agg IS the treeReduce here).
-            kern = _partials_kernel_builder(cfg.icp_solve_scale, alpha, beta, cfg.icp_robust)
-            partials = knn.knn_join(
-                cur,
-                None,
-                c_extent,
-                radius=radius,
-                k=1,
-                lid="pid",
-                rid="pid",
-                l_carry=("x", "y", "z"),
-                r_carry=r_carry,
-                level=join_level,
-                right_tiled=fixed_tiled,
-                post=lambda pdf, _k=kern: _k(pdf.rename(columns=_corr_renames)),
-                post_schema=_PARTIAL_SCHEMA,
-            )
-            row = partials.agg(
-                *[F.sum(c).alias(c) for c in _acc_cols]
-            ).collect()[0]
-            acc = np.array([float(row[c] or 0.0) for c in _acc_cols], dtype=np.float64)
-            n_pairs = int(acc[-1])
+            acc = run_pass(f"icp: pass {n_iters}", alpha)
+            n_pairs = int(acc[_ACC_COLS.index("n")])
             if n_pairs < 10:
                 raise ValueError(f"ICP found too few correspondences ({n_pairs})")
-            cur_rmse = math.sqrt(acc[36] / n_pairs)  # sqrt(sum r^2 / n)
+            cur_rmse = math.sqrt(acc[_ACC_COLS.index("r2")] / n_pairs)
             upd = _solve_update(acc, cfg.icp_solve_scale)
             t_c = upd @ t_c
             # convergence checks (reference icp.py:173-185)
@@ -333,32 +379,18 @@ def fine_registration(
             if cfg.icp_robust and alpha > 0:
                 alpha = max(alpha - 0.2, 0.0)  # reference decay icp.py:151
 
-        # final residual stats per axis: one more correspondence pass
-        cur = apply_transform_cols(moving_base, t_c @ demean)
-        corr = knn.knn_join(
-            cur, None, c_extent, radius=radius, k=1,
-            lid="pid", rid="pid", l_carry=("x", "y", "z"), r_carry=("x", "y", "z"),
-            level=join_level, right_tiled=fixed_tiled,
-        )
-        stats = corr.agg(
-            F.sqrt(F.avg(F.pow(F.col("l_x") - F.col("r_x"), 2))).alias("rx"),
-            F.sqrt(F.avg(F.pow(F.col("l_y") - F.col("r_y"), 2))).alias("ry"),
-            F.sqrt(F.avg(F.pow(F.col("l_z") - F.col("r_z"), 2))).alias("rz"),
-            F.sqrt(
-                F.avg(
-                    F.pow(F.col("l_x") - F.col("r_x"), 2)
-                    + F.pow(F.col("l_y") - F.col("r_y"), 2)
-                    + F.pow(F.col("l_z") - F.col("r_z"), 2)
-                )
-            ).alias("r3"),
-            F.count("*").alias("n"),
-        ).collect()[0]
+        # final residual stats per axis: one more pass, at the pose after
+        # the last update
+        acc = run_pass("icp: residuals", alpha)
     finally:
+        sc.setJobDescription(None)
         fixed_n.unpersist(False)
-        for df in (fixed_tiled, moving_base):
+        for df in (fixed_tiled, moving_tiled):
             if df is not None:
                 df.unpersist()
 
+    n_final = int(acc[_ACC_COLS.index("n")])
+    rx2, ry2, rz2 = acc[len(_ACC_COLS):] / n_final  # per-axis mean squared residual
     t_final = remean @ t_c @ demean  # back to world frame
     dec = decompose_similarity(t_final)
     return RegistrationParameters(
@@ -366,8 +398,8 @@ def fine_registration(
         omega=dec["omega"], phi=dec["phi"], kappa=dec["kappa"],
         trans_x=dec["trans_x"], trans_y=dec["trans_y"], trans_z=dec["trans_z"],
         scale=dec["scale"],
-        n_pairs=int(stats["n"]),
+        n_pairs=n_final,
         iterations=n_iters,
-        rmse_x=float(stats["rx"]), rmse_y=float(stats["ry"]),
-        rmse_z=float(stats["rz"]), rmse_3d=float(stats["r3"]),
+        rmse_x=math.sqrt(rx2), rmse_y=math.sqrt(ry2), rmse_z=math.sqrt(rz2),
+        rmse_3d=math.sqrt(rx2 + ry2 + rz2),
     )

@@ -67,78 +67,33 @@ def test_cell_encode_is_codegen(spark):
     assert "WholeStageCodegen" in plan or "*(1)" in plan  # codegen marker
 
 
-def test_icp_fixed_tiled_side_exchanges_only_left(spark):
-    """VERDICT r4 item 3: with a tile_right pre-tiled + cell-repartitioned +
-    cached fixed side, each knn_join (= each ICP iteration) plans exactly
-    ONE shuffle exchange — the moving side. The cached side must enter the
-    cogroup via its InMemoryTableScan with no Exchange above it, and the
-    join output must equal the untiled-path output bit-for-bit."""
+def _plan_tree(p):
+    """(nodeName, [children]) of a physical plan. Tree traversal, not string
+    matching: an InMemoryRelation's toString embeds its (pre-cache) child
+    plan with the one-time repartition exchange, but InMemoryTableScan is a
+    LEAF of the live plan, so walking children() sees only what runs."""
+    name = p.nodeName()
+    if name == "AdaptiveSparkPlan":  # children() is empty; descend
+        return name, [_plan_tree(p.initialPlan())]
+    ch = p.children()
+    return name, [_plan_tree(ch.apply(i)) for i in range(ch.size())]
+
+
+def _walk(tree):
+    yield tree
+    for c in tree[1]:
+        yield from _walk(c)
+
+
+def test_icp_pass_is_one_exchange_free_cogroup(spark):
+    """An ICP pass (registration/icp.py) after the first: NO Exchange, and
+    ONE FlatMapCoGroupsInPandas whose only leaves are the two
+    InMemoryTableScans — the first pass fills both caches, which then carry
+    the same hash partitioning on cell_id, so no later pass reshuffles."""
     import numpy as np
     import pandas as pd
 
-    from codem_spark.operators import knn
-
-    ext = (0.0, 0.0, 100.0, 100.0)
-    rng = np.random.default_rng(3)
-    n = 500
-    pdf = pd.DataFrame(
-        {"pid": np.arange(n), "x": rng.uniform(0, 100, n),
-         "y": rng.uniform(0, 100, n), "z": rng.uniform(0, 10, n)}
-    )
-    fixed = spark.createDataFrame(pdf)
-    moving = spark.createDataFrame(pdf.assign(x=pdf.x + 0.5))
-    level, radius = 3, 2.0
-    tiled = (
-        knn.tile_right(fixed, ext, radius, level, r_carry=("x", "y", "z"))
-        .repartition(F.col("cell_id"))
-        .persist()
-    )
-    tiled.count()
-    j = knn.knn_join(
-        moving, None, ext, radius, k=1, level=level, right_tiled=tiled,
-        l_carry=("x",), r_carry=("x", "y", "z"),
-    )
-
-    # Tree traversal, not string counting: the InMemoryRelation's toString
-    # embeds its (pre-cache) child plan, which contains the one-time
-    # repartition exchange — but InMemoryTableScan is a LEAF of the live
-    # plan, so walking children() counts only exchanges that actually run
-    # per iteration.
-    def _node_names(p):
-        names = [p.nodeName()]
-        if names[0] == "AdaptiveSparkPlan":  # children() is empty; descend
-            return names + _node_names(p.initialPlan())
-        ch = p.children()
-        for i in range(ch.size()):
-            names += _node_names(ch.apply(i))
-        return names
-
-    names = _node_names(j._jdf.queryExecution().executedPlan())
-    assert any("InMemoryTableScan" in n for n in names), names
-    n_ex = sum(1 for n in names if "Exchange" in n)
-    assert n_ex == 1, (n_ex, names)
-    got = j.toPandas().sort_values("pid").reset_index(drop=True)
-    ref = (
-        knn.knn_join(
-            moving, fixed, ext, radius, k=1, level=level,
-            l_carry=("x",), r_carry=("x", "y", "z"),
-        )
-        .toPandas().sort_values("pid").reset_index(drop=True)
-    )
-    tiled.unpersist()
-    pd.testing.assert_frame_equal(got[sorted(got.columns)], ref[sorted(ref.columns)])
-
-
-def test_fused_icp_iteration_single_python_stage(spark):
-    """The fused ICP iteration (knn_join post=partials): ONE exchange (the
-    moving side) and ONE Python node (FlatMapCoGroupsInPandas) — the
-    correspondence frame never crosses a stage boundary, and no separate
-    MapInPandas / ArrowEval stage exists in the per-iteration plan."""
-    import numpy as np
-    import pandas as pd
-
-    from codem_spark.operators import knn
-    from codem_spark.registration.icp import _PARTIAL_SCHEMA, _partials_kernel_builder
+    from codem_spark.registration import icp
 
     ext = (0.0, 0.0, 100.0, 100.0)
     rng = np.random.default_rng(5)
@@ -150,43 +105,27 @@ def test_fused_icp_iteration_single_python_stage(spark):
     )
     fixed = spark.createDataFrame(pdf)
     moving = spark.createDataFrame(pdf[["pid", "x", "y", "z"]].assign(x=pdf.x + 0.2))
-    level, radius = 3, 2.0
-    r_carry = ("x", "y", "z", "nx", "ny", "nz")
-    tiled = (
-        knn.tile_right(fixed, ext, radius, level, r_carry=r_carry)
-        .repartition(F.col("cell_id"))
-        .persist()
-    )
-    tiled.count()
-    kern = _partials_kernel_builder(True, 2.0, 1.0, True)
-    renames = {"l_x": "mx", "l_y": "my", "l_z": "mz", "r_x": "fx", "r_y": "fy",
-               "r_z": "fz", "r_nx": "nx", "r_ny": "ny", "r_nz": "nz"}
-    partials = knn.knn_join(
-        moving, None, ext, radius, k=1, level=level, right_tiled=tiled,
-        l_carry=("x", "y", "z"), r_carry=r_carry,
-        post=lambda p: kern(p.rename(columns=renames)), post_schema=_PARTIAL_SCHEMA,
-    )
-    agg = partials.agg(F.sum("n").alias("n"), F.sum("r2").alias("r2"))
+    level, radius, pose = 3, 2.0, np.eye(4)
+    fixed_tiled = icp._tile_fixed(fixed, ext, 2 * radius, level)
+    moving_tiled = icp._tile_moving(moving, pose, ext, level)
+    kern = icp._pass_kernel_builder(pose, pose, radius, True, 2.0, 1.0, True)
+    first = icp._pass_frame(moving_tiled, fixed_tiled, kern).collect()
+    one_pass = icp._pass_frame(moving_tiled, fixed_tiled, kern)
 
-    def _node_names(p):
-        names = [p.nodeName()]
-        if names[0] == "AdaptiveSparkPlan":
-            return names + _node_names(p.initialPlan())
-        ch = p.children()
-        for i in range(ch.size()):
-            names += _node_names(ch.apply(i))
-        return names
+    tree = _plan_tree(one_pass._jdf.queryExecution().executedPlan())
+    names = [t[0] for t in _walk(tree)]
+    assert not [x for x in names if "Exchange" in x], names
+    cogroups = [t for t in _walk(tree) if "FlatMapCoGroupsInPandas" in t[0]]
+    assert len(cogroups) == 1, names
+    leaves = [t[0] for t in _walk(cogroups[0]) if not t[1]]
+    assert leaves == ["InMemoryTableScan"] * 2, names
+    assert [t[0] for t in _walk(tree) if not t[1]] == leaves, names
 
-    names = _node_names(agg._jdf.queryExecution().executedPlan())
-    n_py = sum(1 for x in names if "FlatMapCoGroupsInPandas" in x)
-    n_map = sum(1 for x in names if "MapInPandas" in x or "ArrowEval" in x or "BatchEval" in x)
-    n_ex = sum(1 for x in names if "Exchange" in x)
-    assert n_py == 1, names
-    assert n_map == 0, names
-    # moving-side exchange + the final single-partition agg exchange
-    assert n_ex <= 2, (n_ex, names)
-    row = agg.collect()[0]
-    tiled.unpersist()
+    rows = one_pass.collect()
+    fixed_tiled.unpersist()
+    moving_tiled.unpersist()
+    assert sorted(rows) == sorted(first)
+    acc, drift = icp._sum_tiles(rows)
     # every moving point has a neighbor within 2.0 (planted 0.2 shift)
-    assert int(row["n"]) == n
-    assert row["r2"] >= 0.0
+    assert int(acc[icp._ACC_COLS.index("n")]) == n
+    assert drift == 0.0

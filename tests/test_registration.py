@@ -374,26 +374,154 @@ def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
         prep.aoi_dsm.unpersist()
 
 
-def test_failed_icp_releases_its_caches(spark):
-    """fine_registration releases every cache it created (fixed normals,
-    tiled fixed side, moving base) when it raises for lack of
-    correspondences."""
-    from codem_spark.registration import icp
-
-    rng = np.random.default_rng(7)
-    n = 5_000
+def _icp_scene(n: int = 5_000, seed: int = 7) -> pd.DataFrame:
+    rng = np.random.default_rng(seed)
     x = rng.uniform(0, 200, n)
     y = rng.uniform(0, 200, n)
-    pdf = pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": _surface(x, y)})
+    return pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": _surface(x, y)})
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture(scope="module")
+def icp_runs(spark):
+    """fine_registration of a shifted copy of a scene, once as shipped and
+    once with the drift margin forced to 0 (every pass whose pose moved
+    re-tiles the moving side); records the moving-side tilings and the
+    persisted RDDs before and after each run (compared, not required empty:
+    earlier tests in the session may hold caches of their own)."""
+    from codem_spark.registration import icp
+
+    pdf = _icp_scene()
+    fixed = spark.createDataFrame(pdf)
+    noise = np.random.default_rng(8).normal(0.0, 0.1, len(pdf))
+    moving = spark.createDataFrame(
+        pdf.assign(pid=pdf.pid + 10**6, x=pdf.x + 1.5, y=pdf.y - 1.0, z=pdf.z + 0.5 + noise)
+    )
+    runs = {}
+    for name, factor in (("default", icp._DRIFT_FACTOR), ("retile", 0.0)):
+        tilings = []
+        before = _persisted(spark)
+
+        def counting(*a, _tile=icp._tile_moving, _log=tilings):
+            _log.append(1)
+            return _tile(*a)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(icp, "_DRIFT_FACTOR", factor)
+            mp.setattr(icp, "_tile_moving", counting)
+            res = icp.fine_registration(fixed, moving, (0.0, 0.0, 200.0, 200.0), RES)
+        runs[name] = (res, len(tilings), (before, _persisted(spark)))
+    return runs
+
+
+def test_failed_icp_releases_its_caches(spark, icp_runs):
+    """fine_registration releases every cache it created (fixed normals,
+    fixed and moving tiles, each replaced moving tiling) when it raises for
+    lack of correspondences, on success, and after forced re-tiles."""
+    from codem_spark.registration import icp
+
+    pdf = _icp_scene()
     fixed = spark.createDataFrame(pdf)
     # 50 m above the fixed cloud: no moving point has a fixed point within
     # the default kNN radius (2 * resolution)
     moving = spark.createDataFrame(pdf.assign(z=pdf.z + 50.0))
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
+    before = _persisted(spark)
     with pytest.raises(ValueError, match="too few correspondences"):
         icp.fine_registration(fixed, moving, (0.0, 0.0, 200.0, 200.0), RES)
-    assert set(jsc.getPersistentRDDs().keys()) == before
+    assert _persisted(spark) == before
+    for path in ("default", "retile"):
+        before, after = icp_runs[path][2]
+        assert after == before, path
+
+
+def test_forced_retile_matches_default(icp_runs):
+    """A drift margin of 0 re-tiles the moving side on every pass whose pose
+    moved; the solve must not notice: same iterations and pairs, the same
+    matrix to 1e-9."""
+    res, n_tilings, _ = icp_runs["default"]
+    forced, n_forced, _ = icp_runs["retile"]
+    assert n_tilings == 1  # 1.5 m of drift stays inside the default margin
+    assert n_forced > 1 + forced.iterations // 2  # re-tiled on most passes
+    assert forced.iterations == res.iterations
+    assert forced.n_pairs == res.n_pairs == 5_000
+    np.testing.assert_allclose(forced.matrix, res.matrix, rtol=0, atol=1e-9)
+    np.testing.assert_allclose(
+        [forced.rmse_x, forced.rmse_y, forced.rmse_z, forced.rmse_3d],
+        [res.rmse_x, res.rmse_y, res.rmse_z, res.rmse_3d], rtol=1e-9,
+    )
+    np.testing.assert_allclose(
+        (res.trans_x, res.trans_y, res.trans_z), (-1.5, 1.0, -0.5), atol=0.05
+    )
+
+
+def test_icp_pass_matches_brute_force(spark):
+    """One pass (tile, pose inside the kernel, nearest fixed point within
+    the radius, per-tile partials summed on the driver) against a numpy
+    brute force: nearest fixed point within the radius, ties by ascending
+    pid. The moving side is tiled at one pose and posed at another (drift
+    inside the margin); duplicated fixed points with lower pids and other
+    normals make the tie-break matter."""
+    from codem_spark.functions.geo import similarity_matrix
+    from codem_spark.registration import icp
+
+    rng = np.random.default_rng(29)
+    nf, nm, radius = 900, 700, 3.0
+    fx = rng.uniform(0, 100, nf)
+    fy = rng.uniform(0, 100, nf)
+    nrm = np.column_stack([rng.normal(0, 0.3, nf), rng.normal(0, 0.3, nf), np.ones(nf)])
+    nrm /= np.linalg.norm(nrm, axis=1)[:, None]
+    fixed = pd.DataFrame({
+        "pid": np.arange(100, 100 + nf), "x": fx, "y": fy, "z": rng.uniform(0, 4, nf),
+        "nx": nrm[:, 0], "ny": nrm[:, 1], "nz": nrm[:, 2],
+    })
+    dup = fixed.iloc[:40].assign(pid=np.arange(40), nx=0.0, ny=0.0, nz=1.0)
+    fixed = pd.concat([fixed, dup], ignore_index=True)
+    mxyz = np.column_stack([
+        rng.uniform(10, 90, nm), rng.uniform(10, 90, nm), rng.uniform(0, 4, nm)
+    ])
+    # some moving points sit exactly on a duplicated fixed point once posed
+    pose = similarity_matrix(1.0, 0.3, -0.2, 1.5, (0.8, -0.6, 0.2))
+    tile_pose = similarity_matrix(1.0, 0.0, 0.0, 0.0, (0.3, 0.1, 0.0))
+    inv = np.linalg.inv(pose)
+    on_dup = dup[["x", "y", "z"]].to_numpy()[:20]
+    mxyz[:20] = on_dup @ inv[:3, :3].T + inv[:3, 3]
+    moving = pd.DataFrame({"pid": np.arange(nm), "x": mxyz[:, 0], "y": mxyz[:, 1], "z": mxyz[:, 2]})
+
+    # brute-force reference
+    p = mxyz @ pose[:3, :3].T + pose[:3, 3]
+    fpts = fixed[["x", "y", "z"]].to_numpy()
+    fpid = fixed["pid"].to_numpy()
+    d2 = ((p[:, None, :] - fpts[None, :, :]) ** 2).sum(axis=2)
+    li, ri = [], []
+    for i in range(nm):
+        cand = np.flatnonzero(d2[i] <= radius * radius)
+        if len(cand):
+            li.append(i)
+            ri.append(cand[np.lexsort((fpid[cand], d2[i, cand]))[0]])
+    li, ri = np.array(li), np.array(ri)
+    assert fpid[ri[:20]].max() < 40  # the ties went to the lower pids
+    fn = fixed[["nx", "ny", "nz"]].to_numpy()
+    ref = icp._partials(p[li], fpts[ri], fn[ri], True, 1.2, 2.5, True)
+    ref = np.concatenate([ref, ((p[li] - fpts[ri]) ** 2).sum(axis=0)])
+    ref_drift = np.hypot(*(p[:, :2] - (mxyz @ tile_pose[:3, :3].T + tile_pose[:3, 3])[:, :2]).T).max()
+
+    ext, level = (0.0, 0.0, 100.0, 100.0), 3
+    fixed_tiled = icp._tile_fixed(spark.createDataFrame(fixed), ext, 2 * radius, level)
+    moving_tiled = icp._tile_moving(spark.createDataFrame(moving), tile_pose, ext, level)
+    try:
+        kern = icp._pass_kernel_builder(pose, tile_pose, radius, True, 1.2, 2.5, True)
+        got, drift = icp._sum_tiles(icp._pass_frame(moving_tiled, fixed_tiled, kern).collect())
+    finally:
+        fixed_tiled.unpersist()
+        moving_tiled.unpersist()
+    assert ref_drift < radius  # inside the margin the halo was widened by
+    n_at = icp._ACC_COLS.index("n")
+    assert int(got[n_at]) == len(li)
+    np.testing.assert_allclose(got, ref, rtol=1e-9, atol=0)
+    np.testing.assert_allclose(drift, ref_drift, rtol=1e-9)
 
 
 def test_capture_plane_collect_is_capped(spark):
