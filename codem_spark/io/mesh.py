@@ -1,18 +1,10 @@
-"""Mesh ingestion (S5) + shapefile-equivalent summary sink (S10).
+"""Mesh ingestion (S5).
 
-Reference analogs:
-
-* ``Mesh._create_dsm`` (codem preprocessing/preprocess.py:740-792) loads a
-  PLY/OBJ mesh via trimesh, takes the VERTICES as a point cloud, unit-scales
-  them and rasterizes a max-DSM — from there the mesh is just another point
-  source. ``Mesh._calculate_resolution`` (preprocess.py:793-828) estimates
-  native resolution as the hexbin average vertex spacing.
-* ``Mesh.write`` (vcd/meshing/mesh.py:74-105) writes per-cluster hulls as
-  an ESRI multipatch shapefile whose ATTRIBUTE TABLE carries
-  (volume, area, clusterid, ground, status) + a .prj CRS sidecar. The
-  engine's sink is that attribute table as parquet + manifest (the binary
-  multipatch geometry is a visualization format; the hull ring/faces data
-  is already in the summary rows).
+Reference analog: ``Mesh._create_dsm`` (codem preprocessing/preprocess.py:
+740-792) loads a PLY/OBJ mesh via trimesh, takes the VERTICES as a point
+cloud, unit-scales them and rasterizes a max-DSM — from there the mesh is
+just another point source. (The per-cluster summary sink, the reference's
+``Mesh.write``, is ``io/shapefile.write_cluster_multipatch``.)
 
 Parsers here are from scratch (trimesh is not in the environment):
 
@@ -30,7 +22,6 @@ Parsers here are from scratch (trimesh is not in the environment):
 from __future__ import annotations
 
 import os
-from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -165,26 +156,6 @@ def read_mesh_vertices(spark: SparkSession, path: str, **kw) -> DataFrame:
     raise ValueError(f"unsupported mesh format {ext!r} (expected .ply/.obj)")
 
 
-def mesh_native_resolution(
-    df: DataFrame,
-    extent: tuple[float, float, float, float] | None = None,
-    bin_size: float = 25.0,
-) -> float:
-    """Reference Mesh._calculate_resolution (preprocess.py:793-828): average
-    vertex spacing from 25 m hexbins — the engine's S6 density estimate at
-    the level whose cells are ~``bin_size`` (cells much smaller than the
-    spacing would saturate at 1 point/cell and under-estimate)."""
-    import math
-
-    from codem_spark.operators import grid
-
-    if extent is None:
-        extent = grid.bounds(df)
-    span = max(extent[2] - extent[0], extent[3] - extent[1], bin_size)
-    level = max(1, round(math.log2(span / bin_size)))
-    return grid.estimate_resolution(df, extent, level=level)
-
-
 def write_ply_ascii(points: pd.DataFrame, path: str) -> None:
     """Tiny ASCII PLY writer (tests / interchange): (x, y, z) rows."""
     with open(path, "w") as f:
@@ -195,37 +166,3 @@ def write_ply_ascii(points: pd.DataFrame, path: str) -> None:
             "end_header\n"
         )
         np.savetxt(f, points[["x", "y", "z"]].to_numpy(np.float64), fmt="%.10g")
-
-
-_SHAPEFILE_FIELDS = ["volume", "area", "clusterid", "ground", "status"]
-
-
-def write_cluster_attribute_table(
-    summaries: DataFrame,
-    path: str,
-    crs_wkt: str | None = None,
-    ground_col: str | None = None,
-    properties: dict[str, Any] | None = None,
-) -> dict[str, Any]:
-    """S10: the shapefile sink's ATTRIBUTE TABLE (reference
-    vcd/meshing/mesh.py:85-105 field list: volume N, area N, clusterid N,
-    ground L, status C; .prj sidecar = crs_wkt manifest property) from a
-    ``cluster_summaries`` frame. Values round to 2 decimals exactly like
-    the reference's ``decimal=2`` numeric fields."""
-    from codem_spark.io import tables
-
-    ground = (
-        F.col(ground_col) if ground_col and ground_col in summaries.columns else F.lit(False)
-    )
-    out = summaries.select(
-        F.round("volume", 2).alias("volume"),
-        F.round("area", 2).alias("area"),
-        F.col("cluster_id").alias("clusterid"),
-        ground.alias("ground"),
-        F.col("status").alias("status"),
-        "hull_x",
-        "hull_y",
-    )
-    props = dict(properties or {})
-    props.update({"fields": _SHAPEFILE_FIELDS, "crs_wkt": crs_wkt})
-    return tables.write_table(out, path, properties=props)

@@ -17,8 +17,7 @@ whitepaper) + dBASE III header layout:
 
 The writer runs on the DRIVER over the per-cluster summary frame — the same
 shape as the reference (one record per cluster; cluster counts are bounded
-by the change-detection semantics, not by input rows). The distributed path
-stays parquet (``io/mesh.write_cluster_attribute_table``); this is the final
+by the change-detection semantics, not by input rows). It is the final
 interchange export. A reader is included for round-trip verification and for
 mesh ingestion from third-party multipatch files.
 """

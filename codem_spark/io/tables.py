@@ -185,25 +185,3 @@ def read_points(spark: SparkSession, path: str) -> DataFrame:
     if "point_quantization" in m.get("properties", {}):
         return quantized_point_read(spark, path)
     return read_table(spark, path)
-
-
-def cell_partitioned_write(
-    df: DataFrame,
-    path: str,
-    extent: tuple[float, float, float, float],
-    level: int = 6,
-    x: str = "x",
-    y: str = "y",
-    properties: dict[str, Any] | None = None,
-) -> dict[str, Any]:
-    """Write a point table partitioned by coarse cell prefix — the analog of
-    Iceberg partitioning on cell_id that makes bbox clips partition-pruned
-    scans (SURVEY.md §4 'windowed reads')."""
-    from codem_spark.functions import cells
-
-    out = cells.with_cell(df, x, y, extent, level).drop("_ix", "_iy").withColumnRenamed(
-        "cell_id", "part_cell"
-    )
-    props = dict(properties or {})
-    props.update({"cell_level": level, "extent": list(extent)})
-    return write_table(out, path, partition_by=["part_cell"], properties=props)

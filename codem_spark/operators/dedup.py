@@ -254,9 +254,7 @@ def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
 
     NOTE: the star fallback WEAKENS pairwise completeness — two hot-bucket
     members near-dup of each other but not of the representative are never
-    paired. Pass ``cap=None`` for exact (all-pairs) banded-LSH semantics,
-    and call :func:`hot_bucket_stats` on the same ``banded`` frame to
-    measure how many buckets/rows the cap truncates on a given input.
+    paired. Pass ``cap=None`` for exact (all-pairs) banded-LSH semantics.
 
     Plan shape: ONE shuffle. groupBy(band, bkey) collects each bucket's
     sorted member array, and the pair list (all-pairs or star) is generated
@@ -290,24 +288,6 @@ def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
         .select(F.col("p.id_a"), F.col("p.id_b"))
         .distinct()
     )
-
-
-def hot_bucket_stats(banded: DataFrame, cap: int = 64) -> dict[str, int]:
-    """Observability for the hot-bucket star-pair fallback: how many
-    (band, bkey) buckets exceed ``cap`` and how many member rows sit in
-    them. Run on the ``banded`` frame (did, band, bkey) that feeds
-    _bucket_pairs; one extra agg job, opt-in, so the hot path stays
-    single-pass. A nonzero count quantifies the recall loss surface of the
-    star fallback (see _bucket_pairs). To record it in a stage manifest,
-    pass the result through ``lineage.run_stage(..., metrics=...)``."""
-    r = (
-        banded.groupBy("band", "bkey")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > cap)
-        .agg(F.count("*").alias("hot_buckets"), F.coalesce(F.sum("n"), F.lit(0)).alias("hot_rows"))
-        .collect()[0]
-    )
-    return {"hot_buckets": int(r["hot_buckets"]), "hot_rows": int(r["hot_rows"])}
 
 
 def _shingle_frame(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:

@@ -20,6 +20,7 @@ Reference analogs:
 from __future__ import annotations
 
 import math
+from collections.abc import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -432,25 +433,21 @@ def exact_percentiles(
 
 
 def quantize_normalize(
-    df: DataFrame, col: str = "z", exact: bool = False,
+    df: DataFrame, col: str = "z",
     bounds: "tuple[float, float] | None" = None,
 ) -> DataFrame:
     """G5: percentile clip -> uint8 [1, 255] (0 reserved for nodata), the
     reference's DSM normalization (preprocess.py:278-283: clip to 1st/99th
-    percentile then scale). approxQuantile for the 100 TB path; exact
-    percentile for oracle parity. ``bounds`` short-circuits the percentile
-    job with caller-supplied (lo, hi) — callers quantizing several columns
-    of one frame batch all percentiles into ONE agg (registration
-    _prep_dsm) instead of one job per column."""
+    percentile then scale). The clip bounds are exact percentiles
+    (``exact_percentiles``: the built-in percentile() values, asserted in
+    tests). ``bounds`` short-circuits the percentile job with
+    caller-supplied (lo, hi) — callers quantizing several columns of one
+    frame batch all percentiles into ONE agg (registration _prep_dsm)
+    instead of one job per column."""
     if bounds is not None:
         lo, hi = float(bounds[0]), float(bounds[1])
-    elif exact:
-        # histogram-refined exact percentiles: identical values to the
-        # built-in percentile() aggregate (asserted in tests) at a fraction
-        # of its cost — see exact_percentiles
-        lo, hi = exact_percentiles(df, col, list(_CLIP_Q))
     else:
-        lo, hi = df.approxQuantile(col, list(_CLIP_Q), 0.001)
+        lo, hi = exact_percentiles(df, col, list(_CLIP_Q))
     rng = max(hi - lo, 1e-12)
     clipped = F.least(F.lit(hi), F.greatest(F.lit(lo), F.col(col)))
     q = (F.round((clipped - F.lit(lo)) / F.lit(rng) * F.lit(254.0)) + F.lit(1.0)).cast("int")
@@ -465,7 +462,7 @@ def cluster_sizes(df: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:
     return df.withColumn("cluster_size", F.count("*").over(w))
 
 
-def tile_explode(df: DataFrame, tile_px: int, halo: int, carry=("z",)) -> DataFrame:
+def _tile_explode(df: DataFrame, tile_px: int, halo: int, carry) -> DataFrame:
     """Duplicate each raster cell (gx, gy) into every ``tile_px``-pixel tile
     whose ``halo``-widened window contains it: home tile always; a neighbor
     tile only when within ``halo`` pixels of the border facing it (the
@@ -505,43 +502,57 @@ def tile_explode(df: DataFrame, tile_px: int, halo: int, carry=("z",)) -> DataFr
     )
 
 
-def infill(dsm: DataFrame, tile_px: int = 128) -> DataFrame:
-    """G4: iterative void infill. The reference loops rasterio.fillnodata
-    until no nodata pixels remain (preprocess.py:236-259): each round fills
-    empty cells that have >=1 filled neighbor with the IDW of their filled
-    8-neighborhood. Input/output: (gx, gy, z) with voids simply *absent*
-    (sparse representation — nulls never stored).
+def tile_apply(
+    raster: DataFrame,
+    tile_px: int,
+    halo: int,
+    cols: Sequence[str],
+    kernel: Callable[..., pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """The one raster tile+halo plan: run ``kernel`` once per ``tile_px``-
+    pixel tile of the long-format raster (gx, gy, *cols), with every cell
+    within ``halo`` pixels of the tile in view. Infill/band-pass, keypoint
+    extraction and SMRF ground all run through here.
 
-    ONE Spark job, not a driver loop: cells are tiled into ``tile_px``-pixel
-    squares with a ``_INFILL_ROUNDS``-pixel halo (a round-k fill depends only
-    on original cells within Chebyshev distance k, so a halo of that many
-    pixels makes every in-tile iteration exact), and a per-tile kernel runs
-    the whole fill iteration on a dense local array. The previous
-    formulation — a driver loop of (explode-join + anti-join + count) per
-    round — cost dozens of tiny jobs and ~25 s of the coarse-registration
-    stage; this is one shuffle keyed by tile. Voids wider than
-    2*_INFILL_ROUNDS pixels stay void, exactly like the capped loop.
-    """
-    filled = dsm.select("gx", "gy", "z")
-    bb = _raster_bbox(filled)
-    if bb is None:
-        return filled
-    H = _INFILL_ROUNDS
-    exploded = tile_explode(filled, tile_px, H)
+    Plan: each cell goes to its home tile and to the neighbor tiles whose
+    halo reaches it (``_tile_explode``), then ONE
+    ``groupBy(htx, hty).applyInPandas`` — a single hash exchange on the
+    tile keys. The kernel is called as ``kernel(x0, y0, planes, have,
+    core)`` with w = tile_px + 2*halo:
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        x0 = int(key[0]) * tile_px - H
-        y0 = int(key[1]) * tile_px - H
-        arr, have, _ix, _iy = _dense_tile(pdf, x0, y0, tile_px + 2 * H)
-        _fill_voids(arr, have, x0, y0, bb, H)
-        ex, ey = np.nonzero(have & _core(arr.shape[0], H, tile_px))
-        return pd.DataFrame(
-            {"gx": ex + x0, "gy": ey + y0, "z": arr[ex, ey]}
-        )
+    * (x0, y0): the global (gx, gy) of the window's first cell;
+    * ``planes[c]``: dense float64 (w, w) array of column c, indexed
+      [gx - x0, gy - y0], 0 where no cell;
+    * ``have``: (w, w) bool, the cells present;
+    * ``core``: (w, w) bool, the tile's own cells — emit from these only,
+      so no cell is output twice.
 
-    return exploded.groupBy("htx", "hty").applyInPandas(
-        kernel, schema="gx long, gy long, z double"
-    )
+    It returns a pandas frame matching ``schema``. The explode reaches only
+    the eight neighbor tiles, so a halo wider than the tile is rejected
+    rather than silently cut short."""
+    if halo > tile_px:
+        raise ValueError(f"halo ({halo} px) is wider than the tile ({tile_px} px)")
+    w = tile_px + 2 * halo
+    cols = list(cols)
+
+    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        x0 = int(key[0]) * tile_px - halo
+        y0 = int(key[1]) * tile_px - halo
+        ix = (pdf["gx"].to_numpy() - x0).astype(np.int64)
+        iy = (pdf["gy"].to_numpy() - y0).astype(np.int64)
+        have = np.zeros((w, w), dtype=bool)
+        have[ix, iy] = True
+        planes = {}
+        for c in cols:
+            planes[c] = np.zeros((w, w))
+            planes[c][ix, iy] = pdf[c].to_numpy(np.float64)
+        core = np.zeros((w, w), dtype=bool)
+        core[halo : halo + tile_px, halo : halo + tile_px] = True
+        return kernel(x0, y0, planes, have, core)
+
+    exploded = _tile_explode(raster, tile_px, halo, cols)
+    return exploded.groupBy("htx", "hty").applyInPandas(run, schema=schema)
 
 
 def _raster_bbox(filled: DataFrame) -> tuple[int, int, int, int] | None:
@@ -553,24 +564,6 @@ def _raster_bbox(filled: DataFrame) -> tuple[int, int, int, int] | None:
     if b["x0"] is None:
         return None
     return (int(b["x0"]), int(b["x1"]), int(b["y0"]), int(b["y1"]))
-
-
-def _dense_tile(pdf: pd.DataFrame, x0: int, y0: int, w: int):
-    """Scatter a tile's (gx, gy, z) rows into a dense (w, w) array whose
-    [0, 0] is cell (x0, y0). Returns (z array, filled mask, ix, iy)."""
-    arr = np.zeros((w, w))
-    have = np.zeros((w, w), dtype=bool)
-    ix = (pdf["gx"].to_numpy() - x0).astype(np.int64)
-    iy = (pdf["gy"].to_numpy() - y0).astype(np.int64)
-    arr[ix, iy] = pdf["z"].to_numpy(np.float64)
-    have[ix, iy] = True
-    return arr, have, ix, iy
-
-
-def _core(w: int, halo: int, tile_px: int) -> np.ndarray:
-    core = np.zeros((w, w), dtype=bool)
-    core[halo : halo + tile_px, halo : halo + tile_px] = True
-    return core
 
 
 def _fill_voids(
@@ -645,67 +638,36 @@ def _band_pass_np(
     return blurred[0] - blurred[1]
 
 
-def band_pass(
-    dsm: DataFrame,
-    weak_sigma_px: float,
-    strong_sigma_px: float,
-    tile_px: int = 256,
-) -> DataFrame:
-    """Gaussian band-pass of a (gx, gy, z) raster: weak-blur minus
-    strong-blur, the reference's _normalize pre-step (preprocess.py:272-279:
-    ``bandpassed = weak_filtered - strong_filtered`` with sigmas =
-    filter-size / pixel-scale). Suppresses long-wavelength topography so
-    keypoints don't all collapse onto ridgelines.
-
-    Distributed as one tiled kernel job (tile + 4*sigma_strong halo — a
-    Gaussian truncated at 4 sigma is exact within the halo); blurs are
-    mask-normalized so raster edges and any residual voids renormalize over
-    valid pixels instead of bleeding zeros. Output: (gx, gy, z, bp).
-    """
-    halo = max(1, int(math.ceil(4.0 * strong_sigma_px)) + 1)
-    kw = _gauss_kernel1d(weak_sigma_px)
-    ks = _gauss_kernel1d(strong_sigma_px)
-    exploded = tile_explode(dsm.select("gx", "gy", "z"), tile_px, halo)
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        x0 = int(key[0]) * tile_px - halo
-        y0 = int(key[1]) * tile_px - halo
-        arr, have, ix, iy = _dense_tile(pdf, x0, y0, tile_px + 2 * halo)
-        bp = _band_pass_np(arr, have, kw, ks)
-        core = (ix >= halo) & (ix < halo + tile_px) & (iy >= halo) & (iy < halo + tile_px)
-        return pd.DataFrame(
-            {
-                "gx": pdf["gx"].to_numpy()[core],
-                "gy": pdf["gy"].to_numpy()[core],
-                "z": pdf["z"].to_numpy(np.float64)[core],
-                "bp": bp[ix[core], iy[core]],
-            }
-        )
-
-    return exploded.groupBy("htx", "hty").applyInPandas(
-        kernel, schema="gx long, gy long, z double, bp double"
-    )
-
-
 def infill_band_pass(
     dsm: DataFrame,
     weak_sigma_px: float,
     strong_sigma_px: float,
     tile_px: int = 256,
 ) -> DataFrame:
-    """Fused G4+band-pass: void infill followed by the Gaussian band-pass in
-    ONE tile kernel (optimization round r6) — the registration preprocess
-    chain ran them as two applyInPandas stages with a full shuffle between
-    (measured ~0.7 s of the coarse stage per DSM side at sf0.1; at scale it
-    is a whole extra pass over the raster).
+    """G4 void infill followed by the Gaussian band-pass, in ONE tile kernel
+    (``tile_apply``) — one shuffle and one Python stage per DSM side.
 
-    Exactness argument: with halo = H_bp + H_inf, every infill result
-    within (tile + H_bp) of the core equals the global infill (a round-k
+    Infill: the reference loops rasterio.fillnodata until no nodata pixels
+    remain (preprocess.py:236-259); here each of ``_INFILL_ROUNDS`` rounds
+    fills the empty cells inside the raster bbox that have >= 1 filled
+    8-neighbor with the IDW of those neighbors (``_fill_voids``). Voids
+    wider than 2*_INFILL_ROUNDS pixels stay void. Voids are simply absent
+    rows (sparse raster — nulls are never stored).
+
+    Band-pass: weak-blur minus strong-blur, the reference's _normalize
+    pre-step (preprocess.py:272-279: ``bandpassed = weak_filtered -
+    strong_filtered``, sigmas = filter size / pixel size). It suppresses
+    long-wavelength topography so keypoints don't all collapse onto
+    ridgelines. Blurs are mask-normalized (``_band_pass_np``).
+
+    Exactness: with halo = H_bp + H_inf, every infill result within
+    (tile + H_bp) of the core equals the whole-raster infill (a round-k
     fill depends only on cells within Chebyshev k <= H_inf), and the
-    band-pass at any core cell only reads infilled cells within H_bp — so
-    core outputs are bit-identical to infill() -> band_pass() (asserted in
-    tests/test_grid.py). Output: (gx, gy, z, bp) over all filled core
-    cells, exactly like band_pass(infill(dsm))."""
+    band-pass at any core cell only reads infilled cells within H_bp (a
+    Gaussian truncated at 4 sigma). So core outputs equal the whole-raster
+    ``_fill_voids`` -> ``_band_pass_np`` chain (asserted in
+    tests/test_grid.py). A halo wider than ``tile_px`` widens the tile to
+    match. Output: (gx, gy, z, bp) over all filled core cells."""
     filled = dsm.select("gx", "gy", "z")
     bb = _raster_bbox(filled)
     if bb is None:
@@ -715,21 +677,19 @@ def infill_band_pass(
     halo = h_inf + h_bp
     kw = _gauss_kernel1d(weak_sigma_px)
     ks = _gauss_kernel1d(strong_sigma_px)
-    exploded = tile_explode(filled, tile_px, halo)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        x0 = int(key[0]) * tile_px - halo
-        y0 = int(key[1]) * tile_px - halo
-        arr, have, _ix, _iy = _dense_tile(pdf, x0, y0, tile_px + 2 * halo)
+    def kernel(x0, y0, planes, have, core):
+        arr = planes["z"]
         _fill_voids(arr, have, x0, y0, bb, h_inf)
         bp = _band_pass_np(arr, have, kw, ks)
-        ex, ey = np.nonzero(have & _core(arr.shape[0], halo, tile_px))
+        ex, ey = np.nonzero(have & core)
         return pd.DataFrame(
             {"gx": ex + x0, "gy": ey + y0, "z": arr[ex, ey], "bp": bp[ex, ey]}
         )
 
-    return exploded.groupBy("htx", "hty").applyInPandas(
-        kernel, schema="gx long, gy long, z double, bp double"
+    return tile_apply(
+        filled, max(tile_px, halo), halo, ["z"], kernel,
+        "gx long, gy long, z double, bp double",
     )
 
 

@@ -7,10 +7,11 @@ it with growing windows, and flag cells that stay far above the opened
 surface as non-ground.
 
 Engine design: grid-min rasterization (stock hash agg) -> per-tile
-morphological opening in an ``applyInPandas`` kernel (vectorized sliding
-minima/maxima over the dense tile + halo, so window effects cross tile
-borders correctly) -> points join back to their cell's ground flag + the
-interpolated ground elevation (height-above-ground, the J7 byproduct).
+morphological opening in a ``grid.tile_apply`` kernel, the engine's one
+raster tile+halo plan (vectorized sliding minima/maxima over the dense tile
++ halo, so window effects cross tile borders) -> points join back to their
+cell's ground flag + the interpolated ground elevation
+(height-above-ground, the J7 byproduct).
 """
 
 from __future__ import annotations
@@ -20,34 +21,30 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark.operators import grid
+
 Extent = tuple[float, float, float, float]
 
 TILE = 256
 
 
-def _erode(a: np.ndarray, w: int) -> np.ndarray:
-    """Square sliding-window minimum (separable), edge-replicated."""
+def _sliding(a: np.ndarray, w: int, reduce) -> np.ndarray:
+    """Square sliding-window ``reduce`` (np.minimum: erosion, np.maximum:
+    dilation) over (2w+1)^2 cells, separable, edge-replicated."""
     for axis in (0, 1):
         p = np.pad(a, [(w, w) if ax == axis else (0, 0) for ax in (0, 1)], mode="edge")
         out = a.copy()
         for d in range(-w, w + 1):
             sl = [slice(None)] * 2
             sl[axis] = slice(w + d, p.shape[axis] - w + d)
-            out = np.minimum(out, p[tuple(sl)])
+            out = reduce(out, p[tuple(sl)])
         a = out
     return a
 
 
-def _dilate(a: np.ndarray, w: int) -> np.ndarray:
-    for axis in (0, 1):
-        p = np.pad(a, [(w, w) if ax == axis else (0, 0) for ax in (0, 1)], mode="edge")
-        out = a.copy()
-        for d in range(-w, w + 1):
-            sl = [slice(None)] * 2
-            sl[axis] = slice(w + d, p.shape[axis] - w + d)
-            out = np.maximum(out, p[tuple(sl)])
-        a = out
-    return a
+def _open(a: np.ndarray, w: int) -> np.ndarray:
+    """Morphological opening: erosion then dilation, window radius w."""
+    return _sliding(_sliding(a, w, np.minimum), w, np.maximum)
 
 
 def smrf_ground(
@@ -64,7 +61,16 @@ def smrf_ground(
     1, 2, 4, ... cells up to max_window meters; at each step cells whose
     min-z exceeds the opened surface by threshold(w) = initial + slope*w*res
     are marked non-ground. hag = z - opened ground surface at the cell.
+
+    The raster runs through ``grid.tile_apply`` with a halo of
+    ceil(max_window / resolution) + 1 cells; a halo wider than TILE widens
+    the tile to match, so every tile sees its whole halo.
     """
+    if max_window < resolution:
+        raise ValueError(
+            f"max_window ({max_window}) is smaller than one cell ({resolution}): "
+            "no SMRF window fits"
+        )
     zmin = (
         points.select(
             F.floor((F.col("x") - extent[0]) / resolution).cast("long").alias("gx"),
@@ -75,23 +81,6 @@ def smrf_ground(
         .agg(F.min("z").alias("z"))
     )
     halo = int(np.ceil(max_window / resolution)) + 1
-    tx = F.floor(F.col("gx") / TILE)
-    ty = F.floor(F.col("gy") / TILE)
-    base = zmin.withColumn("tx", tx).withColumn("ty", ty)
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    off = F.explode(
-        F.array(*[F.struct(F.lit(a).alias("dx"), F.lit(b).alias("dy")) for a, b in offs])
-    )
-    e = base.withColumn("_o", off)
-    ntx = F.col("tx") + F.col("_o.dx")
-    nty = F.col("ty") + F.col("_o.dy")
-    in_win = (
-        (F.col("gx") >= ntx * TILE - halo)
-        & (F.col("gx") < (ntx + 1) * TILE + halo)
-        & (F.col("gy") >= nty * TILE - halo)
-        & (F.col("gy") < (nty + 1) * TILE + halo)
-    )
-    tiled = e.filter(in_win).select(ntx.alias("tx"), nty.alias("ty"), "gx", "gy", "z")
 
     windows = []
     w = 1
@@ -99,42 +88,33 @@ def smrf_ground(
         windows.append(w)
         w *= 2
 
-    def kernel(key, pdf):
-        tx_, ty_ = int(key[0]), int(key[1])
-        x0p, y0p = tx_ * TILE - halo, ty_ * TILE - halo
-        side = TILE + 2 * halo
-        img = np.full((side, side), np.nan)
-        rr = pdf["gy"].to_numpy() - y0p
-        cc = pdf["gx"].to_numpy() - x0p
-        img[rr, cc] = pdf["z"].to_numpy(np.float64)
-        # fill voids with a large value so they never drive the opening...
-        # (morphological min would bleed; use nan-aware: replace with +inf
-        # for erosion and patch after)
+    def kernel(x0, y0, planes, have, core):
+        img = np.where(have, planes["z"], np.nan)
+        # voids become +inf so they never drive the opening's minimum
         filled = np.where(np.isnan(img), np.inf, img)
-        ground = np.ones((side, side), dtype=bool)
+        ground = np.ones(img.shape, dtype=bool)
         surface = filled.copy()
         for w_ in windows:
-            opened = _dilate(_erode(surface, w_), w_)
+            opened = _open(surface, w_)
             thresh = initial_threshold + slope * w_ * resolution
             ground &= ~(surface - opened > thresh)
             surface = np.minimum(surface, opened + thresh)
-        est = _dilate(_erode(filled, windows[-1]), windows[-1])  # ground est
-        core = (rr >= halo) & (rr < halo + TILE) & (cc >= halo) & (cc < halo + TILE)
+        est = _open(filled, windows[-1])  # ground estimate
+        ex, ey = np.nonzero(have & core)
         return pd.DataFrame(
             {
-                "gx": pdf["gx"].to_numpy()[core],
-                "gy": pdf["gy"].to_numpy()[core],
-                "cell_ground": ground[rr[core], cc[core]],
+                "gx": ex + x0,
+                "gy": ey + y0,
+                "cell_ground": ground[ex, ey],
                 "ground_z": np.where(
-                    np.isfinite(est[rr[core], cc[core]]),
-                    est[rr[core], cc[core]],
-                    img[rr[core], cc[core]],
+                    np.isfinite(est[ex, ey]), est[ex, ey], img[ex, ey]
                 ),
             }
         )
 
-    flags = tiled.groupBy("tx", "ty").applyInPandas(
-        kernel, schema="gx long, gy long, cell_ground boolean, ground_z double"
+    flags = grid.tile_apply(
+        zmin, max(TILE, halo), halo, ["z"], kernel,
+        "gx long, gy long, cell_ground boolean, ground_z double",
     )
     pts = points.withColumn(
         "gx", F.floor((F.col("x") - extent[0]) / resolution).cast("long")

@@ -6,7 +6,8 @@ the 100 TB scale path — the same adaptive brute-force/LSH split the
 reference applies to descriptor matching (dsm.py:175-187: BF under 2^17
 rows, LSH above).
 
-Dot products run through ``F.aggregate``/``F.zip_with`` (JVM, codegen);
+Dot products run through ``F.aggregate``/``F.zip_with``: JVM expressions,
+but ``CodegenFallback`` ones, interpreted per row rather than compiled;
 LSH bucketing is one Arrow matmul pass per batch against all plane sets.
 """
 

@@ -10,10 +10,11 @@ not detector bit-equality — the reference's own tests assert exactly that
 (tests/test_registration.py:113-115 asserts converged registration, not
 keypoint equality).
 
-Tiling: the DSM long-format table (gx, gy, z, z_u8) is grouped into TILE x
-TILE pixel tiles with a HALO-pixel overlap ring (keypoints are only *kept*
-in the tile core, so every descriptor sees its full support window and no
-keypoint is emitted twice). Rotation invariance comes from sampling the
+Tiling: the DSM long-format table (gx, gy, z, z_u8[, det_u8]) runs through
+``grid.tile_apply``, the engine's one raster tile+halo plan: TILE x TILE
+pixel tiles with a HALO-pixel overlap ring (keypoints are only *kept* in the
+tile core, so every descriptor sees its full support window and no keypoint
+is emitted twice). Rotation invariance comes from sampling the
 descriptor patch along the keypoint's dominant gradient orientation —
 needed because the reference test matrix perturbs AOIs by 90/180/360-degree
 rotations (test_registration.py:39-62).
@@ -24,7 +25,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from codem_spark.operators import grid
 
 Extent = tuple[float, float, float, float]
 
@@ -143,83 +145,42 @@ def extract_features(
     extent: Extent,
     resolution: float,
 ) -> DataFrame:
-    """DSM table (gx, gy, z, z_u8) -> keypoint table
+    """DSM table (gx, gy, z, z_u8[, det_u8]) -> keypoint table
     (gx, gy, x, y, z, response, d0, d1, d2, d3).
 
-    Geo-coordinates use the Area pixel convention (+0.5 px — reference
-    dsm.py:374-375, preprocess.py:304-306); z is the infilled DSM elevation
-    at the keypoint cell (the reference samples the same DSM,
-    dsm.py:335-384).
+    Keypoints are DETECTED on the optional det_u8 plane (the band-passed
+    DSM, pipeline._prep_dsm) and DESCRIBED on z_u8 (full-band); without
+    det_u8 both use z_u8. Geo-coordinates use the Area pixel convention
+    (+0.5 px — reference dsm.py:374-375, preprocess.py:304-306); z is the
+    infilled DSM elevation at the keypoint cell (the reference samples the
+    same DSM, dsm.py:335-384).
     """
-    # optional det_u8 plane: keypoints are DETECTED on it (band-passed DSM,
-    # pipeline._prep_dsm) while descriptors sample z_u8 (full-band). Falls
-    # back to z_u8 for both when absent.
-    has_det = "det_u8" in dsm.columns
-    if not has_det:
-        dsm = dsm.withColumn("det_u8", F.col("z_u8"))
-    tx = F.floor(F.col("gx") / F.lit(TILE))
-    ty = F.floor(F.col("gy") / F.lit(TILE))
-    base = dsm.withColumn("tx", tx).withColumn("ty", ty)
-    # halo membership: a pixel near a tile border is duplicated into the
-    # neighboring tile(s) so each tile kernel sees TILE+2*HALO pixels
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    off = F.explode(
-        F.array(*[F.struct(F.lit(a).alias("dx"), F.lit(b).alias("dy")) for a, b in offs])
-    )
-    e = base.withColumn("_o", off)
-    ntx = F.col("tx") + F.col("_o.dx")
-    nty = F.col("ty") + F.col("_o.dy")
-    # keep the duplicate only if the pixel falls inside the neighbor tile's
-    # halo window
-    in_win = (
-        (F.col("gx") >= ntx * TILE - HALO)
-        & (F.col("gx") < (ntx + 1) * TILE + HALO)
-        & (F.col("gy") >= nty * TILE - HALO)
-        & (F.col("gy") < (nty + 1) * TILE + HALO)
-    )
-    tiled = e.filter(in_win).select(
-        ntx.alias("tx"), nty.alias("ty"), "gx", "gy", "z", "z_u8", "det_u8"
-    )
+    det_col = "det_u8" if "det_u8" in dsm.columns else "z_u8"
+    cols = list(dict.fromkeys(["z", "z_u8", det_col]))
+    out_cols = ["gx", "gy", "x", "y", "z", "response", "d0", "d1", "d2", "d3"]
 
-    def kernel(key, pdf):
-        tx_, ty_ = int(key[0]), int(key[1])
-        x0p = tx_ * TILE - HALO
-        y0p = ty_ * TILE - HALO
-        w = TILE + 2 * HALO
-        img = np.zeros((w, w), dtype=np.float64)
-        det = np.zeros((w, w), dtype=np.float64)
-        valid = np.zeros((w, w), dtype=bool)
-        rr = pdf["gy"].to_numpy() - y0p
-        cc = pdf["gx"].to_numpy() - x0p
-        img[rr, cc] = pdf["z_u8"].to_numpy(np.float64)
-        det[rr, cc] = pdf["det_u8"].to_numpy(np.float64)
-        valid[rr, cc] = True
-        zs = np.zeros((w, w), dtype=np.float64)
-        zs[rr, cc] = pdf["z"].to_numpy(np.float64)
-        kps = harris_keypoints(det, valid)
-        if len(kps):
-            # keep only keypoints whose center lies in the tile core
-            core = (
-                (kps[:, 0] >= HALO)
-                & (kps[:, 0] < HALO + TILE)
-                & (kps[:, 1] >= HALO)
-                & (kps[:, 1] < HALO + TILE)
-            )
-            kps = kps[core]
+    def kernel(x0, y0, planes, have, core):
+        # the detector and descriptor index images as [row, col] = [gy, gx]:
+        # the planes go in as transposed views, so no value or arithmetic
+        # changes
+        kps = harris_keypoints(planes[det_col].T, have.T)
+        rr = kps[:, 0].astype(np.int64)
+        cc = kps[:, 1].astype(np.int64)
+        # keep only keypoints whose center lies in the tile core
+        keep = core.T[rr, cc]
+        kps, rr, cc = kps[keep], rr[keep], cc[keep]
         if len(kps) == 0:
-            return pd.DataFrame(
-                {c: [] for c in ["gx", "gy", "x", "y", "z", "response", "d0", "d1", "d2", "d3"]}
-            )
-        desc = describe(img, kps)
-        gxk = kps[:, 1].astype(np.int64) + x0p
-        gyk = kps[:, 0].astype(np.int64) + y0p
+            return pd.DataFrame({c: [] for c in out_cols})
+        desc = describe(planes["z_u8"].T, kps)
+        gxk = cc + x0
+        gyk = rr + y0
         return pd.DataFrame(
             {
                 "gx": gxk,
                 "gy": gyk,
                 "x": extent[0] + (gxk + 0.5) * resolution,
                 "y": extent[1] + (gyk + 0.5) * resolution,
-                "z": zs[kps[:, 0].astype(np.int64), kps[:, 1].astype(np.int64)],
+                "z": planes["z"][cc, rr],
                 "response": kps[:, 2],
                 "d0": desc[:, 0],
                 "d1": desc[:, 1],
@@ -232,4 +193,4 @@ def extract_features(
         "gx long, gy long, x double, y double, z double, response double, "
         "d0 long, d1 long, d2 long, d3 long"
     )
-    return tiled.groupBy("tx", "ty").applyInPandas(kernel, schema=schema)
+    return grid.tile_apply(dsm, TILE, HALO, cols, kernel, schema)

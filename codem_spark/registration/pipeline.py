@@ -82,7 +82,7 @@ def _prep_dsm(
     # point draw), which destabilizes keypoint detection.
     # infill + band-pass run FUSED in one tile kernel (grid.infill_band_pass
     # — one shuffle and one Python stage instead of two of each; outputs
-    # bit-identical to the sequential chain, asserted in tests).
+    # equal the whole-raster chain, asserted in tests).
     bp = grid.infill_band_pass(
         dsm,
         weak_sigma_px=max(cfg.dsm_weak_filter / resolution, 1.0),

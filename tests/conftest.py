@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -73,3 +75,16 @@ def union_find_oracle(P: np.ndarray, tol: float) -> np.ndarray:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return np.array([find(i) for i in range(n)])
+
+
+def frame_digest(pdf: pd.DataFrame, cols: list[str], key: list[str]) -> str:
+    """Order-free digest of ``cols`` (rows sorted by ``key``); floats are
+    rounded to 1e-6 so the pin names the output, not the last ulp."""
+    pdf = pdf.sort_values(key).reset_index(drop=True)
+    h = hashlib.sha256()
+    for c in cols:
+        v = pdf[c].to_numpy()
+        if v.dtype.kind == "f":
+            v = np.round(v, 6) + 0.0  # + 0.0 folds -0.0 into 0.0
+        h.update(np.ascontiguousarray(v).tobytes())
+    return h.hexdigest()[:16]

@@ -74,7 +74,7 @@ def test_clip_bbox_pushdown(spark):
 
 def test_quantize_normalize(spark):
     pc = synth.point_cloud(spark, 3000)
-    q = grid.quantize_normalize(pc, "z", exact=True).select("z_u8").toPandas()
+    q = grid.quantize_normalize(pc, "z").select("z_u8").toPandas()
     assert q.z_u8.between(1, 255).all()
     assert q.z_u8.nunique() > 100  # spread across the range
 
@@ -87,23 +87,11 @@ def test_cluster_sizes_window(spark):
     assert (got.cluster_size == 10).all()
 
 
-def test_infill_fills_all_interior_voids(spark):
-    # 10x10 grid with a 2x2 hole: infill must fill it with neighbor IDW
-    rows = [(gx, gy, float(gx + gy)) for gx in range(10) for gy in range(10)
-            if not (4 <= gx <= 5 and 4 <= gy <= 5)]
-    dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
-    filled = grid.infill(dsm)
-    pdf = filled.toPandas()
-    assert len(pdf) == 100
-    hole = pdf[(pdf.gx.between(4, 5)) & (pdf.gy.between(4, 5))]
-    exp = hole.gx + hole.gy
-    assert np.allclose(hole.z.values, exp.values, atol=1.0)
-
-
-def test_infill_band_pass_fused_equals_sequential(spark):
-    """The fused infill+band-pass kernel (optimization r6) must be
-    bit-identical to the sequential infill() -> band_pass() chain, voids,
-    raster edges and tile borders included."""
+def test_infill_band_pass_matches_whole_raster_reference(spark):
+    """infill_band_pass on 32-px tiles equals the whole-raster numpy chain
+    _fill_voids(..., _INFILL_ROUNDS) -> _band_pass_np: voids (one on a tile
+    border), raster edges and tile borders included, and every interior
+    void is filled."""
     rng = np.random.default_rng(7)
     rows = [
         (gx, gy, float(np.sin(gx * 0.3) * 5 + gy * 0.1 + rng.normal(0, 0.2)))
@@ -112,17 +100,39 @@ def test_infill_band_pass_fused_equals_sequential(spark):
         if not ((10 <= gx <= 12 and 20 <= gy <= 22) or (31 <= gx <= 33 and 5 <= gy <= 6))
     ]
     dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
-    seq = grid.band_pass(
-        grid.infill(dsm, tile_px=32),
-        weak_sigma_px=1.0, strong_sigma_px=2.5, tile_px=32,
-    ).toPandas().sort_values(["gx", "gy"]).reset_index(drop=True)
-    fus = grid.infill_band_pass(
+    got = grid.infill_band_pass(
         dsm, weak_sigma_px=1.0, strong_sigma_px=2.5, tile_px=32,
     ).toPandas().sort_values(["gx", "gy"]).reset_index(drop=True)
-    assert len(seq) == len(fus)
-    assert (seq.gx.values == fus.gx.values).all() and (seq.gy.values == fus.gy.values).all()
-    assert np.array_equal(seq.z.values, fus.z.values)
-    assert np.allclose(seq.bp.values, fus.bp.values, atol=1e-12)
+
+    # _fill_voids takes square windows; columns gy >= 60 lie outside the
+    # raster bbox and stay empty
+    arr = np.zeros((70, 70))
+    have = np.zeros((70, 70), dtype=bool)
+    for gx, gy, z in rows:
+        arr[gx, gy], have[gx, gy] = z, True
+    orig = arr.copy()
+    grid._fill_voids(arr, have, 0, 0, (0, 69, 0, 59), grid._INFILL_ROUNDS)
+    bp = grid._band_pass_np(arr, have, grid._gauss_kernel1d(1.0), grid._gauss_kernel1d(2.5))
+    assert have[:, :60].all() and not have[:, 60:].any()
+    ex, ey = np.nonzero(have)
+    assert (got.gx.values == ex).all() and (got.gy.values == ey).all()
+    assert np.array_equal(got.z.values, arr[ex, ey])
+    assert np.allclose(got.bp.values, bp[ex, ey], rtol=0, atol=1e-12)
+    # each fill is a weighted mean of filled neighbors, so the 3x3 hole's
+    # values stay within the range of the original ring around it
+    ring = np.ones((5, 5), dtype=bool)
+    ring[1:4, 1:4] = False
+    ring = orig[9:14, 19:24][ring]
+    hole = arr[10:13, 20:23]
+    assert ring.min() <= hole.min() and hole.max() <= ring.max()
+
+
+def test_tile_apply_rejects_halo_wider_than_tile(spark):
+    """The halo explode reaches only the eight neighbor tiles, so a wider
+    halo would be cut short silently."""
+    dsm = spark.createDataFrame([(0, 0, 1.0)], "gx long, gy long, z double")
+    with pytest.raises(ValueError, match="halo"):
+        grid.tile_apply(dsm, 8, 9, ["z"], lambda *a: None, "gx long")
 
 
 def test_exact_percentiles_matches_builtin(spark):

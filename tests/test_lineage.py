@@ -17,20 +17,6 @@ def test_write_read_roundtrip(spark, tmp_path):
     assert tables.table_manifest(str(tmp_path / "t1"))["properties"]["crs"] == "synthetic-utm"
 
 
-def test_cell_partitioned_write_prunes(spark, tmp_path):
-    from codem_spark import synth
-
-    pc = synth.point_cloud(spark, 2000)
-    ext = (0.0, 0.0, 100_000.0, 100_000.0)
-    tables.cell_partitioned_write(pc, str(tmp_path / "pts"), ext, level=3)
-    back = tables.read_table(spark, str(tmp_path / "pts"))
-    assert back.count() == 2000
-    # partition column present -> a part_cell predicate prunes at scan
-    one = back.filter(F.col("part_cell") == back.select("part_cell").first()[0])
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or one.count() > 0
-
-
 def test_run_stage_resume_skips_recompute(spark, tmp_path):
     calls = {"n": 0}
 

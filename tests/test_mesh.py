@@ -111,9 +111,6 @@ def test_ply_aoi_registers_end_to_end(spark, tmp_path):
     mesh.write_ply_ascii(aoi, ply)
 
     aoi_df = mesh.read_mesh_vertices(spark, ply)
-    res = mesh.mesh_native_resolution(aoi_df)
-    assert 1.0 < res < 20.0  # ~3.4 m spacing for 11k pts over 300x300
-
     cfg = EngineConfig(min_resolution=4.0, icp_max_iter=10)
     c, f, out = P.register(
         spark.createDataFrame(fnd), aoi_df, extent=EXT, cfg=cfg, resolution=4.0
@@ -128,29 +125,3 @@ def test_ply_aoi_registers_end_to_end(spark, tmp_path):
     assert abs(f.trans_y - 7.0) < 1.0
     assert abs(f.trans_z + 2.0) < 1.0
     assert f.rmse_3d < 4.0  # < 1 cell on grid-resampled clouds
-
-
-def test_cluster_attribute_table_sink(spark, tmp_path):
-    from codem_spark.io import tables
-    from codem_spark.operators import hull
-
-    rng = np.random.default_rng(6)
-    pts = pd.DataFrame(
-        {
-            "pid": np.arange(600),
-            "x": np.concatenate([rng.uniform(0, 10, 300), rng.uniform(50, 70, 300)]),
-            "y": rng.uniform(0, 10, 600),
-            "z": rng.uniform(0, 5, 600),
-            "dz": np.concatenate([np.full(300, 3.0), np.full(300, -2.0)]),
-            "cluster_id": np.repeat([0, 1], 300),
-        }
-    )
-    summ = hull.cluster_summaries(spark.createDataFrame(pts))
-    path = str(tmp_path / "shp_table")
-    mesh.write_cluster_attribute_table(summ, path, crs_wkt="PROJCS[\"demo\"]")
-    man = tables.table_manifest(path)
-    assert man["properties"]["fields"] == ["volume", "area", "clusterid", "ground", "status"]
-    assert man["properties"]["crs_wkt"].startswith("PROJCS")
-    back = tables.read_table(spark, path).toPandas().sort_values("clusterid")
-    assert list(back.status) == ["New", "Fled"]
-    assert (back.volume > 0).all()

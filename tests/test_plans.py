@@ -129,3 +129,56 @@ def test_icp_pass_is_one_exchange_free_cogroup(spark):
     # every moving point has a neighbor within 2.0 (planted 0.2 shift)
     assert int(acc[icp._ACC_COLS.index("n")]) == n
     assert drift == 0.0
+
+
+def _nodes(p):
+    """Java plan nodes of a physical plan, pre-order (through AQE's
+    initial plan)."""
+    if p.nodeName() == "AdaptiveSparkPlan":
+        yield from _nodes(p.initialPlan())
+        return
+    yield p
+    ch = p.children()
+    for i in range(ch.size()):
+        yield from _nodes(ch.apply(i))
+
+
+def test_raster_operators_share_one_tile_exchange(spark):
+    """infill_band_pass, extract_features and smrf_ground all run through
+    grid.tile_apply: ONE FlatMapGroupsInPandas, under it ONE Exchange
+    hash-partitioned on the tile keys (htx, hty). The first two read a
+    local raster, so that is their only Exchange; smrf_ground adds its
+    grid-min aggregation and the join back to the points."""
+    import numpy as np
+    import pandas as pd
+
+    from codem_spark.operators import grid, ground
+    from codem_spark.registration import features
+
+    rng = np.random.default_rng(2)
+    gx, gy = np.meshgrid(np.arange(40), np.arange(30), indexing="ij")
+    z = rng.normal(0, 1, gx.size)
+    dsm = spark.createDataFrame(pd.DataFrame(
+        {"gx": gx.ravel(), "gy": gy.ravel(), "z": z,
+         "z_u8": rng.integers(1, 256, gx.size).astype(np.int32)}
+    ))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"x": rng.uniform(0, 40, 500), "y": rng.uniform(0, 30, 500), "z": rng.normal(0, 1, 500)}
+    ))
+    frames = {
+        "infill_band_pass": grid.infill_band_pass(dsm.select("gx", "gy", "z"), 1.0, 2.0),
+        "extract_features": features.extract_features(dsm, (0, 0, 40, 30), 1.0),
+        "smrf_ground": ground.smrf_ground(pts, (0, 0, 40, 30), resolution=1.0, max_window=4.0),
+    }
+    for name, df in frames.items():
+        nodes = list(_nodes(df._jdf.queryExecution().executedPlan()))
+        kernels = [p for p in nodes if p.nodeName() == "FlatMapGroupsInPandas"]
+        assert len(kernels) == 1, (name, [p.nodeName() for p in nodes])
+        heads = [p.toString().splitlines()[0] for p in nodes if p.nodeName() == "Exchange"]
+        tile = [h for h in heads if "hashpartitioning(htx#" in h and ", hty#" in h]
+        assert len(tile) == 1, (name, heads)
+        under = [p.toString().splitlines()[0] for p in _nodes(kernels[0])
+                 if p.nodeName() == "Exchange"]
+        assert under[0] == tile[0], (name, under)
+        if name != "smrf_ground":
+            assert heads == tile, (name, heads)

@@ -330,6 +330,37 @@ def test_bandpass_keeps_keypoints_under_big_relief(spark):
     assert counts["relief"] > 200, counts
 
 
+def test_extract_features_pinned_on_multi_tile_dsm(spark):
+    """Keypoints on a seeded 300x280-cell DSM (four 256-px tiles, 3% voids,
+    a separate det_u8 plane) pinned to the output of the hand-written tile
+    plan that grid.tile_apply replaced."""
+    from codem_spark.registration import features
+
+    from tests.conftest import frame_digest
+
+    rng = np.random.default_rng(11)
+    gx, gy = np.meshgrid(np.arange(300), np.arange(280), indexing="ij")
+    gx, gy = gx.ravel(), gy.ravel()
+    trend = 20 * np.sin(gx / 37.0) * np.cos(gy / 29.0)
+    bump = np.zeros(gx.size)
+    for bx, by in rng.integers(5, 270, (60, 2)):
+        bump[(gx >= bx) & (gx < bx + 9) & (gy >= by) & (gy < by + 6)] += 12.0
+    z = trend + bump + rng.normal(0, 0.3, gx.size)
+    keep = rng.random(gx.size) > 0.03
+
+    def u8(v):
+        lo, hi = np.percentile(v, [1, 99])
+        return (np.round((np.clip(v, lo, hi) - lo) / (hi - lo) * 254) + 1).astype(np.int32)
+
+    pdf = pd.DataFrame(
+        {"gx": gx, "gy": gy, "z": z, "z_u8": u8(z), "det_u8": u8(bump + z - trend)}
+    )
+    dsm = spark.createDataFrame(pdf[keep].reset_index(drop=True))
+    kp = features.extract_features(dsm, (0, 0, 600, 560), 2.0).toPandas()
+    assert len(kp) == 248
+    assert frame_digest(kp, list(kp.columns), ["gx", "gy"]) == "2ab8483808aa8745"
+
+
 def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
     """The preprocess intermediates (raw + band-passed DSM caches of both
     sides) are released by coarse_registration even when the keypoint
