@@ -87,11 +87,24 @@ def test_cluster_sizes_window(spark):
     assert (got.cluster_size == 10).all()
 
 
-def test_infill_band_pass_matches_whole_raster_reference(spark):
-    """infill_band_pass on 32-px tiles equals the whole-raster numpy chain
-    _fill_voids(..., _INFILL_ROUNDS) -> _band_pass_np: voids (one on a tile
-    border), raster edges and tile borders included, and every interior
-    void is filled."""
+def test_infill_fills_all_interior_voids(spark):
+    # 10x10 grid with a 2x2 hole: the infill step must fill it with neighbor IDW
+    rows = [(gx, gy, float(gx + gy)) for gx in range(10) for gy in range(10)
+            if not (4 <= gx <= 5 and 4 <= gy <= 5)]
+    dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
+    filled = grid.infill_band_pass(dsm, weak_sigma_px=1.0, strong_sigma_px=2.5)
+    pdf = filled.toPandas()
+    assert len(pdf) == 100
+    hole = pdf[(pdf.gx.between(4, 5)) & (pdf.gy.between(4, 5))]
+    exp = hole.gx + hole.gy
+    assert np.allclose(hole.z.values, exp.values, atol=1.0)
+
+
+def test_infill_band_pass_fused_equals_sequential(spark):
+    """The fused infill+band-pass kernel on 32-px tiles equals the sequential
+    whole-raster numpy chain _fill_voids(..., _INFILL_ROUNDS) ->
+    _band_pass_np: voids (one on a tile border), raster edges and tile
+    borders included, and every interior void is filled."""
     rng = np.random.default_rng(7)
     rows = [
         (gx, gy, float(np.sin(gx * 0.3) * 5 + gy * 0.1 + rng.normal(0, 0.2)))
