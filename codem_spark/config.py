@@ -5,8 +5,8 @@ The reference validates every pipeline parameter in
 VCD variant in src/vcd/main.py:20-73; the pytest suite exercises the raises
 (tests/test_registration.py:93-98). This module re-creates that contract for
 the Spark engine: same parameter names (lower-cased), same ranges, same
-error-on-violation behavior, plus the engine-specific knobs (cell level,
-shuffle partitions, extent) that the distributed runtime needs.
+error-on-violation behavior, plus the engine's own switches (full-density
+ICP, tight search).
 """
 
 from __future__ import annotations
@@ -60,11 +60,6 @@ class EngineConfig:
     scale_x: str | float = "auto"
     scale_y: str | float = "auto"
     scale_z: str | float = "auto"
-    # --- engine-specific distributed knobs (new; no reference analog) ---
-    cell_level: int = 12  # Z-order level for tile partitioning
-    shuffle_partitions: int = 64
-    extent: tuple[float, float, float, float] = (0.0, 0.0, 100_000.0, 100_000.0)
-    output_dir: str | None = None
 
     def __post_init__(self) -> None:
         # Range checks mirror reference main.py:108-163 one-for-one.
@@ -100,17 +95,9 @@ class EngineConfig:
                 continue
             if not isinstance(v, (int, float)) or v <= 0:
                 raise ValueError(f"{name} must be 'auto' or a positive number.")
-        # Engine knobs.
-        if not 1 <= self.cell_level <= 30:
-            raise ValueError("cell_level must be between 1 and 30.")
-        x0, y0, x1, y1 = self.extent
-        if not (x1 > x0 and y1 > y0):
-            raise ValueError("extent must be (x0, y0, x1, y1) with x1>x0, y1>y0.")
 
     def to_dict(self) -> dict[str, Any]:
-        d = dataclasses.asdict(self)
-        d["extent"] = list(self.extent)
-        return d
+        return dataclasses.asdict(self)
 
     def dump(self, path: str) -> None:
         """Persist the run configuration (reference dumps config.yml,

@@ -45,8 +45,6 @@ def run_stage(
     stage: str,
     fn: Callable[[], DataFrame],
     input_fingerprint: str | None = None,
-    partition_by: list[str] | None = None,
-    properties: dict[str, Any] | None = None,
     metrics: dict[str, Any] | None = None,
 ) -> DataFrame:
     """Execute (or resume) one pipeline stage.
@@ -62,7 +60,7 @@ def run_stage(
         return tables.read_table(spark, out_path)
     t0 = time.time()
     df = fn()
-    tm = tables.write_table(df, out_path, partition_by=partition_by, properties=properties)
+    tm = tables.write_table(df, out_path)
     # per-partition lineage metrics come from the write's own parquet
     # footers (tables.parquet_file_metrics) — ONE Spark job per stage, where
     # r3 ran a pre-write groupBy job that recomputed the whole frame

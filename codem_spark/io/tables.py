@@ -2,9 +2,9 @@
 
 The north rule targets Iceberg tables; this container has no
 iceberg-spark-runtime jar, so all I/O goes through this one module
-(SURVEY.md §7 M0 decision): partitioned Parquet plus a ``_table_manifest.json``
-carrying what Iceberg table properties would carry — schema, partition spec,
-snapshot row counts, and the geospatial properties the data model requires
+(SURVEY.md §7 M0 decision): Parquet plus a ``_table_manifest.json``
+carrying what Iceberg table properties would carry — schema, snapshot row
+counts, and the geospatial properties the data model requires
 (crs, resolution_m, units_factor, area_or_point — reference preprocess.py:
 140-148,195-203). Swapping in real Iceberg later = reimplementing these
 four functions against ``spark.read.format("iceberg")``; callers don't
@@ -49,24 +49,19 @@ def parquet_file_metrics(path: str) -> list[dict[str, Any]]:
 def write_table(
     df: DataFrame,
     path: str,
-    partition_by: list[str] | None = None,
     properties: dict[str, Any] | None = None,
 ) -> dict[str, Any]:
-    """Write a partitioned Parquet table + manifest; returns the manifest.
+    """Write a Parquet table + manifest; returns the manifest.
 
     ONE Spark job: the write itself. Row counts and per-file metrics come
     from the written parquet footers (no read-back count job — at 100 TB a
     post-write count() doubles every stage's scan cost)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode("overwrite").parquet(path)
     fm = parquet_file_metrics(path)
     manifest = {
         "format": "parquet",
         "path": path,
         "schema": df.schema.jsonValue(),
-        "partition_by": partition_by or [],
         "row_count": sum(f["rows"] for f in fm),
         "file_metrics": fm,
         "properties": properties or {},
@@ -79,11 +74,11 @@ def write_table(
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     """Read a table written by write_table. When the manifest carries the
-    schema (always, for unpartitioned tables), pass it to the reader so NO
-    schema-inference job runs — at cluster scale that job samples footers
+    schema (always, for tables this module wrote), pass it to the reader so
+    NO schema-inference job runs — at cluster scale that job samples footers
     across the object store on every stage resume."""
     m = table_manifest(path)
-    if m is not None and m.get("schema") and not m.get("partition_by"):
+    if m is not None and m.get("schema"):
         from pyspark.sql.types import StructType
 
         return spark.read.schema(StructType.fromJson(m["schema"])).parquet(path)
@@ -107,8 +102,6 @@ def quantized_point_write(
     path: str,
     offsets: tuple[float | str, float | str, float | str] = ("auto", "auto", "auto"),
     scales: tuple[float | str, float | str, float | str] = ("auto", "auto", "auto"),
-    properties: dict[str, Any] | None = None,
-    partition_by: list[str] | None = None,
 ) -> dict[str, Any]:
     """S9: LAS-style scale/offset point quantization (reference
     apply.py:343-353 writer kwargs OFFSET_*/SCALE_*, config main.py:150-163).
@@ -143,16 +136,8 @@ def quantized_point_write(
     for a in axes:
         q = F.round((F.col(a) - F.lit(off[a])) / F.lit(scl[a])).cast("int")
         out = out.withColumn(a, q)
-    props = dict(properties or {})
-    props.update(
-        {
-            "point_quantization": {
-                "offsets": off,
-                "scales": scl,
-            }
-        }
-    )
-    return write_table(out, path, partition_by=partition_by, properties=props)
+    props = {"point_quantization": {"offsets": off, "scales": scl}}
+    return write_table(out, path, properties=props)
 
 
 def quantized_point_read(spark: SparkSession, path: str) -> DataFrame:

@@ -150,7 +150,6 @@ def cmd_register(spark: SparkSession, args: argparse.Namespace) -> dict:
         tight_search=args.tight_search,
         offset_x=args.offset_x, offset_y=args.offset_y, offset_z=args.offset_z,
         scale_x=args.scale_x, scale_y=args.scale_y, scale_z=args.scale_z,
-        output_dir=args.output_dir,
     )
     os.makedirs(args.output_dir, exist_ok=True)
     cfg.dump(os.path.join(args.output_dir, "config.json"))

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codem_spark.functions import cells
+from codem_spark.util import approx_row_count
 
 Extent = tuple[float, float, float, float]
 
@@ -437,6 +438,11 @@ def _types(df: DataFrame, prefix: str = "") -> dict[str, str]:
     }
 
 
+def _auto_level_of(left: DataFrame, extent: Extent, radius: float) -> int:
+    par = left.sparkSession.sparkContext.defaultParallelism
+    return auto_level(extent, radius, approx_row_count(left), parallelism=par)
+
+
 def knn_join(
     left: DataFrame,
     right: DataFrame,
@@ -456,12 +462,12 @@ def knn_join(
 
     Output columns: lid, n_<rid>, nn_dist, nn_rank, l_<carry...>, r_<carry...>.
 
-    ``level=None`` sizes tiles from the left-side row count, which costs a
-    count() job — callers that know the size should pass ``level``.
+    ``level=None`` sizes tiles from the left side's plan-statistics row
+    estimate (``util.approx_row_count``, no job); the output does not
+    depend on the tiling.
     """
     if level is None:
-        par = left.sparkSession.sparkContext.defaultParallelism
-        level = auto_level(extent, radius, left.count(), parallelism=par)
+        level = _auto_level_of(left, extent, radius)
     right_tiled = tile_right(right, extent, radius, level, dims, rid, r_carry)
     kernel = _topk_kernel_builder(
         k, radius, dims, lid, rid, list(l_carry), list(r_carry),
@@ -510,8 +516,7 @@ def radius_join(
     downstream distinct() + symmetrization sees.
     """
     if level is None:
-        par = left.sparkSession.sparkContext.defaultParallelism
-        level = auto_level(extent, radius, left.count(), parallelism=par)
+        level = _auto_level_of(left, extent, radius)
 
     def kernel(cell: int, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if cross_tile_only and len(rpdf):
@@ -587,8 +592,6 @@ def knn_join_complete(
     l_carry_full = tuple(dict.fromkeys([*dims, *l_carry]))
     kw = {**kw, "k": 1, "l_carry": l_carry_full}
     par = left.sparkSession.sparkContext.defaultParallelism
-    from codem_spark.util import approx_row_count
-
     right = right.localCheckpoint(eager=True)
     n_right = right.count()
     # Density-adaptive FIRST radius (scale-holding, guide §2.3): the

@@ -6,17 +6,20 @@ over 3D pairs, threshold 10 m, <=10^4 trials, dsm.py:232-257) -> umeyama
 closed-form similarity (dsm.py:523-592, Umeyama 1991 Eq. 38-43) -> RMSE
 (dsm.py:386-402).
 
-Engine design: the keypoint tables are small relative to the input (max
-hundreds per tile), so the match is a broadcast kNN: the smaller descriptor
-set is broadcast, the larger streams through ``mapInPandas`` computing
-vectorized 256-bit Hamming distances (XOR + popcount over 4 int64 lanes) —
-the same brute-force-vs-LSH capacity tradeoff the reference makes at 2^17
-descriptors (dsm.py:175-183) applies: above that, switch to the banded-LSH
-join in operators/dedup.py. RANSAC runs on the driver over the (tiny)
-putative-match table with a seeded generator — deterministic run-to-run.
+Engine design: keypoint tables are small relative to the input (at most
+``MAX_KP_PER_TILE`` per tile), so the match runs on the driver. One bounded
+collect per side (``BF_MATCH_CAPACITY + 1`` rows) both picks the route and
+feeds it: brute force over vectorized 256-bit Hamming distances (XOR +
+popcount over 4 int64 lanes) in AOI chunks of bounded size when both sides
+fit, else the banded-LSH join on the keypoint frames — the reference's
+brute-force-vs-LSH capacity switch at 2^17 descriptors (dsm.py:175-183).
+RANSAC runs on the driver over the (tiny) putative-match table with a
+seeded generator — deterministic run-to-run.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -40,95 +43,85 @@ def _popcount64(a: np.ndarray) -> np.ndarray:
     return out
 
 
-# Above this many foundation descriptors the broadcast brute-force matcher
-# switches to a banded-LSH candidate join — the same capacity switch the
-# reference makes from BFMatcher to FLANN-LSH (dsm.py:175-183).
+# Above this many descriptors on either side the driver brute-force matcher
+# switches to a banded-LSH candidate join — the capacity switch the reference
+# makes from BFMatcher to FLANN-LSH (dsm.py:175-183). Read at call time.
 BF_MATCH_CAPACITY = 1 << 17
+# The brute-force kernel takes AOI rows in chunks so that one Hamming block
+# holds at most this many int64 cells (32 MiB), whatever the side sizes.
+BF_CHUNK_CELLS = 1 << 22
+
+_KP_COLS = ["x", "y", "z", "d0", "d1", "d2", "d3"]
+_PAIR_COLS = ["fx", "fy", "fz", "ax", "ay", "az", "dist"]
+
+
+def _collect_capped(kp: DataFrame, cap: int) -> pd.DataFrame:
+    """At most ``cap + 1`` keypoint rows, in the frame's partition order.
+    The limit gathers rows through a single-partition exchange whose fetch
+    order is not fixed, so each row carries its monotonically increasing id
+    and the driver restores partition order from it."""
+    pdf = (
+        kp.select(*_KP_COLS, F.monotonically_increasing_id().alias("_ord"))
+        .limit(cap + 1)
+        .toPandas()
+    )
+    return pdf.sort_values("_ord", kind="stable").drop(columns="_ord").reset_index(drop=True)
 
 
 def match_features(
     fnd_kp: DataFrame,
     aoi_kp: DataFrame,
     lowes_ratio: float = 0.9,
-    capacity: int = BF_MATCH_CAPACITY,
 ) -> pd.DataFrame:
     """k=2 Hamming kNN of AOI descriptors against foundation descriptors +
-    Lowe ratio filter (reference dsm.py:185-197). Brute force against a
-    broadcast set when the foundation fits (<= capacity descriptors);
-    banded-LSH candidate join above that. Returns the putative-match pair
-    table as pandas (small by construction):
-    columns fx, fy, fz, ax, ay, az, dist."""
-    if fnd_kp.count() > capacity:
+    Lowe ratio filter (reference dsm.py:185-197). Returns the putative-match
+    pair table as pandas: columns fx, fy, fz, ax, ay, az, dist.
+
+    Each side is collected once, capped at ``BF_MATCH_CAPACITY + 1`` rows,
+    from two driver threads. When both sides fit, the collected frames feed
+    the driver brute force; when either is over the cap, the banded-LSH join
+    runs on the keypoint frames instead (callers persist them for it). The
+    reference switches on the foundation side alone; here an AOI side over
+    the cap also takes LSH."""
+    cap = BF_MATCH_CAPACITY
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(_collect_capped, kp, cap) for kp in (fnd_kp, aoi_kp)]
+        fnd, aoi = (f.result() for f in futs)
+    if len(fnd) > cap or len(aoi) > cap:
         return _match_features_lsh(fnd_kp, aoi_kp, lowes_ratio)
-    return _match_features_bf(fnd_kp, aoi_kp, lowes_ratio)
+    return _match_bf(fnd, aoi, lowes_ratio)
 
 
-def _match_features_bf(
-    fnd_kp: DataFrame,
-    aoi_kp: DataFrame,
-    lowes_ratio: float = 0.9,
-    driver_cap: int = BF_MATCH_CAPACITY,
-) -> pd.DataFrame:
-    fnd = fnd_kp.select("x", "y", "z", "d0", "d1", "d2", "d3").toPandas()
+def _match_bf(fnd: pd.DataFrame, aoi: pd.DataFrame, lowes_ratio: float) -> pd.DataFrame:
+    """Brute-force k=2 Hamming match on the driver: XOR + popcount over the
+    4 int64 descriptor lanes, AOI rows in chunks of at most
+    ``BF_CHUNK_CELLS`` distance cells. Rows are independent, so the output
+    does not depend on the chunk size."""
+    if len(fnd) < 2:  # no second-nearest neighbour for the ratio test
+        aoi = aoi.iloc[:0]
     fdesc = fnd[["d0", "d1", "d2", "d3"]].to_numpy(np.int64)
     fxyz = fnd[["x", "y", "z"]].to_numpy(np.float64)
-    sc = aoi_kp.sparkSession.sparkContext
-    bc = sc.broadcast((fdesc, fxyz))
-
-    def batches(it):
-        fdesc_, fxyz_ = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            adesc = pdf[["d0", "d1", "d2", "d3"]].to_numpy(np.int64)
-            # Hamming distance matrix via XOR + popcount, lane by lane
-            d = np.zeros((len(adesc), len(fdesc_)), dtype=np.int64)
-            for lane in range(4):
-                x = adesc[:, lane : lane + 1] ^ fdesc_[None, :, lane]
-                d += _popcount64(x)
-            if d.shape[1] < 2:
-                continue
-            p2 = np.argpartition(d, 1, axis=1)[:, :2]
-            rows = np.arange(len(adesc))
-            d2v = d[rows[:, None], p2]
-            swap = d2v[:, 0] > d2v[:, 1]
-            p2[swap] = p2[swap][:, ::-1]
-            d2v[swap] = d2v[swap][:, ::-1]
-            keep = d2v[:, 0] < lowes_ratio * d2v[:, 1]
-            best = p2[keep, 0]
-            out = pd.DataFrame(
-                {
-                    "fx": fxyz_[best, 0],
-                    "fy": fxyz_[best, 1],
-                    "fz": fxyz_[best, 2],
-                    "ax": pdf["x"].to_numpy()[keep],
-                    "ay": pdf["y"].to_numpy()[keep],
-                    "az": pdf["z"].to_numpy()[keep],
-                    "dist": d2v[keep, 0].astype(np.float64),
-                }
-            )
-            yield out
-
-    cols = ["fx", "fy", "fz", "ax", "ay", "az", "dist"]
-    # Keypoint tables are tile-bounded (MAX_KP_PER_TILE x tiles), so BOTH
-    # sides usually fit on the driver: run the identical batch kernel
-    # in-process and skip a whole distributed Python stage (mapInPandas +
-    # collect measured ~0.6 s of the coarse solve for a 237-row AOI side).
-    # Above the cap, stream the AOI side through executors as before.
-    n_aoi = aoi_kp.count()  # callers persist+count the kp tables: cached
-    if n_aoi <= driver_cap:
-        apdf = aoi_kp.select("x", "y", "z", "d0", "d1", "d2", "d3").toPandas()
-        parts = list(batches(iter([apdf])))
-        out = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({c: [] for c in cols})
-        )
-        return out
-    schema = "fx double, fy double, fz double, ax double, ay double, az double, dist double"
-    return aoi_kp.select("x", "y", "z", "d0", "d1", "d2", "d3").mapInPandas(
-        batches, schema=schema
-    ).toPandas()
+    adesc = aoi[["d0", "d1", "d2", "d3"]].to_numpy(np.int64)
+    axyz = aoi[["x", "y", "z"]].to_numpy(np.float64)
+    n = len(adesc)
+    best = np.zeros(n, dtype=np.int64)
+    d2v = np.zeros((n, 2), dtype=np.int64)
+    step = max(1, BF_CHUNK_CELLS // max(len(fdesc), 1))
+    for lo in range(0, n, step):
+        a = adesc[lo : lo + step]
+        d = np.zeros((len(a), len(fdesc)), dtype=np.int64)
+        for lane in range(4):
+            d += _popcount64(a[:, lane : lane + 1] ^ fdesc[None, :, lane])
+        p2 = np.argpartition(d, 1, axis=1)[:, :2]
+        dv = np.take_along_axis(d, p2, axis=1)
+        swap = dv[:, 0] > dv[:, 1]
+        p2[swap] = p2[swap][:, ::-1]
+        dv[swap] = dv[swap][:, ::-1]
+        best[lo : lo + step] = p2[:, 0]
+        d2v[lo : lo + step] = dv
+    keep = d2v[:, 0] < lowes_ratio * d2v[:, 1]
+    cols = [*fxyz[best[keep]].T, *axyz[keep].T, d2v[keep, 0].astype(np.float64)]
+    return pd.DataFrame(dict(zip(_PAIR_COLS, cols)))
 
 
 def _match_features_lsh(
@@ -141,7 +134,7 @@ def _match_features_lsh(
     16-bit band of any of the 4 descriptor lanes (catching near-Hamming
     matches with high recall, like the reference's FLANN multi-probe LSH);
     exact Hamming + per-AOI-keypoint top-2 + Lowe ratio on the candidates —
-    one banded shuffle join instead of a broadcast."""
+    one banded shuffle join instead of a driver collect."""
     mask = (1 << band_bits) - 1
 
     def banded(df: DataFrame, prefix: str) -> DataFrame:

@@ -56,8 +56,8 @@ def _prep_dsm(
     points: DataFrame,
     extent: Extent,
     resolution: float,
-    cfg: EngineConfig | None = None,
-    release: list | None = None,
+    cfg: EngineConfig,
+    release: list,
 ) -> DataFrame:
     """points -> infilled, band-passed, normalized DSM tile table (the
     reference's GeoData.prep: _infill -> _normalize, preprocess.py:360-373):
@@ -68,8 +68,10 @@ def _prep_dsm(
     exact percentiles, NOT approxQuantile: GK sketches depend on partition
     layout, so the quantized DSM (hence keypoints, hence n_pairs) would
     differ between cluster sizes — the north rule demands identical
-    outputs. The DSM is already resolution-reduced, so exact is cheap."""
-    cfg = cfg or EngineConfig()
+    outputs. The DSM is already resolution-reduced, so exact is cheap.
+
+    The raw and band-passed DSM caches go into ``release``: the caller
+    unpersists them once the returned DSM is materialized."""
     # persist the raw DSM: the fused kernel's bbox agg and the kernel pass
     # itself would otherwise each rerun the full grid_max aggregation
     dsm = grid.grid_max(points, extent, resolution).persist()
@@ -97,27 +99,19 @@ def _prep_dsm(
     # 121 -> 4 on a 2.5 px translation), whereas the full-band surface is
     # stable. The reference's multi-scale float AKAZE descriptor tolerates
     # band-passed input; a single-scale binary descriptor does not.
-    # ONE agg for all four clip percentiles (two columns x lo/hi) instead
-    # of one percentile job per quantized column
+    # ONE agg for both clip pairs: one array-percentile aggregate (one value
+    # buffer) per quantized column
     qs = bp.agg(
-        F.expr("percentile(bp, 0.01)").alias("bp_lo"),
-        F.expr("percentile(bp, 0.99)").alias("bp_hi"),
-        F.expr("percentile(z, 0.01)").alias("z_lo"),
-        F.expr("percentile(z, 0.99)").alias("z_hi"),
+        F.expr("percentile(bp, array(0.01, 0.99))").alias("bp_q"),
+        F.expr("percentile(z, array(0.01, 0.99))").alias("z_q"),
     ).collect()[0]
-    q = grid.quantize_normalize(bp, "bp", bounds=(qs["bp_lo"], qs["bp_hi"]))
-    q = grid.quantize_normalize(q, "z", bounds=(qs["z_lo"], qs["z_hi"]))
+    q = grid.quantize_normalize(bp, "bp", bounds=tuple(qs["bp_q"]))
+    q = grid.quantize_normalize(q, "z", bounds=tuple(qs["z_q"]))
     out = q.select("gx", "gy", "z", "z_u8", F.col("bp_u8").alias("det_u8")).persist()
-    if release is not None:
-        # caller-managed lifecycle: skip the dedicated materialization job —
-        # the first consumer (the keypoint count in coarse_registration)
-        # materializes `out` through the still-cached band-pass, and the
-        # caller releases these handles right after
-        release.extend([bp, dsm])
-        return out
-    out.count()  # materialize through the cached band-pass, then release it
-    bp.unpersist(False)
-    dsm.unpersist(False)
+    # no dedicated materialization job: the first consumer (the keypoint
+    # collect in coarse_registration) materializes `out` through the
+    # still-cached band-pass, and the caller releases these handles after it
+    release.extend([bp, dsm])
     return out
 
 
@@ -189,30 +183,19 @@ def coarse_registration(
     capture: dict | None = None,
 ) -> RegistrationParameters:
     cfg = cfg or EngineConfig()
-    # persist keypoints: the matcher consumes each side twice (capacity
-    # probe + broadcast/batch pass) — without the cache the Harris tile
-    # kernels rerun per consumer. The two sides' extraction DAGs are
-    # independent — materialize them from two driver threads so the Harris
-    # tile kernels interleave on the executors (same pattern as preprocess).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # persist keypoints: the LSH route reads both frames again after the
+    # matcher's bounded collects, which would otherwise rerun the Harris
+    # tile kernels. Those collects materialize both DSM caches, so the
+    # preprocess intermediates (raw + band-passed DSM caches) are released
+    # with the keypoints — also on failure, when nothing else would.
     fnd_kp = features.extract_features(prep.fnd_dsm, prep.extent, prep.resolution).persist()
     aoi_kp = features.extract_features(prep.aoi_dsm, prep.extent, prep.resolution).persist()
     try:
-        try:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for f in [pool.submit(fnd_kp.count), pool.submit(aoi_kp.count)]:
-                    f.result()
-        finally:
-            # the keypoint counts just materialized both DSM caches
-            # end-to-end — the preprocess intermediates (raw + band-passed
-            # DSM caches) are no longer needed by anything, and on failure
-            # nothing will ever release them
-            prep.release_upstream()
         return coarse_mod.coarse_registration(fnd_kp, aoi_kp, cfg, capture=capture)
     finally:
         fnd_kp.unpersist(False)
         aoi_kp.unpersist(False)
+        prep.release_upstream()
 
 
 def fine_registration_stage(

@@ -223,7 +223,8 @@ def run_vcd(
 ) -> tuple[DataFrame, DataFrame, dict[str, DataFrame]]:
     """Full VCD run -> (clustered change points, cluster summaries,
     product rasters). The clustered frame carries uint16 RGB columns (the
-    reference's colored LAS product) and has cull_cluster_ids applied."""
+    reference's colored LAS product), has cull_cluster_ids applied and is
+    persisted: the caller unpersists it."""
     cfg = cfg or VcdConfig()
     b = preprocess_filters(before, cfg) if "classification" in before.columns else before
     a = preprocess_filters(after, cfg) if "classification" in after.columns else after
@@ -248,9 +249,14 @@ def run_vcd(
         clustered = clustered.filter(
             ~F.col("cluster_id").isin(list(cfg.cull_cluster_ids))
         )
+    # the color-range agg materializes the cluster cache, the colored frame
+    # is cached from it, and that cache is the one the caller's handle holds
     clustered = clustered.persist()
-    clustered.count()  # materialize once; the color-range agg hits the cache
-    clustered = colored_clusters(clustered)
-    summaries = hull.cluster_summaries(clustered)
+    try:
+        colored = colored_clusters(clustered).persist()
+        colored.count()
+    finally:
+        clustered.unpersist()
+    summaries = hull.cluster_summaries(colored)
     prods = products(sig, extent, cfg)
-    return clustered, summaries, prods
+    return colored, summaries, prods

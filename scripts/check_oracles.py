@@ -1,9 +1,17 @@
 """Driver-contract simulator: run every queries() entry and its oracle_sql()
 side by side at sf0.01, sort columns by name, compare row counts + values
-(the same comparison CORRECTNESS_r{N}.json records)."""
-import sys, time
+(the same comparison CORRECTNESS_r{N}.json records).
 
-sys.path.insert(0, "/root/repo")
+    python scripts/check_oracles.py [SF_DIR] [query,query,...]
+
+The local[N] core count comes from SPARK_GRAFT_CPUS (default: all cores;
+codem_spark.session.get_spark)."""
+import os, sys, time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# the Python workers import codem_spark too, whatever the working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 import duckdb
 import pandas as pd
 import __spark_entry__ as E
@@ -12,7 +20,7 @@ from codem_spark.session import get_spark
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
-spark = get_spark(cpus=16, extra_conf={"spark.ui.showConsoleProgress": "false"})
+spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
 con = duckdb.connect()
 for t in ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"):

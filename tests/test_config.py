@@ -30,9 +30,6 @@ def test_defaults_valid():
         {"icp_rmse_threshold": 0.0},
         {"offset_x": "bogus"},
         {"scale_z": -3.0},
-        {"cell_level": 0},
-        {"cell_level": 31},
-        {"extent": (10.0, 0.0, 0.0, 5.0)},
     ],
 )
 def test_invalid_raises(kw):

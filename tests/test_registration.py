@@ -150,6 +150,33 @@ def test_coarse_recovers_inverse(spark, clouds, foundation_sources, foundation_k
         assert abs(d[t]) < 2.0 * RES, f"{t}={d[t]}"
 
 
+@pytest.mark.parametrize("case", ["identity", "rot90_translate", "rot180"])
+def test_coarse_lsh_route_recovers_inverse(spark, clouds, case, monkeypatch):
+    """The banded-LSH match route, forced by a brute-force capacity of 0,
+    registers within the tolerances of test_coarse_recovers_inverse."""
+    from codem_spark.registration import coarse
+
+    fnd, aoi0 = clouds
+    M = CASES[case]
+    cfg = EngineConfig(min_resolution=RES)
+    prep = P.preprocess(
+        spark.createDataFrame(fnd), spark.createDataFrame(_perturb(aoi0, M)),
+        extent=EXT, cfg=cfg, resolution=RES,
+    )
+    monkeypatch.setattr(coarse, "BF_MATCH_CAPACITY", 0)
+    c = P.coarse_registration(prep, cfg)
+    prep.fnd_dsm.unpersist()
+    prep.aoi_dsm.unpersist()
+    d = decompose_similarity(np.array(c.matrix) @ M)
+    assert c.n_pairs >= 5
+    assert c.rmse_3d < 2.5
+    assert abs(d["scale"] - 1.0) < 0.01
+    for a in ("omega", "phi", "kappa"):
+        assert abs(d[a]) < 1.0, f"{a}={d[a]}"
+    for t in ("trans_x", "trans_y", "trans_z"):
+        assert abs(d[t]) < 2.0 * RES, f"{t}={d[t]}"
+
+
 def test_fine_refines_to_subresolution(spark, clouds):
     # full-density mode: AOI points are EXACT foundation subsets, so ICP can
     # snap near-exactly — the engine-extra exactness pin. The default
@@ -324,8 +351,11 @@ def test_bandpass_keeps_keypoints_under_big_relief(spark):
     counts = {}
     for name, z in (("flat", flat), ("relief", relief)):
         pts = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": z}))
-        dsm = P._prep_dsm(pts, EXT, RES, cfg)
+        release: list = []
+        dsm = P._prep_dsm(pts, EXT, RES, cfg, release)
         counts[name] = features.extract_features(dsm, EXT, RES).count()
+        for df in (dsm, *release):
+            df.unpersist()
     assert counts["relief"] >= 0.5 * counts["flat"], counts
     assert counts["relief"] > 200, counts
 
@@ -363,8 +393,8 @@ def test_extract_features_pinned_on_multi_tile_dsm(spark):
 
 def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
     """The preprocess intermediates (raw + band-passed DSM caches of both
-    sides) are released by coarse_registration even when the keypoint
-    count that would have consumed them raises."""
+    sides) are released by coarse_registration even when the matcher's
+    first use of the keypoint frames (its bounded collect) raises."""
     from codem_spark.registration import features
 
     rng = np.random.default_rng(5)
@@ -388,15 +418,15 @@ def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
         def persist(self):
             return self
 
-        def count(self):
-            raise RuntimeError("keypoint count failed")
+        def select(self, *cols):
+            raise RuntimeError("keypoint collect failed")
 
         def unpersist(self, blocking=False):
             return self
 
     monkeypatch.setattr(features, "extract_features", lambda *a, **k: _FailingKeypoints())
     try:
-        with pytest.raises(RuntimeError, match="keypoint count failed"):
+        with pytest.raises(RuntimeError, match="keypoint collect failed"):
             P.coarse_registration(prep)
         assert not upstream & cached_ids()
     finally:

@@ -53,6 +53,29 @@ def test_vcd_detects_planted_changes(spark, before_after):
     clustered.unpersist()
 
 
+def test_run_vcd_returned_frame_holds_its_cache(spark):
+    """Unpersisting the clustered frame run_vcd returns releases the cache
+    run_vcd made for it."""
+    rng = np.random.default_rng(3)
+    n = 5_000
+    x = rng.uniform(0, 200, n)
+    y = rng.uniform(0, 200, n)
+    z = np.where((x > 80) & (x < 120) & (y > 80) & (y < 120), 8.0, 0.0)
+    before = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": np.zeros(n)}))
+    after = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n) + n, "x": x, "y": y, "z": z}))
+    jsc = spark.sparkContext._jsc
+
+    def cached_ids() -> set:
+        return set(jsc.getPersistentRDDs().keys())
+
+    start = cached_ids()
+    cfg = vcd.VcdConfig(tolerance=10.0, min_points=5, resolution=20.0, knn_radius=30.0)
+    clustered, _summaries, _prods = vcd.run_vcd(before, after, (0.0, 0.0, 200.0, 200.0), cfg)
+    held = cached_ids() - start
+    clustered.unpersist()
+    assert len(held - cached_ids()) == 1
+
+
 def test_convex_hull_matches_known():
     pts = np.array([[0, 0], [2, 0], [2, 2], [0, 2], [1, 1], [0.5, 0.5]])
     h = hull.convex_hull_2d(pts)
