@@ -10,9 +10,10 @@ Scale notes:
   distinct digest per partition.
 * minhash-LSH: signatures are computed scan-side (no shuffle); the only
   shuffle is groupBy(band_key), whose fan-out is n_bands rows per doc;
-  candidate pairs then verify jaccard with a JVM array intersect.
-* simhash: 64-bit fingerprint scan-side; near-dup = equality on rotated
-  band keys (here: 4x16-bit bands via bit slicing).
+  candidate pairs then join back to the shingle sets to verify jaccard.
+* simhash: 64-bit fingerprint scan-side; near-dup = equality on band keys
+  (default 2x32-bit bands via bit slicing), Hamming distance verified on
+  the in-bucket pair (the fingerprint rides in the bucket; no join back).
 """
 
 from __future__ import annotations
@@ -244,8 +245,11 @@ def minhash_band_keys_col(
 
 
 def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
-    """(band, bkey, did) -> candidate pairs (id_a < id_b) with a hot-bucket
-    guard. Buckets of size <= ``cap`` emit every pair (exact banded-LSH
+    """(band, bkey, did, *payload) -> one row per in-bucket pair: member
+    structs ``a``, ``b`` (``did`` then every payload column; a.did < b.did),
+    so callers verify from ``a.*``/``b.*`` with no join back. NOT
+    deduplicated across bands: callers score, filter, then ``distinct()``.
+    Buckets of size <= ``cap`` emit every pair (exact banded-LSH
     semantics). Larger buckets — boilerplate/empty docs sharing a signature,
     the quadratic scale-killer at 10^12 rows — emit STAR pairs instead
     (bucket-min did vs every member): O(m) rows per m-member bucket, and any
@@ -257,21 +261,18 @@ def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
     paired. Pass ``cap=None`` for exact (all-pairs) banded-LSH semantics.
 
     Plan shape: ONE shuffle. groupBy(band, bkey) collects each bucket's
-    sorted member array, and the pair list (all-pairs or star) is generated
-    by JVM array expressions and exploded — no Python, no second pass. The
-    earlier plan (sizes agg -> join back -> self-join on (band, bkey)) moved
-    the banded frame through three shuffles; on a DRAM-thin host that extra
-    shuffle traffic was the minhash stage's core-scaling ceiling (measured
-    1.65x at 4 -> 16 cores)."""
-    ms = F.array_sort(F.collect_list("did")).alias("ms")
-    buckets = banded.groupBy("band", "bkey").agg(ms)
+    did-sorted member array, and the pair list (all-pairs or star) is
+    generated by JVM array expressions and exploded — no Python, no second
+    pass."""
+    payload = [c for c in banded.columns if c not in ("band", "bkey", "did")]
+    ms = F.array_sort(F.collect_list(F.struct("did", *payload))).alias("ms")
     arr = F.col("ms")
     all_pairs = F.flatten(
         F.transform(
             arr,
             lambda x, i: F.transform(
                 F.slice(arr, i + F.lit(2), F.size(arr)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
             ),
         )
     )
@@ -280,13 +281,13 @@ def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
     else:
         star = F.transform(
             F.slice(arr, 2, F.size(arr)),
-            lambda y: F.struct(F.element_at(arr, 1).alias("id_a"), y.alias("id_b")),
+            lambda y: F.struct(F.element_at(arr, 1).alias("a"), y.alias("b")),
         )
         pairs = F.when(F.size(arr) <= F.lit(cap), all_pairs).otherwise(star)
     return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
+        banded.groupBy("band", "bkey").agg(ms)
+        .select(F.explode(pairs).alias("p"))
+        .select("p.a", "p.b")
     )
 
 
@@ -321,7 +322,8 @@ def minhash_lsh_candidates(
         "did", minhash_band_keys_col(F.col("sh"), num_hashes, bands).alias("bkeys")
     )
     banded = keys.select("did", F.posexplode("bkeys").alias("band", "bkey"))
-    return _bucket_pairs(banded, cap=bucket_cap)
+    pairs = _bucket_pairs(banded, cap=bucket_cap)
+    return pairs.select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b")).distinct()
 
 
 def jaccard_verify(
@@ -432,10 +434,9 @@ def simhash_candidates(
     for the looser small-data behavior. Buckets above ``bucket_cap`` emit
     star pairs (see _bucket_pairs) — the residual guard for pathological
     keys (e.g. simhash 0 from empty docs)."""
-    df = rebalance(df)
-    d = df.select(
+    d = rebalance(df).select(
         F.col(id_col).alias("did"), simhash_col(F.col(text_col)).alias("sh")
-    ).persist()  # joined back onto both pair sides for the hamming distance
+    )
     return simhash_candidates_from(d, band_bits, hamming_max, bucket_cap)
 
 
@@ -446,9 +447,9 @@ def simhash_candidates_from(
     bucket_cap: int | None = 64,
 ) -> DataFrame:
     """Banding half of :func:`simhash_candidates` over a PRECOMPUTED
-    (did, sh) fingerprint frame — callers that also need the fingerprints
-    (e.g. an exact verifier) compute them once, persist, and avoid a second
-    scan-side UDF pass."""
+    (did, sh) fingerprint frame — for callers that also need the
+    fingerprints (e.g. an exact verifier). ``sh`` rides in the bucket and
+    the Hamming distance is scored there: ``d`` is read once, no join back."""
     bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     bexpr = F.array(
@@ -460,19 +461,13 @@ def simhash_candidates_from(
             for bi in range(bands)
         ]
     )
-    banded = d.select("did", F.explode(bexpr).alias("b")).select(
-        "did", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
+    banded = d.select("did", "sh", F.explode(bexpr).alias("b")).select(
+        "did", "sh", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
     )
-    pairs = _bucket_pairs(banded, cap=bucket_cap)
-    sh_a = d.select(F.col("did").alias("id_a"), F.col("sh").alias("_sha"))
-    sh_b = d.select(F.col("did").alias("id_b"), F.col("sh").alias("_shb"))
+    hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming")
     return (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("_sha").bitwiseXOR(F.col("_shb"))).alias("hamming"),
-        )
+        _bucket_pairs(banded, cap=bucket_cap)
+        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"), hamming)
         .filter(F.col("hamming") <= F.lit(hamming_max))
+        .distinct()
     )

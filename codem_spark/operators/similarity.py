@@ -4,7 +4,8 @@ Engine-new operators for the training-data tier: brute-force cosine top-k as
 the correctness baseline, and an LSH-bucketed (random-hyperplane) variant as
 the 100 TB scale path — the same adaptive brute-force/LSH split the
 reference applies to descriptor matching (dsm.py:175-187: BF under 2^17
-rows, LSH above).
+rows, LSH above). Embedding dedup scores each candidate pair inside its
+LSH bucket (``dedup._bucket_pairs``), with no join back to the vectors.
 
 Dot products run through ``F.aggregate``/``F.zip_with``: JVM expressions,
 but ``CodegenFallback`` ones, interpreted per row rather than compiled;
@@ -29,8 +30,11 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b) + F.lit(1e-30))
+def _cosine(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of vector columns ``a``, ``b`` given their norm columns. Norms
+    are computed once per row, not per pair (two array folds per pair
+    saved); the values are identical, so so is the cosine."""
+    return dot_col(F.col(a), F.col(b)) / (F.col(na) * F.col(nb) + F.lit(1e-30))
 
 
 def cosine_topk_bruteforce(
@@ -44,11 +48,6 @@ def cosine_topk_bruteforce(
     """Exact top-k by cosine: broadcast-join all pairs (query side small or
     chunked), rank with a window. Deterministic: ties break by data id.
     Output: (q_id, d_id, cos_sim, rank)."""
-    # norms hoisted out of the pair stage: computing norm_col per PAIR
-    # evaluated two 64-element array folds for every (q, d) combination;
-    # per-row norms are the identical float values (same fold, same input)
-    # so dot/(qn*dn + eps) is bit-for-bit the old cosine_col result at a
-    # third of the pair-stage expression work (guide §1.2 per-task work)
     q = queries.select(
         F.col(qid).alias("q_id"), F.col(vec).alias("q_vec"),
         norm_col(F.col(vec)).alias("_qn"),
@@ -58,9 +57,7 @@ def cosine_topk_bruteforce(
         norm_col(F.col(vec)).alias("_dn"),
     )
     pairs = q.join(F.broadcast(d), F.col("q_id") != F.col("d_id"))
-    sim = dot_col(F.col("q_vec"), F.col("d_vec")) / (
-        F.col("_qn") * F.col("_dn") + F.lit(1e-30)
-    )
+    sim = _cosine("q_vec", "d_vec", "_qn", "_dn")
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("d_id"))
     return (
         pairs.select("q_id", "d_id", F.round(sim, 6).alias("cos_sim"))
@@ -103,14 +100,15 @@ def lsh_buckets_udf_col(vec: Column, dim: int, n_planes: int, n_tables: int) -> 
 def _lsh_banded(
     df: DataFrame, id_col: str, vec: str, dim: int, n_planes: int, n_tables: int
 ) -> DataFrame:
-    """(did, vec, band, bkey): one row per vector and LSH table (band =
-    table index, bkey = that table's bucket id)."""
+    """(did, vec, n, band, bkey): one row per vector (norm ``n``) and LSH
+    table (band = table index, bkey = that table's bucket id)."""
     b = df.select(
         F.col(id_col).alias("did"),
         F.col(vec).alias("vec"),
+        norm_col(F.col(vec)).alias("n"),
         lsh_buckets_udf_col(F.col(vec), dim, n_planes, n_tables).alias("_bks"),
     )
-    return b.select("did", "vec", F.posexplode("_bks").alias("band", "bkey"))
+    return b.select("did", "vec", "n", F.posexplode("_bks").alias("band", "bkey"))
 
 
 def cosine_topk_lsh(
@@ -133,13 +131,13 @@ def cosine_topk_lsh(
     qb = _lsh_banded(queries, qid, vec, dim, n_planes, n_tables)
     db = _lsh_banded(data, did, vec, dim, n_planes, n_tables)
     pairs = (
-        qb.withColumnsRenamed({"did": "q_id", "vec": "q_vec"})
-        .join(db.withColumnsRenamed({"did": "d_id", "vec": "d_vec"}), ["band", "bkey"])
+        qb.withColumnsRenamed({"did": "q_id", "vec": "q_vec", "n": "q_n"})
+        .join(db.withColumnsRenamed({"did": "d_id", "vec": "d_vec", "n": "d_n"}), ["band", "bkey"])
         .filter(F.col("q_id") != F.col("d_id"))
-        .select("q_id", "q_vec", "d_id", "d_vec")
+        .select("q_id", "q_vec", "q_n", "d_id", "d_vec", "d_n")
         .dropDuplicates(["q_id", "d_id"])
     )
-    sim = cosine_col(F.col("q_vec"), F.col("d_vec"))
+    sim = _cosine("q_vec", "d_vec", "q_n", "d_n")
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("d_id"))
     return (
         pairs.select("q_id", "d_id", F.round(sim, 6).alias("cos_sim"))
@@ -165,7 +163,8 @@ def embedding_cosine_dedup(
     ``bucket_cap`` emit O(m) star pairs vs the bucket-min representative —
     the correct guard when a 10^12-row corpus has million-member duplicate
     clusters, whose members all verify against the representative and drop,
-    which is the dedup contract), exact cosine verify at ``threshold``,
+    which is the dedup contract), exact cosine verify at ``threshold`` on
+    the in-bucket pair (vectors and norms ride in the bucket; no join back),
     drop the higher id of each confirmed pair. Near-identical vectors
     (angle ~0) collide in some table with probability
     ~1 - (angle/pi * n_planes)^n_tables ~ 1, so recall at dedup-grade
@@ -173,15 +172,11 @@ def embedding_cosine_dedup(
     from codem_spark.operators.dedup import _bucket_pairs
 
     banded = _lsh_banded(df, id_col, vec, dim, n_planes, n_tables)
-    pairs = _bucket_pairs(banded, cap=bucket_cap)
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec).alias("_va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec).alias("_vb"))
-    sim = cosine_col(F.col("_va"), F.col("_vb"))
+    sim = _cosine("a.vec", "b.vec", "a.n", "b.n")
     dup = (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
+        _bucket_pairs(banded, cap=bucket_cap)
         .filter(sim >= F.lit(threshold))
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("b.did").alias(id_col))
         .distinct()
     )
     return df.join(dup, id_col, "left_anti")

@@ -89,8 +89,12 @@ def test_bucket_cap_none_is_exact_and_stats_observable(spark):
         dd.minhash_band_keys_col(dd.shingles_col(F.col("text"), 3), 64, 16).alias("bkeys"),
     )
     banded = keys.select("did", F.posexplode("bkeys").alias("band", "bkey"))
-    exact = set(map(tuple, dd._bucket_pairs(banded, cap=None).collect()))
-    capped = set(map(tuple, dd._bucket_pairs(banded, cap=2).collect()))
+
+    def ids(cap):
+        pairs = dd._bucket_pairs(banded, cap=cap).select("a.did", "b.did").distinct()
+        return set(map(tuple, pairs.collect()))
+
+    exact, capped = ids(None), ids(2)
     # the capped set is a subset (star pairs are a subset of all-pairs
     # within each bucket)
     assert capped <= exact or len(exact) == 0
@@ -138,6 +142,16 @@ def test_candidates_alone_persist_nothing(spark):
     before = _persisted(spark)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     dedup.minhash_lsh_candidates(docs).count()
+    assert not _persisted(spark) - before
+
+
+def test_simhash_candidates_persist_nothing(spark):
+    """simhash scores the Hamming distance inside the bucket, so it has no
+    fingerprint frame to persist for a join back."""
+    spark.catalog.clearCache()
+    before = _persisted(spark)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    dedup.simhash_candidates(docs).count()
     assert not _persisted(spark) - before
 
 

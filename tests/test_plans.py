@@ -182,3 +182,26 @@ def test_raster_operators_share_one_tile_exchange(spark):
         assert under[0] == tile[0], (name, under)
         if name != "smrf_ground":
             assert heads == tile, (name, heads)
+
+
+def _joins(df) -> list[str]:
+    """First lines of the join operators of ``df``'s executed plan."""
+    return [
+        p.toString().splitlines()[0]
+        for p in _nodes(df._jdf.queryExecution().executedPlan())
+        if p.nodeName().endswith("Join") or p.nodeName() == "CartesianProduct"
+    ]
+
+
+def test_banded_dedup_verifies_in_bucket_without_join_back(spark):
+    """simhash and embedding dedup score each candidate pair inside its LSH
+    bucket (dedup._bucket_pairs carries the payload), so neither joins the
+    fingerprints or vectors back onto the pair sides: simhash has no join,
+    embedding dedup only the left_anti that drops the confirmed copies."""
+    from codem_spark.operators import dedup, similarity
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert _joins(dedup.simhash_candidates(docs)) == []
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    joins = _joins(similarity.embedding_cosine_dedup(emb, dim=64))
+    assert len(joins) == 1 and "LeftAnti" in joins[0], joins
