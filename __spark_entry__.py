@@ -84,7 +84,7 @@ def _q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codem_spark.functions import cells
 
     pts = _points(spark, sf_dir)
-    cell = cells.cell_encode_col(F.col("x"), F.col("y"), EXTENT, 10)
+    cell = cells.cell_encode_col("x", "y", EXTENT, 10)
     return (
         pts.select(cell.alias("cell_id"))
         .groupBy("cell_id")

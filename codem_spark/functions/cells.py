@@ -12,10 +12,13 @@ L-bit quantized (x, y) within the dataset extent, so:
 * neighbor cells are (ix±1, iy±1) re-interleaved — the tile+halo pattern
   (operators/knn.tile_right) duplicates rows into their 3x3 neighbor ring.
 
-Everything here is implemented three ways, bit-for-bit identical:
-``*_col``   — Spark Column expressions (JVM whole-stage codegen, no Python);
-``*_np``    — vectorized numpy (inside pandas-UDF kernels);
-``*_sql``   — ANSI SQL string (DuckDB oracle in __spark_entry__.py).
+The encoder is written twice, bit-for-bit identical:
+``*_sql``   — SQL strings: parsed by Spark (``with_cell``, ``cell_encode_col``,
+              ``explode_halo``, ``border_col`` — JVM whole-stage codegen, no
+              Python) and by DuckDB (``cell_encode_sql``, the oracle in
+              __spark_entry__.py);
+``*_np``    — vectorized numpy (inside pandas-UDF kernels, and the reference
+              the tests check both SQL renderings against).
 """
 
 from __future__ import annotations
@@ -44,35 +47,18 @@ def cell_size(extent: Extent, level: int) -> float:
 
 
 # ---------------------------------------------------------------- Spark side
-def _spread_col(v: Column) -> Column:
-    for shift, mask in _SPREAD:
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
-    return v
-
-
-def quantize_col(x: Column, origin: float, size: float, level: int) -> Column:
-    """x -> integer cell coordinate at level, clamped into [0, 2^level)."""
-    n = (1 << level) - 1
-    ix = F.floor((x - F.lit(origin)) / F.lit(size)).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n), ix))
-
-
-def interleave_col(ix: Column, iy: Column) -> Column:
-    return _spread_col(ix).bitwiseOR(F.shiftleft(_spread_col(iy), 1))
-
-
-def cell_encode_col(x: Column, y: Column, extent: Extent, level: int) -> Column:
-    """Morton cell id for (x, y) at level — pure JVM expressions."""
-    size = cell_size(extent, level)
-    ix = quantize_col(x, extent[0], size, level)
-    iy = quantize_col(y, extent[1], size, level)
-    return interleave_col(ix, iy)
-
-
 def _dbl(v: float) -> str:
     """``v`` as an exact Spark SQL DOUBLE literal (repr round-trips; the D
     suffix keeps Spark from reading it as a DECIMAL)."""
     return f"{float(v)!r}D"
+
+
+def _quantize_sql(e: str, origin: float, size: float, level: int) -> str:
+    """SQL: ``e`` -> integer cell coordinate at level, clamped into
+    [0, 2^level)."""
+    n = (1 << level) - 1
+    ix = f"CAST(floor(({e} - {_dbl(origin)}) / {_dbl(size)}) AS BIGINT)"
+    return f"greatest(0, least({n}, {ix}))"
 
 
 def _spread_sql(e: str) -> str:
@@ -83,11 +69,22 @@ def _spread_sql(e: str) -> str:
 
 def _interleave_sql(ix: str, iy: str) -> str:
     """Morton interleave of two integer SQL expressions — valid in both
-    Spark SQL and DuckDB. The named-column helpers below (with_cell,
-    explode_halo, border_col) build their expressions as ONE SQL string:
-    a Column tree costs a py4j round trip per node (~1 ms each, hundreds
-    per cell id), the string one parse."""
+    Spark SQL and DuckDB. The Spark-side helpers build their expressions as
+    ONE SQL string: a Column tree costs a py4j round trip per node (~1 ms
+    each, hundreds per cell id), the string one parse."""
     return f"({_spread_sql(ix)} | ({_spread_sql(iy)} << 1))"
+
+
+def cell_encode_col(x: str, y: str, extent: Extent, level: int) -> Column:
+    """Morton cell id of the named (x, y) columns at level — pure JVM
+    expressions."""
+    size = cell_size(extent, level)
+    return F.expr(
+        _interleave_sql(
+            _quantize_sql(f"`{x}`", extent[0], size, level),
+            _quantize_sql(f"`{y}`", extent[1], size, level),
+        )
+    )
 
 
 def with_cell(df, x: str, y: str, extent: Extent, level: int, out: str = "cell_id"):
@@ -95,8 +92,8 @@ def with_cell(df, x: str, y: str, extent: Extent, level: int, out: str = "cell_i
     size = cell_size(extent, level)
     return df.withColumns(
         {
-            "_ix": quantize_col(F.col(x), extent[0], size, level),
-            "_iy": quantize_col(F.col(y), extent[1], size, level),
+            "_ix": F.expr(_quantize_sql(f"`{x}`", extent[0], size, level)),
+            "_iy": F.expr(_quantize_sql(f"`{y}`", extent[1], size, level)),
         }
     ).withColumn(out, F.expr(_interleave_sql("`_ix`", "`_iy`")))
 
@@ -164,7 +161,7 @@ def border_col(extent: Extent, level: int, radius: float) -> Column:
 
 
 # ---------------------------------------------------------------- numpy side
-def _spread_np(v: np.ndarray) -> np.ndarray:
+def spread_np(v: np.ndarray) -> np.ndarray:
     v = v.astype(np.uint64)
     for shift, mask in _SPREAD:
         v = (v | (v << np.uint64(shift))) & np.uint64(mask)
@@ -178,7 +175,7 @@ def cell_encode_np(
     n = (1 << level) - 1
     ix = np.clip(np.floor((x - extent[0]) / size).astype(np.int64), 0, n).astype(np.uint64)
     iy = np.clip(np.floor((y - extent[1]) / size).astype(np.int64), 0, n).astype(np.uint64)
-    return (_spread_np(ix) | (_spread_np(iy) << np.uint64(1))).astype(np.int64)
+    return (spread_np(ix) | (spread_np(iy) << np.uint64(1))).astype(np.int64)
 
 
 def cell_decode_np(cell: np.ndarray, level: int) -> tuple[np.ndarray, np.ndarray]:

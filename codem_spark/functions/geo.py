@@ -127,6 +127,14 @@ def similarity_matrix(
     """4x4 from scale, Euler angles (omega=x, phi=y, kappa=z, degrees) and
     translation — the reference's parameterization (dsm.py:408-416)."""
     o, p, k = (math.radians(a) for a in (omega_deg, phi_deg, kappa_deg))
+    return similarity_matrix_rad(scale, o, p, k, t)
+
+
+def similarity_matrix_rad(
+    scale: float, o: float, p: float, k: float, t: tuple[float, float, float]
+) -> np.ndarray:
+    """:func:`similarity_matrix` with the Euler angles in radians:
+    ``scale * Rz(k) @ Ry(p) @ Rx(o)`` plus translation ``t``."""
     rx = np.array([[1, 0, 0], [0, math.cos(o), -math.sin(o)], [0, math.sin(o), math.cos(o)]])
     ry = np.array([[math.cos(p), 0, math.sin(p)], [0, 1, 0], [-math.sin(p), 0, math.cos(p)]])
     rz = np.array([[math.cos(k), -math.sin(k), 0], [math.sin(k), math.cos(k), 0], [0, 0, 1]])

@@ -120,8 +120,7 @@ def fingerprint_col(text: Column) -> Column:
     """Deterministic document fingerprint: polynomial rolling hash of the
     lower-cased, whitespace-normalized text, via xxhash64 of the normalized
     form (JVM-side, stable across partitions/runs)."""
-    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.pmod(F.xxhash64(norm), F.lit(_FP_MODULUS))
+    return F.pmod(F.xxhash64(normalized_text_col(text)), F.lit(_FP_MODULUS))
 
 
 def normalized_text_col(text: Column) -> Column:

@@ -234,7 +234,7 @@ def write_cluster_multipatch(
     cull_ids: tuple[int, ...] = (),
 ) -> dict[str, Any]:
     """S10 full-fidelity sink: the reference's multipatch shapefile from a
-    ``cluster_hull_meshes`` frame (cluster_id, volume, area, ground, status,
+    ``hull.cluster_hulls`` frame (cluster_id, volume, area, ground, status,
     tri_x/tri_y/tri_z). Collects on the driver — one row per cluster, the
     reference's own granularity (mesh.py:96-105) — and culls the configured
     cluster ids exactly like CULL_CLUSTER_IDS (mesh.py:66-69)."""

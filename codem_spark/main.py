@@ -187,7 +187,7 @@ def cmd_register(spark: SparkSession, args: argparse.Namespace) -> dict:
 
         bf = grid.bounds(fnd)
         bo = grid.bounds(out)
-        ext = (min(bf[0], bo[0]), min(bf[1], bo[1]), max(bf[2], bo[2]), max(bf[3], bo[3]))
+        ext = grid.bbox_union(bf, bo)
         ff = crs.units_factor(args.fnd_units)
         radius = max(
             2.0 * (args.resolution or args.min_resolution), 4.0 * f.rmse_3d
@@ -241,7 +241,7 @@ def cmd_vcd(spark: SparkSession, args: argparse.Namespace) -> dict:
     after = _read_points(spark, args.after_file)
     bb = grid.bounds(before)
     ba = grid.bounds(after)
-    extent = (min(bb[0], ba[0]), min(bb[1], ba[1]), max(bb[2], ba[2]), max(bb[3], ba[3]))
+    extent = grid.bbox_union(bb, ba)
     clustered, summaries, prods = vcd.run_vcd(before, after, extent, cfg)
     fp = f"{args.before_file}|{args.after_file}"
     clus = lineage.run_stage(

@@ -281,14 +281,9 @@ def euclidean_cluster(
     # The input has exactly ONE data consumer (the tile kernel — border rows
     # and labels all derive from the checkpointed kernel output), so no
     # persist: a cache pass here is a pure extra materialization.
-    # n_points only feeds the tile level, where a plan-statistics estimate
-    # is enough (an overestimate errs toward more tiles, still correct).
-    from codem_spark.util import approx_row_count
-
     points = points.select("pid", "x", "y", "z")
     spark = points.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    level = knn.auto_level(extent, tolerance, approx_row_count(points), parallelism=par)
+    level = knn.level_of(points, extent, tolerance)
     tiled = cells.with_cell(points, "x", "y", extent, level)
     # border-band membership is decided BEFORE the kernel and carried
     # through it, so the labeled frame already knows which rows can

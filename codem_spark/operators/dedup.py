@@ -20,22 +20,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from codem_spark.functions.text import normalized_text_col
 from codem_spark.util import rebalance
 
 # -------------------------------------------------------------- exact dedup
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id row per exact (normalized) text digest."""
-    d = df.withColumn("_digest", F.sha2(normalized_text_col(F.col(text_col)), 256))
-    w = Window.partitionBy("_digest").orderBy(F.col(id_col))
-    return d.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop(
-        "_digest", "_rn"
-    )
-
-
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Digest -> group size + representative id (the SQL-checkable face of
     exact dedup)."""
@@ -440,6 +431,25 @@ def simhash_candidates(
     return simhash_candidates_from(d, band_bits, hamming_max, bucket_cap)
 
 
+def band_keys(cols: list[str], band_bits: int) -> Column:
+    """Array of ``struct(band, bkey)``: every 64-bit column of ``cols`` cut
+    into ``64 // band_bits`` keys of ``band_bits`` bits, low bits first;
+    band = column index * (64 // band_bits) + key index. Expand with
+    ``F.inline``."""
+    per_col = 64 // band_bits
+    mask = (1 << band_bits) - 1
+    return F.array(
+        *[
+            F.struct(
+                F.lit(ci * per_col + b).alias("band"),
+                F.shiftrightunsigned(F.col(c), b * band_bits).bitwiseAND(F.lit(mask)).alias("bkey"),
+            )
+            for ci, c in enumerate(cols)
+            for b in range(per_col)
+        ]
+    )
+
+
 def simhash_candidates_from(
     d: DataFrame,
     band_bits: int = 32,
@@ -450,20 +460,7 @@ def simhash_candidates_from(
     (did, sh) fingerprint frame — for callers that also need the
     fingerprints (e.g. an exact verifier). ``sh`` rides in the bucket and
     the Hamming distance is scored there: ``d`` is read once, no join back."""
-    bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    bexpr = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.shiftrightunsigned("sh", bi * band_bits).bitwiseAND(F.lit(mask)).alias("bkey"),
-            )
-            for bi in range(bands)
-        ]
-    )
-    banded = d.select("did", "sh", F.explode(bexpr).alias("b")).select(
-        "did", "sh", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
-    )
+    banded = d.select("did", "sh", F.inline(band_keys(["sh"], band_bits)))
     hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming")
     return (
         _bucket_pairs(banded, cap=bucket_cap)

@@ -188,7 +188,7 @@ def cell_pyramid(
     if not (0 <= coarsest <= level):
         raise ValueError(f"need 0 <= coarsest ({coarsest}) <= level ({level})")
     shift = 2 * (level - coarsest)
-    c = cells.cell_encode_col(F.col(x), F.col(y), extent, level)
+    c = cells.cell_encode_col(x, y, extent, level)
     pre = df.select(
         F.shiftright(c, shift).alias("_ck"), c.alias("cell"), F.col(z).alias("z")
     )
@@ -228,7 +228,7 @@ def cell_pyramid_sql(points_sql: str, extent: Extent, level: int, coarsest: int)
 
 def density(df: DataFrame, extent: Extent, level: int, x: str = "x", y: str = "y") -> DataFrame:
     """G2: per-cell point count — input to the average-spacing estimate."""
-    cell = cells.cell_encode_col(F.col(x), F.col(y), extent, level)
+    cell = cells.cell_encode_col(x, y, extent, level)
     return df.select(cell.alias("cell_id")).groupBy("cell_id").agg(
         F.count("*").alias("n_points")
     )
@@ -257,6 +257,13 @@ def bounds(df: DataFrame, x: str = "x", y: str = "y") -> tuple[float, float, flo
         F.min(x).alias("x0"), F.min(y).alias("y0"), F.max(x).alias("x1"), F.max(y).alias("y1")
     ).collect()[0]
     return (r["x0"], r["y0"], r["x1"], r["y1"])
+
+
+def bbox_union(
+    a: tuple[float, float, float, float], b: tuple[float, float, float, float]
+) -> tuple[float, float, float, float]:
+    """Smallest bbox holding both (x0, y0, x1, y1) bboxes."""
+    return (min(a[0], b[0]), min(a[1], b[1]), max(a[2], b[2]), max(a[3], b[3]))
 
 
 def bbox_overlap(
@@ -555,17 +562,6 @@ def tile_apply(
     return exploded.groupBy("htx", "hty").applyInPandas(run, schema=schema)
 
 
-def _raster_bbox(filled: DataFrame) -> tuple[int, int, int, int] | None:
-    """(gx0, gx1, gy0, gy1) of the filled cells, None for an empty raster."""
-    b = filled.agg(
-        F.min("gx").alias("x0"), F.max("gx").alias("x1"),
-        F.min("gy").alias("y0"), F.max("gy").alias("y1"),
-    ).collect()[0]
-    if b["x0"] is None:
-        return None
-    return (int(b["x0"]), int(b["x1"]), int(b["y0"]), int(b["y1"]))
-
-
 def _fill_voids(
     arr: np.ndarray, have: np.ndarray, x0: int, y0: int,
     bb: tuple[int, int, int, int], rounds: int,
@@ -669,9 +665,10 @@ def infill_band_pass(
     tests/test_grid.py). A halo wider than ``tile_px`` widens the tile to
     match. Output: (gx, gy, z, bp) over all filled core cells."""
     filled = dsm.select("gx", "gy", "z")
-    bb = _raster_bbox(filled)
-    if bb is None:
+    gx0, gy0, gx1, gy1 = bounds(filled, "gx", "gy")
+    if gx0 is None:  # empty raster
         return filled.withColumn("bp", F.lit(0.0))
+    bb = (gx0, gx1, gy0, gy1)
     h_inf = _INFILL_ROUNDS
     h_bp = max(1, int(math.ceil(4.0 * strong_sigma_px)) + 1)
     halo = h_inf + h_bp

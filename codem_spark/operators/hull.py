@@ -18,8 +18,9 @@ trimesh/scipy are unavailable, so both hulls are from scratch:
   (mesh.py:60-62 hull.volume / hull.area), replacing round 2's
   |mean dz| * footprint prism which diverges on any non-prismatic cluster.
 
-One ``applyInPandas`` per cluster group; cluster counts are small relative
-to points, so the only shuffle is the groupBy(cluster_id).
+One ``applyInPandas`` kernel (``cluster_hulls``) per cluster group serves
+both the summary table and the multipatch sink; cluster counts are small
+relative to points, so the only shuffle is the groupBy(cluster_id).
 """
 
 from __future__ import annotations
@@ -172,77 +173,26 @@ def hull_volume_area(pts: np.ndarray, faces: np.ndarray | None = None) -> tuple[
     return vol, area
 
 
-def cluster_summaries(
-    points: DataFrame,
-    cluster_col: str = "cluster_id",
-    dz_col: str = "dz",
-) -> DataFrame:
-    """(pid, x, y, z, dz, cluster_id) -> one summary row per cluster:
-    n_points, volume + area from the cluster's 3D convex hull (reference
-    mesh.py:58-62), footprint_area (2D hull shoelace) with the hull ring as
-    arrays (the shapefile attribute-table analog, mesh.py:85-89), mean_dz,
-    status 'New' if mean dz > 0 else 'Fled' (mesh.py:99-103). Clusters
-    labelled -1 (culled) are excluded, like the reference's ClusterID
-    filter (vcd/preprocessing/preprocess.py:228-231)."""
+def cluster_hulls(points: DataFrame, ground_col: str | None = None) -> DataFrame:
+    """(pid, x, y, z, dz, cluster_id) -> one row per cluster from ONE hull
+    kernel: the summary columns (see :func:`cluster_summaries`) plus the
+    multipatch-sink face of G7/A7 — ``ground`` (the first row's
+    ``ground_col``, reference classification==2), ``n_tri`` and the 3D hull
+    TRIANGLES tri_x/tri_y/tri_z (3 entries per face, outward oriented; feed
+    to ``io.shapefile.write_cluster_multipatch``, mesh.py:96-105). The
+    faces are computed once for volume, area and triangles. Without a
+    ``z`` column the change magnitude ``dz`` is the height. Degenerate
+    clusters (rank < 3 — no 3D hull) emit empty triangle arrays with
+    volume 0. Clusters labelled -1 (culled) are excluded, like the
+    reference's ClusterID filter (vcd/preprocessing/preprocess.py:228-231)."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        cid = int(pdf[cluster_col].iloc[0])
         xy = pdf[["x", "y"]].to_numpy(np.float64)
         ring = convex_hull_2d(xy)
-        footprint = polygon_area(ring)
         if "z" in pdf.columns:
             xyz = pdf[["x", "y", "z"]].to_numpy(np.float64)
         else:  # dz-only callers: treat the change magnitude as the height
-            xyz = np.column_stack([xy, pdf[dz_col].to_numpy(np.float64)])
-        volume, area = hull_volume_area(xyz)
-        mean_dz = float(pdf[dz_col].mean())
-        return pd.DataFrame(
-            {
-                "cluster_id": [cid],
-                "n_points": [len(pdf)],
-                "area": [area],
-                "footprint_area": [footprint],
-                "volume": [volume],
-                "mean_dz": [mean_dz],
-                "status": ["New" if mean_dz > 0 else "Fled"],
-                "hull_x": [ring[:, 0].tolist() if len(ring) else []],
-                "hull_y": [ring[:, 1].tolist() if len(ring) else []],
-            }
-        )
-
-    schema = (
-        "cluster_id long, n_points long, area double, footprint_area double, "
-        "volume double, mean_dz double, status string, "
-        "hull_x array<double>, hull_y array<double>"
-    )
-    return (
-        points.filter(F.col(cluster_col) >= 0)
-        .groupBy(cluster_col)
-        .applyInPandas(lambda _k, pdf: kernel(pdf), schema=schema)
-    )
-
-
-def cluster_hull_meshes(
-    points: DataFrame,
-    cluster_col: str = "cluster_id",
-    dz_col: str = "dz",
-    ground_col: str | None = None,
-) -> DataFrame:
-    """The multipatch-sink face of G7/A7: one row per cluster carrying the
-    3D hull TRIANGLES (tri_x/tri_y/tri_z, 3 entries per face, outward
-    oriented) plus the attribute fields the reference records per shape
-    (volume, area, ground=classification==2, status; mesh.py:96-105).
-    Feed to ``io.shapefile.write_cluster_multipatch``. Degenerate clusters
-    (rank < 3 — no 3D hull) emit empty triangle arrays with volume 0."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        cid = int(pdf[cluster_col].iloc[0])
-        if "z" in pdf.columns:
-            xyz = pdf[["x", "y", "z"]].to_numpy(np.float64)
-        else:
-            xyz = np.column_stack(
-                [pdf[["x", "y"]].to_numpy(np.float64), pdf[dz_col].to_numpy(np.float64)]
-            )
+            xyz = np.column_stack([xy, pdf["dz"].to_numpy(np.float64)])
         faces = convex_hull_3d(xyz)
         volume, area = hull_volume_area(xyz, faces)
         if faces is None or len(faces) == 0:
@@ -258,18 +208,20 @@ def cluster_hull_meshes(
             faces = faces.copy()
             faces[flip] = faces[flip][:, [0, 2, 1]]
             tri = xyz[faces]  # (n_tri, 3, 3)
-        mean_dz = float(pdf[dz_col].mean()) if dz_col in pdf.columns else 0.0
-        ground = (
-            bool(pdf[ground_col].iloc[0]) if ground_col and ground_col in pdf.columns else False
-        )
+        mean_dz = float(pdf["dz"].mean())
         return pd.DataFrame(
             {
-                "cluster_id": [cid],
-                "n_tri": [len(tri)],
-                "volume": [volume],
+                "cluster_id": [int(pdf["cluster_id"].iloc[0])],
+                "n_points": [len(pdf)],
                 "area": [area],
-                "ground": [ground],
+                "footprint_area": [polygon_area(ring)],
+                "volume": [volume],
+                "mean_dz": [mean_dz],
                 "status": ["New" if mean_dz > 0 else "Fled"],
+                "hull_x": [ring[:, 0].tolist() if len(ring) else []],
+                "hull_y": [ring[:, 1].tolist() if len(ring) else []],
+                "ground": [bool(pdf[ground_col].iloc[0]) if ground_col else False],
+                "n_tri": [len(tri)],
                 "tri_x": [tri[:, :, 0].ravel().tolist()],
                 "tri_y": [tri[:, :, 1].ravel().tolist()],
                 "tri_z": [tri[:, :, 2].ravel().tolist()],
@@ -277,11 +229,26 @@ def cluster_hull_meshes(
         )
 
     schema = (
-        "cluster_id long, n_tri long, volume double, area double, ground boolean, "
-        "status string, tri_x array<double>, tri_y array<double>, tri_z array<double>"
+        "cluster_id long, n_points long, area double, footprint_area double, "
+        "volume double, mean_dz double, status string, "
+        "hull_x array<double>, hull_y array<double>, ground boolean, n_tri long, "
+        "tri_x array<double>, tri_y array<double>, tri_z array<double>"
     )
     return (
-        points.filter(F.col(cluster_col) >= 0)
-        .groupBy(cluster_col)
+        points.filter(F.col("cluster_id") >= 0)
+        .groupBy("cluster_id")
         .applyInPandas(lambda _k, pdf: kernel(pdf), schema=schema)
+    )
+
+
+def cluster_summaries(points: DataFrame) -> DataFrame:
+    """(pid, x, y, z, dz, cluster_id) -> one summary row per cluster:
+    n_points, volume + area from the cluster's 3D convex hull (reference
+    mesh.py:58-62), footprint_area (2D hull shoelace) with the hull ring as
+    arrays (the shapefile attribute-table analog, mesh.py:85-89), mean_dz,
+    status 'New' if mean dz > 0 else 'Fled' (mesh.py:99-103) — the summary
+    columns of :func:`cluster_hulls`."""
+    return cluster_hulls(points).select(
+        "cluster_id", "n_points", "area", "footprint_area", "volume", "mean_dz",
+        "status", "hull_x", "hull_y",
     )

@@ -438,9 +438,13 @@ def _types(df: DataFrame, prefix: str = "") -> dict[str, str]:
     }
 
 
-def _auto_level_of(left: DataFrame, extent: Extent, radius: float) -> int:
-    par = left.sparkSession.sparkContext.defaultParallelism
-    return auto_level(extent, radius, approx_row_count(left), parallelism=par)
+def level_of(df: DataFrame, extent: Extent, radius: float) -> int:
+    """:func:`auto_level` for ``df``'s plan-statistics row count and its
+    session's default parallelism — the tile level of a frame (an
+    overestimated count only pushes toward more tiles; the radius rule
+    still caps the level)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return auto_level(extent, radius, approx_row_count(df), parallelism=par)
 
 
 def knn_join(
@@ -467,7 +471,7 @@ def knn_join(
     depend on the tiling.
     """
     if level is None:
-        level = _auto_level_of(left, extent, radius)
+        level = level_of(left, extent, radius)
     right_tiled = tile_right(right, extent, radius, level, dims, rid, r_carry)
     kernel = _topk_kernel_builder(
         k, radius, dims, lid, rid, list(l_carry), list(r_carry),
@@ -516,7 +520,7 @@ def radius_join(
     downstream distinct() + symmetrization sees.
     """
     if level is None:
-        level = _auto_level_of(left, extent, radius)
+        level = level_of(left, extent, radius)
 
     def kernel(cell: int, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if cross_tile_only and len(rpdf):

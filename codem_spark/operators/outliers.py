@@ -62,7 +62,7 @@ def local_minimum_outliers(
 ) -> DataFrame:
     """ELM-style low-noise flag: z below the cell's 5th percentile by more
     than ``threshold`` meters."""
-    c = cells.cell_encode_col(F.col("x"), F.col("y"), extent, cell_level)
+    c = cells.cell_encode_col("x", "y", extent, cell_level)
     d = points.withColumn("_cell", c)
     floor = d.groupBy("_cell").agg(
         F.expr("percentile(z, 0.05)").alias("_zfloor")

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from codem_spark.functions import cells
+
 NODATA = -9999.0
 
 
@@ -55,15 +57,9 @@ def _morton_order(p: np.ndarray) -> np.ndarray:
     span = np.maximum(hi - lo, 1e-12)
     ix = np.minimum(((p[:, 0] - lo[0]) / span[0] * 65535).astype(np.uint64), 65535)
     iy = np.minimum(((p[:, 1] - lo[1]) / span[1] * 65535).astype(np.uint64), 65535)
-
-    def spread(v: np.ndarray) -> np.ndarray:
-        v = (v | (v << np.uint64(8))) & np.uint64(0x00FF00FF)
-        v = (v | (v << np.uint64(4))) & np.uint64(0x0F0F0F0F)
-        v = (v | (v << np.uint64(2))) & np.uint64(0x33333333)
-        v = (v | (v << np.uint64(1))) & np.uint64(0x55555555)
-        return v
-
-    return np.argsort(spread(ix) | (spread(iy) << np.uint64(1)), kind="stable")
+    return np.argsort(
+        cells.spread_np(ix) | (cells.spread_np(iy) << np.uint64(1)), kind="stable"
+    )
 
 
 def delaunay_np(p: np.ndarray) -> np.ndarray:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from codem_spark.config import EngineConfig, RegistrationParameters
 from codem_spark.functions.geo import decompose_similarity
+from codem_spark.operators.dedup import band_keys
 
 _POP = np.array([bin(i).count("1") for i in range(65536)], dtype=np.int64)
 # RANSAC: points per similarity sample, and the seed of the sample draw
@@ -135,27 +136,11 @@ def _match_features_lsh(
     matches with high recall, like the reference's FLANN multi-probe LSH);
     exact Hamming + per-AOI-keypoint top-2 + Lowe ratio on the candidates —
     one banded shuffle join instead of a driver collect."""
-    mask = (1 << band_bits) - 1
+    bands = band_keys(["d0", "d1", "d2", "d3"], band_bits)
 
     def banded(df: DataFrame, prefix: str) -> DataFrame:
-        bexpr = F.array(
-            *[
-                F.struct(
-                    F.lit(lane * 4 + b).alias("band"),
-                    F.shiftrightunsigned(F.col(f"d{lane}"), b * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bkey"),
-                )
-                for lane in range(4)
-                for b in range(64 // band_bits)
-            ]
-        )
         cols = [F.col(c).alias(f"{prefix}{c}") for c in ("x", "y", "z", "d0", "d1", "d2", "d3")]
-        return df.select(*cols, F.explode(bexpr).alias("b")).select(
-            *[f"{prefix}{c}" for c in ("x", "y", "z", "d0", "d1", "d2", "d3")],
-            F.col("b.band").alias("band"),
-            F.col("b.bkey").alias("bkey"),
-        )
+        return df.select(*cols, F.inline(bands))
 
     fb = banded(fnd_kp, "f_").persist()
     ab = banded(aoi_kp, "a_")
@@ -191,13 +176,14 @@ def _match_features_lsh(
             < F.lit(lowes_ratio) * F.coalesce(F.col("d2"), F.lit(256).cast("int"))
         )
     )
-    out = agg.select(
-        "fx", "fy", "fz",
-        F.col("a_x").alias("ax"), F.col("a_y").alias("ay"), F.col("az").alias("az"),
-        F.col("d1").cast("double").alias("dist"),
-    ).toPandas()
-    fb.unpersist()
-    return out
+    try:
+        return agg.select(
+            "fx", "fy", "fz",
+            F.col("a_x").alias("ax"), F.col("a_y").alias("ay"), F.col("az").alias("az"),
+            F.col("d1").cast("double").alias("dist"),
+        ).toPandas()
+    finally:
+        fb.unpersist()
 
 
 def umeyama(src: np.ndarray, dst: np.ndarray, solve_scale: bool = True) -> np.ndarray:

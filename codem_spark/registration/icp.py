@@ -41,7 +41,12 @@ from pyspark.sql import functions as F
 
 from codem_spark.config import EngineConfig, RegistrationParameters
 from codem_spark.functions import cells
-from codem_spark.functions.geo import apply_transform_cols, decompose_similarity, transform_xyz
+from codem_spark.functions.geo import (
+    apply_transform_cols,
+    decompose_similarity,
+    similarity_matrix_rad,
+    transform_xyz,
+)
 from codem_spark.operators import knn
 
 Extent = tuple[float, float, float, float]
@@ -60,10 +65,7 @@ def compute_normals(
     filters.normal knn=9, preprocess.py:317-350). Tile+halo cogroup kernel;
     normals oriented +z (the reference's convention for DSM-derived clouds).
     Output: (pid, x, y, z, nx, ny, nz)."""
-    from codem_spark.util import approx_row_count
-
-    par = points.sparkSession.sparkContext.defaultParallelism
-    level = knn.auto_level(extent, radius, approx_row_count(points), parallelism=par)
+    level = knn.level_of(points, extent, radius)
 
     def kernel(_cell, qpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
         cols = ["pid", "x", "y", "z", "nx", "ny", "nz"]
@@ -260,13 +262,7 @@ def _solve_update(acc: np.ndarray, solve_scale: bool) -> np.ndarray:
     t = x[3:6]
     ds = x[6] if solve_scale else 0.0
     # exact rotation from the linearized angles (small per-iteration)
-    rx = np.array([[1, 0, 0], [0, math.cos(om), -math.sin(om)], [0, math.sin(om), math.cos(om)]])
-    ry = np.array([[math.cos(ph), 0, math.sin(ph)], [0, 1, 0], [-math.sin(ph), 0, math.cos(ph)]])
-    rz = np.array([[math.cos(ka), -math.sin(ka), 0], [math.sin(ka), math.cos(ka), 0], [0, 0, 1]])
-    m = np.eye(4)
-    m[:3, :3] = (1.0 + ds) * (rz @ ry @ rx)
-    m[:3, 3] = t
-    return m
+    return similarity_matrix_rad(1.0 + ds, om, ph, ka, t)
 
 
 def fine_registration(
@@ -284,8 +280,6 @@ def fine_registration(
     returned matrix already includes ``initial`` composed in, matching the
     reference where ICP starts from the coarse transform and outputs the
     total fine matrix, icp.py:116-119,195-202)."""
-    from codem_spark.util import approx_row_count
-
     cfg = cfg or EngineConfig()
     sc = fixed.sparkSession.sparkContext
     t_total = np.eye(4) if initial is None else np.asarray(initial, np.float64).copy()
@@ -315,9 +309,8 @@ def fine_registration(
         c_extent = (extent[0] - mu[0], extent[1] - mu[1], extent[2] - mu[0], extent[3] - mu[1])
         t_c = demean @ t_total @ remean  # work in centered frame
 
-        level = knn.auto_level(
-            c_extent, radius + drift_margin, approx_row_count(moving.select("pid", "x", "y", "z")),
-            parallelism=sc.defaultParallelism,
+        level = knn.level_of(
+            moving.select("pid", "x", "y", "z"), c_extent, radius + drift_margin
         )
         # Both sides are tiled ONCE, hash-partitioned by cell and cached; the
         # first pass fills both caches, and every later pass is one

@@ -148,10 +148,7 @@ def preprocess(
             extent = joint
         else:
             # full-extent mode: union bbox, no clip (the reference default)
-            extent = (
-                min(bf[0], ba[0]), min(bf[1], ba[1]),
-                max(bf[2], ba[2]), max(bf[3], ba[3]),
-            )
+            extent = grid.bbox_union(bf, ba)
     if resolution is None:
         resolution = estimate_pipeline_resolution(fnd_points, aoi_points, extent, cfg)
     resolution = max(resolution, cfg.min_resolution)
@@ -170,8 +167,8 @@ def preprocess(
         f_aoi = pool.submit(
             lambda: _prep_dsm(aoi_points, extent, resolution, cfg, release=rel_a)
         )
-        fnd_dsm = f_fnd.result().persist()
-        aoi_dsm = f_aoi.result().persist()
+        fnd_dsm = f_fnd.result()
+        aoi_dsm = f_aoi.result()
     return PreprocessResult(
         fnd_points, aoi_points, fnd_dsm, aoi_dsm, extent, resolution,
         upstream_caches=tuple(rel_f + rel_a),
@@ -338,22 +335,24 @@ def register(
     fnd_m = crs.scale_to_meters(fnd_points, ff) if ff != 1.0 else fnd_points
     aoi_m = crs.scale_to_meters(aoi_points, af) if af != 1.0 else aoi_points
     prep = preprocess(fnd_m, aoi_m, extent, cfg, resolution)
-    c = coarse_registration(prep, cfg, capture=capture)
-    f = fine_registration_stage(prep, c, cfg)
-    native = crs.registration_to_native(np.array(f.matrix, np.float64), ff, af)
-    f.matrix_native = native.tolist()
-    out = apply_transform_cols(aoi_points, native)
-    if capture is not None:
-        # the u8 planes the match viz renders — pulled before the DSMs are
-        # released. BOUNDED collect (guide §5; VERDICT r5 "weak"): cell
-        # count grows with scene extent, so the raw planes are a driver OOM
-        # at 100x for a cosmetic PNG. Above ``viz_max_cells`` the planes are
-        # block-max-reduced to fit the cap (factor 1 = bit-identical to the
-        # old behavior at demo scales).
-        capture["fnd_dsm_u8"] = _capped_u8_plane(prep.fnd_dsm)
-        capture["aoi_dsm_u8"] = _capped_u8_plane(prep.aoi_dsm)
-        capture["extent"] = prep.extent
-        capture["resolution"] = prep.resolution
-    prep.fnd_dsm.unpersist()
-    prep.aoi_dsm.unpersist()
-    return c, f, out
+    # the DSM caches are released on the way out, on error paths too
+    try:
+        c = coarse_registration(prep, cfg, capture=capture)
+        f = fine_registration_stage(prep, c, cfg)
+        native = crs.registration_to_native(np.array(f.matrix, np.float64), ff, af)
+        f.matrix_native = native.tolist()
+        out = apply_transform_cols(aoi_points, native)
+        if capture is not None:
+            # the u8 planes the match viz renders — pulled before the DSMs
+            # are released. BOUNDED collect: cell count grows with scene
+            # extent, so the raw planes are a driver OOM at 100x for a
+            # cosmetic PNG. Above ``viz_max_cells`` the planes are
+            # block-max-reduced to fit the cap (factor 1 = the exact plane).
+            capture["fnd_dsm_u8"] = _capped_u8_plane(prep.fnd_dsm)
+            capture["aoi_dsm_u8"] = _capped_u8_plane(prep.aoi_dsm)
+            capture["extent"] = prep.extent
+            capture["resolution"] = prep.resolution
+        return c, f, out
+    finally:
+        prep.fnd_dsm.unpersist()
+        prep.aoi_dsm.unpersist()

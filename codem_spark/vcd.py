@@ -192,7 +192,7 @@ def export_multipatch(
     (io/shapefile.py), one record per cluster."""
     from codem_spark.io import shapefile as shapefile_io
 
-    meshes = hull.cluster_hull_meshes(clustered, ground_col=ground_col)
+    meshes = hull.cluster_hulls(clustered, ground_col=ground_col)
     return shapefile_io.write_cluster_multipatch(
         meshes, path, crs_wkt=crs_wkt, cull_ids=cull_ids
     )

@@ -57,6 +57,13 @@ def blob_points() -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True)
 
 
+def persisted_rdd_ids(spark) -> set:
+    """Ids of the persisted RDDs. Compared as sets: a frame an earlier test
+    left behind may be released by Spark's cleaner meanwhile, which a
+    difference of counts would read as a missing new frame."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def union_find_oracle(P: np.ndarray, tol: float) -> np.ndarray:
     """Single-machine exact connected components (edges = dist <= tol)."""
     n = len(P)

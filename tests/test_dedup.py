@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from codem_spark.operators import dedup
+from tests.conftest import persisted_rdd_ids
 
 SF = "/root/testdata/sf0.001"
 
@@ -100,13 +101,6 @@ def test_bucket_cap_none_is_exact_and_stats_observable(spark):
     assert capped <= exact or len(exact) == 0
 
 
-def _persisted(spark) -> set:
-    """Ids of the persisted RDDs. Compared as sets: a frame an earlier test
-    left behind may be released by Spark's cleaner meanwhile, which a
-    difference of counts would read as a missing new frame."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-
 def _leaf_names(p) -> list[str]:
     """Leaf operators of a physical plan (InMemoryTableScan is a leaf of
     the live plan, so a cached subtree counts once, as its scan)."""
@@ -123,13 +117,13 @@ def test_verify_shares_one_persisted_shingle_frame(spark):
     shingle frame, and every shingle subtree of the verify plan (the
     candidate side and both pair sides) reads it from the cache."""
     spark.catalog.clearCache()
-    before = _persisted(spark)
+    before = persisted_rdd_ids(spark)
     try:
         docs = spark.read.parquet(f"{SF}/documents.parquet")
         docs2 = spark.read.parquet(f"{SF}/documents.parquet")
         out = dedup.jaccard_verify(dedup.minhash_lsh_candidates(docs), docs2, threshold=0.5)
         out.collect()
-        assert len(_persisted(spark) - before) == 1
+        assert len(persisted_rdd_ids(spark) - before) == 1
         leaves = _leaf_names(out._jdf.queryExecution().executedPlan())
         assert leaves == ["InMemoryTableScan"] * 3, leaves
     finally:
@@ -139,20 +133,20 @@ def test_verify_shares_one_persisted_shingle_frame(spark):
 def test_candidates_alone_persist_nothing(spark):
     """A candidates-only call leaves no persisted frame behind."""
     spark.catalog.clearCache()
-    before = _persisted(spark)
+    before = persisted_rdd_ids(spark)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     dedup.minhash_lsh_candidates(docs).count()
-    assert not _persisted(spark) - before
+    assert not persisted_rdd_ids(spark) - before
 
 
 def test_simhash_candidates_persist_nothing(spark):
     """simhash scores the Hamming distance inside the bucket, so it has no
     fingerprint frame to persist for a join back."""
     spark.catalog.clearCache()
-    before = _persisted(spark)
+    before = persisted_rdd_ids(spark)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     dedup.simhash_candidates(docs).count()
-    assert not _persisted(spark) - before
+    assert not persisted_rdd_ids(spark) - before
 
 
 def test_minhash_mersenne_fold_matches_modulo():

@@ -187,7 +187,7 @@ def test_cell_pyramid_matches_per_level_aggs_one_exchange(spark, duck):
     # ancestor repartition); the union's identical exchanges dedupe at
     # runtime via AQE stage reuse. Assert on the deepest chain (finest agg
     # + all three rollups, no union in the way).
-    c = grid.cells.cell_encode_col(F.col("x"), F.col("y"), EXTENT, 10)
+    c = grid.cells.cell_encode_col("x", "y", EXTENT, 10)
     pre = pc.select(
         F.shiftright(c, 6).alias("_ck"), c.alias("cell"), F.col("z").alias("z")
     ).repartition(8, "_ck")
@@ -201,7 +201,7 @@ def test_cell_pyramid_matches_per_level_aggs_one_exchange(spark, duck):
     got = pyr.toPandas().sort_values(["level", "cell"]).reset_index(drop=True)
     # oracle 1: independent per-level direct aggregations
     for lv in (10, 9, 8, 7):
-        cell = cells.cell_encode_col(F.col("x"), F.col("y"), EXTENT, lv)
+        cell = cells.cell_encode_col("x", "y", EXTENT, lv)
         exp = (
             pc.select(cell.alias("cell"), "z")
             .groupBy("cell")

@@ -58,3 +58,29 @@ def test_knn_deterministic_across_runs(spark):
     r1 = knn.knn_join(a, b, EXTENT, radius=3000.0, k=2).toPandas().sort_values(["pid", "nn_rank"])
     r2 = knn.knn_join(a.repartition(7), b.repartition(3), EXTENT, radius=3000.0, k=2).toPandas().sort_values(["pid", "nn_rank"])
     assert (r1.n_pid.values == r2.n_pid.values).all()
+
+
+def test_grid_topk_k1_path_matches_rank1_of_k2():
+    """grid_topk's k=1 path (segmented minimum.reduceat) picks the same
+    neighbour as the rank-1 rows of the general lexsort path. Integer-grid
+    clouds with repeated points make exact distance ties common; they
+    break by right id, which is permuted so it disagrees with row order."""
+    rng = np.random.default_rng(31)
+    n_ties = 0
+    for _ in range(20):
+        lpts = rng.integers(0, 10, (300, 3)).astype(np.float64)
+        rpts = rng.integers(0, 10, (400, 3)).astype(np.float64)
+        rids = rng.permutation(10_000)[:400].astype(np.int64)
+        li1, ri1, d1, rk1 = knn.grid_topk(lpts, rpts, rids, 2.0, 1)
+        li2, ri2, d2, rk2 = knn.grid_topk(lpts, rpts, rids, 2.0, 2)
+        top = rk2 == 1
+        o1, o2 = np.argsort(li1, kind="stable"), np.argsort(li2[top], kind="stable")
+        assert (rk1 == 1).all()
+        assert np.array_equal(li1[o1], li2[top][o2])
+        assert np.array_equal(ri1[o1], ri2[top][o2])
+        assert np.array_equal(d1[o1], d2[top][o2])
+        # a rank-2 row at the rank-1 distance is a tie the id had to break
+        second = rk2 == 2
+        best = dict(zip(li2[top], d2[top]))
+        n_ties += int(sum(best[li] == d for li, d in zip(li2[second], d2[second])))
+    assert n_ties > 100

@@ -61,7 +61,7 @@ def test_cell_encode_is_codegen(spark):
     from codem_spark.functions import cells
 
     pc = synth.point_cloud(spark, 100)
-    q = pc.select(cells.cell_encode_col(F.col("x"), F.col("y"), (0, 0, 100000, 100000), 12))
+    q = pc.select(cells.cell_encode_col("x", "y", (0, 0, 100000, 100000), 12))
     plan = _plan(q)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "WholeStageCodegen" in plan or "*(1)" in plan  # codegen marker

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from codem_spark.config import EngineConfig
 from codem_spark.functions.geo import decompose_similarity, similarity_matrix
 from codem_spark.registration import pipeline as P
+from tests.conftest import persisted_rdd_ids
 
 EXT = (0.0, 0.0, 1000.0, 1000.0)
 RES = 4.0
@@ -404,14 +405,9 @@ def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
     pts = spark.createDataFrame(
         pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": _surface(x, y)})
     )
-    jsc = spark.sparkContext._jsc
-
-    def cached_ids() -> set:
-        return set(jsc.getPersistentRDDs().keys())
-
-    before = cached_ids()
+    before = persisted_rdd_ids(spark)
     prep = P.preprocess(pts, pts, (0.0, 0.0, 200.0, 200.0), resolution=RES)
-    upstream = cached_ids() - before
+    upstream = persisted_rdd_ids(spark) - before
     assert upstream  # preprocess materialized its upstream DSM caches
 
     class _FailingKeypoints:
@@ -428,11 +424,32 @@ def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
     try:
         with pytest.raises(RuntimeError, match="keypoint collect failed"):
             P.coarse_registration(prep)
-        assert not upstream & cached_ids()
+        assert not upstream & persisted_rdd_ids(spark)
     finally:
         prep.release_upstream()
         prep.fnd_dsm.unpersist()
         prep.aoi_dsm.unpersist()
+
+
+def test_failed_fine_stage_releases_dsm_caches(spark, clouds, monkeypatch):
+    """register releases the DSM caches preprocess made when a stage after
+    coarse registration raises: no new persisted RDD is left behind."""
+    fnd, aoi = clouds
+
+    def failing_fine(*_a, **_k):
+        raise RuntimeError("fine stage failed")
+
+    monkeypatch.setattr(P, "fine_registration_stage", failing_fine)
+    before = persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="fine stage failed"):
+        P.register(
+            spark.createDataFrame(fnd),
+            spark.createDataFrame(aoi),
+            extent=EXT,
+            cfg=EngineConfig(min_resolution=RES),
+            resolution=RES,
+        )
+    assert not persisted_rdd_ids(spark) - before
 
 
 def _icp_scene(n: int = 5_000, seed: int = 7) -> pd.DataFrame:
@@ -440,10 +457,6 @@ def _icp_scene(n: int = 5_000, seed: int = 7) -> pd.DataFrame:
     x = rng.uniform(0, 200, n)
     y = rng.uniform(0, 200, n)
     return pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": _surface(x, y)})
-
-
-def _persisted(spark) -> set:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 @pytest.fixture(scope="module")
@@ -464,7 +477,7 @@ def icp_runs(spark):
     runs = {}
     for name, factor in (("default", icp._DRIFT_FACTOR), ("retile", 0.0)):
         tilings = []
-        before = _persisted(spark)
+        before = persisted_rdd_ids(spark)
 
         def counting(*a, _tile=icp._tile_moving, _log=tilings):
             _log.append(1)
@@ -474,7 +487,7 @@ def icp_runs(spark):
             mp.setattr(icp, "_DRIFT_FACTOR", factor)
             mp.setattr(icp, "_tile_moving", counting)
             res = icp.fine_registration(fixed, moving, (0.0, 0.0, 200.0, 200.0), RES)
-        runs[name] = (res, len(tilings), (before, _persisted(spark)))
+        runs[name] = (res, len(tilings), (before, persisted_rdd_ids(spark)))
     return runs
 
 
@@ -489,10 +502,10 @@ def test_failed_icp_releases_its_caches(spark, icp_runs):
     # 50 m above the fixed cloud: no moving point has a fixed point within
     # the default kNN radius (2 * resolution)
     moving = spark.createDataFrame(pdf.assign(z=pdf.z + 50.0))
-    before = _persisted(spark)
+    before = persisted_rdd_ids(spark)
     with pytest.raises(ValueError, match="too few correspondences"):
         icp.fine_registration(fixed, moving, (0.0, 0.0, 200.0, 200.0), RES)
-    assert _persisted(spark) == before
+    assert persisted_rdd_ids(spark) == before
     for path in ("default", "retile"):
         before, after = icp_runs[path][2]
         assert after == before, path

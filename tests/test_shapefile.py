@@ -97,7 +97,7 @@ def test_cluster_hull_meshes_to_multipatch(spark, tmp_path):
             "cluster_id": np.repeat([0, 1], 300),
         }
     )
-    meshes = hull.cluster_hull_meshes(spark.createDataFrame(pts), ground_col=None)
+    meshes = hull.cluster_hulls(spark.createDataFrame(pts), ground_col=None)
     base = str(tmp_path / "vcd_clusters")
     man = shp.write_cluster_multipatch(meshes, base, crs_wkt='PROJCS["utm"]')
     assert man["n_shapes"] == 2
@@ -126,7 +126,7 @@ def test_cull_ids_and_empty(tmp_path, spark):
             "cluster_id": np.repeat([0, 1], 20),
         }
     )
-    meshes = hull.cluster_hull_meshes(spark.createDataFrame(pts))
+    meshes = hull.cluster_hulls(spark.createDataFrame(pts))
     man = shp.write_cluster_multipatch(meshes, str(tmp_path / "culled"), cull_ids=(1,))
     assert man["n_shapes"] == 1
     back = shp.read_multipatch(str(tmp_path / "culled"))

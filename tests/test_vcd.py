@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from codem_spark import vcd
 from codem_spark.operators import hull
+from tests.conftest import persisted_rdd_ids
 
 EXT = (0.0, 0.0, 1000.0, 1000.0)
 
@@ -63,17 +64,12 @@ def test_run_vcd_returned_frame_holds_its_cache(spark):
     z = np.where((x > 80) & (x < 120) & (y > 80) & (y < 120), 8.0, 0.0)
     before = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": np.zeros(n)}))
     after = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n) + n, "x": x, "y": y, "z": z}))
-    jsc = spark.sparkContext._jsc
-
-    def cached_ids() -> set:
-        return set(jsc.getPersistentRDDs().keys())
-
-    start = cached_ids()
+    start = persisted_rdd_ids(spark)
     cfg = vcd.VcdConfig(tolerance=10.0, min_points=5, resolution=20.0, knn_radius=30.0)
     clustered, _summaries, _prods = vcd.run_vcd(before, after, (0.0, 0.0, 200.0, 200.0), cfg)
-    held = cached_ids() - start
+    held = persisted_rdd_ids(spark) - start
     clustered.unpersist()
-    assert len(held - cached_ids()) == 1
+    assert len(held - persisted_rdd_ids(spark)) == 1
 
 
 def test_convex_hull_matches_known():
