@@ -84,9 +84,8 @@ def _q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codem_spark.functions import cells
 
     pts = _points(spark, sf_dir)
-    cell = cells.cell_encode_col("x", "y", EXTENT, 10)
     return (
-        pts.select(cell.alias("cell_id"))
+        cells.with_cell(pts, "x", "y", EXTENT, 10)
         .groupBy("cell_id")
         .agg(F.count("*").alias("n"))
     )
@@ -117,7 +116,7 @@ def _q_grid_idw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codem_spark.operators import grid
 
     pts = _points(spark, sf_dir).filter(F.col("pid") % 16 == 1)
-    out = grid.grid_idw(pts, EXTENT, 5000.0, radius_cells=1)
+    out = grid.grid_idw(pts, EXTENT, 5000.0)
     return out.select("gx", "gy", F.round("z", 6).alias("z_idw"))
 
 
@@ -314,7 +313,7 @@ def _q_idw_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(x0 + 5000.0) + geo.id_lane_col(F.col("id") + 7, 0) * F.lit((x1 - x0) - 10000.0)).alias("x"),
         (F.lit(y0 + 5000.0) + geo.id_lane_col(F.col("id") + 7, 1) * F.lit((y1 - y0) - 10000.0)).alias("y"),
     )
-    out = resample.resample_to_points(pts, qs, EXTENT, radius=8000.0, method="idw", k=8)
+    out = resample.resample_to_points(pts, qs, EXTENT, radius=8000.0, method="idw")
     return out.select("pid", F.round("z", 5).alias("z_interp"))
 
 
@@ -1143,7 +1142,7 @@ def oracle_sql() -> dict[str, str]:
             )""",
         "grid_idw": f"""
             SELECT gx, gy, round(z, 6) AS z_idw FROM (
-              {grid.grid_idw_sql(f"SELECT * FROM ({pts}) WHERE pid % 16 = 1", EXTENT, 5000.0, 1)}
+              {grid.grid_idw_sql(f"SELECT * FROM ({pts}) WHERE pid % 16 = 1", EXTENT, 5000.0)}
             )""",
         "density": f"SELECT {cell6} AS cell_id, count(*) AS n_points FROM ({pts}) GROUP BY 1",
         "bounds": f"""

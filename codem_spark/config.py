@@ -23,6 +23,9 @@ class EngineConfig:
     # --- pipeline resolution (reference: main.py:108-114) ---
     min_resolution: float = 1.0
     # --- coarse (DSM) registration (reference: main.py:115-139) ---
+    # DSM_AKAZE_THRESHOLD: validated and written to config.json for CLI
+    # contract parity, but nothing reads it — the Harris keypoint detector
+    # thresholds on features.HARRIS_REL_THRESHOLD instead.
     dsm_akaze_threshold: float = 0.0001
     dsm_lowes_ratio: float = 0.9
     dsm_ransac_max_iter: int = 10000

@@ -13,15 +13,16 @@ L-bit quantized (x, y) within the dataset extent, so:
   (operators/knn.tile_right) duplicates rows into their 3x3 neighbor ring.
 
 The encoder is written twice, bit-for-bit identical:
-``*_sql``   — SQL strings: parsed by Spark (``with_cell``, ``cell_encode_col``,
-              ``explode_halo``, ``border_col`` — JVM whole-stage codegen, no
-              Python) and by DuckDB (``cell_encode_sql``, the oracle in
-              __spark_entry__.py);
+``*_sql``   — SQL strings: parsed by Spark (``with_cell``, ``explode_halo``,
+              ``border_col`` — JVM whole-stage codegen, no Python) and by
+              DuckDB (``cell_encode_sql``, the oracle in __spark_entry__.py);
 ``*_np``    — vectorized numpy (inside pandas-UDF kernels, and the reference
               the tests check both SQL renderings against).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import Column
@@ -75,20 +76,11 @@ def _interleave_sql(ix: str, iy: str) -> str:
     return f"({_spread_sql(ix)} | ({_spread_sql(iy)} << 1))"
 
 
-def cell_encode_col(x: str, y: str, extent: Extent, level: int) -> Column:
-    """Morton cell id of the named (x, y) columns at level — pure JVM
-    expressions."""
-    size = cell_size(extent, level)
-    return F.expr(
-        _interleave_sql(
-            _quantize_sql(f"`{x}`", extent[0], size, level),
-            _quantize_sql(f"`{y}`", extent[1], size, level),
-        )
-    )
-
-
 def with_cell(df, x: str, y: str, extent: Extent, level: int, out: str = "cell_id"):
-    """Attach cell_id + integer cell coords (kept for cheap neighbor math)."""
+    """Attach the Morton cell id (column ``out``) + integer cell coords
+    ``_ix``/``_iy`` (kept for cheap neighbor math). The coords are projected
+    first because ``_spread_sql`` names its input twice per step: inlined,
+    the quantize expression would be repeated 32 times per axis."""
     size = cell_size(extent, level)
     return df.withColumns(
         {
@@ -105,6 +97,30 @@ def _cell_offsets_sql(extent: Extent, level: int) -> tuple[str, str, str]:
     fx = f"(`x` - (CAST(`_ix` AS DOUBLE) * {size} + {_dbl(extent[0])}))"
     fy = f"(`y` - (CAST(`_iy` AS DOUBLE) * {size} + {_dbl(extent[1])}))"
     return size, fx, fy
+
+
+def ring_sql(
+    fx: str, fy: str, near_lo: Callable[[str], str], near_hi: Callable[[str], str]
+) -> str:
+    """SQL array of the 3x3 ring offsets ``struct(dx, dy)`` (dx outer, dy
+    inner) that a row is copied into: its own cell always, a neighbor only
+    when the row is near the border facing it (diagonals: both borders).
+    ``fx``/``fy`` are the row's in-cell offsets; ``near_lo(f)`` and
+    ``near_hi(f)`` render the predicates "offset ``f`` is near the low /
+    high border". Expand with ``explode``."""
+
+    def near(dv: int, f: str) -> str:
+        if dv == 0:
+            return "true"
+        return near_lo(f) if dv < 0 else near_hi(f)
+
+    structs = ", ".join(
+        f"CASE WHEN {near(dx, fx)} AND {near(dy, fy)} "
+        f"THEN named_struct('dx', {dx}, 'dy', {dy}) END"
+        for dx in (-1, 0, 1)
+        for dy in (-1, 0, 1)
+    )
+    return f"filter(array({structs}), s -> s IS NOT NULL)"
 
 
 def explode_halo(df, level: int, extent: Extent, radius: float):
@@ -125,21 +141,10 @@ def explode_halo(df, level: int, extent: Extent, radius: float):
     n = 1 << level
     size, fx, fy = _cell_offsets_sql(extent, level)
     r = _dbl(radius)
-
-    def near(dv: int, f: str) -> str:
-        if dv == 0:
-            return "true"
-        return f"{f} <= {r}" if dv < 0 else f"({size} - {f}) <= {r}"
-
-    structs = ", ".join(
-        f"CASE WHEN {near(dx, fx)} AND {near(dy, fy)} "
-        f"THEN named_struct('dx', {dx}, 'dy', {dy}) END"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
+    ring = ring_sql(fx, fy, lambda f: f"{f} <= {r}", lambda f: f"({size} - {f}) <= {r}")
     jx, jy = "(`_ix` + `_off`.`dx`)", "(`_iy` + `_off`.`dy`)"
     return (
-        df.withColumn("_off", F.expr(f"explode(filter(array({structs}), s -> s IS NOT NULL))"))
+        df.withColumn("_off", F.expr(f"explode({ring})"))
         .filter(F.expr(f"{jx} >= 0 AND {jx} < {n} AND {jy} >= 0 AND {jy} < {n}"))
         .withColumn("halo_cell", F.expr(_interleave_sql(jx, jy)))
         .drop("_off")

@@ -11,7 +11,7 @@ Reference analogs:
   via pyproj/rasterio; here: the Snyder series transverse-Mercator
   forward projection, USGS Professional Paper 1395 pp. 60-64 —
   public-domain formulas, no external geodesy dependency). The caller
-  names the zone.
+  names the zone; zones are northern-hemisphere (no false northing).
 
 The projection formula is written ONCE and evaluated by three backends
 (the cells.py pattern): Spark Columns (pure JVM, whole-stage codegen —
@@ -56,11 +56,11 @@ def units_factor(unit: str) -> float:
     return UNITS_FACTOR[key]
 
 
-def scale_to_meters(df: DataFrame, factor: float, cols=("x", "y", "z")) -> DataFrame:
-    """Scale coordinate columns into meters — a pure column expression
+def scale_to_meters(df: DataFrame, factor: float) -> DataFrame:
+    """Scale the x/y/z columns into meters — a pure column expression
     (the distributed twin of preprocess.py:486-512)."""
     out = df
-    for c in cols:
+    for c in ("x", "y", "z"):
         out = out.withColumn(c, F.col(c) * F.lit(float(factor)))
     return out
 
@@ -126,10 +126,11 @@ _NS = {
 }
 
 
-def _utm_formula(lon, lat, zone: int, south: bool, ns: dict):
-    """Snyder series forward transverse Mercator (PP 1395 eq. 8-9..8-15).
-    ``lon``/``lat`` in degrees as backend objects; returns (easting,
-    northing). Accuracy: sub-mm within a zone."""
+def _utm_formula(lon, lat, zone: int, ns: dict):
+    """Snyder series forward transverse Mercator (PP 1395 eq. 8-9..8-15),
+    northern-hemisphere zones (no false northing). ``lon``/``lat`` in
+    degrees as backend objects; returns (easting, northing). Accuracy:
+    sub-mm within a zone."""
     sin, cos, tan, sqrt = ns["sin"], ns["cos"], ns["tan"], ns["sqrt"]
     d2r = math.pi / 180.0
     lon0 = (zone - 1) * 6.0 - 180.0 + 3.0
@@ -160,24 +161,20 @@ def _utm_formula(lon, lat, zone: int, south: bool, ns: dict):
         * (a2 / 2 + (5 - t_ + 9 * c_ + 4 * c_ * c_) * a2 * a2 / 24
            + (61 - 58 * t_ + t_ * t_ + 600 * c_ - 330 * ep2) * a2 * a2 * a2 / 720)
     )
-    if south:
-        northing = northing + 10000000.0
     return easting, northing
 
 
-def utm_project_cols(lon: Column, lat: Column, zone: int, south: bool = False):
+def utm_project_cols(lon: Column, lat: Column, zone: int):
     """(easting, northing) Columns — pure JVM expressions."""
     # multiply degree Columns by 1.0 first so python-float ops broadcast
-    return _utm_formula(lon * F.lit(1.0), lat * F.lit(1.0), zone, south, _NS["col"])
+    return _utm_formula(lon * F.lit(1.0), lat * F.lit(1.0), zone, _NS["col"])
 
 
-def utm_project_np(lon: np.ndarray, lat: np.ndarray, zone: int, south: bool = False):
-    return _utm_formula(
-        np.asarray(lon, np.float64), np.asarray(lat, np.float64), zone, south, _NS["np"]
-    )
+def utm_project_np(lon: np.ndarray, lat: np.ndarray, zone: int):
+    return _utm_formula(np.asarray(lon, np.float64), np.asarray(lat, np.float64), zone, _NS["np"])
 
 
-def utm_project_sql(lon_expr: str, lat_expr: str, zone: int, south: bool = False):
+def utm_project_sql(lon_expr: str, lat_expr: str, zone: int):
     """(easting_sql, northing_sql) strings — the DuckDB oracle twin."""
-    e, n = _utm_formula(_Sql(f"({lon_expr})"), _Sql(f"({lat_expr})"), zone, south, _NS["sql"])
+    e, n = _utm_formula(_Sql(f"({lon_expr})"), _Sql(f"({lat_expr})"), zone, _NS["sql"])
     return e.s, n.s

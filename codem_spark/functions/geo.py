@@ -105,16 +105,14 @@ def transform_xyz(matrix: np.ndarray, x, y, z) -> tuple:
     )
 
 
-def apply_transform_cols(
-    df: DataFrame, matrix: np.ndarray, x: str = "x", y: str = "y", z: str = "z"
-) -> DataFrame:
+def apply_transform_cols(df: DataFrame, matrix: np.ndarray) -> DataFrame:
     """Apply a 4x4 homogeneous similarity transform to point columns as pure
     column expressions (the reference pipes points through a PDAL
     transformation filter, apply.py:314-335; here Catalyst codegens the
     same affine math over the whole table, no Python in the loop)."""
-    nx, ny, nz = transform_xyz(matrix, F.col(x), F.col(y), F.col(z))
-    keep = [c for c in df.columns if c not in (x, y, z)]
-    return df.select(*keep, nx.alias(x), ny.alias(y), nz.alias(z))
+    nx, ny, nz = transform_xyz(matrix, F.col("x"), F.col("y"), F.col("z"))
+    keep = [c for c in df.columns if c not in ("x", "y", "z")]
+    return df.select(*keep, nx.alias("x"), ny.alias("y"), nz.alias("z"))
 
 
 def similarity_matrix(

@@ -143,12 +143,11 @@ def write_multipatch(
     base_path: str,
     shapes: list[np.ndarray],
     records: list[dict],
-    fields: list[tuple[str, str, int, int]] = CLUSTER_FIELDS,
     crs_wkt: str | None = None,
 ) -> dict[str, Any]:
     """Write ``base_path``.shp/.shx/.dbf (+ .prj when crs_wkt) — one
     MultiPatch shape per entry of ``shapes`` (an (n_tri, 3, 3) triangle
-    array) with the matching attribute record."""
+    array) with the matching ``CLUSTER_FIELDS`` attribute record."""
     if len(shapes) != len(records):
         raise ValueError(f"{len(shapes)} shapes vs {len(records)} records")
     os.makedirs(os.path.dirname(base_path) or ".", exist_ok=True)
@@ -176,7 +175,7 @@ def write_multipatch(
         for c in contents:
             f.write(struct.pack(">2i", off // 2, len(c) // 2))
             off += 8 + len(c)
-    _write_dbf(base_path + ".dbf", fields, records)
+    _write_dbf(base_path + ".dbf", CLUSTER_FIELDS, records)
     if crs_wkt is not None:
         with open(base_path + ".prj", "w") as f:
             f.write(crs_wkt)
@@ -228,19 +227,14 @@ def read_multipatch(base_path: str) -> list[dict]:
 
 
 def write_cluster_multipatch(
-    summaries,
-    path: str,
-    crs_wkt: str | None = None,
-    cull_ids: tuple[int, ...] = (),
+    summaries, path: str, crs_wkt: str | None = None
 ) -> dict[str, Any]:
     """S10 full-fidelity sink: the reference's multipatch shapefile from a
     ``hull.cluster_hulls`` frame (cluster_id, volume, area, ground, status,
     tri_x/tri_y/tri_z). Collects on the driver — one row per cluster, the
-    reference's own granularity (mesh.py:96-105) — and culls the configured
-    cluster ids exactly like CULL_CLUSTER_IDS (mesh.py:66-69)."""
-    rows = summaries.filter(~summaries.cluster_id.isin(list(cull_ids))).collect() \
-        if cull_ids else summaries.collect()
-    rows = sorted(rows, key=lambda r: r["cluster_id"])
+    reference's own granularity (mesh.py:96-105). CULL_CLUSTER_IDS
+    (mesh.py:66-69) is applied upstream, by ``vcd.run_vcd``."""
+    rows = sorted(summaries.collect(), key=lambda r: r["cluster_id"])
     shapes = []
     records = []
     for r in rows:

@@ -45,7 +45,9 @@ def _add_register_args(p: argparse.ArgumentParser) -> None:
                    help="pipeline resolution override (meters); default: estimated")
     p.add_argument("--fnd-units", default="m")
     p.add_argument("--aoi-units", default="m")
-    p.add_argument("--dsm-akaze-threshold", type=float, default=0.0001)
+    p.add_argument("--dsm-akaze-threshold", type=float, default=0.0001,
+                   help="accepted and recorded in config.json for reference CLI parity; "
+                        "unused (the Harris detector has its own fixed threshold)")
     p.add_argument("--dsm-lowes-ratio", type=float, default=0.9)
     p.add_argument("--dsm-ransac-max-iter", type=int, default=10000)
     p.add_argument("--dsm-ransac-threshold", type=float, default=10.0)

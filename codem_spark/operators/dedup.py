@@ -27,14 +27,14 @@ from codem_spark.functions.text import normalized_text_col
 from codem_spark.util import rebalance
 
 # -------------------------------------------------------------- exact dedup
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Digest -> group size + representative id (the SQL-checkable face of
-    exact dedup)."""
+    exact dedup) over (doc_id, text) documents."""
     d = rebalance(df).select(
-        F.col(id_col), F.sha2(normalized_text_col(F.col(text_col)), 256).alias("digest")
+        "doc_id", F.sha2(normalized_text_col(F.col("text")), 256).alias("digest")
     )
     return d.groupBy("digest").agg(
-        F.count("*").alias("n_dups"), F.min(id_col).alias("keep_id")
+        F.count("*").alias("n_dups"), F.min("doc_id").alias("keep_id")
     )
 
 
@@ -114,12 +114,19 @@ def shingles_col(text_col: Column, n: int = 3) -> Column:
 # Mersenne prime 2^31-1: (h mod p) * a + b stays under 2^61 — no int64
 # overflow, so the expression is safe under Spark 4's default ANSI mode.
 _MH_PRIME = (1 << 31) - 1
+# LCG seed of the minhash coefficients
+_MH_SEED = 7
+# minhash shingles are word 3-grams
+_MINHASH_SHINGLE_N = 3
+# Row slices of the signature kernels hold at most this many flat shingle
+# entries (see _minhash_matrix for the measurement behind the size)
+_CHUNK_FLAT = 256_000
 
 
-def _mh_coeffs(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
+def _mh_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     # deterministic LCG-derived coefficients (no RNG state dependency)
     coeffs = []
-    s = seed
+    s = _MH_SEED
     for _ in range(num_hashes):
         s = (s * 6364136223846793005 + 1442695040888963407) % (1 << 63)
         a = (s >> 16) % (1 << 30) | 1
@@ -129,13 +136,26 @@ def _mh_coeffs(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     return coeffs
 
 
-def _minhash_matrix(
-    s: pd.Series, a_vec: np.ndarray, b_vec: np.ndarray, chunk_flat: int = 256_000
-) -> np.ndarray:
+def _row_slices(lens: np.ndarray):
+    """Yield ``(row_lo, row_hi, flat_lo)``: consecutive row slices of a
+    batch with per-row lengths ``lens`` whose flattened length stays at or
+    under ``_CHUNK_FLAT`` (a longer single row is a slice of its own);
+    ``flat_lo`` is the slice's first index in the flattened batch."""
+    cum = np.cumsum(lens)
+    row_lo = 0
+    while row_lo < len(lens):
+        base = int(cum[row_lo - 1]) if row_lo else 0
+        row_hi = int(np.searchsorted(cum, base + _CHUNK_FLAT, side="right"))
+        row_hi = max(row_hi, row_lo + 1)  # always advance (one huge row)
+        yield row_lo, row_hi, base
+        row_lo = row_hi
+
+
+def _minhash_matrix(s: pd.Series, a_vec: np.ndarray, b_vec: np.ndarray) -> np.ndarray:
     """(n_rows, num_hashes) minhash matrix over a batch of shingle arrays.
 
-    Processes row slices whose total flattened shingle count stays under
-    ``chunk_flat``: the (N, H) modular-product temporary is the hot
+    Processes the row slices of ``_row_slices`` (at most ``_CHUNK_FLAT``
+    flat shingles each): the (N, H) modular-product temporary is the hot
     allocation (an unchunked 65536-row Arrow batch of ~200-shingle docs is a
     13M x 64 x 8 B = ~6.7 GB temp PER python worker — 32 workers of those
     thrash the box and flatten the core-scaling curve). Chunked, results
@@ -153,13 +173,7 @@ def _minhash_matrix(
     lens = s.map(len).to_numpy(np.int64)
     if lens.sum() == 0:
         return out
-    # row-slice boundaries so each slice's flat length <= chunk_flat
-    cum = np.cumsum(lens)
-    row_lo = 0
-    while row_lo < n:
-        base = cum[row_lo - 1] if row_lo else 0
-        row_hi = int(np.searchsorted(cum, base + chunk_flat, side="right"))
-        row_hi = max(row_hi, row_lo + 1)  # always advance (one huge row)
+    for row_lo, row_hi, _flat_lo in _row_slices(lens):
         sl = s.iloc[row_lo:row_hi]
         lsl = lens[row_lo:row_hi]
         if lsl.sum() > 0:
@@ -202,7 +216,6 @@ def _minhash_matrix(
                     out[row_lo:row_hi, lane] = mins
                 else:
                     out[row_lo:row_hi, lane][safe] = mins
-        row_lo = row_hi
     return out
 
 
@@ -282,34 +295,32 @@ def _bucket_pairs(banded: DataFrame, cap: int | None = 64) -> DataFrame:
     )
 
 
-def _shingle_frame(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:
-    """(did, sh) shingle sets of ``df`` — the one place this plan is
-    written. Candidates need the banded minhash keys OF the shingles and
-    verification needs the shingle sets themselves; because both build the
-    identical plan for the same (df, text_col, id_col, shingle_n), the
-    frame jaccard_verify persists is substituted by Spark's cache manager
+def _shingle_frame(df: DataFrame) -> DataFrame:
+    """(did, sh) word 3-gram shingle sets of the (doc_id, text) documents
+    ``df`` — the one place this plan is written. Candidates need the banded
+    minhash keys OF the shingles and verification needs the shingle sets
+    themselves; because both build the identical plan for the same ``df``,
+    the frame jaccard_verify persists is substituted by Spark's cache manager
     for every matching subtree at execution, the one inside the candidate
     plan included, so one minhash_lsh query runs the shingle UDF once."""
     return rebalance(df).select(
-        F.col(id_col).alias("did"), shingles_col(F.col(text_col), shingle_n).alias("sh")
+        F.col("doc_id").alias("did"),
+        shingles_col(F.col("text"), _MINHASH_SHINGLE_N).alias("sh"),
     )
 
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
-    bucket_cap: int = 64,
+    bucket_cap: int | None = 64,
 ) -> DataFrame:
     """Banded-LSH candidate pairs (id_a < id_b), deduplicated across bands.
     Standard MinHash banding: docs sharing any full band collide; buckets
     above ``bucket_cap`` fall back to star pairs (see _bucket_pairs).
     Persists nothing: a following jaccard_verify shares the shingles
     through the cache (see _shingle_frame)."""
-    keys = _shingle_frame(df, text_col, id_col, shingle_n).select(
+    keys = _shingle_frame(df).select(
         "did", minhash_band_keys_col(F.col("sh"), num_hashes, bands).alias("bkeys")
     )
     banded = keys.select("did", F.posexplode("bkeys").alias("band", "bkey"))
@@ -317,19 +328,12 @@ def minhash_lsh_candidates(
     return pairs.select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b")).distinct()
 
 
-def jaccard_verify(
-    pairs: DataFrame,
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    shingle_n: int = 3,
-) -> DataFrame:
+def jaccard_verify(pairs: DataFrame, df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs (JVM array intersect/union).
     pairs: (id_a, id_b). The shingle frame is persisted (joined on both
     pair sides, and shared with the candidate plan of the same source);
     the caller owns the cache lifecycle."""
-    sh = _shingle_frame(df, text_col, id_col, shingle_n).persist()
+    sh = _shingle_frame(df).persist()
     j = (
         pairs.join(sh.withColumnsRenamed({"did": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"did": "id_b", "sh": "sh_b"}), "id_b")
@@ -365,23 +369,17 @@ def simhash_col(text_col: Column) -> Column:
         # 64-bit avalanche so every simhash bit-plane is informative
         flat31 = np.concatenate([np.asarray(v, dtype=np.int64) for v in s])
         flat = splitmix64_np(flat31).view(np.uint64)
-        # Per-bit set counts, chunked by row groups so the per-lane
-        # temporaries stay L2-resident (same pattern and 256k-flat chunk
-        # size as _minhash_matrix): the old (N_shingles, 64) int64 ±1 vote
-        # matrix wrote+read multi-GB DRAM temporaries per Arrow batch at
-        # corpus scale. tot = sum(±1) = 2*count_set - n_shingles, computed
-        # per row at the end — bit-identical fingerprints.
+        # Per-bit set counts over the row slices of _minhash_matrix, so the
+        # per-lane temporaries stay L2-resident: the old (N_shingles, 64)
+        # int64 ±1 vote matrix wrote+read multi-GB DRAM temporaries per
+        # Arrow batch at corpus scale. tot = sum(±1) = 2*count_set -
+        # n_shingles, computed per row at the end — bit-identical
+        # fingerprints.
         cnt = np.zeros((n, 64), dtype=np.int64)
-        cum = np.cumsum(lens)
-        chunk_flat = 256_000
-        row_lo = 0
-        while row_lo < n:
-            base = cum[row_lo - 1] if row_lo else 0
-            row_hi = int(np.searchsorted(cum, base + chunk_flat, side="right"))
-            row_hi = max(row_hi, row_lo + 1)
+        for row_lo, row_hi, flat_lo in _row_slices(lens):
             lsl = lens[row_lo:row_hi]
             if lsl.sum() > 0:
-                fl = flat[base : cum[row_hi - 1]]
+                fl = flat[flat_lo : flat_lo + int(lsl.sum())]
                 starts = np.zeros(len(lsl), dtype=np.int64)
                 np.cumsum(lsl[:-1], out=starts[1:])
                 safe = lsl > 0
@@ -395,7 +393,6 @@ def simhash_col(text_col: Column) -> Column:
                         cnt[row_lo:row_hi, bit] = m
                     else:
                         cnt[row_lo:row_hi, bit][safe] = m
-            row_lo = row_hi
         tot = 2 * cnt - lens[:, None]
         bitsm = (tot > 0).astype(np.uint64)
         weights = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
@@ -406,12 +403,7 @@ def simhash_col(text_col: Column) -> Column:
 
 
 def simhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    band_bits: int = 32,
-    hamming_max: int = 1,
-    bucket_cap: int = 64,
+    df: DataFrame, band_bits: int = 32, hamming_max: int = 1
 ) -> DataFrame:
     """Near-dup candidates = equality on any simhash band (pigeonhole:
     64/band_bits bands catch every pair within Hamming distance
@@ -422,13 +414,13 @@ def simhash_candidates(
     bands cap at 65,536 distinct values per band — every bucket holds ~15k
     docs at 10^9 and candidate volume goes ~10^12). Wider bands narrow the
     guaranteed Hamming radius (here <=1); pass band_bits=16, hamming_max=3
-    for the looser small-data behavior. Buckets above ``bucket_cap`` emit
-    star pairs (see _bucket_pairs) — the residual guard for pathological
-    keys (e.g. simhash 0 from empty docs)."""
+    for the looser small-data behavior. Buckets above 64 members emit star
+    pairs (see _bucket_pairs) — the residual guard for pathological keys
+    (e.g. simhash 0 from empty docs)."""
     d = rebalance(df).select(
-        F.col(id_col).alias("did"), simhash_col(F.col(text_col)).alias("sh")
+        F.col("doc_id").alias("did"), simhash_col(F.col("text")).alias("sh")
     )
-    return simhash_candidates_from(d, band_bits, hamming_max, bucket_cap)
+    return simhash_candidates_from(d, band_bits, hamming_max)
 
 
 def band_keys(cols: list[str], band_bits: int) -> Column:

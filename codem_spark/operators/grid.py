@@ -33,6 +33,11 @@ Extent = tuple[float, float, float, float]
 
 # G3 IDW weight exponent: w = 1/d^_IDW_POWER
 _IDW_POWER = 2.0
+# G3 neighbourhood: each point reaches the (2r+1)x(2r+1) cells around its own
+_IDW_RADIUS_CELLS = 1
+# J6 clip window: each bbox grown by this factor about its center
+# (reference compute_clipped_bounds, preprocess.py:936-968)
+_CLIP_GROW = 1.5
 # G5 clip percentiles (reference preprocess.py:278-283: 1st/99th)
 _CLIP_Q = (0.01, 0.99)
 # exact_percentiles: histogram buckets per refinement round, and the round
@@ -44,24 +49,17 @@ _PCT_MAX_ROUNDS = 8
 _INFILL_ROUNDS = 8
 
 
-def grid_max(
-    df: DataFrame,
-    extent: Extent,
-    resolution: float,
-    x: str = "x",
-    y: str = "y",
-    z: str = "z",
-) -> DataFrame:
+def grid_max(df: DataFrame, extent: Extent, resolution: float) -> DataFrame:
     """G1: points -> DSM grid of max elevation at ``resolution`` (meters).
 
     Output: (gx, gy, z) long-format raster — gx/gy are global pixel indices.
     One shuffle (hash agg on ~rows/density keys), map-side combine makes the
     shuffle payload one row per touched cell per input partition.
     """
-    gx = F.floor((F.col(x) - F.lit(extent[0])) / F.lit(resolution)).cast("long")
-    gy = F.floor((F.col(y) - F.lit(extent[1])) / F.lit(resolution)).cast("long")
+    gx = F.floor((F.col("x") - F.lit(extent[0])) / F.lit(resolution)).cast("long")
+    gy = F.floor((F.col("y") - F.lit(extent[1])) / F.lit(resolution)).cast("long")
     return (
-        df.select(gx.alias("gx"), gy.alias("gy"), F.col(z).alias("z"))
+        df.select(gx.alias("gx"), gy.alias("gy"), "z")
         .groupBy("gx", "gy")
         .agg(F.max("z").alias("z"))
     )
@@ -78,15 +76,7 @@ def grid_max_sql(points_sql: str, extent: Extent, resolution: float) -> str:
     """
 
 
-def grid_idw(
-    points: DataFrame,
-    extent: Extent,
-    resolution: float,
-    radius_cells: int = 1,
-    x: str = "x",
-    y: str = "y",
-    z: str = "z",
-) -> DataFrame:
+def grid_idw(points: DataFrame, extent: Extent, resolution: float) -> DataFrame:
     """G3: inverse-distance-weighted rasterization.
 
     Each point contributes to every cell whose *center* lies within the
@@ -97,20 +87,15 @@ def grid_idw(
     with weight capped at 1/eps^2.
     """
     eps = 1e-9
-    offs = [
-        (dx, dy)
-        for dx in range(-radius_cells, radius_cells + 1)
-        for dy in range(-radius_cells, radius_cells + 1)
-    ]
-    px = F.col(x)
-    py = F.col(y)
+    px = F.col("x")
+    py = F.col("y")
     gx0 = F.floor((px - F.lit(extent[0])) / F.lit(resolution)).cast("long")
     gy0 = F.floor((py - F.lit(extent[1])) / F.lit(resolution)).cast("long")
     base = points.select(
-        px.alias("px"), py.alias("py"), F.col(z).alias("pz"), gx0.alias("gx0"), gy0.alias("gy0")
+        px.alias("px"), py.alias("py"), F.col("z").alias("pz"), gx0.alias("gx0"), gy0.alias("gy0")
     )
     off = F.explode(
-        F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offs])
+        F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in _idw_offsets()])
     )
     e = base.withColumn("_o", off)
     gx = (F.col("gx0") + F.col("_o.dx")).alias("gx")
@@ -126,15 +111,14 @@ def grid_idw(
     )
 
 
-def grid_idw_sql(
-    points_sql: str, extent: Extent, resolution: float, radius_cells: int = 1
-) -> str:
-    offs = [
-        (dx, dy)
-        for dx in range(-radius_cells, radius_cells + 1)
-        for dy in range(-radius_cells, radius_cells + 1)
-    ]
-    vals = ", ".join(f"({dx}, {dy})" for dx, dy in offs)
+def _idw_offsets() -> list[tuple[int, int]]:
+    r = _IDW_RADIUS_CELLS
+    return [(dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)]
+
+
+def grid_idw_sql(points_sql: str, extent: Extent, resolution: float) -> str:
+    """DuckDB oracle twin of grid_idw."""
+    vals = ", ".join(f"({dx}, {dy})" for dx, dy in _idw_offsets())
     return f"""
     WITH pts AS ({points_sql}),
     base AS (
@@ -162,9 +146,6 @@ def cell_pyramid(
     extent: Extent,
     level: int,
     coarsest: int,
-    x: str = "x",
-    y: str = "y",
-    z: str = "z",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Multi-resolution cell aggregation — the DSM pyramid (G1 at every
@@ -188,9 +169,8 @@ def cell_pyramid(
     if not (0 <= coarsest <= level):
         raise ValueError(f"need 0 <= coarsest ({coarsest}) <= level ({level})")
     shift = 2 * (level - coarsest)
-    c = cells.cell_encode_col(x, y, extent, level)
-    pre = df.select(
-        F.shiftright(c, shift).alias("_ck"), c.alias("cell"), F.col(z).alias("z")
+    pre = cells.with_cell(df, "x", "y", extent, level, out="cell").select(
+        F.shiftright("cell", shift).alias("_ck"), "cell", "z"
     )
     pre = (
         pre.repartition(num_partitions, "_ck") if num_partitions else pre.repartition("_ck")
@@ -226,23 +206,20 @@ def cell_pyramid_sql(points_sql: str, extent: Extent, level: int, coarsest: int)
     return f"WITH pts AS ({points_sql}), {', '.join(parts)} {selects}"
 
 
-def density(df: DataFrame, extent: Extent, level: int, x: str = "x", y: str = "y") -> DataFrame:
+def density(df: DataFrame, extent: Extent, level: int) -> DataFrame:
     """G2: per-cell point count — input to the average-spacing estimate."""
-    cell = cells.cell_encode_col(x, y, extent, level)
-    return df.select(cell.alias("cell_id")).groupBy("cell_id").agg(
+    return cells.with_cell(df, "x", "y", extent, level).groupBy("cell_id").agg(
         F.count("*").alias("n_points")
     )
 
 
-def estimate_resolution(
-    df: DataFrame, extent: Extent, level: int = 10, x: str = "x", y: str = "y"
-) -> float:
+def estimate_resolution(df: DataFrame, extent: Extent, level: int = 10) -> float:
     """S6: average point spacing ~ sqrt(cell_area / avg points per occupied
     cell) — the reference estimates this with 25 m hexbins
     (preprocess.py:681-727); one agg job here."""
     size = cells.cell_size(extent, level)
     row = (
-        density(df, extent, level, x, y)
+        density(df, extent, level)
         .agg(F.avg("n_points").alias("avg_n"))
         .collect()[0]
     )
@@ -267,18 +244,16 @@ def bbox_union(
 
 
 def bbox_overlap(
-    a: tuple[float, float, float, float],
-    b: tuple[float, float, float, float],
-    factor: float = 1.5,
+    a: tuple[float, float, float, float], b: tuple[float, float, float, float]
 ) -> tuple[float, float, float, float]:
-    """J6: overlap of two bboxes grown by ``factor`` about their centers
+    """J6: overlap of two bboxes grown by ``_CLIP_GROW`` about their centers
     (reference computes a 1.5x-oversized clip window,
     compute_clipped_bounds preprocess.py:936-968); raises if disjoint
     (preprocess.py:915-916 errors on non-overlapping data)."""
 
     def grow(bb):
         cx, cy = (bb[0] + bb[2]) / 2, (bb[1] + bb[3]) / 2
-        hw, hh = (bb[2] - bb[0]) / 2 * factor, (bb[3] - bb[1]) / 2 * factor
+        hw, hh = (bb[2] - bb[0]) / 2 * _CLIP_GROW, (bb[3] - bb[1]) / 2 * _CLIP_GROW
         return (cx - hw, cy - hh, cx + hw, cy + hh)
 
     ga, gb = grow(a), grow(b)
@@ -289,12 +264,11 @@ def bbox_overlap(
     return (x0, y0, x1, y1)
 
 
-def clip_bbox(df: DataFrame, bbox: tuple[float, float, float, float], x: str = "x", y: str = "y") -> DataFrame:
+def clip_bbox(df: DataFrame, bbox: tuple[float, float, float, float]) -> DataFrame:
     """Clip to bbox — a pushed-down predicate; on a cell-partitioned table
     this prunes partitions before the scan."""
-    return df.filter(
-        (F.col(x) >= bbox[0]) & (F.col(x) < bbox[2]) & (F.col(y) >= bbox[1]) & (F.col(y) < bbox[3])
-    )
+    x, y = F.col("x"), F.col("y")
+    return df.filter((x >= bbox[0]) & (x < bbox[2]) & (y >= bbox[1]) & (y < bbox[3]))
 
 
 def exact_percentiles(
@@ -461,11 +435,11 @@ def quantize_normalize(
     return df.withColumn(f"{col}_u8", q)
 
 
-def cluster_sizes(df: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:
+def cluster_sizes(df: DataFrame) -> DataFrame:
     """G6: append per-cluster count as a column — window agg, the exact
     semantics of pandas groupby.transform('count')
     (vcd/preprocessing/preprocess.py:253-256)."""
-    w = Window.partitionBy(cluster_col)
+    w = Window.partitionBy("cluster_id")
     return df.withColumn("cluster_size", F.count("*").over(w))
 
 
@@ -473,37 +447,26 @@ def _tile_explode(df: DataFrame, tile_px: int, halo: int, carry) -> DataFrame:
     """Duplicate each raster cell (gx, gy) into every ``tile_px``-pixel tile
     whose ``halo``-widened window contains it: home tile always; a neighbor
     tile only when within ``halo`` pixels of the border facing it (the
-    raster-space twin of functions/cells.explode_halo). Output columns:
-    (htx, hty, gx, gy, *carry)."""
-    tx = F.floor(F.col("gx") / F.lit(tile_px)).cast("long")
-    ty = F.floor(F.col("gy") / F.lit(tile_px)).cast("long")
-    fx = F.col("gx") - tx * F.lit(tile_px)  # in-tile pixel offset [0, tile_px)
-    fy = F.col("gy") - ty * F.lit(tile_px)
-
-    def near(dv: int, f):
-        if dv == 0:
-            return F.lit(True)
-        if dv < 0:
-            return f < F.lit(halo)
-        return f >= F.lit(tile_px - halo)
-
-    structs = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            structs.append(
-                F.when(
-                    near(dx, fx) & near(dy, fy),
-                    F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")),
-                )
-            )
-    off = F.explode(F.filter(F.array(*structs), lambda s: s.isNotNull()))
+    raster-space twin of functions/cells.explode_halo, sharing its
+    ``cells.ring_sql``). Output columns: (htx, hty, gx, gy, *carry)."""
+    # in-tile pixel offsets [0, tile_px)
+    ring = cells.ring_sql(
+        f"(`gx` - `_tx` * {tile_px})",
+        f"(`gy` - `_ty` * {tile_px})",
+        lambda f: f"{f} < {halo}",
+        lambda f: f"{f} >= {tile_px - halo}",
+    )
     return (
-        df.withColumn("_tx", tx)
-        .withColumn("_ty", ty)
-        .withColumn("_o", off)
+        df.withColumns(
+            {
+                "_tx": F.expr(f"CAST(floor(`gx` / {tile_px}) AS BIGINT)"),
+                "_ty": F.expr(f"CAST(floor(`gy` / {tile_px}) AS BIGINT)"),
+            }
+        )
+        .withColumn("_o", F.expr(f"explode({ring})"))
         .select(
-            (F.col("_tx") + F.col("_o.dx")).alias("htx"),
-            (F.col("_ty") + F.col("_o.dy")).alias("hty"),
+            F.expr("`_tx` + `_o`.`dx`").alias("htx"),
+            F.expr("`_ty` + `_o`.`dy`").alias("hty"),
             "gx", "gy", *carry,
         )
     )

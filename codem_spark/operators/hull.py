@@ -173,11 +173,12 @@ def hull_volume_area(pts: np.ndarray, faces: np.ndarray | None = None) -> tuple[
     return vol, area
 
 
-def cluster_hulls(points: DataFrame, ground_col: str | None = None) -> DataFrame:
+def cluster_hulls(points: DataFrame) -> DataFrame:
     """(pid, x, y, z, dz, cluster_id) -> one row per cluster from ONE hull
     kernel: the summary columns (see :func:`cluster_summaries`) plus the
-    multipatch-sink face of G7/A7 — ``ground`` (the first row's
-    ``ground_col``, reference classification==2), ``n_tri`` and the 3D hull
+    multipatch-sink face of G7/A7 — ``ground`` (always False: change
+    clusters carry no classification; the reference flags
+    classification==2), ``n_tri`` and the 3D hull
     TRIANGLES tri_x/tri_y/tri_z (3 entries per face, outward oriented; feed
     to ``io.shapefile.write_cluster_multipatch``, mesh.py:96-105). The
     faces are computed once for volume, area and triangles. Without a
@@ -220,7 +221,7 @@ def cluster_hulls(points: DataFrame, ground_col: str | None = None) -> DataFrame
                 "status": ["New" if mean_dz > 0 else "Fled"],
                 "hull_x": [ring[:, 0].tolist() if len(ring) else []],
                 "hull_y": [ring[:, 1].tolist() if len(ring) else []],
-                "ground": [bool(pdf[ground_col].iloc[0]) if ground_col else False],
+                "ground": [False],
                 "n_tri": [len(tri)],
                 "tri_x": [tri[:, :, 0].ravel().tolist()],
                 "tri_y": [tri[:, :, 1].ravel().tolist()],

@@ -55,13 +55,16 @@ _TARGET_PER_TILE = 1500
 _PAIR_CHUNK = 131_072
 # radius_join's distance space
 _XYZ = ("x", "y", "z")
+# finest tile level any join picks
+_MAX_LEVEL = 16
 
 
-def level_for_radius(extent: Extent, radius: float, max_level: int = 16) -> int:
-    """Finest level whose cell edge >= radius (1-ring halo covers radius)."""
+def level_for_radius(extent: Extent, radius: float) -> int:
+    """Finest level (at most _MAX_LEVEL) whose cell edge >= radius (1-ring
+    halo covers radius)."""
     span = max(extent[2] - extent[0], extent[3] - extent[1])
     level = int(math.floor(math.log2(max(span / max(radius, 1e-12), 1.0))))
-    return max(1, min(max_level, level))
+    return max(1, min(_MAX_LEVEL, level))
 
 
 def auto_level(

@@ -29,14 +29,13 @@ def statistical_outliers(
     radius: float,
     k: int = 8,
     multiplier: float = 2.0,
-    pid: str = "pid",
 ) -> DataFrame:
     """Returns the input with an ``is_outlier`` column. Points with fewer
     than k neighbors inside ``radius`` count as outliers (isolated)."""
     nn = knn.knn_join(
-        points, points, extent, radius=radius, k=k + 1, lid=pid, rid=pid
-    ).filter(F.col(pid) != F.col(f"n_{pid}"))
-    mean_d = nn.groupBy(pid).agg(
+        points, points, extent, radius=radius, k=k + 1, lid="pid", rid="pid"
+    ).filter(F.col("pid") != F.col("n_pid"))
+    mean_d = nn.groupBy("pid").agg(
         F.avg("nn_dist").alias("knn_mean_dist"), F.count("*").alias("n_nbrs")
     )
     stats = mean_d.agg(
@@ -44,7 +43,7 @@ def statistical_outliers(
     ).collect()[0]
     thresh = float(stats["mu"]) + multiplier * float(stats["sd"] or 0.0)
     return (
-        points.join(mean_d, pid, "left")
+        points.join(mean_d, "pid", "left")
         .withColumn(
             "is_outlier",
             F.coalesce(F.col("knn_mean_dist") > thresh, F.lit(True))
@@ -62,8 +61,7 @@ def local_minimum_outliers(
 ) -> DataFrame:
     """ELM-style low-noise flag: z below the cell's 5th percentile by more
     than ``threshold`` meters."""
-    c = cells.cell_encode_col("x", "y", extent, cell_level)
-    d = points.withColumn("_cell", c)
+    d = cells.with_cell(points, "x", "y", extent, cell_level, out="_cell").drop("_ix", "_iy")
     floor = d.groupBy("_cell").agg(
         F.expr("percentile(z, 0.05)").alias("_zfloor")
     )

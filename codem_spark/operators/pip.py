@@ -62,16 +62,12 @@ def ring_bbox(ring: Ring) -> tuple[float, float, float, float]:
     return (min(xs), min(ys), max(xs), max(ys))
 
 
-def clip_to_polygon(
-    df: DataFrame, ring: Ring, x: str = "x", y: str = "y", invert: bool = False
-) -> DataFrame:
-    """Filter rows to those inside (or outside, invert=True) the ring.
-    The bbox pre-filter is redundant logically but gives Catalyst a simple
-    range predicate to push into the scan (file skipping) before the
-    edge-unrolled exact test runs."""
+def clip_to_polygon(df: DataFrame, ring: Ring) -> DataFrame:
+    """Filter rows to those inside the ring. The bbox pre-filter is
+    redundant logically but gives Catalyst a simple range predicate to push
+    into the scan (file skipping) before the edge-unrolled exact test runs."""
     bx0, by0, bx1, by1 = ring_bbox(ring)
-    inside = point_in_polygon_col(F.col(x), F.col(y), ring)
-    if invert:
-        return df.filter(~inside)
-    bbox = (F.col(x) >= bx0) & (F.col(x) <= bx1) & (F.col(y) >= by0) & (F.col(y) <= by1)
+    x, y = F.col("x"), F.col("y")
+    inside = point_in_polygon_col(x, y, ring)
+    bbox = (x >= bx0) & (x <= bx1) & (y >= by0) & (y <= by1)
     return df.filter(bbox & inside)

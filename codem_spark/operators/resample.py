@@ -10,9 +10,9 @@ cell — the tile+halo plan of operators/knn.py (``knn.tile_right`` halo's
 the sample side so every query sees all samples within the interpolation
 radius) — then a vectorized kernel interpolates per tile:
 
-* ``idw`` — inverse-distance-weighted interpolation over the k nearest
-  samples within the radius (``knn.grid_topk``; the robust default — the
-  reference itself rasterizes with IDW, S8/G3);
+* ``idw`` — inverse-distance-weighted (w = 1/d^2) interpolation over the
+  ``_IDW_K`` nearest samples within the radius (``knn.grid_topk``; the
+  robust default — the reference itself rasterizes with IDW, S8/G3);
 * ``tin`` — true Delaunay TIN linear interpolation (operators/tin.py: one
   Bowyer-Watson triangulation per tile over its halo'd samples), exact on
   planar fields; NaN outside the hull -> NODATA, matching the reference.
@@ -31,6 +31,9 @@ from codem_spark.operators import knn
 Extent = tuple[float, float, float, float]
 
 NODATA = -9999.0
+# idw: neighbours per query, and the weight exponent
+_IDW_K = 8
+_IDW_POWER = 2.0
 
 
 def resample_to_points(
@@ -38,15 +41,11 @@ def resample_to_points(
     queries: DataFrame,
     extent: Extent,
     radius: float,
-    value_cols: tuple[str, ...] = ("z",),
     method: str = "idw",
-    k: int = 8,
-    qid: str = "pid",
-    power: float = 2.0,
 ) -> DataFrame:
-    """Interpolate ``value_cols`` of ``samples(x, y, ...)`` at
-    ``queries(qid, x, y)`` locations. Returns (qid, x, y, <value_cols>...),
-    NODATA where no sample lies within ``radius``."""
+    """Interpolate ``z`` of ``samples(x, y, z)`` at ``queries(pid, x, y)``
+    locations. Returns (pid, x, y, z), NODATA where no sample lies within
+    ``radius``."""
     # Tile level sized from the LARGER side: the per-tile kernel cost is
     # driven by whichever side dominates (Delaunay is superlinear in the
     # tile's sample count; IDW pair volume is queries x samples). Sizing
@@ -68,18 +67,20 @@ def resample_to_points(
     )
     if method not in ("idw", "tin"):
         raise ValueError(f"unknown method {method!r}")
-    vcols = list(value_cols)
 
     def kernel(_cell, qpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {qid: qpdf[qid].to_numpy(), "x": qpdf["x"].to_numpy(), "y": qpdf["y"].to_numpy()}
         nq = len(qpdf)
-        for v in vcols:
-            cols[v] = np.full(nq, NODATA)
+        cols = {
+            "pid": qpdf["pid"].to_numpy(),
+            "x": qpdf["x"].to_numpy(),
+            "y": qpdf["y"].to_numpy(),
+            "z": np.full(nq, NODATA),
+        }
         if nq == 0 or len(spdf) == 0:
             return pd.DataFrame(cols)
         qp = qpdf[["x", "y"]].to_numpy(np.float64)
         sp = spdf[["x", "y"]].to_numpy(np.float64)
-        vals = {v: spdf[v].to_numpy(np.float64) for v in vcols}
+        vals = spdf["z"].to_numpy(np.float64)
         if method == "tin":
             # true Delaunay TIN linear interpolation (reference hag_delaunay
             # / matplotlib.tri path) — one triangulation per tile over the
@@ -90,26 +91,24 @@ def resample_to_points(
             tris = tin_mod.delaunay_np(uniq) if len(uniq) >= 3 else None
             if tris is None or len(tris) == 0:
                 return pd.DataFrame(cols)
-            for v in vcols:
-                zi = tin_mod.tin_interpolate_np(uniq, vals[v][uidx], qp, tris)
-                cols[v] = np.where(np.isnan(zi), NODATA, zi)
+            zi = tin_mod.tin_interpolate_np(uniq, vals[uidx], qp, tris)
+            cols["z"] = np.where(np.isnan(zi), NODATA, zi)
             return pd.DataFrame(cols)
         # IDW over the k nearest samples within the radius; neighbours of
         # one query are contiguous in li, so the weighted sums are segment
         # sums
-        li, ri, dist, _rank = knn.grid_topk(qp, sp, np.arange(len(sp)), radius, k=k)
+        li, ri, dist, _rank = knn.grid_topk(qp, sp, np.arange(len(sp)), radius, k=_IDW_K)
         if len(li) == 0:
             return pd.DataFrame(cols)
         starts = np.flatnonzero(np.diff(li, prepend=-1))
-        w = 1.0 / (dist + 1e-9) ** power
+        w = 1.0 / (dist + 1e-9) ** _IDW_POWER
         wsum = np.add.reduceat(w, starts)
-        for v in vcols:
-            cols[v][li[starts]] = np.add.reduceat(w * vals[v][ri], starts) / wsum
+        cols["z"][li[starts]] = np.add.reduceat(w * vals[ri], starts) / wsum
         return pd.DataFrame(cols)
 
-    qt = {f.name: f.dataType.simpleString() for f in queries.schema.fields}[qid]
-    schema = f"{qid} {qt}, x double, y double, " + ", ".join(f"{v} double" for v in vcols)
-    tiled = knn.tile_right(samples, extent, radius, level, ("x", "y"), None, value_cols)
+    qt = {f.name: f.dataType.simpleString() for f in queries.schema.fields}["pid"]
+    schema = f"pid {qt}, x double, y double, z double"
+    tiled = knn.tile_right(samples, extent, radius, level, ("x", "y"), None, ("z",))
     return knn._tile_cogroup(
-        queries, tiled, extent, level, [qid, "x", "y", "cell_id"], kernel, schema
+        queries, tiled, extent, level, ["pid", "x", "y", "cell_id"], kernel, schema
     )

@@ -37,24 +37,17 @@ def _cosine(a: str, b: str, na: str, nb: str) -> Column:
     return dot_col(F.col(a), F.col(b)) / (F.col(na) * F.col(nb) + F.lit(1e-30))
 
 
-def cosine_topk_bruteforce(
-    queries: DataFrame,
-    data: DataFrame,
-    k: int = 10,
-    qid: str = "vec_id",
-    did: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Exact top-k by cosine: broadcast-join all pairs (query side small or
-    chunked), rank with a window. Deterministic: ties break by data id.
-    Output: (q_id, d_id, cos_sim, rank)."""
+def cosine_topk_bruteforce(queries: DataFrame, data: DataFrame, k: int = 10) -> DataFrame:
+    """Exact top-k by cosine over (vec_id, embedding) frames: broadcast-join
+    all pairs (query side small or chunked), rank with a window.
+    Deterministic: ties break by data id. Output: (q_id, d_id, cos_sim,
+    rank)."""
+    emb = F.col("embedding")
     q = queries.select(
-        F.col(qid).alias("q_id"), F.col(vec).alias("q_vec"),
-        norm_col(F.col(vec)).alias("_qn"),
+        F.col("vec_id").alias("q_id"), emb.alias("q_vec"), norm_col(emb).alias("_qn")
     )
     d = data.select(
-        F.col(did).alias("d_id"), F.col(vec).alias("d_vec"),
-        norm_col(F.col(vec)).alias("_dn"),
+        F.col("vec_id").alias("d_id"), emb.alias("d_vec"), norm_col(emb).alias("_dn")
     )
     pairs = q.join(F.broadcast(d), F.col("q_id") != F.col("d_id"))
     sim = _cosine("q_vec", "d_vec", "_qn", "_dn")
@@ -67,6 +60,9 @@ def cosine_topk_bruteforce(
 
 
 _LSH_SEED = 13
+# embedding dedup: hyperplanes per LSH table, and tables
+_DEDUP_PLANES = 6
+_DEDUP_TABLES = 8
 
 
 def lsh_buckets_udf_col(vec: Column, dim: int, n_planes: int, n_tables: int) -> Column:
@@ -97,16 +93,16 @@ def lsh_buckets_udf_col(vec: Column, dim: int, n_planes: int, n_tables: int) -> 
     return bk(vec)
 
 
-def _lsh_banded(
-    df: DataFrame, id_col: str, vec: str, dim: int, n_planes: int, n_tables: int
-) -> DataFrame:
-    """(did, vec, n, band, bkey): one row per vector (norm ``n``) and LSH
-    table (band = table index, bkey = that table's bucket id)."""
+def _lsh_banded(df: DataFrame, dim: int, n_planes: int, n_tables: int) -> DataFrame:
+    """(did, vec, n, band, bkey): one row per (vec_id, embedding) vector
+    (norm ``n``) and LSH table (band = table index, bkey = that table's
+    bucket id)."""
+    emb = F.col("embedding")
     b = df.select(
-        F.col(id_col).alias("did"),
-        F.col(vec).alias("vec"),
-        norm_col(F.col(vec)).alias("n"),
-        lsh_buckets_udf_col(F.col(vec), dim, n_planes, n_tables).alias("_bks"),
+        F.col("vec_id").alias("did"),
+        emb.alias("vec"),
+        norm_col(emb).alias("n"),
+        lsh_buckets_udf_col(emb, dim, n_planes, n_tables).alias("_bks"),
     )
     return b.select("did", "vec", "n", F.posexplode("_bks").alias("band", "bkey"))
 
@@ -118,9 +114,6 @@ def cosine_topk_lsh(
     k: int = 10,
     n_planes: int = 8,
     n_tables: int = 8,
-    qid: str = "vec_id",
-    did: str = "vec_id",
-    vec: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH. Both sides are
     bucketed under ``n_tables`` independent plane sets; candidates = union of
@@ -128,8 +121,8 @@ def cosine_topk_lsh(
     the IVF-style 100 TB path), deduplicated across tables; exact cosine
     re-rank on the candidates. Recall rises with n_tables, cost with
     n_tables / 2^n_planes."""
-    qb = _lsh_banded(queries, qid, vec, dim, n_planes, n_tables)
-    db = _lsh_banded(data, did, vec, dim, n_planes, n_tables)
+    qb = _lsh_banded(queries, dim, n_planes, n_tables)
+    db = _lsh_banded(data, dim, n_planes, n_tables)
     pairs = (
         qb.withColumnsRenamed({"did": "q_id", "vec": "q_vec", "n": "q_n"})
         .join(db.withColumnsRenamed({"did": "d_id", "vec": "d_vec", "n": "d_n"}), ["band", "bkey"])
@@ -150,14 +143,10 @@ def embedding_cosine_dedup(
     df: DataFrame,
     dim: int,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    n_planes: int = 6,
-    n_tables: int = 8,
     bucket_cap: int | None = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate removal — the dedup-family member
-    over an embedding column: one bucketize pass (all ``n_tables`` LSH
+    over the (vec_id, embedding) column: one bucketize pass (all LSH
     buckets per vector), candidate pairs through the SAME hot-bucket-guarded
     machinery as minhash banding (``dedup._bucket_pairs``: buckets over
     ``bucket_cap`` emit O(m) star pairs vs the bucket-min representative —
@@ -167,16 +156,16 @@ def embedding_cosine_dedup(
     the in-bucket pair (vectors and norms ride in the bucket; no join back),
     drop the higher id of each confirmed pair. Near-identical vectors
     (angle ~0) collide in some table with probability
-    ~1 - (angle/pi * n_planes)^n_tables ~ 1, so recall at dedup-grade
+    ~1 - (angle/pi * planes)^tables ~ 1, so recall at dedup-grade
     thresholds is not the recall of top-k search."""
     from codem_spark.operators.dedup import _bucket_pairs
 
-    banded = _lsh_banded(df, id_col, vec, dim, n_planes, n_tables)
+    banded = _lsh_banded(df, dim, _DEDUP_PLANES, _DEDUP_TABLES)
     sim = _cosine("a.vec", "b.vec", "a.n", "b.n")
     dup = (
         _bucket_pairs(banded, cap=bucket_cap)
         .filter(sim >= F.lit(threshold))
-        .select(F.col("b.did").alias(id_col))
+        .select(F.col("b.did").alias("vec_id"))
         .distinct()
     )
-    return df.join(dup, id_col, "left_anti")
+    return df.join(dup, "vec_id", "left_anti")

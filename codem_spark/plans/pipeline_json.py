@@ -292,8 +292,7 @@ def _stage_filter(df: DataFrame, stage: dict[str, Any], extent) -> DataFrame:
         radius = float(stage.get("radius", 50.0))
         if kind == "hag_delaunay":
             interp = resample.resample_to_points(
-                ground, nong, ext, radius=radius, value_cols=("z",),
-                method="tin", qid="pid",
+                ground, nong, ext, radius=radius, method="tin"
             ).select("pid", F.col("z").alias("ground_z"))
         else:
             # nearest single ground point (knn_join_complete pins k=1 —

@@ -34,6 +34,10 @@ _POP = np.array([bin(i).count("1") for i in range(65536)], dtype=np.int64)
 # RANSAC: points per similarity sample, and the seed of the sample draw
 _MIN_SAMPLES = 3
 _RANSAC_SEED = 0
+# RANSAC trials solved per stacked-SVD batch
+_RANSAC_CHUNK = 512
+# LSH match: bits per descriptor band key (16-bit bands of the 4 lanes)
+_LSH_BAND_BITS = 16
 
 
 def _popcount64(a: np.ndarray) -> np.ndarray:
@@ -129,14 +133,13 @@ def _match_features_lsh(
     fnd_kp: DataFrame,
     aoi_kp: DataFrame,
     lowes_ratio: float = 0.9,
-    band_bits: int = 16,
 ) -> pd.DataFrame:
     """LSH fallback for huge descriptor sets: candidate pairs collide on any
     16-bit band of any of the 4 descriptor lanes (catching near-Hamming
     matches with high recall, like the reference's FLANN multi-probe LSH);
     exact Hamming + per-AOI-keypoint top-2 + Lowe ratio on the candidates —
     one banded shuffle join instead of a driver collect."""
-    bands = band_keys(["d0", "d1", "d2", "d3"], band_bits)
+    bands = band_keys(["d0", "d1", "d2", "d3"], _LSH_BAND_BITS)
 
     def banded(df: DataFrame, prefix: str) -> DataFrame:
         cols = [F.col(c).alias(f"{prefix}{c}") for c in ("x", "y", "z", "d0", "d1", "d2", "d3")]
@@ -219,7 +222,6 @@ def _ransac_consensus_batch(
     samples: np.ndarray,
     threshold: float,
     solve_scale: bool,
-    chunk: int = 512,
 ) -> tuple[int, "np.ndarray | None"]:
     """Batched RANSAC consensus search: for every 3-point sample, the
     umeyama similarity (stacked SVD) and its inlier count over all pairs;
@@ -229,8 +231,8 @@ def _ransac_consensus_batch(
     eps = np.finfo(np.float64).eps
     best_count = -1
     best_inliers: np.ndarray | None = None
-    for lo in range(0, trials, chunk):
-        sl = samples[lo : lo + chunk]
+    for lo in range(0, trials, _RANSAC_CHUNK):
+        sl = samples[lo : lo + _RANSAC_CHUNK]
         t = len(sl)
         s3 = src[sl]  # (t, 3, 3)
         d3 = dst[sl]

@@ -58,7 +58,6 @@ def compute_normals(
     extent: Extent,
     radius: float,
     k: int = 9,
-    pid: str = "pid",
 ) -> DataFrame:
     """J4: per-point plane normal from the k-nearest neighborhood's 3x3
     covariance smallest eigenvector (reference delegates to PDAL
@@ -107,7 +106,7 @@ def compute_normals(
                     nz[qi] = nv[:, 2]
         return pd.DataFrame(
             {
-                "pid": qpdf[pid].to_numpy(),
+                "pid": qpdf["pid"].to_numpy(),
                 "x": qp[:, 0],
                 "y": qp[:, 1],
                 "z": qp[:, 2],
@@ -117,11 +116,11 @@ def compute_normals(
             }
         )
 
-    pt = {f.name: f.dataType.simpleString() for f in points.schema.fields}[pid]
+    pt = {f.name: f.dataType.simpleString() for f in points.schema.fields}["pid"]
     schema = f"pid {pt}, x double, y double, z double, nx double, ny double, nz double"
     samples = knn.tile_right(points, extent, radius, level, rid=None)
     return knn._tile_cogroup(
-        points, samples, extent, level, [pid, "x", "y", "z", "cell_id"], kernel, schema
+        points, samples, extent, level, ["pid", "x", "y", "z", "cell_id"], kernel, schema
     )
 
 

@@ -138,7 +138,7 @@ def preprocess(
         bf = grid.bounds(fnd_points)
         ba = grid.bounds(aoi_points)
         if cfg.tight_search:
-            joint = grid.bbox_overlap(bf, ba, factor=1.5)
+            joint = grid.bbox_overlap(bf, ba)
             # clip both to the 1.5x overlap window (reference clip_data
             # preprocess.py:858-933 / TIGHT_SEARCH) — partition pruning at
             # scale. Engine default ON (reference defaults OFF,
@@ -254,29 +254,28 @@ def with_residuals(
     fnd_points: DataFrame,
     extent: Extent,
     radius: float,
-    pid: str = "pid",
 ) -> DataFrame:
     """Append per-point registration residual columns (the reference writes
     ResidualX/Y/Z/Horiz/3D extra dims on the output cloud,
     apply.py:375-391): residual = registered point - nearest foundation
     point. Points with no foundation neighbor inside ``radius`` get NULLs."""
     nn = knn_mod.knn_join(
-        registered_aoi.select(pid, "x", "y", "z"),
-        fnd_points.select(pid, "x", "y", "z"),
+        registered_aoi.select("pid", "x", "y", "z"),
+        fnd_points.select("pid", "x", "y", "z"),
         extent,
         radius=radius,
         k=1,
-        lid=pid,
-        rid=pid,
+        lid="pid",
+        rid="pid",
         l_carry=("x", "y", "z"),
         r_carry=("x", "y", "z"),
     ).select(
-        pid,
+        "pid",
         (F.col("l_x") - F.col("r_x")).alias("residual_x"),
         (F.col("l_y") - F.col("r_y")).alias("residual_y"),
         (F.col("l_z") - F.col("r_z")).alias("residual_z"),
     )
-    out = registered_aoi.join(nn, pid, "left")
+    out = registered_aoi.join(nn, "pid", "left")
     horiz = F.sqrt(F.col("residual_x") ** 2 + F.col("residual_y") ** 2)
     r3d = F.sqrt(F.col("residual_x") ** 2 + F.col("residual_y") ** 2 + F.col("residual_z") ** 2)
     return out.withColumn("residual_horiz", horiz).withColumn("residual_3d", r3d)

@@ -13,19 +13,24 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _use_shm_shuffle(shm: str = "/dev/shm", min_free_bytes: int = 16 << 30) -> bool:
+# tmpfs shuffle dir of the auto policy, and the free space it needs
+_SHM = "/dev/shm"
+_SHM_MIN_FREE = 16 << 30
+
+
+def _use_shm_shuffle() -> bool:
     flag = os.environ.get("SPARK_GRAFT_SHM_SHUFFLE", "").strip().lower()
     if flag in ("1", "true", "yes"):
         return True
     if flag in ("0", "false", "no"):
         return False
-    if not (os.path.isdir(shm) and os.access(shm, os.W_OK)):
+    if not (os.path.isdir(_SHM) and os.access(_SHM, os.W_OK)):
         return False
     try:
-        st = os.statvfs(shm)
+        st = os.statvfs(_SHM)
     except OSError:
         return False
-    return st.f_bavail * st.f_frsize >= min_free_bytes
+    return st.f_bavail * st.f_frsize >= _SHM_MIN_FREE
 
 
 def get_spark(

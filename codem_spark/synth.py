@@ -124,11 +124,12 @@ def point_cloud(
     )
 
 
-def points_from_lineitem(df: DataFrame, extent: Extent = DEFAULT_EXTENT) -> DataFrame:
-    """Derive a deterministic point cloud from the driver's lineitem table
-    (bench/entry input per TESTDATA.md — don't synthesize our own when the
-    driver provides rows). pid is unique; coords from id lanes."""
-    x0, y0, x1, y1 = extent
+def points_from_lineitem(df: DataFrame) -> DataFrame:
+    """Derive a deterministic point cloud over ``DEFAULT_EXTENT`` from the
+    driver's lineitem table (bench/entry input per TESTDATA.md — don't
+    synthesize our own when the driver provides rows). pid is unique;
+    coords from id lanes."""
+    x0, y0, x1, y1 = DEFAULT_EXTENT
     pid = (F.col("l_orderkey") * F.lit(8) + F.col("l_linenumber")).alias("pid")
     out = df.select(pid)
     out = out.withColumn("x", F.lit(x0) + geo.id_lane_col(F.col("pid"), 0) * F.lit(x1 - x0))

@@ -134,7 +134,6 @@ def compute_hag_dz(
         after.select("pid", "x", "y"),
         extent,
         radius=cfg.knn_radius,
-        value_cols=("z",),
         method="tin",
     ).select("pid", F.col("z").alias("_ground_z"))
     return (
@@ -162,7 +161,7 @@ def cluster_changes(changes: DataFrame, extent: Extent, cfg: VcdConfig) -> DataF
         min_points=cfg.min_points,
     )
     out = changes.join(labelled, "pid")
-    return grid.cluster_sizes(out, "cluster_id")
+    return grid.cluster_sizes(out)
 
 
 def products(changes: DataFrame, extent: Extent, cfg: VcdConfig) -> dict[str, DataFrame]:
@@ -182,8 +181,6 @@ def export_multipatch(
     clustered: DataFrame,
     path: str,
     crs_wkt: str | None = None,
-    cull_ids: tuple[int, ...] = (),
-    ground_col: str | None = None,
 ) -> dict:
     """The reference's final mesh export (vcd/main.py Mesh.write,
     vcd/meshing/mesh.py:74-105): per-cluster 3D hull triangles as an ESRI
@@ -192,10 +189,8 @@ def export_multipatch(
     (io/shapefile.py), one record per cluster."""
     from codem_spark.io import shapefile as shapefile_io
 
-    meshes = hull.cluster_hulls(clustered, ground_col=ground_col)
-    return shapefile_io.write_cluster_multipatch(
-        meshes, path, crs_wkt=crs_wkt, cull_ids=cull_ids
-    )
+    meshes = hull.cluster_hulls(clustered)
+    return shapefile_io.write_cluster_multipatch(meshes, path, crs_wkt=crs_wkt)
 
 
 def colored_clusters(clustered: DataFrame) -> DataFrame:

@@ -6,8 +6,11 @@ jobs each query launches (driver round-trips are the sf0.1 bottleneck), and
 dumps .explain('formatted') plans to plans/<tag>/<query>_<suffix>.txt.
 
 Usage:
-  python scripts/profile_queries.py [--tag r06] [--suffix before] \
+  python scripts/profile_queries.py --tag <dir> [--suffix before] \
       [--passes 2] [--queries knn_dz,density,...] [--no-plans]
+
+``--tag`` is required: plans/ holds committed plan dumps (plans/r06), and a
+run writes only into the directory it is told to.
 
 Prints one JSON line per query and a summary line.
 """
@@ -26,7 +29,7 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--tag", default="r06")
+    ap.add_argument("--tag", required=True, help="plan dump directory under plans/")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--queries", default="")

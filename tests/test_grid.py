@@ -30,7 +30,7 @@ def test_grid_max_vs_duckdb(spark, duck):
 def test_grid_idw_vs_duckdb(spark, duck):
     pc = synth.point_cloud(spark, 2000)
     got = (
-        grid.grid_idw(pc, EXTENT, 2000.0, radius_cells=1)
+        grid.grid_idw(pc, EXTENT, 2000.0)
         .toPandas()
         .sort_values(["gx", "gy"])
         .reset_index(drop=True)
@@ -38,7 +38,7 @@ def test_grid_idw_vs_duckdb(spark, duck):
     pdf = pc.select("x", "y", "z").toPandas()
     duck.register("pts_idw", pdf)
     exp = (
-        duck.sql(grid.grid_idw_sql("SELECT * FROM pts_idw", EXTENT, 2000.0, 1) + " ORDER BY gx, gy")
+        duck.sql(grid.grid_idw_sql("SELECT * FROM pts_idw", EXTENT, 2000.0) + " ORDER BY gx, gy")
         .df()
     )
     assert len(got) == len(exp)
@@ -187,9 +187,8 @@ def test_cell_pyramid_matches_per_level_aggs_one_exchange(spark, duck):
     # ancestor repartition); the union's identical exchanges dedupe at
     # runtime via AQE stage reuse. Assert on the deepest chain (finest agg
     # + all three rollups, no union in the way).
-    c = grid.cells.cell_encode_col("x", "y", EXTENT, 10)
-    pre = pc.select(
-        F.shiftright(c, 6).alias("_ck"), c.alias("cell"), F.col("z").alias("z")
+    pre = cells.with_cell(pc, "x", "y", EXTENT, 10, out="cell").select(
+        F.shiftright("cell", 6).alias("_ck"), "cell", "z"
     ).repartition(8, "_ck")
     chain = pre.groupBy("_ck", "cell").agg(F.max("z").alias("z_max"), F.count("*").alias("n"))
     for _ in range(3):
@@ -201,9 +200,8 @@ def test_cell_pyramid_matches_per_level_aggs_one_exchange(spark, duck):
     got = pyr.toPandas().sort_values(["level", "cell"]).reset_index(drop=True)
     # oracle 1: independent per-level direct aggregations
     for lv in (10, 9, 8, 7):
-        cell = cells.cell_encode_col("x", "y", EXTENT, lv)
         exp = (
-            pc.select(cell.alias("cell"), "z")
+            cells.with_cell(pc, "x", "y", EXTENT, lv, out="cell")
             .groupBy("cell")
             .agg(F.max("z").alias("z_max"), F.count("*").alias("n"))
             .toPandas()

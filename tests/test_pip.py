@@ -21,14 +21,6 @@ def test_pip_matches_duckdb(spark, duck):
     assert (got == exp).all()
 
 
-def test_pip_invert_partitions_all_points(spark):
-    pc = synth.point_cloud(spark, 1000)
-    n_in = pip.clip_to_polygon(pc, RING).count()
-    n_out = pip.clip_to_polygon(pc, RING, invert=True).count()
-    assert n_in + n_out == 1000
-    assert n_in > 0 and n_out > 0
-
-
 def test_pip_concave_polygon(spark, duck):
     ring = [(0.0, 0.0), (100.0, 0.0), (100.0, 100.0), (50.0, 40.0), (0.0, 100.0)]
     pc = synth.point_cloud(spark, 2000, extent=(0.0, 0.0, 100.0, 100.0))

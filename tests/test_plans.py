@@ -61,10 +61,24 @@ def test_cell_encode_is_codegen(spark):
     from codem_spark.functions import cells
 
     pc = synth.point_cloud(spark, 100)
-    q = pc.select(cells.cell_encode_col("x", "y", (0, 0, 100000, 100000), 12))
+    q = cells.with_cell(pc, "x", "y", (0, 0, 100000, 100000), 12).select("cell_id")
     plan = _plan(q)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "WholeStageCodegen" in plan or "*(1)" in plan  # codegen marker
+
+
+def test_density_quantizes_each_axis_once(spark):
+    """The Morton spread names its input twice per step, so a cell id built
+    over the raw quantize expression repeats it 32 times per axis; with the
+    integer cell coords projected first (``cells.with_cell``) the optimized
+    plan quantizes each axis once."""
+    from codem_spark import synth
+    from codem_spark.operators import grid
+
+    pc = synth.point_cloud(spark, 100)
+    q = grid.density(pc, (0, 0, 100000, 100000), 10)
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.lower().count("floor(") == 2
 
 
 def _plan_tree(p):

@@ -97,7 +97,7 @@ def test_cluster_hull_meshes_to_multipatch(spark, tmp_path):
             "cluster_id": np.repeat([0, 1], 300),
         }
     )
-    meshes = hull.cluster_hulls(spark.createDataFrame(pts), ground_col=None)
+    meshes = hull.cluster_hulls(spark.createDataFrame(pts))
     base = str(tmp_path / "vcd_clusters")
     man = shp.write_cluster_multipatch(meshes, base, crs_wkt='PROJCS["utm"]')
     assert man["n_shapes"] == 2
@@ -113,24 +113,6 @@ def test_cluster_hull_meshes_to_multipatch(spark, tmp_path):
         c = tri.reshape(-1, 3).mean(axis=0)
         v = np.abs(((tri[:, 0] - c) * np.cross(tri[:, 1] - c, tri[:, 2] - c)).sum() / 6.0)
         assert v == pytest.approx(vol, rel=1e-9)
-
-
-def test_cull_ids_and_empty(tmp_path, spark):
-    pts = pd.DataFrame(
-        {
-            "pid": np.arange(40),
-            "x": np.tile(np.arange(20.0), 2),
-            "y": (np.arange(40.0) * 13) % 11 + np.repeat([0.0, 100.0], 20),
-            "z": np.arange(40.0) % 7,
-            "dz": np.ones(40),
-            "cluster_id": np.repeat([0, 1], 20),
-        }
-    )
-    meshes = hull.cluster_hulls(spark.createDataFrame(pts))
-    man = shp.write_cluster_multipatch(meshes, str(tmp_path / "culled"), cull_ids=(1,))
-    assert man["n_shapes"] == 1
-    back = shp.read_multipatch(str(tmp_path / "culled"))
-    assert [r["clusterid"] for r in back] == [0]
 
 
 def test_vcd_export_multipatch_api(spark, tmp_path):
