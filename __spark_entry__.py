@@ -173,10 +173,7 @@ def _q_knn_dz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = pts.filter(F.col("pid") % 40 == 1)
     b = pts.filter(F.col("pid") % 40 == 2)
-    j = knn.knn_join_complete(
-        a, b, EXTENT, radius=KNN_RADIUS, lid="pid", rid="pid",
-        l_carry=("z",), r_carry=("z",),
-    )
+    j = knn.knn_join_complete(a, b, EXTENT, radius=KNN_RADIUS, l_carry=("z",), r_carry=("z",))
     return j.select(
         "pid", "n_pid", F.round(F.col("l_z") - F.col("r_z"), 6).alias("dz")
     )
@@ -471,9 +468,15 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = dedup.minhash_lsh_candidates(
         docs, num_hashes=64, bands=32, bucket_cap=None
     )
-    return dedup.jaccard_verify(cands, docs, threshold=0.7).select(
+    verified = dedup.jaccard_verify(cands, docs, threshold=0.7).select(
         "id_a", "id_b", "jaccard"
     )
+    # collect, then release the shingle cache: the returned frame holds none
+    try:
+        rows = verified.collect()
+    finally:
+        dedup.release_shingles(docs)
+    return spark.createDataFrame(rows, schema=verified.schema)
 
 
 def _minhash_lsh_oracle_sql() -> str:

@@ -15,7 +15,7 @@ Parsers here are from scratch (trimesh is not in the environment):
   (line k of the data section, no row tag), so the file is read once on
   the driver — meshes are AOI definitions, bounded in practice (the
   reference demo mesh is a few MB) and trimesh in the reference is
-  equally single-node. A ``max_bytes`` guard refuses files where the
+  equally single-node. A ``PLY_MAX_BYTES`` guard refuses files where the
   driver-side read would be the wrong tool.
 """
 
@@ -98,17 +98,15 @@ def _parse_ply_header(blob: bytes) -> tuple[str, int, list[tuple[str, str]], int
     return fmt, n_vertices, props, len(header)
 
 
-def read_ply_vertices(
-    spark: SparkSession, path: str, max_bytes: int = PLY_MAX_BYTES
-) -> DataFrame:
+def read_ply_vertices(spark: SparkSession, path: str) -> DataFrame:
     """PLY vertex element -> (pid, x, y, z) DataFrame. ASCII and
     binary_little_endian. Extra vertex properties (nx, red, ...) are parsed
     and dropped; faces are ignored (vertices-as-points, the reference's own
     mesh semantics — preprocess.py:752-758)."""
     size = os.path.getsize(path)
-    if size > max_bytes:
+    if size > PLY_MAX_BYTES:
         raise ValueError(
-            f"PLY file is {size} bytes > max_bytes={max_bytes}: the vertex "
+            f"PLY file is {size} bytes > PLY_MAX_BYTES={PLY_MAX_BYTES}: the vertex "
             "block is positional, so parsing is driver-side — convert to "
             "parquet/OBJ for a distributed scan"
         )
@@ -146,11 +144,11 @@ def read_ply_vertices(
     return spark.createDataFrame(pdf)
 
 
-def read_mesh_vertices(spark: SparkSession, path: str, **kw) -> DataFrame:
+def read_mesh_vertices(spark: SparkSession, path: str) -> DataFrame:
     """Dispatch on extension: .ply / .obj -> (pid, x, y, z)."""
     ext = os.path.splitext(path)[1].lower()
     if ext == ".ply":
-        return read_ply_vertices(spark, path, **kw)
+        return read_ply_vertices(spark, path)
     if ext == ".obj":
         return read_obj_vertices(spark, path)
     raise ValueError(f"unsupported mesh format {ext!r} (expected .ply/.obj)")

@@ -22,8 +22,9 @@ KD-tree; at 10^12 rows the engine instead:
      a bincount; the resulting (label, cluster_id) map joins back to points
      in one broadcast join;
    - distributed route (probe over the cap): cross-tile label edges from
-     the tile+halo radius join, components by min-label propagation with
-     group shortcutting (O(log diameter) rounds over label rows, the
+     the tile+halo plan of operators/knn.py over the border rows
+     (:func:`_cross_tile_label_edges`), components by min-label propagation
+     with group shortcutting (O(log diameter) rounds over label rows, the
      standard Spark connected-components-without-GraphX pattern), sizes by
      a label-level groupBy, then the same point join. Nothing is collected.
 
@@ -190,6 +191,50 @@ def _driver_label_map(probe: pd.DataFrame, tol: float, min_points: int) -> pd.Da
     return pd.DataFrame({"label": labs, "cluster_id": cluster_id})
 
 
+def _cross_tile_label_edges(
+    border: DataFrame, extent: Extent, tol: float, level: int
+) -> DataFrame:
+    """Distinct cross-tile label edges (la, lb), la < lb, among the
+    ``border(lab, x, y, z)`` rows — the tile+halo plan of operators/knn.py
+    (:func:`knn.tile_right` + :func:`knn._tile_cogroup`) with ``border`` on
+    both sides.
+
+    Per tile, the kernel drops the halo rows whose home cell is this tile:
+    intra-tile connectivity is already resolved by the union-find kernel,
+    and re-emitting intra-tile pairs would make a dense m-point blob cost m²
+    edge rows at the shuffle (home cells come from cells.cell_encode_np,
+    bit-identical to the Spark-side with_cell). Same-label pairs carry no
+    connectivity and are masked before the distance evaluation. Each
+    cross-tile pair is found in both orientations (once per endpoint's home
+    tile), so keeping la < lb halves the rows crossing the shuffle; the
+    caller symmetrizes."""
+
+    def kernel(cell: int, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(rpdf):
+            home = cells.cell_encode_np(
+                rpdf["x"].to_numpy(np.float64), rpdf["y"].to_numpy(np.float64),
+                extent, level,
+            )
+            rpdf = rpdf[home != cell]
+        if len(lpdf) == 0 or len(rpdf) == 0:
+            return pd.DataFrame({"la": [], "lb": []})
+        la = lpdf["lab"].to_numpy()
+        lb = rpdf["lab"].to_numpy()
+        li, ri, _d, _rk = knn.grid_topk(
+            lpdf[["x", "y", "z"]].to_numpy(np.float64),
+            rpdf[["x", "y", "z"]].to_numpy(np.float64),
+            lb, tol, k=None, exclude_same_group=(la, lb),
+        )
+        keep = la[li] < lb[ri]
+        return pd.DataFrame({"la": la[li][keep], "lb": lb[ri][keep]})
+
+    right_tiled = knn.tile_right(border, extent, tol, level, rid="lab")
+    return knn._tile_cogroup(
+        border, right_tiled, extent, level, ["cell_id", "lab", "x", "y", "z"],
+        kernel, "la long, lb long",
+    ).distinct()
+
+
 def _distributed_label_map(
     labeled: DataFrame, extent: Extent, tol: float, level: int, min_points: int
 ) -> DataFrame:
@@ -197,25 +242,7 @@ def _distributed_label_map(
     border = labeled.filter(F.col("is_border")).select(
         F.col("label").alias("lab"), "x", "y", "z"
     )
-    # cross_tile_only: intra-tile connectivity is already resolved by the
-    # kernel. unordered_ids: each cross-tile pair comes in both orientations
-    # (once per endpoint's home tile), and the kernel-side lab < n_lab mask
-    # keeps one; the loop below symmetrizes.
-    ledges = (
-        knn.radius_join(
-            border,
-            border,
-            extent,
-            radius=tol,
-            lid="lab",
-            rid="lab",
-            level=level,
-            cross_tile_only=True,
-            unordered_ids=True,
-        )
-        .select(F.col("lab").alias("la"), F.col("n_lab").alias("lb"))
-        .distinct()
-    )
+    ledges = _cross_tile_label_edges(border, extent, tol, level)
     sym = ledges.unionByName(
         ledges.select(F.col("lb").alias("la"), F.col("la").alias("lb"))
     ).localCheckpoint(eager=True)

@@ -332,7 +332,8 @@ def jaccard_verify(pairs: DataFrame, df: DataFrame, threshold: float = 0.8) -> D
     """Exact n-gram Jaccard over candidate pairs (JVM array intersect/union).
     pairs: (id_a, id_b). The shingle frame is persisted (joined on both
     pair sides, and shared with the candidate plan of the same source);
-    the caller owns the cache lifecycle."""
+    the caller releases it with :func:`release_shingles` once the result
+    is consumed."""
     sh = _shingle_frame(df).persist()
     j = (
         pairs.join(sh.withColumnsRenamed({"did": "id_a", "sh": "sh_a"}), "id_a")
@@ -344,6 +345,12 @@ def jaccard_verify(pairs: DataFrame, df: DataFrame, threshold: float = 0.8) -> D
     return j.select("id_a", "id_b", F.round(jac, 6).alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
+
+
+def release_shingles(df: DataFrame) -> None:
+    """Drop the shingle cache :func:`jaccard_verify` persisted for ``df``
+    (the plan-equal frame names the same cache entry)."""
+    _shingle_frame(df).unpersist()
 
 
 # ------------------------------------------------------------------ simhash

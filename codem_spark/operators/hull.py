@@ -185,9 +185,12 @@ def cluster_hulls(points: DataFrame) -> DataFrame:
     ``z`` column the change magnitude ``dz`` is the height. Degenerate
     clusters (rank < 3 — no 3D hull) emit empty triangle arrays with
     volume 0. Clusters labelled -1 (culled) are excluded, like the
-    reference's ClusterID filter (vcd/preprocessing/preprocess.py:228-231)."""
+    reference's ClusterID filter (vcd/preprocessing/preprocess.py:228-231).
+    Each group is ordered by ``pid`` first, so the float sums behind area,
+    volume and mean_dz do not depend on row arrival order."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("pid", kind="stable")
         xy = pdf[["x", "y"]].to_numpy(np.float64)
         ring = convex_hull_2d(xy)
         if "z" in pdf.columns:

@@ -15,13 +15,17 @@ exist at 10^12 rows, so the engine:
 3. cogroups the two sides per cell (:func:`_tile_cogroup`, the one join
    runner) and runs a vectorized numpy kernel — :func:`grid_topk`, the one
    neighbour search — via applyInPandas: Arrow batches, no per-row Python.
-   kNN, radius join, normals (registration/icp.compute_normals) and point
-   resampling (operators/resample.resample_to_points) are all this plan;
+   kNN, the cross-tile clustering edges (operators/cluster.py), normals
+   (registration/icp.compute_normals) and point resampling
+   (operators/resample.resample_to_points) are all this plan;
 4. (completeness pass, :func:`knn_join_complete`) queries that found no
    neighbor inside the radius re-run at an escalated radius — a driver loop
    over a shrinking residual set, read off the kernel's ``nn_rank = 0``
    sentinel rows; the distributed replacement for an unbounded KD-tree
    query.
+
+Both sides are (pid, x, y, z) frames: ``pid`` is the id on each side and
+the distance is 3-D.
 
 Determinism: ties in distance break by ascending data-point id, so output
 rows are identical run-to-run and partitioning-to-partitioning (a north-rule
@@ -53,7 +57,7 @@ _TARGET_PER_TILE = 1500
 # stage measured 245.9 -> 105.6 s at 1 core and 89.4 -> 30.8 s at 4
 # (2.75x -> 3.43x core-scaling), identical output.
 _PAIR_CHUNK = 131_072
-# radius_join's distance space
+# the joins' distance space
 _XYZ = ("x", "y", "z")
 # finest tile level any join picks
 _MAX_LEVEL = 16
@@ -67,12 +71,7 @@ def level_for_radius(extent: Extent, radius: float) -> int:
     return max(1, min(_MAX_LEVEL, level))
 
 
-def auto_level(
-    extent: Extent,
-    radius: float,
-    n_rows: int | None,
-    parallelism: int | None = None,
-) -> int:
+def auto_level(extent: Extent, radius: float, n_rows: int, parallelism: int) -> int:
     """Tile level for a kNN/radius join: bounded above by the radius rule
     (cell edge >= radius so a 1-ring halo provably covers the search ball)
     AND by the data size (≈_TARGET_PER_TILE rows per tile), with a floor of
@@ -88,17 +87,12 @@ def auto_level(
     level 1 -> 4 cogroup groups on 32 cores). Any level <= the radius bound
     is CORRECT — this only tunes parallelism vs per-tile overhead.
     """
-    lr = level_for_radius(extent, radius)
-    if not n_rows or n_rows <= 0:
-        return lr
     lc = max(1, int(0.5 * math.log2(max(n_rows / _TARGET_PER_TILE, 1.0))))
-    if parallelism and parallelism > 0:
-        # enough tiles to fill 4x the task slots, but never so fine that
-        # average occupancy drops below ~64 rows/tile
-        lp = int(math.ceil(0.5 * math.log2(max(4.0 * parallelism, 1.0))))
-        lcap = int(0.5 * math.log2(max(n_rows / 64.0, 1.0)))
-        lc = max(lc, min(lp, lcap))
-    return min(lr, lc)
+    # enough tiles to fill 4x the task slots, but never so fine that
+    # average occupancy drops below ~64 rows/tile
+    lp = int(math.ceil(0.5 * math.log2(max(4.0 * parallelism, 1.0))))
+    lcap = int(0.5 * math.log2(max(n_rows / 64.0, 1.0)))
+    return min(level_for_radius(extent, radius), max(lc, min(lp, lcap)))
 
 
 _EMPTY = (
@@ -264,8 +258,8 @@ def grid_topk(
         # that order), so per-left segment boundaries come from one diff
         if k is None:
             # radius-join mode: every within-radius pair, no ranking — the
-            # callers (radius_join, the cluster edge kernels) ignore rank, so
-            # the lexsort the generic path pays is pure waste here
+            # callers (the cluster edge kernels) ignore rank, so the lexsort
+            # the generic path pays is pure waste here
             li_parts.append(li_w)
             ri_parts.append(ri_w)
             d_parts.append(np.sqrt(d2_w))
@@ -323,9 +317,6 @@ def grid_topk(
 def _topk_kernel_builder(
     k: int,
     radius: float,
-    dims: tuple[str, ...],
-    lid: str,
-    rid: str,
     l_carry: list[str],
     r_carry: list[str],
     emit_unmatched: bool = False,
@@ -334,19 +325,19 @@ def _topk_kernel_builder(
 
     ``emit_unmatched=True`` additionally emits one row per left point that
     found NO neighbor inside the radius, marked ``nn_rank = 0`` with
-    sentinel neighbor fields (n_<rid> = -1, nn_dist/r_* = NaN) — the
+    sentinel neighbor fields (n_pid = -1, nn_dist/r_* = NaN) — the
     escalation loop (knn_join_complete) reads its residual straight off
     these rows instead of running a separate anti-join per round. Each left
     row lives in exactly one home tile, so no duplicates arise."""
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) and len(right):
-            lpts = np.column_stack([left[d].to_numpy(np.float64) for d in dims])
-            rpts = np.column_stack([right[d].to_numpy(np.float64) for d in dims])
-            li, ri, dist, rank = grid_topk(lpts, rpts, right[rid].to_numpy(), radius, k)
+            lpts = np.column_stack([left[d].to_numpy(np.float64) for d in _XYZ])
+            rpts = np.column_stack([right[d].to_numpy(np.float64) for d in _XYZ])
+            li, ri, dist, rank = grid_topk(lpts, rpts, right["pid"].to_numpy(), radius, k)
         else:
             li, ri, dist, rank = _EMPTY
-        n_ids = right[rid].to_numpy()[ri]
+        n_ids = right["pid"].to_numpy()[ri]
         r_vals = {c: right[c].to_numpy()[ri] for c in r_carry}
         if emit_unmatched:
             un = np.ones(len(left), dtype=bool)
@@ -360,8 +351,8 @@ def _topk_kernel_builder(
                 c: np.concatenate([v, np.full(len(extra), np.nan)]) for c, v in r_vals.items()
             }
         data = {
-            lid: left[lid].to_numpy()[li],
-            "n_" + rid: n_ids,
+            "pid": left["pid"].to_numpy()[li],
+            "n_pid": n_ids,
             "nn_dist": dist,
             "nn_rank": rank.astype(np.int32),
         }
@@ -456,18 +447,15 @@ def knn_join(
     extent: Extent,
     radius: float,
     k: int = 1,
-    dims: tuple[str, ...] = ("x", "y", "z"),
-    lid: str = "pid",
-    rid: str = "pid",
     l_carry: tuple[str, ...] = (),
     r_carry: tuple[str, ...] = (),
     level: int | None = None,
     emit_unmatched: bool = False,
 ) -> DataFrame:
     """Radius-bounded k-nearest-neighbor join (left row -> up to k nearest
-    right rows within ``radius`` in ``dims``-space; xy drives tiling).
+    right rows within ``radius`` in xyz-space; xy drives tiling).
 
-    Output columns: lid, n_<rid>, nn_dist, nn_rank, l_<carry...>, r_<carry...>.
+    Output columns: pid, n_pid, nn_dist, nn_rank, l_<carry...>, r_<carry...>.
 
     ``level=None`` sizes tiles from the left side's plan-statistics row
     estimate (``util.approx_row_count``, no job); the output does not
@@ -475,83 +463,17 @@ def knn_join(
     """
     if level is None:
         level = level_of(left, extent, radius)
-    right_tiled = tile_right(right, extent, radius, level, dims, rid, r_carry)
+    right_tiled = tile_right(right, extent, radius, level, r_carry=r_carry)
     kernel = _topk_kernel_builder(
-        k, radius, dims, lid, rid, list(l_carry), list(r_carry),
-        emit_unmatched=emit_unmatched,
+        k, radius, list(l_carry), list(r_carry), emit_unmatched=emit_unmatched
     )
     lf, rf = _types(left), _types(right_tiled, "_r_")
-    parts = [f"{lid} {lf[lid]}", f"n_{rid} {rf[rid]}", "nn_dist double", "nn_rank int"]
+    parts = [f"pid {lf['pid']}", f"n_pid {rf['pid']}", "nn_dist double", "nn_rank int"]
     parts += [f"l_{c} {lf[c]}" for c in l_carry]
     parts += [f"r_{c} {rf[c]}" for c in r_carry]
     return _tile_cogroup(
-        left, right_tiled, extent, level, ["cell_id", lid, *dims, *l_carry],
+        left, right_tiled, extent, level, ["cell_id", "pid", *_XYZ, *l_carry],
         lambda _cell, l, r: kernel(l, r), ", ".join(parts),
-    )
-
-
-def radius_join(
-    left: DataFrame,
-    right: DataFrame,
-    extent: Extent,
-    radius: float,
-    lid: str = "pid",
-    rid: str = "pid",
-    level: int | None = None,
-    cross_tile_only: bool = False,
-    unordered_ids: bool = False,
-) -> DataFrame:
-    """ALL pairs within ``radius`` (not top-k) — the distance join behind
-    the distributed clustering edges (J8). Same tile+halo plan as
-    knn_join; the kernel emits every within-radius pair exactly once (each
-    right row lands in a given halo cell once, each left row has one home
-    cell).
-
-    cross_tile_only=True keeps only pairs whose endpoints live in DIFFERENT
-    tiles — the connected-components edge mode: intra-tile connectivity is
-    already resolved by the in-tile kernel, so emitting intra-tile pairs
-    again would make a dense m-point blob cost m² edge rows at the shuffle.
-    The kernel recomputes each right row's home cell from its x/y
-    (cells.cell_encode_np, bit-identical to the Spark-side with_cell).
-
-    unordered_ids=True (for self-joins whose consumer symmetrizes, i.e. the
-    CC edge phase) keeps only pairs with lid < rid, masked in the kernel
-    before the Arrow boundary: a cross-tile pair is produced in BOTH
-    orientations (once per endpoint's home tile), and same-id pairs carry no
-    connectivity, so this halves the rows crossing the shuffle (and drops
-    the dense same-label border traffic) without changing the edge set the
-    downstream distinct() + symmetrization sees.
-    """
-    if level is None:
-        level = level_of(left, extent, radius)
-
-    def kernel(cell: int, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if cross_tile_only and len(rpdf):
-            home = cells.cell_encode_np(
-                rpdf["x"].to_numpy(np.float64), rpdf["y"].to_numpy(np.float64),
-                extent, level,
-            )
-            rpdf = rpdf[home != cell]
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({lid: [], "n_" + rid: [], "nn_dist": []})
-        lp = np.column_stack([lpdf[d].to_numpy(np.float64) for d in _XYZ])
-        rp = np.column_stack([rpdf[d].to_numpy(np.float64) for d in _XYZ])
-        lids_ = lpdf[lid].to_numpy()
-        rids_ = rpdf[rid].to_numpy()
-        excl = (lids_, rids_) if unordered_ids else None
-        li, ri, dist, _rank = grid_topk(
-            lp, rp, rids_, radius, k=None, exclude_same_group=excl
-        )
-        if unordered_ids:
-            keep = lids_[li] < rids_[ri]
-            li, ri, dist = li[keep], ri[keep], dist[keep]
-        return pd.DataFrame({lid: lids_[li], "n_" + rid: rids_[ri], "nn_dist": dist})
-
-    right_tiled = tile_right(right, extent, radius, level, _XYZ, rid)
-    lt, rt = _types(left)[lid], _types(right_tiled, "_r_")[rid]
-    out_schema = f"{lid} {lt}, n_{rid} {rt}, nn_dist double"
-    return _tile_cogroup(
-        left, right_tiled, extent, level, ["cell_id", lid, *_XYZ], kernel, out_schema
     )
 
 
@@ -568,13 +490,14 @@ def knn_join_complete(
     right: DataFrame,
     extent: Extent,
     radius: float,
-    **kw,
+    l_carry: tuple[str, ...] = (),
+    r_carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Unbounded nearest-neighbor (k=1) join: radius-bounded rounds with
     escalating radius over the unmatched residual — distributed stand-in for
     the reference's unbounded KDTree.query (icp.py:235-241). Each round the
     residual shrinks (typically exponentially), so total cost ~ one bounded
-    join plus noise.
+    join plus noise. Output columns are :func:`knn_join`'s.
 
     ``radius`` is the FIRST round's search radius — a pure performance knob
     (escalation makes the result radius-unbounded). Small starting radii win
@@ -585,21 +508,16 @@ def knn_join_complete(
     Round plumbing (optimization round r6): each round runs the kNN cogroup
     with ``emit_unmatched=True`` and ONE localCheckpoint — matched rows and
     the next round's residual are both filters over that checkpointed frame
-    (nn_rank 1 vs 0), so the per-round anti-join + second checkpoint of the
-    old formulation is gone, as is the left-side pre-checkpoint (each
-    residual generation is consumed exactly once). Only the right side is
-    checkpointed (it feeds every round's halo explode). Measured at sf0.1:
-    21 driver jobs -> 8, knn_dz 2.9 s -> ~1.7 s, identical rows.
+    (nn_rank 1 vs 0), so there is no per-round anti-join, and each residual
+    generation is consumed exactly once. The right side is not checkpointed:
+    each round reads it from its own plan, so a caller whose right side is
+    expensive to recompute caches it first. Its exact count sizes the first
+    radius; a plan-statistics estimate can be ~9x off (sf0.1: 116,583
+    estimated for 13,065 rows), which costs an extra escalation round.
     """
-    lid = kw.get("lid", "pid")
-    dims = kw.get("dims", ("x", "y", "z"))
-    l_carry = tuple(kw.get("l_carry", ()))
-    r_carry = tuple(kw.get("r_carry", ()))
     # the residual is rebuilt from l_<col> outputs: carry the join dims too
-    l_carry_full = tuple(dict.fromkeys([*dims, *l_carry]))
-    kw = {**kw, "k": 1, "l_carry": l_carry_full}
+    l_carry_full = tuple(dict.fromkeys([*_XYZ, *l_carry]))
     par = left.sparkSession.sparkContext.defaultParallelism
-    right = right.localCheckpoint(eager=True)
     n_right = right.count()
     # Density-adaptive FIRST radius (scale-holding, guide §2.3): the
     # caller's radius is a constant, but the right cloud's density is not —
@@ -619,31 +537,24 @@ def knn_join_complete(
     rounds: list[DataFrame] = []
     r = radius
     for _ in range(_MAX_ROUNDS):
-        # halo-covers-radius invariant: even a caller-pinned level must
-        # coarsen as the radius escalates (cell edge >= radius)
-        level = min(
-            kw.get("level") or auto_level(extent, r, n_res, parallelism=par),
-            level_for_radius(extent, r),
-        )
+        # auto_level keeps cell edge >= radius as the radius escalates
         out = knn_join(
-            residual, right, extent, r,
-            **{**kw, "level": level, "emit_unmatched": True},
+            residual, right, extent, r, l_carry=l_carry_full, r_carry=r_carry,
+            level=auto_level(extent, r, n_res, par), emit_unmatched=True,
         ).localCheckpoint(eager=True)
         rounds.append(out.filter(F.col("nn_rank") == 1))
         n_res = out.filter(F.col("nn_rank") == 0).count()
         if n_res == 0 or n_right == 0:
             break
         residual = out.filter(F.col("nn_rank") == 0).select(
-            lid, *[F.col(f"l_{c}").alias(c) for c in l_carry_full]
+            "pid", *[F.col(f"l_{c}").alias(c) for c in l_carry_full]
         )
         r *= _ESCALATE
     result = rounds[0]
     for m in rounds[1:]:
         result = result.unionByName(m)
     # restore the caller's contract columns (drop the internal dim carries)
-    keep = (
-        [lid, f"n_{kw.get('rid', 'pid')}", "nn_dist", "nn_rank"]
-        + [f"l_{c}" for c in l_carry]
-        + [f"r_{c}" for c in r_carry]
+    return result.select(
+        "pid", "n_pid", "nn_dist", "nn_rank",
+        *[f"l_{c}" for c in l_carry], *[f"r_{c}" for c in r_carry],
     )
-    return result.select(*keep)

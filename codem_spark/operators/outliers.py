@@ -32,9 +32,9 @@ def statistical_outliers(
 ) -> DataFrame:
     """Returns the input with an ``is_outlier`` column. Points with fewer
     than k neighbors inside ``radius`` count as outliers (isolated)."""
-    nn = knn.knn_join(
-        points, points, extent, radius=radius, k=k + 1, lid="pid", rid="pid"
-    ).filter(F.col("pid") != F.col("n_pid"))
+    nn = knn.knn_join(points, points, extent, radius=radius, k=k + 1).filter(
+        F.col("pid") != F.col("n_pid")
+    )
     mean_d = nn.groupBy("pid").agg(
         F.avg("nn_dist").alias("knn_mean_dist"), F.count("*").alias("n_nbrs")
     )

@@ -300,7 +300,7 @@ def _stage_filter(df: DataFrame, stage: dict[str, Any], extent) -> DataFrame:
             j = knn.knn_join_complete(
                 nong.select("pid", "x", "y", "z"),
                 ground.select("pid", "x", "y", "z"),
-                ext, radius=radius, lid="pid", rid="pid", r_carry=("z",),
+                ext, radius=radius, r_carry=("z",),
             )
             interp = j.groupBy("pid").agg(F.avg("r_z").alias("ground_z"))
         hag = nong.join(interp, "pid", "left").withColumn(

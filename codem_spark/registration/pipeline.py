@@ -265,8 +265,6 @@ def with_residuals(
         extent,
         radius=radius,
         k=1,
-        lid="pid",
-        rid="pid",
         l_carry=("x", "y", "z"),
         r_carry=("x", "y", "z"),
     ).select(

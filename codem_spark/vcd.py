@@ -105,8 +105,6 @@ def compute_dz(
         before.select("pid", "x", "y", "z"),
         extent,
         radius=cfg.knn_radius,
-        lid="pid",
-        rid="pid",
         l_carry=("x", "y", "z"),
         r_carry=("z",),
     )

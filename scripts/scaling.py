@@ -71,10 +71,9 @@ def workload(cpus: int, sf_dir: str, rep: int = 24) -> dict:
     a = pts.filter(F.col("pid") % 2 == 0)
     b = pts.filter(F.col("pid") % 2 == 1)
     # warmup: JIT + python-worker pool on a 1/16 sample, untimed
-    knn.knn_join(warm, warm, ext, radius=300.0, k=1, lid="pid", rid="pid").count()
+    knn.knn_join(warm, warm, ext, radius=300.0, k=1).count()
     t0 = time.time()
-    j = knn.knn_join(a, b, ext, radius=300.0, k=1, lid="pid", rid="pid",
-                     l_carry=("z",), r_carry=("z",))
+    j = knn.knn_join(a, b, ext, radius=300.0, k=1, l_carry=("z",), r_carry=("z",))
     n_join = j.count()
     timings["spatial_knn_join"] = time.time() - t0
 

@@ -56,10 +56,9 @@ def test_cluster_min_points_filter(spark, blob_points, driver_max_rows):
 
 def test_dense_blob_emits_no_interior_edges(spark):
     """A dense blob strictly inside one tile contributes ZERO cross-tile
-    edge rows (was ~m^2 before cross_tile_only): the in-tile kernel resolves
-    it alone, so the edge pass stays O(boundary) at scale."""
+    edge rows (~m^2 without the kernel's home-cell filter): the in-tile
+    kernel resolves it alone, so the edge pass stays O(boundary) at scale."""
     from codem_spark.functions import cells
-    from codem_spark.operators import knn
 
     rng = np.random.default_rng(3)
     m = 2000
@@ -82,14 +81,14 @@ def test_dense_blob_emits_no_interior_edges(spark):
         "pid", "x", "y", "z"
     )
     assert border.count() == 0  # interior blob: nothing near a tile border
-    edges = knn.radius_join(
-        border, border, SMALL_EXTENT, radius=tol, level=level, cross_tile_only=True
+    edges = cluster._cross_tile_label_edges(
+        border.withColumnRenamed("pid", "lab"), SMALL_EXTENT, tol, level
     )
     assert edges.count() == 0
     # without the border pre-filter, the kernel's home-cell filter alone
     # drops all m^2 intra-tile pairs
-    edges_all = knn.radius_join(
-        df, df, SMALL_EXTENT, radius=tol, level=level, cross_tile_only=True
+    edges_all = cluster._cross_tile_label_edges(
+        df.withColumnRenamed("pid", "lab"), SMALL_EXTENT, tol, level
     )
     assert edges_all.count() == 0
     # and the full operator still clusters the blob exactly as one component

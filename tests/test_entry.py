@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from tests.conftest import persisted_rdd_ids
 
 SF = "/root/testdata/sf0.01"
 
@@ -65,6 +66,16 @@ def test_query_matches_oracle(spark, oracle_con, name):
     ddf = oracle_con.sql(entrymod.oracle_sql()[name]).df()
     assert len(sdf) > 0, "oracle comparison must not pass trivially on empty results"
     _compare(sdf, ddf)
+
+
+def test_minhash_lsh_query_releases_its_shingle_cache(spark):
+    """The contract query collects its verified pairs and releases the
+    shingle frame jaccard_verify persisted: nothing stays cached."""
+    spark.catalog.clearCache()
+    before = persisted_rdd_ids(spark)
+    out = entrymod.queries()["minhash_lsh"](spark, SF).toPandas()
+    assert len(out) > 0
+    assert not persisted_rdd_ids(spark) - before
 
 
 def test_entry_smoke(spark):

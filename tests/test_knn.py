@@ -1,4 +1,5 @@
-"""kNN / radius joins vs exact numpy brute-force oracles."""
+"""kNN joins and the cross-tile clustering edges vs exact numpy
+brute-force oracles."""
 
 from __future__ import annotations
 
@@ -6,8 +7,9 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from codem_spark import synth
-from codem_spark.operators import knn
-from tests.conftest import EXTENT
+from codem_spark.functions import cells
+from codem_spark.operators import cluster, knn
+from tests.conftest import EXTENT, SMALL_EXTENT, persisted_rdd_ids
 
 
 def _brute_nn(A: np.ndarray, B: np.ndarray, b_ids: np.ndarray):
@@ -41,15 +43,36 @@ def test_knn_radius_bound_respected(spark):
     assert res.groupby("pid").size().max() <= 3
 
 
-def test_radius_join_matches_bruteforce(spark, blob_points):
-    df = spark.createDataFrame(blob_points)
-    ext = (0.0, 0.0, 1000.0, 1000.0)
-    got = knn.radius_join(df, df, ext, radius=3.0).toPandas()
-    P = blob_points[["x", "y", "z"]].values
+def test_knn_join_complete_checkpoints_no_right_side(spark):
+    """A single-round call persists only its round's checkpoint: the right
+    side is read from its own plan, not checkpointed."""
+    before = synth.point_cloud(spark, 3000).select("pid", "x", "y", "z")
+    after = synth.point_cloud(spark, 2000, jitter=1.0).select(
+        (F.col("pid") + 1_000_000).alias("pid"), "x", "y", "z"
+    )
+    ids0 = persisted_rdd_ids(spark)
+    res = knn.knn_join_complete(after, before, EXTENT, radius=2000.0)
+    assert len(persisted_rdd_ids(spark) - ids0) == 1
+    assert res.count() == 2000
+
+
+def test_cross_tile_label_edges_match_bruteforce(spark, blob_points):
+    """With every point its own label, the edges are exactly the
+    within-radius pairs whose endpoints have different home tiles, lower
+    id first, each once."""
+    level, tol = 6, 3.0
+    border = spark.createDataFrame(blob_points).withColumnRenamed("pid", "lab")
+    got = cluster._cross_tile_label_edges(border, SMALL_EXTENT, tol, level).toPandas()
+    P = blob_points[["x", "y", "z"]].to_numpy()
+    ids = blob_points.pid.to_numpy()
+    home = cells.cell_encode_np(P[:, 0], P[:, 1], SMALL_EXTENT, level)
     d2 = ((P[:, None, :] - P[None, :, :]) ** 2).sum(2)
-    ii, jj = np.nonzero(d2 <= 9.0)
-    exp = set(zip(blob_points.pid.values[ii], blob_points.pid.values[jj]))
-    assert set(zip(got.pid, got.n_pid)) == exp
+    ii, jj = np.nonzero((d2 <= tol * tol) & (home[:, None] != home[None, :]))
+    exp = {(int(a), int(b)) for a, b in zip(ids[ii], ids[jj]) if a < b}
+    pairs = list(zip(got.la.astype(int), got.lb.astype(int)))
+    assert exp
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == exp
 
 
 def test_knn_deterministic_across_runs(spark):

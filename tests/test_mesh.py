@@ -72,7 +72,7 @@ def test_obj_vertices_distributed(spark, tmp_path):
     assert pdf.x.iloc[499] == pytest.approx(499 * 0.5)
     assert pdf.z.iloc[10] == pytest.approx(10 * 0.125)
     # the scan is distributed: no driver-side parse in the plan
-    assert "Scan text" in df._jdf.queryExecution().executedPlan().toString() or True
+    assert "Scan text" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_mesh_bad_inputs(spark, tmp_path):
@@ -83,6 +83,19 @@ def test_mesh_bad_inputs(spark, tmp_path):
         mesh.read_ply_vertices(spark, p)
     with pytest.raises(ValueError, match="unsupported mesh format"):
         mesh.read_mesh_vertices(spark, str(tmp_path / "x.stl"))
+
+
+def test_ply_size_guard_names_the_size(spark, tmp_path, monkeypatch):
+    """PLY parsing is driver-side, so files over PLY_MAX_BYTES are refused
+    before the read; the guard reads the limit at call time."""
+    import os
+
+    p = str(tmp_path / "big.ply")
+    mesh.write_ply_ascii(pd.DataFrame({"x": [0.0, 1.0], "y": [0.0, 1.0], "z": [0.0, 1.0]}), p)
+    size = os.path.getsize(p)
+    monkeypatch.setattr(mesh, "PLY_MAX_BYTES", size - 1)
+    with pytest.raises(ValueError, match=f"PLY file is {size} bytes"):
+        mesh.read_mesh_vertices(spark, p)
 
 
 def test_ply_aoi_registers_end_to_end(spark, tmp_path):

@@ -165,6 +165,32 @@ def test_cluster_volume_sloped_not_prism(spark):
     assert abs(prism_vol - hull_vol) / hull_vol > 0.25  # old formula provably off
 
 
+def test_cluster_hulls_ignore_row_order(spark):
+    """The hull kernel orders each group by pid, so the float sums behind
+    area, volume and mean_dz, and the triangle arrays, come out the same
+    whatever order the rows arrive in."""
+    rng = np.random.default_rng(11)
+    n = 400
+    pdf = pd.DataFrame(
+        {
+            "pid": np.arange(n),
+            "x": rng.uniform(0, 37, n),
+            "y": rng.uniform(0, 23, n),
+            "z": rng.uniform(0, 9, n),
+            "dz": rng.normal(0.3, 1.7, n),
+            "cluster_id": 0,
+        }
+    )
+    cols = ["area", "footprint_area", "volume", "mean_dz", "hull_x", "hull_y",
+            "tri_x", "tri_y", "tri_z"]
+    reprs = set()
+    for seed in range(6):
+        perm = pdf.iloc[np.random.default_rng(seed).permutation(n)]
+        row = hull.cluster_hulls(spark.createDataFrame(perm)).toPandas().iloc[0]
+        reprs.add(repr([list(v) if hasattr(v, "__len__") else v for v in row[cols]]))
+    assert len(reprs) == 1
+
+
 def test_colored_clusters_match_colormap_oracle(spark):
     """Reference save() (vcd/preprocessing/preprocess.py:332-369):
     TwoSlopeNorm(vmin=min dZ, vcenter=0, vmax=max dZ) -> diverging ramp ->
