@@ -13,8 +13,15 @@ pipeline; this engine is a distributed dataflow whose relational parts are
 stock Catalyst and whose numerical kernels are new vectorized numpy code.
 """
 
+import sys
+
 from codem_spark.config import EngineConfig, RegistrationParameters
-from codem_spark.session import get_spark
+from codem_spark.session import get_spark, keep_unchanged_zip_directories
+
+# inside a PySpark Python worker only: every task there invalidates the
+# import caches (see codem_spark.session)
+if "pyspark.worker" in sys.modules and sys.version_info < (3, 13):
+    keep_unchanged_zip_directories()
 
 
 def __getattr__(name: str):

@@ -506,7 +506,7 @@ def tile_apply(
     w = tile_px + 2 * halo
     cols = list(cols)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         x0 = int(key[0]) * tile_px - halo
         y0 = int(key[1]) * tile_px - halo
         ix = (pdf["gx"].to_numpy() - x0).astype(np.int64)

@@ -4,11 +4,27 @@ Local mode is the test bed; the same settings (AQE, Arrow, explicit shuffle
 partitions) are what we would submit with ``spark-submit --py-files`` on a
 real cluster. ``SPARK_GRAFT_CPUS`` selects parallelism so the N vs 4N
 scaling-efficiency evidence (BASELINE.md) runs the identical code path.
+
+Worker import caches: before every task, a PySpark 4.1 Python worker calls
+``importlib.invalidate_caches()`` (``worker_util.setup_spark_files``). On
+CPython < 3.13 every ``zipimporter`` then re-reads its whole archive
+directory, and a worker holds 16 of them (the ``pyspark.zip`` subpackages,
+1,328 entries, and py4j). That is ~0.3 s of CPU per Python task before the
+kernel starts; an ICP tile kernel at bench sizes takes ~12 ms.
+``keep_unchanged_zip_directories`` wraps ``zipimporter.invalidate_caches``:
+an importer whose archive still has the ``(st_mtime_ns, st_size, st_ino)``
+of its last read keeps its directory, while a first call, a changed archive
+or a failed ``stat`` does the stock re-read. ``codem_spark/__init__.py``
+installs it once, when the package is first imported inside a worker; the
+driver keeps the stock method, and plans and outputs do not change.
+CPython 3.13 reads zip directories lazily and does not need it.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -16,6 +32,29 @@ from pyspark.sql import SparkSession
 # tmpfs shuffle dir of the auto policy, and the free space it needs
 _SHM = "/dev/shm"
 _SHM_MIN_FREE = 16 << 30
+
+
+def keep_unchanged_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip archives whose
+    ``stat`` is unchanged since the importer last read them (see the
+    module docstring). Installing twice is a no-op."""
+    stock = zipimport.zipimporter.invalidate_caches
+    if hasattr(stock, "__wrapped__"):
+        return
+
+    @functools.wraps(stock)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        if stamp is not None and stamp == getattr(self, "_read_stamp", None):
+            return
+        stock(self)
+        self._read_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def _use_shm_shuffle() -> bool:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -146,6 +148,15 @@ def test_tile_apply_rejects_halo_wider_than_tile(spark):
     dsm = spark.createDataFrame([(0, 0, 1.0)], "gx long, gy long, z double")
     with pytest.raises(ValueError, match="halo"):
         grid.tile_apply(dsm, 8, 9, ["z"], lambda *a: None, "gx long")
+
+
+def test_tile_apply_plan_builds_without_warnings(spark):
+    """A partly annotated grouped-map function makes PySpark warn that it
+    cannot infer the eval type from the type hints, once per plan."""
+    dsm = spark.createDataFrame([(0, 0, 1.0)], "gx long, gy long, z double")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        grid.tile_apply(dsm, 8, 2, ["z"], lambda *a: None, "gx long")
 
 
 def test_exact_percentiles_matches_builtin(spark):
