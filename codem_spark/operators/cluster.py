@@ -12,7 +12,7 @@ KD-tree; at 10^12 rows the engine instead:
    component), a border-band flag, and — on one representative row per
    component — the component size;
 2. takes ONE bounded collect of the rows the rest needs (border rows and
-   size representatives, ``limit(driver_max_rows + 1)``). That probe picks
+   size representatives, ``limit(DRIVER_MAX_ROWS + 1)``). That probe picks
    the route, once, like the reference's single brute-force -> FLANN
    descriptor-match switch:
 
@@ -47,6 +47,11 @@ from codem_spark.operators import knn
 
 Extent = tuple[float, float, float, float]
 
+# The one driver collect (border rows plus one size row per tile component)
+# holds at most this many rows; above it the distributed route runs. Read
+# at call time.
+DRIVER_MAX_ROWS = 1 << 21
+
 
 def components_np(n: int, ii: np.ndarray, jj: np.ndarray) -> np.ndarray:
     """Connected components over ``n`` nodes and edges (ii, jj) — fully
@@ -78,13 +83,13 @@ def _tile_union_find(tolerance: float):
             return pd.DataFrame({c: [] for c in cols})
         pts = pdf[["x", "y", "z"]].to_numpy(np.float64)
         # within-tolerance pairs via the shared grid-hash radius kernel
-        # (linear in candidate volume); unordered_pairs halves the DRAM-bound
-        # candidate/distance volume — components_np symmetrizes internally,
-        # so one orientation per pair is enough. Then vectorized component
-        # labels — no per-pair Python loop.
-        li, ri, _d, _rk = knn.grid_topk(
-            pts, pts, np.arange(n), tolerance, k=None, unordered_pairs=True
-        )
+        # (linear in candidate volume); ordering by row index keeps each
+        # unordered pair once, halving the DRAM-bound candidate/distance
+        # volume — components_np symmetrizes internally, so one orientation
+        # per pair is enough. Then vectorized component labels — no
+        # per-pair Python loop.
+        idx = np.arange(n)
+        li, ri, _d, _rk = knn.grid_topk(pts, pts, idx, tolerance, k=None, order=(idx, idx))
         roots = components_np(n, li, ri)
         # tile-local label = min pid in component (globally meaningful seed).
         # Coordinates and the border flag ride along so the cross-tile edge
@@ -124,36 +129,28 @@ def _tile_union_find(tolerance: float):
     return kernel
 
 
-
-
 def _driver_label_edges(bpts: np.ndarray, blab: np.ndarray, tol: float) -> np.ndarray:
-    """Unique cross-label edges among border rows, as sorted (min, max)
-    label pairs of shape (E, 2).
+    """Unique cross-label edges among border rows, as sorted (lower,
+    higher) label pairs of shape (E, 2).
 
     Any within-tolerance pair in the SAME tile is same-label by construction
     (the tile kernel unioned it), so keeping pairs with different labels
-    yields exactly the cross-tile label edge set. exclude_same_group rejects
-    same-label candidates by an integer compare before the 3-D distance.
-    Large inputs are split into left-slices across threads (numpy releases
-    the GIL on the bulk ops; l_offset keeps the unordered mask exact per
-    slice). Each slice deduplicates its pairs before the concatenation, so
-    the driver holds unique label pairs, not point pairs."""
+    yields exactly the cross-tile label edge set. ``grid_topk``'s label
+    order keeps each such point pair once, in its (lower, higher) label
+    orientation, by an integer compare before the 3-D distance. Large
+    inputs are split into left-slices across threads (numpy releases the
+    GIL on the bulk ops); the rule needs no row index, so the slices'
+    union is exactly the single-call pair set. Each slice deduplicates its
+    pairs before the concatenation, so the driver holds unique label
+    pairs, not point pairs."""
     nb = len(bpts)
     rix = np.arange(nb)
 
     def edge_slice(s: int, e: int) -> np.ndarray:
         bi, bj, _d, _rk = knn.grid_topk(
-            bpts[s:e],
-            bpts,
-            rix,
-            tol,
-            k=None,
-            unordered_pairs=True,
-            exclude_same_group=(blab[s:e], blab),
-            l_offset=s,
+            bpts[s:e], bpts, rix, tol, k=None, order=(blab[s:e], blab)
         )
-        a, b = blab[bi + s], blab[bj]
-        return np.unique(np.stack([np.minimum(a, b), np.maximum(a, b)], axis=1), axis=0)
+        return np.unique(np.stack([blab[bi + s], blab[bj]], axis=1), axis=0)
 
     nthr = min(8, max(1, nb // 65536))
     if nthr <= 1:
@@ -203,11 +200,11 @@ def _cross_tile_label_edges(
     intra-tile connectivity is already resolved by the union-find kernel,
     and re-emitting intra-tile pairs would make a dense m-point blob cost m²
     edge rows at the shuffle (home cells come from cells.cell_encode_np,
-    bit-identical to the Spark-side with_cell). Same-label pairs carry no
-    connectivity and are masked before the distance evaluation. Each
-    cross-tile pair is found in both orientations (once per endpoint's home
-    tile), so keeping la < lb halves the rows crossing the shuffle; the
-    caller symmetrizes."""
+    bit-identical to the Spark-side with_cell). ``grid_topk``'s label order
+    keeps only la < lb, before the distance evaluation: same-label pairs
+    carry no connectivity, and each cross-tile pair is found in both
+    orientations (once per endpoint's home tile), so one orientation halves
+    the rows crossing the shuffle; the caller symmetrizes."""
 
     def kernel(cell: int, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if len(rpdf):
@@ -223,10 +220,9 @@ def _cross_tile_label_edges(
         li, ri, _d, _rk = knn.grid_topk(
             lpdf[["x", "y", "z"]].to_numpy(np.float64),
             rpdf[["x", "y", "z"]].to_numpy(np.float64),
-            lb, tol, k=None, exclude_same_group=(la, lb),
+            lb, tol, k=None, order=(la, lb),
         )
-        keep = la[li] < lb[ri]
-        return pd.DataFrame({"la": la[li][keep], "lb": lb[ri][keep]})
+        return pd.DataFrame({"la": la[li], "lb": lb[ri]})
 
     right_tiled = knn.tile_right(border, extent, tol, level, rid="lab")
     return knn._tile_cogroup(
@@ -298,13 +294,12 @@ def euclidean_cluster(
     extent: Extent,
     tolerance: float = 2.0,
     min_points: int = 30,
-    driver_max_rows: int = 1 << 21,
 ) -> DataFrame:
     """points(pid, x, y, z) -> (pid, cluster_id); cluster_id = min pid of the
     cluster, or -1 for clusters smaller than min_points.
 
-    ``driver_max_rows`` caps the one driver collect (border rows plus one
-    size row per tile component); above it the distributed route runs."""
+    ``DRIVER_MAX_ROWS`` caps the one driver collect; above it the
+    distributed route runs."""
     # The input has exactly ONE data consumer (the tile kernel — border rows
     # and labels all derive from the checkpointed kernel output), so no
     # persist: a cache pass here is a pure extra materialization.
@@ -329,13 +324,14 @@ def euclidean_cluster(
     # The single route decision: border rows feed the edges, lab_n > 0 rows
     # the sizes. Within the cap, the probe holds everything the driver
     # route needs.
+    cap = DRIVER_MAX_ROWS
     probe = (
         labeled.filter(F.col("is_border") | (F.col("lab_n") > 0))
         .select("label", "lab_n", "x", "y", "z", "is_border")
-        .limit(driver_max_rows + 1)
+        .limit(cap + 1)
         .toPandas()
     )
-    if len(probe) <= driver_max_rows:
+    if len(probe) <= cap:
         final_map = F.broadcast(
             spark.createDataFrame(
                 _driver_label_map(probe, tolerance, min_points),

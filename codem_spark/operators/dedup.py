@@ -85,26 +85,23 @@ def shingles_col(text_col: Column, n: int = 3) -> Column:
             return pd.Series([[] for _ in range(nrows)])
         flat = np.concatenate([np.asarray(v, dtype=np.int64) for v in s])
         rows, g = _grams_np(flat, lens, n)
-        # per-row distinct via unique on (row, gram) packed keys — chunked
-        # by row groups (exact: the packed key embeds the row id, so rows
-        # are independent) to keep each sort's working set ~2 MB instead of
-        # one ~25 MB random-access sort over the whole Arrow batch; large
-        # streaming temps are what flatten this host's core-scaling curve
+        # per-row distinct via unique on (row, gram) packed keys, over the
+        # row slices of _row_slices (exact: the packed key embeds the row
+        # id, so rows are independent) to keep each sort's working set ~2 MB
+        # instead of one ~25 MB random-access sort over the whole Arrow
+        # batch; large streaming temps are what flatten this host's
+        # core-scaling curve
         packed = rows * (np.int64(1) << np.int64(31)) + g
-        row_bounds = np.searchsorted(rows, np.arange(nrows + 1))
+        gcounts = np.bincount(rows, minlength=nrows)
         out: list[np.ndarray] = []
-        chunk = 262_144
-        lo = 0
-        while lo < nrows:
-            hi = int(np.searchsorted(row_bounds, row_bounds[lo] + chunk, side="left"))
-            hi = max(min(hi, nrows), lo + 1)
-            keys = np.unique(packed[row_bounds[lo] : row_bounds[hi]])
+        for row_lo, row_hi, flat_lo in _row_slices(gcounts):
+            flat_hi = flat_lo + int(gcounts[row_lo:row_hi].sum())
+            keys = np.unique(packed[flat_lo:flat_hi])
             krow = keys >> np.int64(31)
             kval = keys & np.int64(_SH_P)
-            starts = np.searchsorted(krow, np.arange(lo, hi))
+            starts = np.searchsorted(krow, np.arange(row_lo, row_hi))
             ends = np.append(starts[1:], len(keys))
-            out.extend(kval[starts[i] : ends[i]] for i in range(hi - lo))
-            lo = hi
+            out.extend(kval[starts[i] : ends[i]] for i in range(row_hi - row_lo))
         return pd.Series(out)
 
     return grams(th)

@@ -44,6 +44,12 @@ _CLIP_Q = (0.01, 0.99)
 # cap after which the remaining ranges are collected regardless of size
 _PCT_BINS = 8192
 _PCT_MAX_ROUNDS = 8
+# exact_percentiles collects a range's values once it holds at most this
+# many rows. Read at call time.
+PCT_COLLECT_CAP = 262_144
+# tile_apply's core tile edge in pixels (widened to the halo). Read at call
+# time.
+TILE_PX = 256
 # G4 fill rounds (voids wider than 2 * _INFILL_ROUNDS pixels stay void);
 # also the infill halo in pixels
 _INFILL_ROUNDS = 8
@@ -275,7 +281,6 @@ def exact_percentiles(
     df: DataFrame,
     col: str,
     probs: "list[float]",
-    collect_cap: int = 262_144,
 ) -> "list[float]":
     """Exact percentiles (Spark ``percentile()`` / DuckDB ``quantile_cont``
     semantics, bit-for-bit) via distributed histogram refinement.
@@ -293,7 +298,7 @@ def exact_percentiles(
        bounded bucket id — tiny shuffle), locating the bucket holding each
        needed order statistic;
     3. when the values containing the needed order stats number
-       <= ``collect_cap``, collect just those and take the order stats
+       <= ``PCT_COLLECT_CAP``, collect just those and take the order stats
        exactly; otherwise narrow the range and repeat (value-skewed data
        terminates via the degenerate-range shortcut).
 
@@ -302,115 +307,109 @@ def exact_percentiles(
     higherValue*(position-lower)``) so results are interchangeable with the
     built-in aggregate — asserted in tests/test_grid.py.
 
-    The input is persisted for the duration (2-3 passes over one projected
-    column; MEMORY_AND_DISK, released before returning). Callers that
-    already persist ``df`` pay nothing extra.
+    Every round reads ``df`` again (2-3 passes), so callers persist it
+    (``quantize_normalize``'s caller does, and also reads it for the
+    quantized output).
     """
     vals = df.select(F.col(col).cast("double").alias("_v")).filter(
         F.col("_v").isNotNull()
     )
-    vals = vals.persist()
-    try:
-        r = vals.agg(
-            F.count("_v").alias("n"), F.min("_v").alias("lo"), F.max("_v").alias("hi")
-        ).collect()[0]
-        n = int(r["n"])
-        if n == 0:
-            return [float("nan")] * len(probs)
-        glo, ghi = float(r["lo"]), float(r["hi"])
-        positions = [p * (n - 1) for p in probs]
-        needed = sorted(
-            {int(math.floor(pos)) for pos in positions}
-            | {int(math.ceil(pos)) for pos in positions}
-        )
-        import numpy as np
+    r = vals.agg(
+        F.count("_v").alias("n"), F.min("_v").alias("lo"), F.max("_v").alias("hi")
+    ).collect()[0]
+    n = int(r["n"])
+    if n == 0:
+        return [float("nan")] * len(probs)
+    glo, ghi = float(r["lo"]), float(r["hi"])
+    positions = [p * (n - 1) for p in probs]
+    needed = sorted(
+        {int(math.floor(pos)) for pos in positions}
+        | {int(math.ceil(pos)) for pos in positions}
+    )
+    stats: dict[int, float] = {}
 
-        stats: dict[int, float] = {}
-
-        def _collect_ranges(terminal) -> None:
-            # ONE collect job for every terminal range of this round
-            pred = None
-            for lo, hi, _base, _cnt, _idxs in terminal:
-                p_ = (F.col("_v") >= lo) & (F.col("_v") <= hi)
-                pred = p_ if pred is None else (pred | p_)
-            arr = np.sort(
-                np.array(
-                    [row["_v"] for row in vals.filter(pred).collect()],
-                    dtype=np.float64,
-                )
+    def _collect_ranges(terminal) -> None:
+        # ONE collect job for every terminal range of this round
+        pred = None
+        for lo, hi, _base, _cnt, _idxs in terminal:
+            p_ = (F.col("_v") >= lo) & (F.col("_v") <= hi)
+            pred = p_ if pred is None else (pred | p_)
+        arr = np.sort(
+            np.array(
+                [row["_v"] for row in vals.filter(pred).collect()],
+                dtype=np.float64,
             )
-            for lo, hi, base, _cnt, idxs in terminal:
-                seg = arr[(arr >= lo) & (arr <= hi)]
-                for i in idxs:
-                    stats[i] = float(seg[i - base])
+        )
+        for lo, hi, base, _cnt, idxs in terminal:
+            seg = arr[(arr >= lo) & (arr <= hi)]
+            for i in idxs:
+                stats[i] = float(seg[i - base])
 
-        # active ranges: (value_lo, value_hi, rank_of_first_value_in_range,
-        # count_in_range, indices needing resolution inside)
-        ranges = [(glo, ghi, 0, n, needed)]
-        for round_no in range(_PCT_MAX_ROUNDS + 1):
-            if not ranges:
-                break
-            terminal, refine = [], []
-            for rng_ in ranges:
-                lo, hi, base, cnt, idxs = rng_
-                if lo == hi:
-                    for i in idxs:
-                        stats[i] = lo
-                elif cnt <= collect_cap or round_no == _PCT_MAX_ROUNDS:
-                    terminal.append(rng_)
-                else:
-                    refine.append(rng_)
-            if terminal:
-                _collect_ranges(terminal)
-            nxt = []
-            for lo, hi, base, cnt, idxs in refine:
-                width = hi - lo
-                b = F.least(
-                    F.lit(_PCT_BINS - 1),
-                    F.floor(
-                        (F.col("_v") - F.lit(lo)) / F.lit(width) * F.lit(_PCT_BINS)
-                    ).cast("int"),
-                )
-                hist = (
-                    vals.filter((F.col("_v") >= lo) & (F.col("_v") <= hi))
-                    .groupBy(b.alias("_b"))
-                    .agg(
-                        F.count("*").alias("_c"),
-                        F.min("_v").alias("_lo"),
-                        F.max("_v").alias("_hi"),
-                    )
-                    .collect()
-                )
-                hist.sort(key=lambda row: row["_b"])
-                cum = base
-                bucket_meta = {}
-                for row in hist:
-                    bucket_meta[row["_b"]] = (
-                        cum, int(row["_c"]), float(row["_lo"]), float(row["_hi"]),
-                    )
-                    cum += int(row["_c"])
-                by_bucket: dict[int, list[int]] = {}
+    # active ranges: (value_lo, value_hi, rank_of_first_value_in_range,
+    # count_in_range, indices needing resolution inside)
+    ranges = [(glo, ghi, 0, n, needed)]
+    for round_no in range(_PCT_MAX_ROUNDS + 1):
+        if not ranges:
+            break
+        terminal, refine = [], []
+        for rng_ in ranges:
+            lo, hi, base, cnt, idxs = rng_
+            if lo == hi:
                 for i in idxs:
-                    for bid, (first, c, _blo, _bhi) in bucket_meta.items():
-                        if first <= i < first + c:
-                            by_bucket.setdefault(bid, []).append(i)
-                            break
-                for bid, bidx in by_bucket.items():
-                    first, c, blo, bhi = bucket_meta[bid]
-                    nxt.append((blo, bhi, first, c, bidx))
-            ranges = nxt
-        out = []
-        for pos in positions:
-            lower, higher = int(math.floor(pos)), int(math.ceil(pos))
-            if lower == higher:
-                out.append(stats[lower])
+                    stats[i] = lo
+            elif cnt <= PCT_COLLECT_CAP or round_no == _PCT_MAX_ROUNDS:
+                terminal.append(rng_)
             else:
-                out.append(
-                    stats[lower] * (higher - pos) + stats[higher] * (pos - lower)
+                refine.append(rng_)
+        if terminal:
+            _collect_ranges(terminal)
+        nxt = []
+        for lo, hi, base, cnt, idxs in refine:
+            width = hi - lo
+            b = F.least(
+                F.lit(_PCT_BINS - 1),
+                F.floor(
+                    (F.col("_v") - F.lit(lo)) / F.lit(width) * F.lit(_PCT_BINS)
+                ).cast("int"),
+            )
+            hist = (
+                vals.filter((F.col("_v") >= lo) & (F.col("_v") <= hi))
+                .groupBy(b.alias("_b"))
+                .agg(
+                    F.count("*").alias("_c"),
+                    F.min("_v").alias("_lo"),
+                    F.max("_v").alias("_hi"),
                 )
-        return out
-    finally:
-        vals.unpersist(False)
+                .collect()
+            )
+            hist.sort(key=lambda row: row["_b"])
+            cum = base
+            bucket_meta = {}
+            for row in hist:
+                bucket_meta[row["_b"]] = (
+                    cum, int(row["_c"]), float(row["_lo"]), float(row["_hi"]),
+                )
+                cum += int(row["_c"])
+            by_bucket: dict[int, list[int]] = {}
+            for i in idxs:
+                for bid, (first, c, _blo, _bhi) in bucket_meta.items():
+                    if first <= i < first + c:
+                        by_bucket.setdefault(bid, []).append(i)
+                        break
+            for bid, bidx in by_bucket.items():
+                first, c, blo, bhi = bucket_meta[bid]
+                nxt.append((blo, bhi, first, c, bidx))
+        ranges = nxt
+    out = []
+    for pos in positions:
+        lower, higher = int(math.floor(pos)), int(math.ceil(pos))
+        if lower == higher:
+            out.append(stats[lower])
+        else:
+            out.append(
+                stats[lower] * (higher - pos) + stats[higher] * (pos - lower)
+            )
+    return out
 
 
 def quantize_normalize(
@@ -474,16 +473,19 @@ def _tile_explode(df: DataFrame, tile_px: int, halo: int, carry) -> DataFrame:
 
 def tile_apply(
     raster: DataFrame,
-    tile_px: int,
     halo: int,
     cols: Sequence[str],
     kernel: Callable[..., pd.DataFrame],
     schema: str,
 ) -> DataFrame:
-    """The one raster tile+halo plan: run ``kernel`` once per ``tile_px``-
-    pixel tile of the long-format raster (gx, gy, *cols), with every cell
-    within ``halo`` pixels of the tile in view. Infill/band-pass, keypoint
-    extraction and SMRF ground all run through here.
+    """The one raster tile+halo plan: run ``kernel`` once per tile of the
+    long-format raster (gx, gy, *cols), with every cell within ``halo``
+    pixels of the tile in view. Infill/band-pass, keypoint extraction and
+    SMRF ground all run through here.
+
+    The tile edge is ``tile_px = max(TILE_PX, halo)``: the explode reaches
+    only the eight neighbor tiles, so a halo wider than ``TILE_PX`` widens
+    the tile to match and every tile still sees its whole halo.
 
     Plan: each cell goes to its home tile and to the neighbor tiles whose
     halo reaches it (``_tile_explode``), then ONE
@@ -498,11 +500,8 @@ def tile_apply(
     * ``core``: (w, w) bool, the tile's own cells — emit from these only,
       so no cell is output twice.
 
-    It returns a pandas frame matching ``schema``. The explode reaches only
-    the eight neighbor tiles, so a halo wider than the tile is rejected
-    rather than silently cut short."""
-    if halo > tile_px:
-        raise ValueError(f"halo ({halo} px) is wider than the tile ({tile_px} px)")
+    It returns a pandas frame matching ``schema``."""
+    tile_px = max(TILE_PX, halo)
     w = tile_px + 2 * halo
     cols = list(cols)
 
@@ -601,7 +600,6 @@ def infill_band_pass(
     dsm: DataFrame,
     weak_sigma_px: float,
     strong_sigma_px: float,
-    tile_px: int = 256,
 ) -> DataFrame:
     """G4 void infill followed by the Gaussian band-pass, in ONE tile kernel
     (``tile_apply``) — one shuffle and one Python stage per DSM side.
@@ -625,8 +623,8 @@ def infill_band_pass(
     band-pass at any core cell only reads infilled cells within H_bp (a
     Gaussian truncated at 4 sigma). So core outputs equal the whole-raster
     ``_fill_voids`` -> ``_band_pass_np`` chain (asserted in
-    tests/test_grid.py). A halo wider than ``tile_px`` widens the tile to
-    match. Output: (gx, gy, z, bp) over all filled core cells."""
+    tests/test_grid.py). Output: (gx, gy, z, bp) over all filled core
+    cells."""
     filled = dsm.select("gx", "gy", "z")
     gx0, gy0, gx1, gy1 = bounds(filled, "gx", "gy")
     if gx0 is None:  # empty raster
@@ -647,10 +645,7 @@ def infill_band_pass(
             {"gx": ex + x0, "gy": ey + y0, "z": arr[ex, ey], "bp": bp[ex, ey]}
         )
 
-    return tile_apply(
-        filled, max(tile_px, halo), halo, ["z"], kernel,
-        "gx long, gy long, z double, bp double",
-    )
+    return tile_apply(filled, halo, ["z"], kernel, "gx long, gy long, z double, bp double")
 
 
 def colormap_encode(

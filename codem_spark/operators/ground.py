@@ -25,8 +25,6 @@ from codem_spark.operators import grid
 
 Extent = tuple[float, float, float, float]
 
-TILE = 256
-
 
 def _sliding(a: np.ndarray, w: int, reduce) -> np.ndarray:
     """Square sliding-window ``reduce`` (np.minimum: erosion, np.maximum:
@@ -63,8 +61,8 @@ def smrf_ground(
     are marked non-ground. hag = z - opened ground surface at the cell.
 
     The raster runs through ``grid.tile_apply`` with a halo of
-    ceil(max_window / resolution) + 1 cells; a halo wider than TILE widens
-    the tile to match, so every tile sees its whole halo.
+    ceil(max_window / resolution) + 1 cells (a halo wider than
+    ``grid.TILE_PX`` widens the tile, so every tile sees its whole halo).
     """
     if max_window < resolution:
         raise ValueError(
@@ -113,8 +111,7 @@ def smrf_ground(
         )
 
     flags = grid.tile_apply(
-        zmin, max(TILE, halo), halo, ["z"], kernel,
-        "gx long, gy long, cell_ground boolean, ground_z double",
+        zmin, halo, ["z"], kernel, "gx long, gy long, cell_ground boolean, ground_z double"
     )
     pts = points.withColumn(
         "gx", F.floor((F.col("x") - extent[0]) / resolution).cast("long")

@@ -72,7 +72,7 @@ def level_for_radius(extent: Extent, radius: float) -> int:
 
 
 def auto_level(extent: Extent, radius: float, n_rows: int, parallelism: int) -> int:
-    """Tile level for a kNN/radius join: bounded above by the radius rule
+    """Tile level for a tile+halo join: bounded above by the radius rule
     (cell edge >= radius so a 1-ring halo provably covers the search ball)
     AND by the data size (≈_TARGET_PER_TILE rows per tile), with a floor of
     ~4x ``parallelism`` tiles so the cogroup stage can actually use every
@@ -109,27 +109,7 @@ def grid_topk(
     rids: np.ndarray,
     radius: float,
     k: int | None,
-    # unordered_pairs=True (self-join connectivity mode; REQUIRES lpts and
-    # rpts to be the same array in the same order, and k=None): keep each
-    # unordered pair once (right index > left index), masked BEFORE the
-    # distance evaluation — halves the candidate volume of the DRAM-bound
-    # diff/einsum step. Self-pairs are excluded by construction. Callers
-    # that symmetrize downstream (the union-find kernels) lose nothing.
-    unordered_pairs: bool = False,
-    # exclude_same_group=(lgroup, rgroup) (k=None mode): drop candidate
-    # pairs whose group ids match, BEFORE the distance evaluation. The CC
-    # edge callers pass component labels here — same-label pairs carry no
-    # connectivity, and on dense data they are the overwhelming majority of
-    # the candidate volume (every within-blob pair), so one integer compare
-    # replaces the 3-D distance evaluation for ~all of them.
-    exclude_same_group: tuple[np.ndarray, np.ndarray] | None = None,
-    # l_offset (unordered_pairs mode): lpts is the contiguous slice
-    # rpts[l_offset : l_offset + n_l] — the unordered mask compares global
-    # indices (ri > li + l_offset), so a caller can split the left side
-    # into slices (e.g. across driver threads) and the union of the slice
-    # outputs is exactly the single-call unordered pair set. Returned left
-    # indices stay slice-local.
-    l_offset: int = 0,
+    order: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized radius-bounded (top-k or all-pairs) neighbor search.
 
@@ -151,16 +131,23 @@ def grid_topk(
     per-ring-cell bookkeeping (two searchsorted per cell) is negligible
     against the avoided distance evaluations.
 
+    ``order=(lg, rg)`` (k=None only) keeps a candidate pair only when
+    ``lg[li] < rg[ri]``, tested by one integer compare BEFORE the distance
+    evaluation. It is the one pair rule of the cluster kernels: with
+    ``(idx, idx)`` over a self-join each unordered point pair is kept once
+    (self-pairs never); with component labels, same-label pairs (no
+    connectivity, and on dense data nearly every candidate) are dropped
+    and each cross-label pair is kept in its one (lower, higher) label
+    orientation. The left side may be any slice of rows, as long as ``lg``
+    holds that slice's values.
+
     Returns (left_idx, right_idx, dist, rank) with rank starting at 1;
-    k=None keeps every within-radius pair (the radius-join mode) and
-    reports rank 0 for every pair (no ranking is computed — the radius-join
-    callers discard it).
+    k=None keeps every within-radius pair and reports rank 0 for every
+    pair (no ranking is computed — the edge callers discard it).
     """
     n_l, n_r = len(lpts), len(rpts)
-    if (unordered_pairs or exclude_same_group is not None) and k is not None:
-        raise ValueError(
-            "grid_topk: unordered_pairs/exclude_same_group require k=None"
-        )
+    if order is not None and k is not None:
+        raise ValueError("grid_topk: order requires k=None")
     if n_l == 0 or n_r == 0:
         return _EMPTY
     r2 = radius * radius
@@ -232,15 +219,8 @@ def grid_topk(
         offs = np.arange(total) - np.repeat(np.cumsum(lens) - lens, lens)
         ri_sorted_idx = starts_rep + offs
         ri_glob = rorder[ri_sorted_idx]
-        if unordered_pairs or exclude_same_group is not None:
-            if unordered_pairs:
-                keep = ri_glob > li_rep + l_offset if l_offset else ri_glob > li_rep
-                if exclude_same_group is not None:
-                    lg, rg = exclude_same_group
-                    keep &= lg[li_rep] != rg[ri_glob]
-            else:
-                lg, rg = exclude_same_group
-                keep = lg[li_rep] != rg[ri_glob]
+        if order is not None:
+            keep = order[0][li_rep] < order[1][ri_glob]
             li_rep = li_rep[keep]
             ri_glob = ri_glob[keep]
             if len(li_rep) == 0:
@@ -257,7 +237,7 @@ def grid_topk(
         # left across its 9 segments consecutively; the within-filter keeps
         # that order), so per-left segment boundaries come from one diff
         if k is None:
-            # radius-join mode: every within-radius pair, no ranking — the
+            # all-pairs mode: every within-radius pair, no ranking — the
             # callers (the cluster edge kernels) ignore rank, so the lexsort
             # the generic path pays is pure waste here
             li_parts.append(li_w)

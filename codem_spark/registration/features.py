@@ -11,13 +11,13 @@ not detector bit-equality — the reference's own tests assert exactly that
 keypoint equality).
 
 Tiling: the DSM long-format table (gx, gy, z, z_u8[, det_u8]) runs through
-``grid.tile_apply``, the engine's one raster tile+halo plan: TILE x TILE
-pixel tiles with a HALO-pixel overlap ring (keypoints are only *kept* in the
-tile core, so every descriptor sees its full support window and no keypoint
-is emitted twice). Rotation invariance comes from sampling the
-descriptor patch along the keypoint's dominant gradient orientation —
-needed because the reference test matrix perturbs AOIs by 90/180/360-degree
-rotations (test_registration.py:39-62).
+``grid.tile_apply``, the engine's one raster tile+halo plan: square tiles
+of ``grid.TILE_PX`` pixels with a HALO-pixel overlap ring (keypoints are
+only *kept* in the tile core, so every descriptor sees its full support
+window and no keypoint is emitted twice). Rotation invariance comes from
+sampling the descriptor patch along the keypoint's dominant gradient
+orientation — needed because the reference test matrix perturbs AOIs by
+90/180/360-degree rotations (test_registration.py:39-62).
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ from codem_spark.operators import grid
 
 Extent = tuple[float, float, float, float]
 
-TILE = 256  # core tile edge, pixels
 HALO = 24  # overlap ring, pixels (descriptor support 16px * sqrt2 / 2 + smoothing)
 DESC_BITS = 256  # packed into 4 int64
 PATCH = 16  # descriptor sampling grid (PATCH x PATCH = DESC_BITS)
@@ -193,4 +192,4 @@ def extract_features(
         "gx long, gy long, x double, y double, z double, response double, "
         "d0 long, d1 long, d2 long, d3 long"
     )
-    return grid.tile_apply(dsm, TILE, HALO, cols, kernel, schema)
+    return grid.tile_apply(dsm, HALO, cols, kernel, schema)

@@ -32,6 +32,10 @@ from codem_spark.registration import icp as icp_mod
 
 Extent = tuple[float, float, float, float]
 
+# The match-viz DSM planes are collected to the driver block-max-reduced to
+# at most this many cells each. Read at call time.
+VIZ_MAX_CELLS = 4_000_000
+
 
 @dataclass
 class PreprocessResult:
@@ -279,9 +283,9 @@ def with_residuals(
     return out.withColumn("residual_horiz", horiz).withColumn("residual_3d", r3d)
 
 
-def _capped_u8_plane(dsm: DataFrame, viz_max_cells: int = 4_000_000):
+def _capped_u8_plane(dsm: DataFrame):
     """Collect a (gx, gy, z_u8) plane for the match visualization, bounded
-    to ``viz_max_cells`` driver-side rows: planes larger than the cap are
+    to ``VIZ_MAX_CELLS`` driver-side rows: planes larger than the cap are
     block-max-reduced by the smallest integer factor that fits (the viz is
     cosmetic — a coarser overview is the right artifact at scale, and the
     collect no longer grows with scene extent). Factor 1 (any demo-scale
@@ -289,7 +293,7 @@ def _capped_u8_plane(dsm: DataFrame, viz_max_cells: int = 4_000_000):
     import math as _math
 
     n = dsm.count()  # the DSMs are persisted by preprocess — cheap
-    f = max(1, int(_math.ceil(_math.sqrt(n / viz_max_cells)))) if n else 1
+    f = max(1, int(_math.ceil(_math.sqrt(n / VIZ_MAX_CELLS)))) if n else 1
     if f == 1:
         return dsm.select("gx", "gy", "z_u8").toPandas()
     return (
@@ -343,7 +347,7 @@ def register(
             # the u8 planes the match viz renders — pulled before the DSMs
             # are released. BOUNDED collect: cell count grows with scene
             # extent, so the raw planes are a driver OOM at 100x for a
-            # cosmetic PNG. Above ``viz_max_cells`` the planes are
+            # cosmetic PNG. Above ``VIZ_MAX_CELLS`` the planes are
             # block-max-reduced to fit the cap (factor 1 = the exact plane).
             capture["fnd_dsm_u8"] = _capped_u8_plane(prep.fnd_dsm)
             capture["aoi_dsm_u8"] = _capped_u8_plane(prep.aoi_dsm)

@@ -14,16 +14,18 @@ from tests.conftest import SMALL_EXTENT, union_find_oracle
 ROUTES = pytest.mark.parametrize("driver_max_rows", [None, 0])
 
 
-def _cap(driver_max_rows):
-    return {} if driver_max_rows is None else {"driver_max_rows": driver_max_rows}
+def _cap(monkeypatch, driver_max_rows):
+    if driver_max_rows is not None:
+        monkeypatch.setattr(cluster, "DRIVER_MAX_ROWS", driver_max_rows)
 
 
 @ROUTES
-def test_cluster_matches_union_find_oracle(spark, blob_points, driver_max_rows):
+def test_cluster_matches_union_find_oracle(spark, blob_points, monkeypatch, driver_max_rows):
+    _cap(monkeypatch, driver_max_rows)
     df = spark.createDataFrame(blob_points)
     got = (
         cluster.euclidean_cluster(
-            df, SMALL_EXTENT, tolerance=3.0, min_points=2, **_cap(driver_max_rows)
+            df, SMALL_EXTENT, tolerance=3.0, min_points=2
         )
         .toPandas()
         .sort_values("pid")
@@ -43,10 +45,11 @@ def test_cluster_matches_union_find_oracle(spark, blob_points, driver_max_rows):
 
 
 @ROUTES
-def test_cluster_min_points_filter(spark, blob_points, driver_max_rows):
+def test_cluster_min_points_filter(spark, blob_points, monkeypatch, driver_max_rows):
+    _cap(monkeypatch, driver_max_rows)
     df = spark.createDataFrame(blob_points)
     got = cluster.euclidean_cluster(
-        df, SMALL_EXTENT, tolerance=3.0, min_points=30, **_cap(driver_max_rows)
+        df, SMALL_EXTENT, tolerance=3.0, min_points=30
     ).toPandas()
     labelled = got[got.cluster_id >= 0]
     counts = labelled.groupby("cluster_id").size()
@@ -97,9 +100,10 @@ def test_dense_blob_emits_no_interior_edges(spark):
 
 
 @ROUTES
-def test_cross_tile_chain_still_connects(spark, driver_max_rows):
+def test_cross_tile_chain_still_connects(spark, monkeypatch, driver_max_rows):
     """A chain of points crossing a tile border must still merge into one
     cluster through the border-band edge pass."""
+    _cap(monkeypatch, driver_max_rows)
     from codem_spark.functions import cells
 
     level_size = cells.cell_size(SMALL_EXTENT, 4)
@@ -109,7 +113,6 @@ def test_cross_tile_chain_still_connects(spark, driver_max_rows):
     got = (
         cluster.euclidean_cluster(
             spark.createDataFrame(pdf), SMALL_EXTENT, tolerance=1.5, min_points=2,
-            **_cap(driver_max_rows),
         )
         .toPandas()
         .sort_values("pid")
@@ -118,10 +121,11 @@ def test_cross_tile_chain_still_connects(spark, driver_max_rows):
 
 
 @ROUTES
-def test_cluster_duplicate_pids_preserve_cardinality(spark, driver_max_rows):
+def test_cluster_duplicate_pids_preserve_cardinality(spark, monkeypatch, driver_max_rows):
     """Inputs may carry repeated pids (the bench's lineitem-derived cloud
     does): the label map must stay one-row-per-label, so the final join
     cannot fan out rows."""
+    _cap(monkeypatch, driver_max_rows)
     rng = np.random.default_rng(7)
     base = pd.DataFrame(
         {
@@ -135,7 +139,6 @@ def test_cluster_duplicate_pids_preserve_cardinality(spark, driver_max_rows):
     got = (
         cluster.euclidean_cluster(
             spark.createDataFrame(dup), SMALL_EXTENT, tolerance=3.0, min_points=2,
-            **_cap(driver_max_rows),
         )
         .toPandas()
         .sort_values(["pid", "cluster_id"])
@@ -158,7 +161,6 @@ def test_cluster_duplicate_pids_preserve_cardinality(spark, driver_max_rows):
     )
     got = cluster.euclidean_cluster(
         spark.createDataFrame(far), SMALL_EXTENT, tolerance=3.0, min_points=2,
-        **_cap(driver_max_rows),
     ).toPandas()
     assert len(got) == len(far)
     assert sorted(got.pid) == sorted(far.pid)
@@ -176,3 +178,33 @@ def test_driver_label_edges_dedups_point_pairs():
     labs = np.concatenate([np.full(m, 700, np.int64), np.full(m, 3, np.int64)])
     edges = cluster._driver_label_edges(pts, labs, 3.0)
     assert edges.tolist() == [[3, 700]]
+
+
+def test_driver_label_edges_slices_equal_one_call(monkeypatch):
+    """At >= 131,072 border rows the driver route splits the left side into
+    thread slices; their union equals one grid_topk call over all rows
+    with the same label order."""
+    from codem_spark.operators import knn
+
+    rng = np.random.default_rng(17)
+    n = 140_000
+    pts = np.column_stack([rng.uniform(0, 1000, n), rng.uniform(0, 1000, n), np.zeros(n)])
+    # 10 m label blocks, their ids shuffled so label order is not row order
+    block = (pts[:, 0] // 10).astype(np.int64) * 100 + (pts[:, 1] // 10).astype(np.int64)
+    labs = rng.permutation(10_000)[block]
+    tol = 2.0
+    li, ri, _d, _rk = knn.grid_topk(pts, pts, np.arange(n), tol, k=None, order=(labs, labs))
+    want = np.unique(np.stack([labs[li], labs[ri]], axis=1), axis=0)
+
+    calls = []
+    real = knn.grid_topk
+
+    def spy(lpts, *a, **kw):
+        calls.append(len(lpts))
+        return real(lpts, *a, **kw)
+
+    monkeypatch.setattr(knn, "grid_topk", spy)
+    got = cluster._driver_label_edges(pts, labs, tol)
+    assert len(calls) >= 2 and sum(calls) == n  # the sliced route ran
+    assert len(want) > 10_000
+    assert np.array_equal(got, want)

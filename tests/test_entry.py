@@ -5,6 +5,8 @@ driver's comparison shape)."""
 
 from __future__ import annotations
 
+import importlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -65,6 +67,59 @@ def test_query_matches_oracle(spark, oracle_con, name):
     sdf = q(spark, SF).toPandas()
     ddf = oracle_con.sql(entrymod.oracle_sql()[name]).df()
     assert len(sdf) > 0, "oracle comparison must not pass trivially on empty results"
+    _compare(sdf, ddf)
+
+
+# Capacity switches forced to their other branch: query -> (module, cap
+# constant, the function only the forced branch calls). With no such
+# function, the forced run must take more Spark jobs than the default one.
+CAPS_FORCED = {
+    "euclidean_cluster": (
+        "codem_spark.operators.cluster", "DRIVER_MAX_ROWS", "_distributed_label_map"
+    ),
+    "quantize": ("codem_spark.operators.grid", "PCT_COLLECT_CAP", None),
+    "coarse_registration": (
+        "codem_spark.registration.coarse", "BF_MATCH_CAPACITY", "_match_features_lsh"
+    ),
+}
+
+
+def _run_counting_jobs(spark, name, run):
+    """The query's rows and the number of Spark jobs it ran, from a fresh
+    cache."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    group = f"caps_forced_{name}_{run}"
+    sc.setJobGroup(group, group)
+    try:
+        pdf = entrymod.queries()[name](spark, SF).toPandas()
+    finally:
+        sc.setJobGroup(None, None)
+        spark.catalog.clearCache()
+    return pdf, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", list(CAPS_FORCED))
+def test_query_matches_oracle_with_caps_forced(spark, oracle_con, monkeypatch, name):
+    """Each driver-collect cap set to 0 forces the branch the default cap
+    never reaches at sf0.01; the contract query must still match its
+    oracle, and the forced branch must be shown to have run."""
+    mod_name, cap, branch = CAPS_FORCED[name]
+    mod = importlib.import_module(mod_name)
+    if branch is None:
+        _, default_jobs = _run_counting_jobs(spark, name, "default")
+    else:
+        calls = []
+        real = getattr(mod, branch)
+        monkeypatch.setattr(mod, branch, lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    monkeypatch.setattr(mod, cap, 0)
+    sdf, forced_jobs = _run_counting_jobs(spark, name, "forced")
+    if branch is None:
+        assert forced_jobs > default_jobs, (forced_jobs, default_jobs)
+    else:
+        assert calls, f"{branch} did not run"
+    ddf = oracle_con.sql(entrymod.oracle_sql()[name]).df()
+    assert len(sdf) > 0
     _compare(sdf, ddf)
 
 

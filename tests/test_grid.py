@@ -102,7 +102,7 @@ def test_infill_fills_all_interior_voids(spark):
     assert np.allclose(hole.z.values, exp.values, atol=1.0)
 
 
-def test_infill_band_pass_fused_equals_sequential(spark):
+def test_infill_band_pass_fused_equals_sequential(spark, monkeypatch):
     """The fused infill+band-pass kernel on 32-px tiles equals the sequential
     whole-raster numpy chain _fill_voids(..., _INFILL_ROUNDS) ->
     _band_pass_np: voids (one on a tile border), raster edges and tile
@@ -111,12 +111,13 @@ def test_infill_band_pass_fused_equals_sequential(spark):
     rows = [
         (gx, gy, float(np.sin(gx * 0.3) * 5 + gy * 0.1 + rng.normal(0, 0.2)))
         for gx in range(70) for gy in range(60)
-        # punch a few holes, including one on a tile border (tile_px=32)
+        # punch a few holes, including one on a tile border (32-px tiles)
         if not ((10 <= gx <= 12 and 20 <= gy <= 22) or (31 <= gx <= 33 and 5 <= gy <= 6))
     ]
     dsm = spark.createDataFrame(rows, "gx long, gy long, z double")
+    monkeypatch.setattr(grid, "TILE_PX", 32)
     got = grid.infill_band_pass(
-        dsm, weak_sigma_px=1.0, strong_sigma_px=2.5, tile_px=32,
+        dsm, weak_sigma_px=1.0, strong_sigma_px=2.5,
     ).toPandas().sort_values(["gx", "gy"]).reset_index(drop=True)
 
     # _fill_voids takes square windows; columns gy >= 60 lie outside the
@@ -142,24 +143,16 @@ def test_infill_band_pass_fused_equals_sequential(spark):
     assert ring.min() <= hole.min() and hole.max() <= ring.max()
 
 
-def test_tile_apply_rejects_halo_wider_than_tile(spark):
-    """The halo explode reaches only the eight neighbor tiles, so a wider
-    halo would be cut short silently."""
-    dsm = spark.createDataFrame([(0, 0, 1.0)], "gx long, gy long, z double")
-    with pytest.raises(ValueError, match="halo"):
-        grid.tile_apply(dsm, 8, 9, ["z"], lambda *a: None, "gx long")
-
-
 def test_tile_apply_plan_builds_without_warnings(spark):
     """A partly annotated grouped-map function makes PySpark warn that it
     cannot infer the eval type from the type hints, once per plan."""
     dsm = spark.createDataFrame([(0, 0, 1.0)], "gx long, gy long, z double")
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        grid.tile_apply(dsm, 8, 2, ["z"], lambda *a: None, "gx long")
+        grid.tile_apply(dsm, 2, ["z"], lambda *a: None, "gx long")
 
 
-def test_exact_percentiles_matches_builtin(spark):
+def test_exact_percentiles_matches_builtin(spark, monkeypatch):
     """exact_percentiles (histogram refinement) must reproduce the builtin
     percentile() aggregate bit-for-bit, interpolated and exact-index probs,
     duplicates included."""
@@ -170,8 +163,9 @@ def test_exact_percentiles_matches_builtin(spark):
     ref = df.agg(
         *[F.expr(f"percentile(z, {p})").alias(f"p{i}") for i, p in enumerate(probs)]
     ).collect()[0]
-    # small collect_cap forces at least one histogram refinement round
-    got = grid.exact_percentiles(df, "z", probs, collect_cap=2_000)
+    # a small collect cap forces at least one histogram refinement round
+    monkeypatch.setattr(grid, "PCT_COLLECT_CAP", 2_000)
+    got = grid.exact_percentiles(df, "z", probs)
     for i in range(len(probs)):
         assert got[i] == ref[f"p{i}"], (probs[i], got[i], ref[f"p{i}"])
 

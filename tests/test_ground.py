@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from codem_spark.operators import ground
+from codem_spark.operators import grid, ground
 from tests.conftest import frame_digest
 
 EXT = (0, 0, 1000, 1000)
@@ -59,9 +59,10 @@ def test_smrf_rejects_window_below_one_cell(spark, scene):
 
 
 def test_smrf_halo_wider_than_tile_sees_whole_halo(spark, monkeypatch):
-    """With a halo wider than TILE, every tile still sees its whole halo:
-    on a 60-cell raster whose 41-cell halo covers it from any tile, 16-cell
-    tiles give exactly the single-tile result."""
+    """With a halo wider than ``grid.TILE_PX``, tile_apply widens the tile
+    to the halo and every tile still sees its whole halo: on a 60-cell
+    raster whose 41-cell halo covers it from any tile, a 16-px TILE_PX
+    (41-px tiles) gives exactly the single-tile result."""
     rng = np.random.default_rng(4)
     gx, gy = np.meshgrid(np.arange(60), np.arange(60), indexing="ij")
     x = gx.ravel() + rng.uniform(0.1, 0.9, gx.size)
@@ -76,7 +77,7 @@ def test_smrf_halo_wider_than_tile_sees_whole_halo(spark, monkeypatch):
         return out.toPandas().sort_values("pid").reset_index(drop=True)
 
     whole = run()
-    monkeypatch.setattr(ground, "TILE", 16)
+    monkeypatch.setattr(grid, "TILE_PX", 16)
     tiled = run()
     assert (~whole.is_ground).sum() > 0
     assert (tiled.is_ground.values == whole.is_ground.values).all()
