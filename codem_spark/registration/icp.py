@@ -194,8 +194,13 @@ def _pass_kernel_builder(
         nrm = fpdf[["_r_nx", "_r_ny", "_r_nz"]].to_numpy(np.float64)[ri]
         acc = _partials(pm, q, nrm, solve_scale, alpha, beta, robust)
         d = pm - q
-        row = [key[0], *acc, *(d * d).sum(axis=0), drift]
-        return pd.DataFrame([row], columns=_PASS_COLS).astype({"cell_id": "int64", "n": "int64"})
+        # typed 1-element columns: a list row goes through pandas' per-value
+        # type inference, which cost ~4x the tile's neighbour search
+        vals = np.concatenate([acc, (d * d).sum(axis=0), [drift]])
+        row = {"cell_id": np.array([key[0]], np.int64)}
+        row.update((c, vals[i : i + 1]) for i, c in enumerate(_PASS_COLS[1:]))
+        row["n"] = row["n"].astype(np.int64)
+        return pd.DataFrame(row)
 
     return kernel
 
@@ -334,8 +339,6 @@ def fine_registration(
                     pose, tile_pose, radius, cfg.icp_solve_scale, alpha, beta, cfg.icp_robust
                 )
                 acc, drift = _sum_tiles(_pass_frame(moving_tiled, fixed_tiled, kern).collect())
-                # the first pass filled the fixed tiles from the normals cache
-                fixed_n.unpersist(False)
                 if drift <= drift_margin:
                     return acc
                 moving_tiled.unpersist()
@@ -348,6 +351,9 @@ def fine_registration(
         for it in range(cfg.icp_max_iter):
             n_iters = it + 1
             acc = run_pass(f"icp: pass {n_iters}", alpha)
+            if it == 0:
+                # the first pass filled the fixed tiles from the normals cache
+                fixed_n.unpersist(False)
             n_pairs = int(acc[_ACC_COLS.index("n")])
             if n_pairs < 10:
                 raise ValueError(f"ICP found too few correspondences ({n_pairs})")

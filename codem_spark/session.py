@@ -18,6 +18,27 @@ or a failed ``stat`` does the stock re-read. ``codem_spark/__init__.py``
 installs it once, when the package is first imported inside a worker; the
 driver keeps the stock method, and plans and outputs do not change.
 CPython 3.13 reads zip directories lazily and does not need it.
+
+Generated classes: Spark compiles each generated source (whole-stage code,
+projections, predicates) with Janino and keeps the class in a Guava cache
+of ``spark.sql.codegen.cache.maxEntries`` entries (default 100), keyed by
+the source and the compiling thread's class loader. Guava splits the cache
+into 4 segments of maxEntries/4 entries that evict on their own, so the cap
+needs headroom well past the number of entries a workload fills. The
+engine runs its query suite as many short one-shot plans: a perfbench
+``query_mix`` pass fills ~240 entries and a ``register`` pass ~93. At the
+default the cache evicted before any reuse, so every warm pass compiled
+its classes again (``query_mix`` ~247, ``register`` 43), the JIT compiled
+the new classes again, and Metaspace grew 4-5 MB per ``query_mix`` pass,
+since generated classes are never unloaded. ``_CODEGEN_CACHE_ENTRIES`` =
+2000 holds the engine's plan set: warm passes compile 0-6 classes, Metaspace
+grows ~2-3 MB per ``query_mix`` pass, and a second run of the 37 contract
+queries at sf0.01 in one session compiles 0-8 classes instead of 546 (the
+run fills ~500 entries, so these are sources first compiled under another
+thread's class loader, not evictions). A compile added 16-20 KB of
+Metaspace (3.95-5.0 MB for ~247), so a full cache holds at most ~40 MB.
+The conf is static, read when the JVM first generates code, so it is set
+here, before the session starts.
 """
 
 from __future__ import annotations
@@ -32,6 +53,8 @@ from pyspark.sql import SparkSession
 # tmpfs shuffle dir of the auto policy, and the free space it needs
 _SHM = "/dev/shm"
 _SHM_MIN_FREE = 16 << 30
+# entries of Spark's generated-class cache (module docstring)
+_CODEGEN_CACHE_ENTRIES = 2000
 
 
 def keep_unchanged_zip_directories() -> None:
@@ -140,6 +163,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     # Shuffle spill dir on tmpfs — GATED: this host's virtual disk serializes
     # under concurrent shuffle writers (measured: the same 40M-row

@@ -1,4 +1,5 @@
-"""Session set-up: the worker-side zip directory guard."""
+"""Session set-up: the worker-side zip directory guard and the size of
+Spark's generated-class cache."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import zipfile
 import zipimport
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from codem_spark.session import keep_unchanged_zip_directories
 
@@ -109,3 +111,23 @@ def test_workers_skip_unchanged_zip_directories(spark):
     assert repeat_reads, "no Python worker ran two probe tasks"
     assert repeat_reads == [0] * len(repeat_reads)
     assert not hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")
+
+
+def test_repeated_plan_reuses_its_generated_class(spark):
+    """A plan that ran before reuses its generated class: no Janino
+    compile, even after more distinct plans than Spark's default cache of
+    100 entries (4 segments of 25) holds. Each query below generates
+    distinct code (its literals are inlined), so at the default size the
+    first query's classes are evicted and compiled again."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def query(i):
+        v = spark.range(0, 100, 1, 1).selectExpr(f"id * {i} + {i}.5 AS v")
+        return v.agg(F.sum("v")).collect()
+
+    first = query(1)
+    for i in range(2, 90):
+        query(i)
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+    assert query(1) == first
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiles
