@@ -157,6 +157,7 @@ def _q_knn_dz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: J3-style nearest-neighbor dZ join (VCD compute_indexes,
     reference vcd/preprocessing/preprocess.py:196-199) between two derived
     clouds, tile+halo kNN with completeness escalation."""
+    from codem_spark import util
     from codem_spark.operators import knn
 
     # persist only the two residue classes the join touches: the filter is
@@ -166,17 +167,16 @@ def _q_knn_dz(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the full 600k rows the old full-cloud persist materialized
     # NB: pid = l_orderkey*8 + l_linenumber with l_linenumber in 1..7, so
     # pid % 8 is never 0 — pick residues that actually occur
-    pts = (
-        _points(spark, sf_dir)
-        .filter((F.col("pid") % 40).isin(1, 2))
-        .persist()
-    )
-    a = pts.filter(F.col("pid") % 40 == 1)
-    b = pts.filter(F.col("pid") % 40 == 2)
-    j = knn.knn_join_complete(a, b, EXTENT, radius=KNN_RADIUS, l_carry=("z",), r_carry=("z",))
-    return j.select(
-        "pid", "n_pid", F.round(F.col("l_z") - F.col("r_z"), 6).alias("dz")
-    )
+    # The result reads the query's caches: collect it inside their scope
+    # (through Arrow both ways, so rebuilding the frame runs no Python task)
+    with util.cache_scope():
+        pts = util.persist(_points(spark, sf_dir).filter((F.col("pid") % 40).isin(1, 2)))
+        a = pts.filter(F.col("pid") % 40 == 1)
+        b = pts.filter(F.col("pid") % 40 == 2)
+        j = knn.knn_join_complete(a, b, EXTENT, KNN_RADIUS, l_carry=("z",), r_carry=("z",))
+        j = j.select("pid", "n_pid", F.round(F.col("l_z") - F.col("r_z"), 6).alias("dz"))
+        pdf = j.toPandas()
+    return spark.createDataFrame(pdf, schema=j.schema)
 
 
 def _q_window_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,10 +447,10 @@ def _q_tpch_grid_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codem_spark.operators import grid
 
-    # persist: the exact-percentile pass and the quantized output both
-    # consume the scan+distinct chain — cache it for the query's duration
-    # (the bench clears caches between queries; nothing survives the run)
-    pts = _points(spark, sf_dir).select("pid", "z").persist()
+    # no cache: the exact-percentile rounds and the quantized output each
+    # rerun the scan+distinct chain, which measured no slower than caching
+    # it and releasing the cache before the output
+    pts = _points(spark, sf_dir).select("pid", "z")
     return grid.quantize_normalize(pts, "z").select("pid", "z_u8")
 
 
@@ -462,21 +462,21 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH pair set EQUALS the exact >=0.7 set, and the hashed-shingle
     Jaccard value equals the string-shingle value (31-bit hash collisions
     are ~1e-4 probability across this corpus and checked absent)."""
+    from codem_spark import util
     from codem_spark.operators import dedup
 
     docs = _read(spark, f"{sf_dir}/documents.parquet")
     cands = dedup.minhash_lsh_candidates(
         docs, num_hashes=64, bands=32, bucket_cap=None
     )
-    verified = dedup.jaccard_verify(cands, docs, threshold=0.7).select(
-        "id_a", "id_b", "jaccard"
-    )
-    # collect, then release the shingle cache: the returned frame holds none
-    try:
-        rows = verified.collect()
-    finally:
-        dedup.release_shingles(docs)
-    return spark.createDataFrame(rows, schema=verified.schema)
+    # collect inside the scope of the shingle cache: the returned frame
+    # holds none
+    with util.cache_scope():
+        verified = dedup.jaccard_verify(cands, docs, threshold=0.7).select(
+            "id_a", "id_b", "jaccard"
+        )
+        pdf = verified.toPandas()
+    return spark.createDataFrame(pdf, schema=verified.schema)
 
 
 def _minhash_lsh_oracle_sql() -> str:
@@ -511,45 +511,39 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs bit_count(xor) <= 3 set, computed inline (pure-JVM cross
     join on the 64-bit fingerprints — quadratic, which is exactly why it's
     the verifier and banding is the operator). Oracle: (1, 0, 0)."""
+    from codem_spark import util
     from codem_spark.operators import dedup
 
     docs = _read(spark, f"{sf_dir}/documents.parquet")
-    # fingerprints computed ONCE (persisted) and shared by the banded path
-    # and the exact verifier — one scan-side UDF pass total
-    d = docs.select(
-        F.col("doc_id").alias("did"), dedup.simhash_col(F.col("text")).alias("sh")
-    ).persist()
-    banded = dedup.simhash_candidates_from(
-        d, band_bits=16, hamming_max=3, bucket_cap=None
-    ).select("id_a", "id_b")
-    a = d.select(F.col("did").alias("id_a"), F.col("sh").alias("sa"))
-    b = d.select(F.col("did").alias("id_b"), F.col("sh").alias("sb"))
-    exact = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= 3)
-        .select("id_a", "id_b")
-    )
-    # one job for all three checks: full outer join of the two pair sets
-    j = exact.withColumn("_e", F.lit(1)).join(
-        banded.withColumn("_b", F.lit(1)), ["id_a", "id_b"], "full"
-    )
-    row = j.agg(
-        F.max(F.when(F.col("_b").isNotNull(), 1).otherwise(0)).alias("has_pairs"),
-        F.coalesce(F.sum(F.col("_b").isNull().cast("int")), F.lit(0)).alias("n_missing"),
-        F.coalesce(F.sum(F.col("_e").isNull().cast("int")), F.lit(0)).alias("n_false"),
-    ).collect()[0]
-    d.unpersist()
+    with util.cache_scope():
+        # fingerprints computed ONCE (persisted) and shared by the banded path
+        # and the exact verifier — one scan-side UDF pass total
+        d = util.persist(docs.select(
+            F.col("doc_id").alias("did"), dedup.simhash_col(F.col("text")).alias("sh")
+        ))
+        banded = dedup.simhash_candidates_from(
+            d, band_bits=16, hamming_max=3, bucket_cap=None
+        ).select("id_a", "id_b")
+        a = d.select(F.col("did").alias("id_a"), F.col("sh").alias("sa"))
+        b = d.select(F.col("did").alias("id_b"), F.col("sh").alias("sb"))
+        exact = (
+            a.join(b, F.col("id_a") < F.col("id_b"))
+            .filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= 3)
+            .select("id_a", "id_b")
+        )
+        # one job for all three checks: full outer join of the two pair sets
+        j = exact.withColumn("_e", F.lit(1)).join(
+            banded.withColumn("_b", F.lit(1)), ["id_a", "id_b"], "full"
+        )
+        row = j.agg(
+            F.max(F.when(F.col("_b").isNotNull(), 1).otherwise(0)).alias("has_pairs"),
+            F.coalesce(F.sum(F.col("_b").isNull().cast("int")), F.lit(0)).alias("n_missing"),
+            F.coalesce(F.sum(F.col("_e").isNull().cast("int")), F.lit(0)).alias("n_false"),
+        ).collect()[0]
     import pandas as pd
 
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "has_pairs": [int(row["has_pairs"] or 0)],
-                "n_missing": [int(row["n_missing"])],
-                "n_false": [int(row["n_false"])],
-            }
-        )
-    )
+    vals = (int(row["has_pairs"] or 0), int(row["n_missing"]), int(row["n_false"]))
+    return spark.createDataFrame(pd.DataFrame([vals], columns=["has_pairs", "n_missing", "n_false"]))
 
 
 def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,6 +701,7 @@ def _q_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from codem_spark import util
     from codem_spark.operators import cluster
 
     # pid % 8 is never 0 (l_linenumber in 1..7) — use a residue that occurs
@@ -722,8 +717,9 @@ def _q_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"euclidean_cluster contract verifier is O(n^2) driver-side and got "
         f"{n_pts} points — run it at sf<=0.01; the bench times the scale path"
     )
-    got = cluster.euclidean_cluster(pts, EXTENT, tolerance=600.0, min_points=5)
-    gp = got.toPandas().sort_values("pid").reset_index(drop=True)
+    with util.cache_scope():
+        got = cluster.euclidean_cluster(pts, EXTENT, tolerance=600.0, min_points=5)
+        gp = got.toPandas().sort_values("pid").reset_index(drop=True)
     src = pts.select("pid", "x", "y").toPandas().sort_values("pid").reset_index(drop=True)
     roots = _exact_union_find(src[["x", "y"]].to_numpy(np.float64), 600.0)
     pid_arr = src.pid.to_numpy()
@@ -743,6 +739,7 @@ def _q_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from codem_spark import util
     from codem_spark.config import EngineConfig
     from codem_spark.functions.geo import similarity_matrix
     from codem_spark.registration import pipeline as P
@@ -775,10 +772,9 @@ def _q_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
         pd.DataFrame({"pid": np.arange(int(m.sum())), "x": A[:, 0], "y": A[:, 1], "z": A[:, 2]})
     )
     cfg = EngineConfig(min_resolution=4.0)
-    prep = P.preprocess(fnd, aoi, extent=ext, cfg=cfg, resolution=4.0)
-    c = P.coarse_registration(prep, cfg)
-    prep.fnd_dsm.unpersist()
-    prep.aoi_dsm.unpersist()
+    with util.cache_scope():
+        prep = P.preprocess(fnd, aoi, extent=ext, cfg=cfg, resolution=4.0)
+        c = P.coarse_registration(prep, cfg)
     # ORACLE-CHECKED envelope: the recovered transform composed with the
     # planted perturbation must be ~identity within the reference's own
     # test envelope (reference tests/test_registration.py RMSE/parameter
@@ -807,6 +803,7 @@ def _q_fine_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from codem_spark import util
     from codem_spark.config import EngineConfig
     from codem_spark.registration import icp
 
@@ -828,7 +825,8 @@ def _q_fine_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n), "x": fx, "y": fy, "z": fz}))
     moving = spark.createDataFrame(mv)
     cfg = EngineConfig(min_resolution=4.0, icp_max_iter=8)
-    params = icp.fine_registration(fixed, moving, ext, resolution=4.0, cfg=cfg, knn_radius=6.0)
+    with util.cache_scope():
+        params = icp.fine_registration(fixed, moving, ext, 4.0, cfg, knn_radius=6.0)
     # ORACLE-CHECKED envelope vs the planted (+1.5, -1.0, +0.5) shift —
     # point-to-plane ICP on noise-free data recovers it to ~millimeters
     # (tests/test_registration.py pins the tighter envelope); one-hot row.

@@ -24,6 +24,8 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from codem_spark import util
+
 
 def _bool_arg(s: str) -> bool:
     return s.lower() != "false"
@@ -264,7 +266,6 @@ def cmd_vcd(spark: SparkSession, args: argparse.Namespace) -> dict:
     # final interchange export, like the reference's meshes/ dir
     # (vcd/main.py Mesh.write): per-cluster hull multipatch shapefile
     vcd.export_multipatch(clus, os.path.join(args.output_dir, "meshes", "clusters"))
-    clustered.unpersist()
     return {"extent": list(extent)}
 
 
@@ -280,10 +281,13 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
         spark = get_spark(app_name=f"codem_spark_{args.command}")
     try:
-        if args.command == "register":
-            cmd_register(spark, args)
-        else:
-            cmd_vcd(spark, args)
+        # the frames run_vcd returns read its caches until the command has
+        # written its outputs
+        with util.cache_scope():
+            if args.command == "register":
+                cmd_register(spark, args)
+            else:
+                cmd_vcd(spark, args)
     finally:
         if own_session:
             spark.stop()

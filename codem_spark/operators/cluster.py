@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.functions import cells
 from codem_spark.operators import knn
 
@@ -234,18 +235,21 @@ def _cross_tile_label_edges(
 def _distributed_label_map(
     labeled: DataFrame, extent: Extent, tol: float, level: int, min_points: int
 ) -> DataFrame:
-    """(label, cluster_id) for every label, without a driver collect."""
+    """(label, cluster_id) for every label, without a driver collect.
+
+    Each root-map generation is released once the next one is
+    materialized, and the edge table after the loop; the last root map
+    stays with the caller's cache scope (the returned frame reads it)."""
     border = labeled.filter(F.col("is_border")).select(
         F.col("label").alias("lab"), "x", "y", "z"
     )
     ledges = _cross_tile_label_edges(border, extent, tol, level)
-    sym = ledges.unionByName(
+    sym = util.checkpoint(ledges.unionByName(
         ledges.select(F.col("lb").alias("la"), F.col("la").alias("lb"))
-    ).localCheckpoint(eager=True)
-    rm = (
+    ))
+    rm = util.checkpoint(
         sym.groupBy("la").agg(F.min("lb").alias("root"))
         .select("la", F.least("la", "root").alias("root"))
-        .localCheckpoint(eager=True)
     )
     # Convergence via a monotone scalar: roots only decrease, so the loop
     # terminates, and fixpoint <=> root-sum unchanged. (A join-based
@@ -268,15 +272,15 @@ def _distributed_label_map(
             F.least(F.col("root"), F.coalesce("nr", F.col("root"))).alias("nr"),
         )
         gmap = stepped.groupBy("old_root").agg(F.min("nr").alias("gmin"))
-        rm = (
-            stepped.join(gmap, "old_root")
-            .select("la", F.least("nr", "gmin").alias("root"))
-            .localCheckpoint(eager=True)
+        prev, rm = rm, util.checkpoint(
+            stepped.join(gmap, "old_root").select("la", F.least("nr", "gmin").alias("root"))
         )
+        util.release(prev)
         new_sum = rm.agg(F.sum("root")).collect()[0][0]
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    util.release(sym)
     # summing per label folds components that share a min pid into one size
     lsize = labeled.filter(F.col("lab_n") > 0).groupBy("label").agg(F.sum("lab_n").alias("n"))
     labmap = lsize.join(rm.withColumnsRenamed({"la": "label"}), "label", "left").select(
@@ -299,7 +303,8 @@ def euclidean_cluster(
     cluster, or -1 for clusters smaller than min_points.
 
     ``DRIVER_MAX_ROWS`` caps the one driver collect; above it the
-    distributed route runs."""
+    distributed route runs. The returned frame reads the tile kernel's
+    checkpoint, which belongs to the caller's cache scope."""
     # The input has exactly ONE data consumer (the tile kernel — border rows
     # and labels all derive from the checkpointed kernel output), so no
     # persist: a cache pass here is a pure extra materialization.
@@ -310,7 +315,7 @@ def euclidean_cluster(
     # border-band membership is decided BEFORE the kernel and carried
     # through it, so the labeled frame already knows which rows can
     # participate in cross-tile edges
-    labeled = (
+    labeled = util.checkpoint(
         tiled.withColumn("_border", cells.border_col(extent, level, tolerance))
         .drop("_ix", "_iy")
         .groupBy("cell_id")
@@ -319,7 +324,6 @@ def euclidean_cluster(
             schema="pid long, label long, lab_n long, "
             "x double, y double, z double, is_border boolean",
         )
-        .localCheckpoint(eager=True)
     )
     # The single route decision: border rows feed the edges, lab_n > 0 rows
     # the sizes. Within the cap, the probe holds everything the driver

@@ -23,14 +23,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.functions.text import normalized_text_col
-from codem_spark.util import rebalance
 
 # -------------------------------------------------------------- exact dedup
 def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Digest -> group size + representative id (the SQL-checkable face of
     exact dedup) over (doc_id, text) documents."""
-    d = rebalance(df).select(
+    d = util.rebalance(df).select(
         "doc_id", F.sha2(normalized_text_col(F.col("text")), 256).alias("digest")
     )
     return d.groupBy("digest").agg(
@@ -300,7 +300,7 @@ def _shingle_frame(df: DataFrame) -> DataFrame:
     the frame jaccard_verify persists is substituted by Spark's cache manager
     for every matching subtree at execution, the one inside the candidate
     plan included, so one minhash_lsh query runs the shingle UDF once."""
-    return rebalance(df).select(
+    return util.rebalance(df).select(
         F.col("doc_id").alias("did"),
         shingles_col(F.col("text"), _MINHASH_SHINGLE_N).alias("sh"),
     )
@@ -329,9 +329,9 @@ def jaccard_verify(pairs: DataFrame, df: DataFrame, threshold: float = 0.8) -> D
     """Exact n-gram Jaccard over candidate pairs (JVM array intersect/union).
     pairs: (id_a, id_b). The shingle frame is persisted (joined on both
     pair sides, and shared with the candidate plan of the same source);
-    the caller releases it with :func:`release_shingles` once the result
-    is consumed."""
-    sh = _shingle_frame(df).persist()
+    the returned frame reads it, so the cache belongs to the caller's
+    cache scope."""
+    sh = util.persist(_shingle_frame(df))
     j = (
         pairs.join(sh.withColumnsRenamed({"did": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"did": "id_b", "sh": "sh_b"}), "id_b")
@@ -342,12 +342,6 @@ def jaccard_verify(pairs: DataFrame, df: DataFrame, threshold: float = 0.8) -> D
     return j.select("id_a", "id_b", F.round(jac, 6).alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-
-
-def release_shingles(df: DataFrame) -> None:
-    """Drop the shingle cache :func:`jaccard_verify` persisted for ``df``
-    (the plan-equal frame names the same cache entry)."""
-    _shingle_frame(df).unpersist()
 
 
 # ------------------------------------------------------------------ simhash
@@ -421,7 +415,7 @@ def simhash_candidates(
     for the looser small-data behavior. Buckets above 64 members emit star
     pairs (see _bucket_pairs) — the residual guard for pathological keys
     (e.g. simhash 0 from empty docs)."""
-    d = rebalance(df).select(
+    d = util.rebalance(df).select(
         F.col("doc_id").alias("did"), simhash_col(F.col("text")).alias("sh")
     )
     return simhash_candidates_from(d, band_bits, hamming_max)

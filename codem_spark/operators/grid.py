@@ -307,9 +307,9 @@ def exact_percentiles(
     higherValue*(position-lower)``) so results are interchangeable with the
     built-in aggregate — asserted in tests/test_grid.py.
 
-    Every round reads ``df`` again (2-3 passes), so callers persist it
-    (``quantize_normalize``'s caller does, and also reads it for the
-    quantized output).
+    Every round reads ``df`` again (2-3 passes). A caller whose ``df`` is
+    expensive to recompute caches it (``util.persist``); the ``quantize``
+    contract query does not, as its scan reruns no slower than a cache.
     """
     vals = df.select(F.col(col).cast("double").alias("_v")).filter(
         F.col("_v").isNotNull()

@@ -41,8 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.functions import cells
-from codem_spark.util import approx_row_count
 
 Extent = tuple[float, float, float, float]
 
@@ -418,7 +418,7 @@ def level_of(df: DataFrame, extent: Extent, radius: float) -> int:
     overestimated count only pushes toward more tiles; the radius rule
     still caps the level)."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    return auto_level(extent, radius, approx_row_count(df), parallelism=par)
+    return auto_level(extent, radius, util.approx_row_count(df), parallelism=par)
 
 
 def knn_join(
@@ -489,7 +489,9 @@ def knn_join_complete(
     with ``emit_unmatched=True`` and ONE localCheckpoint — matched rows and
     the next round's residual are both filters over that checkpointed frame
     (nn_rank 1 vs 0), so there is no per-round anti-join, and each residual
-    generation is consumed exactly once. The right side is not checkpointed:
+    generation is consumed exactly once. The checkpoints belong to the
+    caller's cache scope (``util.cache_scope``): the returned frame reads
+    them. The right side is not checkpointed:
     each round reads it from its own plan, so a caller whose right side is
     expensive to recompute caches it first. Its exact count sizes the first
     radius; a plan-statistics estimate can be ~9x off (sf0.1: 116,583
@@ -513,15 +515,15 @@ def knn_join_complete(
         spacing = math.sqrt(area / n_right)
         radius = min(radius, max(_ADAPTIVE_FACTOR * spacing, 1e-9))
     residual = left
-    n_res = approx_row_count(left)  # parallelism knob only — no count job
+    n_res = util.approx_row_count(left)  # parallelism knob only — no count job
     rounds: list[DataFrame] = []
     r = radius
     for _ in range(_MAX_ROUNDS):
         # auto_level keeps cell edge >= radius as the radius escalates
-        out = knn_join(
+        out = util.checkpoint(knn_join(
             residual, right, extent, r, l_carry=l_carry_full, r_carry=r_carry,
             level=auto_level(extent, r, n_res, par), emit_unmatched=True,
-        ).localCheckpoint(eager=True)
+        ))
         rounds.append(out.filter(F.col("nn_rank") == 1))
         n_res = out.filter(F.col("nn_rank") == 0).count()
         if n_res == 0 or n_right == 0:

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.config import EngineConfig, RegistrationParameters
 from codem_spark.functions.geo import decompose_similarity
 from codem_spark.operators.dedup import band_keys
@@ -61,16 +62,11 @@ _PAIR_COLS = ["fx", "fy", "fz", "ax", "ay", "az", "dist"]
 
 
 def _collect_capped(kp: DataFrame, cap: int) -> pd.DataFrame:
-    """At most ``cap + 1`` keypoint rows, in the frame's partition order.
-    The limit gathers rows through a single-partition exchange whose fetch
-    order is not fixed, so each row carries its monotonically increasing id
-    and the driver restores partition order from it."""
-    pdf = (
-        kp.select(*_KP_COLS, F.monotonically_increasing_id().alias("_ord"))
-        .limit(cap + 1)
-        .toPandas()
-    )
-    return pdf.sort_values("_ord", kind="stable").drop(columns="_ord").reset_index(drop=True)
+    """At most ``cap + 1`` keypoint rows, sorted by value: the match and
+    RANSAC then see the same rows in the same order whatever the frame's
+    partitioning (the limit's fetch order is not fixed either)."""
+    pdf = kp.select(*_KP_COLS).limit(cap + 1).toPandas()
+    return pdf.sort_values(_KP_COLS, kind="stable").reset_index(drop=True)
 
 
 def match_features(
@@ -138,55 +134,57 @@ def _match_features_lsh(
     16-bit band of any of the 4 descriptor lanes (catching near-Hamming
     matches with high recall, like the reference's FLANN multi-probe LSH);
     exact Hamming + per-AOI-keypoint top-2 + Lowe ratio on the candidates —
-    one banded shuffle join instead of a driver collect."""
+    one banded shuffle join instead of a driver collect. The pairs come
+    back sorted by value, so their order does not depend on the shuffle."""
     bands = band_keys(["d0", "d1", "d2", "d3"], _LSH_BAND_BITS)
 
     def banded(df: DataFrame, prefix: str) -> DataFrame:
         cols = [F.col(c).alias(f"{prefix}{c}") for c in ("x", "y", "z", "d0", "d1", "d2", "d3")]
         return df.select(*cols, F.inline(bands))
 
-    fb = banded(fnd_kp, "f_").persist()
-    ab = banded(aoi_kp, "a_")
-    ham = None
-    for lane in range(4):
-        h = F.bit_count(F.col(f"a_d{lane}").bitwiseXOR(F.col(f"f_d{lane}")))
-        ham = h if ham is None else ham + h
-    pairs = (
-        ab.join(fb, ["band", "bkey"])
-        .drop("band", "bkey")
-        .dropDuplicates(["a_x", "a_y", "f_x", "f_y"])
-        .withColumn("ham", ham)
-    )
-    from pyspark.sql import Window
+    with util.cache_scope():
+        fb = util.persist(banded(fnd_kp, "f_"))
+        ab = banded(aoi_kp, "a_")
+        ham = None
+        for lane in range(4):
+            h = F.bit_count(F.col(f"a_d{lane}").bitwiseXOR(F.col(f"f_d{lane}")))
+            ham = h if ham is None else ham + h
+        pairs = (
+            ab.join(fb, ["band", "bkey"])
+            .drop("band", "bkey")
+            .dropDuplicates(["a_x", "a_y", "f_x", "f_y"])
+            .withColumn("ham", ham)
+        )
+        from pyspark.sql import Window
 
-    w = Window.partitionBy("a_x", "a_y").orderBy(F.col("ham").asc(), F.col("f_x"), F.col("f_y"))
-    top2 = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 2)
-    agg = (
-        top2.groupBy("a_x", "a_y")
-        .agg(
-            F.min(F.when(F.col("rn") == 1, F.col("ham"))).alias("d1"),
-            F.min(F.when(F.col("rn") == 2, F.col("ham"))).alias("d2"),
-            F.first(F.when(F.col("rn") == 1, F.col("f_x")), ignorenulls=True).alias("fx"),
-            F.first(F.when(F.col("rn") == 1, F.col("f_y")), ignorenulls=True).alias("fy"),
-            F.first(F.when(F.col("rn") == 1, F.col("f_z")), ignorenulls=True).alias("fz"),
-            F.first(F.when(F.col("rn") == 1, F.col("a_z")), ignorenulls=True).alias("az"),
+        w = Window.partitionBy("a_x", "a_y").orderBy(
+            F.col("ham").asc(), F.col("f_x"), F.col("f_y")
         )
-        # a lone candidate has no in-bucket second-best: score the ratio test
-        # against the max possible Hamming distance (256 bits) — the BF path
-        # would see a random ~128-distance second-best and pass it anyway
-        .filter(
-            F.col("d1")
-            < F.lit(lowes_ratio) * F.coalesce(F.col("d2"), F.lit(256).cast("int"))
+        top2 = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 2)
+        agg = (
+            top2.groupBy("a_x", "a_y")
+            .agg(
+                F.min(F.when(F.col("rn") == 1, F.col("ham"))).alias("d1"),
+                F.min(F.when(F.col("rn") == 2, F.col("ham"))).alias("d2"),
+                F.first(F.when(F.col("rn") == 1, F.col("f_x")), ignorenulls=True).alias("fx"),
+                F.first(F.when(F.col("rn") == 1, F.col("f_y")), ignorenulls=True).alias("fy"),
+                F.first(F.when(F.col("rn") == 1, F.col("f_z")), ignorenulls=True).alias("fz"),
+                F.first(F.when(F.col("rn") == 1, F.col("a_z")), ignorenulls=True).alias("az"),
+            )
+            # a lone candidate has no in-bucket second-best: score the ratio test
+            # against the max possible Hamming distance (256 bits) — the BF path
+            # would see a random ~128-distance second-best and pass it anyway
+            .filter(
+                F.col("d1")
+                < F.lit(lowes_ratio) * F.coalesce(F.col("d2"), F.lit(256).cast("int"))
+            )
         )
-    )
-    try:
-        return agg.select(
+        pdf = agg.select(
             "fx", "fy", "fz",
             F.col("a_x").alias("ax"), F.col("a_y").alias("ay"), F.col("az").alias("az"),
             F.col("d1").cast("double").alias("dist"),
         ).toPandas()
-    finally:
-        fb.unpersist()
+    return pdf.sort_values(_PAIR_COLS, kind="stable").reset_index(drop=True)
 
 
 def umeyama(src: np.ndarray, dst: np.ndarray, solve_scale: bool = True) -> np.ndarray:

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.config import EngineConfig, RegistrationParameters
 from codem_spark.functions import cells
 from codem_spark.functions.geo import (
@@ -208,12 +209,10 @@ def _pass_kernel_builder(
 def _tile_fixed(fixed: DataFrame, extent: Extent, reach: float, level: int) -> DataFrame:
     """The fixed side (with normals) tiled with a ``reach``-wide halo,
     hash-partitioned on ``cell_id`` and cached."""
-    return (
+    return util.persist(
         knn.tile_right(
             fixed, extent, reach, level, rid="pid", r_carry=("x", "y", "z", "nx", "ny", "nz")
-        )
-        .repartition(F.col("cell_id"))
-        .persist()
+        ).repartition(F.col("cell_id"))
     )
 
 
@@ -223,11 +222,10 @@ def _tile_moving(moving: DataFrame, pose: np.ndarray, extent: Extent, level: int
     ``cell_id`` like the fixed tiles and cached."""
     px, py, _pz = transform_xyz(pose, F.col("x"), F.col("y"), F.col("z"))
     posed = moving.select("pid", "x", "y", "z", px.alias("_px"), py.alias("_py"))
-    return (
+    return util.persist(
         cells.with_cell(posed, "_px", "_py", extent, level)
         .select("cell_id", "pid", "x", "y", "z")
         .repartition(F.col("cell_id"))
-        .persist()
     )
 
 
@@ -293,99 +291,95 @@ def fine_registration(
 
     # normals on the fixed cloud (once; reference preprocess.py:317-350)
     sc.setJobDescription("icp: normals")
-    fixed_n = compute_normals(fixed, extent, radius=4.0 * resolution).persist()
-    fixed_tiled = moving_tiled = None
     # every cache this solve creates is released on the way out, on error
     # paths too (e.g. too few correspondences)
-    try:
-        # mean-centering offset for conditioning (reference icp.py:116-119) —
-        # computed from the CACHED normals frame (same x/y/z rows as `fixed`),
-        # not the raw input, whose unpersisted derivation chain would re-scan
-        mu_row = fixed_n.agg(
-            F.avg("x").alias("mx"), F.avg("y").alias("my"), F.avg("z").alias("mz")
-        ).collect()[0]
-        mu = np.array([mu_row["mx"], mu_row["my"], mu_row["mz"]])
-        demean = np.eye(4)
-        demean[:3, 3] = -mu
-        remean = np.eye(4)
-        remean[:3, 3] = mu
-        # center the *extent* too so tiling stays aligned
-        c_extent = (extent[0] - mu[0], extent[1] - mu[1], extent[2] - mu[0], extent[3] - mu[1])
-        t_c = demean @ t_total @ remean  # work in centered frame
+    with util.cache_scope():
+        try:
+            fixed_n = util.persist(compute_normals(fixed, extent, radius=4.0 * resolution))
+            # mean-centering offset for conditioning (reference icp.py:116-119) —
+            # computed from the CACHED normals frame (same x/y/z rows as `fixed`),
+            # not the raw input, whose unpersisted derivation chain would re-scan
+            mu_row = fixed_n.agg(
+                F.avg("x").alias("mx"), F.avg("y").alias("my"), F.avg("z").alias("mz")
+            ).collect()[0]
+            mu = np.array([mu_row["mx"], mu_row["my"], mu_row["mz"]])
+            demean = np.eye(4)
+            demean[:3, 3] = -mu
+            remean = np.eye(4)
+            remean[:3, 3] = mu
+            # center the *extent* too so tiling stays aligned
+            c_extent = (extent[0] - mu[0], extent[1] - mu[1], extent[2] - mu[0], extent[3] - mu[1])
+            t_c = demean @ t_total @ remean  # work in centered frame
 
-        level = knn.level_of(
-            moving.select("pid", "x", "y", "z"), c_extent, radius + drift_margin
-        )
-        # Both sides are tiled ONCE, hash-partitioned by cell and cached; the
-        # first pass fills both caches, and every later pass is one
-        # Exchange-free cogroup job. The fixed halo reaches radius + drift
-        # margin; the moving side is tiled at its starting pose and posed
-        # inside the kernel.
-        fixed_tiled = _tile_fixed(
-            apply_transform_cols(fixed_n, demean), c_extent, radius + drift_margin, level
-        )
-        tile_pose = t_c @ demean
-        moving_tiled = _tile_moving(moving, tile_pose, c_extent, level)
+            level = knn.level_of(
+                moving.select("pid", "x", "y", "z"), c_extent, radius + drift_margin
+            )
+            # Both sides are tiled ONCE, hash-partitioned by cell and cached; the
+            # first pass fills both caches, and every later pass is one
+            # Exchange-free cogroup job. The fixed halo reaches radius + drift
+            # margin; the moving side is tiled at its starting pose and posed
+            # inside the kernel.
+            fixed_tiled = _tile_fixed(
+                apply_transform_cols(fixed_n, demean), c_extent, radius + drift_margin, level
+            )
+            tile_pose = t_c @ demean
+            moving_tiled = _tile_moving(moving, tile_pose, c_extent, level)
 
-        def run_pass(label: str, alpha: float) -> np.ndarray:
-            """One pass at the current pose -> the summed tile rows. A pass
-            whose points drifted past the margin may have missed neighbours:
-            re-tile the moving side at the current pose and run it again."""
-            nonlocal moving_tiled, tile_pose
-            pose = t_c @ demean
-            while True:
-                sc.setJobDescription(label)
-                kern = _pass_kernel_builder(
-                    pose, tile_pose, radius, cfg.icp_solve_scale, alpha, beta, cfg.icp_robust
-                )
-                acc, drift = _sum_tiles(_pass_frame(moving_tiled, fixed_tiled, kern).collect())
-                if drift <= drift_margin:
-                    return acc
-                moving_tiled.unpersist()
-                moving_tiled = _tile_moving(moving, pose, c_extent, level)
-                tile_pose = pose
+            def run_pass(label: str, alpha: float) -> np.ndarray:
+                """One pass at the current pose -> the summed tile rows. A pass
+                whose points drifted past the margin may have missed neighbours:
+                re-tile the moving side at the current pose and run it again."""
+                nonlocal moving_tiled, tile_pose
+                pose = t_c @ demean
+                while True:
+                    sc.setJobDescription(label)
+                    kern = _pass_kernel_builder(
+                        pose, tile_pose, radius, cfg.icp_solve_scale, alpha, beta, cfg.icp_robust
+                    )
+                    acc, drift = _sum_tiles(_pass_frame(moving_tiled, fixed_tiled, kern).collect())
+                    if drift <= drift_margin:
+                        return acc
+                    util.release(moving_tiled)
+                    moving_tiled = _tile_moving(moving, pose, c_extent, level)
+                    tile_pose = pose
 
-        alpha = 2.0  # IRLS shape, decays by 0.2/iter (reference icp.py:128-131,151)
-        n_iters = 0
-        prev_rmse = None
-        for it in range(cfg.icp_max_iter):
-            n_iters = it + 1
-            acc = run_pass(f"icp: pass {n_iters}", alpha)
-            if it == 0:
-                # the first pass filled the fixed tiles from the normals cache
-                fixed_n.unpersist(False)
-            n_pairs = int(acc[_ACC_COLS.index("n")])
-            if n_pairs < 10:
-                raise ValueError(f"ICP found too few correspondences ({n_pairs})")
-            cur_rmse = math.sqrt(acc[_ACC_COLS.index("r2")] / n_pairs)
-            upd = _solve_update(acc, cfg.icp_solve_scale)
-            t_c = upd @ t_c
-            # convergence checks (reference icp.py:173-185)
-            dec = decompose_similarity(upd)
-            angles = (dec["omega"], dec["phi"], dec["kappa"])
-            tvec = (dec["trans_x"], dec["trans_y"], dec["trans_z"])
-            if prev_rmse is not None:
-                d_rmse = abs(prev_rmse - cur_rmse) / max(prev_rmse, 1e-300)
-                d_angle = max(abs(a) for a in angles)
-                d_dist = max(abs(v) for v in tvec)
-                if d_rmse < cfg.icp_rmse_threshold or (
-                    d_angle < cfg.icp_angle_threshold and d_dist < cfg.icp_distance_threshold
-                ):
-                    prev_rmse = cur_rmse
-                    break
-            prev_rmse = cur_rmse
-            if cfg.icp_robust and alpha > 0:
-                alpha = max(alpha - 0.2, 0.0)  # reference decay icp.py:151
+            alpha = 2.0  # IRLS shape, decays by 0.2/iter (reference icp.py:128-131,151)
+            n_iters = 0
+            prev_rmse = None
+            for it in range(cfg.icp_max_iter):
+                n_iters = it + 1
+                acc = run_pass(f"icp: pass {n_iters}", alpha)
+                if it == 0:
+                    # the first pass filled the fixed tiles from the normals cache
+                    util.release(fixed_n)
+                n_pairs = int(acc[_ACC_COLS.index("n")])
+                if n_pairs < 10:
+                    raise ValueError(f"ICP found too few correspondences ({n_pairs})")
+                cur_rmse = math.sqrt(acc[_ACC_COLS.index("r2")] / n_pairs)
+                upd = _solve_update(acc, cfg.icp_solve_scale)
+                t_c = upd @ t_c
+                # convergence checks (reference icp.py:173-185)
+                dec = decompose_similarity(upd)
+                angles = (dec["omega"], dec["phi"], dec["kappa"])
+                tvec = (dec["trans_x"], dec["trans_y"], dec["trans_z"])
+                if prev_rmse is not None:
+                    d_rmse = abs(prev_rmse - cur_rmse) / max(prev_rmse, 1e-300)
+                    d_angle = max(abs(a) for a in angles)
+                    d_dist = max(abs(v) for v in tvec)
+                    if d_rmse < cfg.icp_rmse_threshold or (
+                        d_angle < cfg.icp_angle_threshold and d_dist < cfg.icp_distance_threshold
+                    ):
+                        prev_rmse = cur_rmse
+                        break
+                prev_rmse = cur_rmse
+                if cfg.icp_robust and alpha > 0:
+                    alpha = max(alpha - 0.2, 0.0)  # reference decay icp.py:151
 
-        # final residual stats per axis: one more pass, at the pose after
-        # the last update
-        acc = run_pass("icp: residuals", alpha)
-    finally:
-        sc.setJobDescription(None)
-        fixed_n.unpersist(False)
-        for df in (fixed_tiled, moving_tiled):
-            if df is not None:
-                df.unpersist()
+            # final residual stats per axis: one more pass, at the pose after
+            # the last update
+            acc = run_pass("icp: residuals", alpha)
+        finally:
+            sc.setJobDescription(None)
 
     n_final = int(acc[_ACC_COLS.index("n")])
     rx2, ry2, rz2 = acc[len(_ACC_COLS):] / n_final  # per-axis mean squared residual

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.config import EngineConfig, RegistrationParameters
 from codem_spark.functions.geo import apply_transform_cols
 from codem_spark.operators import grid
@@ -45,15 +46,6 @@ class PreprocessResult:
     aoi_dsm: DataFrame
     extent: Extent
     resolution: float
-    # upstream persisted intermediates (raw + band-passed DSMs) still
-    # referenced by the un-materialized fnd_dsm/aoi_dsm lineage; released by
-    # the first downstream stage that materializes the DSM caches
-    upstream_caches: tuple = ()
-
-    def release_upstream(self) -> None:
-        for df in self.upstream_caches:
-            df.unpersist(False)
-        self.upstream_caches = ()
 
 
 def _prep_dsm(
@@ -61,7 +53,6 @@ def _prep_dsm(
     extent: Extent,
     resolution: float,
     cfg: EngineConfig,
-    release: list,
 ) -> DataFrame:
     """points -> infilled, band-passed, normalized DSM tile table (the
     reference's GeoData.prep: _infill -> _normalize, preprocess.py:360-373):
@@ -74,11 +65,11 @@ def _prep_dsm(
     differ between cluster sizes — the north rule demands identical
     outputs. The DSM is already resolution-reduced, so exact is cheap.
 
-    The raw and band-passed DSM caches go into ``release``: the caller
-    unpersists them once the returned DSM is materialized."""
+    The returned DSM, and the raw and band-passed DSMs its lineage reads
+    until it is materialized, are cached in the caller's cache scope."""
     # persist the raw DSM: the fused kernel's bbox agg and the kernel pass
     # itself would otherwise each rerun the full grid_max aggregation
-    dsm = grid.grid_max(points, extent, resolution).persist()
+    dsm = util.persist(grid.grid_max(points, extent, resolution))
     # persist the band-passed raster: the exact-percentile agg below and
     # the final DSM materialization would otherwise recompute the whole
     # grid_max -> infill -> band_pass chain (measured: 45 s -> ~15 s of the
@@ -89,11 +80,11 @@ def _prep_dsm(
     # infill + band-pass run FUSED in one tile kernel (grid.infill_band_pass
     # — one shuffle and one Python stage instead of two of each; outputs
     # equal the whole-raster chain, asserted in tests).
-    bp = grid.infill_band_pass(
+    bp = util.persist(grid.infill_band_pass(
         dsm,
         weak_sigma_px=max(cfg.dsm_weak_filter / resolution, 1.0),
         strong_sigma_px=cfg.dsm_strong_filter / resolution,
-    ).persist()
+    ))
     # Two quantized planes: det_u8 (band-passed) drives keypoint DETECTION —
     # suppressing long-wavelength relief so keypoints don't collapse onto
     # ridgelines, the reference's stated reason for _normalize
@@ -111,12 +102,10 @@ def _prep_dsm(
     ).collect()[0]
     q = grid.quantize_normalize(bp, "bp", bounds=tuple(qs["bp_q"]))
     q = grid.quantize_normalize(q, "z", bounds=tuple(qs["z_q"]))
-    out = q.select("gx", "gy", "z", "z_u8", F.col("bp_u8").alias("det_u8")).persist()
     # no dedicated materialization job: the first consumer (the keypoint
-    # collect in coarse_registration) materializes `out` through the
-    # still-cached band-pass, and the caller releases these handles after it
-    release.extend([bp, dsm])
-    return out
+    # collect in coarse_registration) materializes it through the
+    # still-cached band-pass
+    return util.persist(q.select("gx", "gy", "z", "z_u8", F.col("bp_u8").alias("det_u8")))
 
 
 def estimate_pipeline_resolution(
@@ -159,24 +148,16 @@ def preprocess(
     # The two sides' DSM chains are independent job DAGs — submit them from
     # two driver threads so their stages interleave on the same executors
     # (Spark schedulers are thread-safe; this halves preprocess wall time
-    # when neither side alone saturates the cluster).
+    # when neither side alone saturates the cluster). Their caches go to
+    # the caller's cache scope: the returned DSMs read them.
     from concurrent.futures import ThreadPoolExecutor
 
-    rel_f: list = []
-    rel_a: list = []
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fnd = pool.submit(
-            lambda: _prep_dsm(fnd_points, extent, resolution, cfg, release=rel_f)
-        )
-        f_aoi = pool.submit(
-            lambda: _prep_dsm(aoi_points, extent, resolution, cfg, release=rel_a)
-        )
+        f_fnd = pool.submit(_prep_dsm, fnd_points, extent, resolution, cfg)
+        f_aoi = pool.submit(_prep_dsm, aoi_points, extent, resolution, cfg)
         fnd_dsm = f_fnd.result()
         aoi_dsm = f_aoi.result()
-    return PreprocessResult(
-        fnd_points, aoi_points, fnd_dsm, aoi_dsm, extent, resolution,
-        upstream_caches=tuple(rel_f + rel_a),
-    )
+    return PreprocessResult(fnd_points, aoi_points, fnd_dsm, aoi_dsm, extent, resolution)
 
 
 def coarse_registration(
@@ -186,17 +167,11 @@ def coarse_registration(
     cfg = cfg or EngineConfig()
     # persist keypoints: the LSH route reads both frames again after the
     # matcher's bounded collects, which would otherwise rerun the Harris
-    # tile kernels. Those collects materialize both DSM caches, so the
-    # preprocess intermediates (raw + band-passed DSM caches) are released
-    # with the keypoints — also on failure, when nothing else would.
-    fnd_kp = features.extract_features(prep.fnd_dsm, prep.extent, prep.resolution).persist()
-    aoi_kp = features.extract_features(prep.aoi_dsm, prep.extent, prep.resolution).persist()
-    try:
+    # tile kernels
+    with util.cache_scope():
+        fnd_kp = util.persist(features.extract_features(prep.fnd_dsm, prep.extent, prep.resolution))
+        aoi_kp = util.persist(features.extract_features(prep.aoi_dsm, prep.extent, prep.resolution))
         return coarse_mod.coarse_registration(fnd_kp, aoi_kp, cfg, capture=capture)
-    finally:
-        fnd_kp.unpersist(False)
-        aoi_kp.unpersist(False)
-        prep.release_upstream()
 
 
 def fine_registration_stage(
@@ -335,9 +310,10 @@ def register(
     af = crs.units_factor(aoi_units) if isinstance(aoi_units, str) else float(aoi_units)
     fnd_m = crs.scale_to_meters(fnd_points, ff) if ff != 1.0 else fnd_points
     aoi_m = crs.scale_to_meters(aoi_points, af) if af != 1.0 else aoi_points
-    prep = preprocess(fnd_m, aoi_m, extent, cfg, resolution)
-    # the DSM caches are released on the way out, on error paths too
-    try:
+    # preprocess caches the DSMs in this scope: released on the way out,
+    # on error paths too
+    with util.cache_scope():
+        prep = preprocess(fnd_m, aoi_m, extent, cfg, resolution)
         c = coarse_registration(prep, cfg, capture=capture)
         f = fine_registration_stage(prep, c, cfg)
         native = crs.registration_to_native(np.array(f.matrix, np.float64), ff, af)
@@ -354,6 +330,3 @@ def register(
             capture["extent"] = prep.extent
             capture["resolution"] = prep.resolution
         return c, f, out
-    finally:
-        prep.fnd_dsm.unpersist()
-        prep.aoi_dsm.unpersist()

@@ -1,8 +1,30 @@
-"""Small plan utilities."""
+"""Small plan utilities, and the one owner of every Spark cache.
+
+Caches. Every ``persist`` and ``localCheckpoint`` of the engine goes
+through :func:`persist` and :func:`checkpoint`, and each registers its
+frame with the innermost open :func:`cache_scope`. Leaving the scope
+releases every frame it still holds, on error paths too; :func:`release`
+frees a frame early. The scopes form one process-wide stack under a lock,
+so a frame cached from a driver pool thread (``preprocess`` builds both
+DSMs in two) lands in the scope of the thread that opened it.
+
+- Return rule: a function opens its own scope only if its return value
+  does not read that scope's caches. ``knn_join_complete``,
+  ``euclidean_cluster``, ``jaccard_verify``, ``preprocess`` and
+  ``run_vcd`` return lazy frames built on their caches, so those caches
+  go to the caller's scope. A contract query that needs its caches for
+  its result collects the result inside its scope and returns
+  ``createDataFrame(pdf, schema)``.
+- With no scope open, a frame is unowned, as a bare ``persist()`` is:
+  it lives until ``release``, ``spark.catalog.clearCache()`` (which does
+  not reach checkpoints) or Spark's context cleaner.
+"""
 
 from __future__ import annotations
 
 import re
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -71,3 +93,54 @@ def approx_row_count(df: DataFrame) -> int:
         return max(1, size // width)
     except Exception:
         return df.count()
+
+
+_scopes: list[list[DataFrame]] = []
+_scopes_lock = threading.Lock()
+
+
+def _own(df: DataFrame) -> DataFrame:
+    with _scopes_lock:
+        if _scopes:
+            _scopes[-1].append(df)
+    return df
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, owned by the innermost open scope."""
+    return _own(df.persist())
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """An eager ``df.localCheckpoint()``, owned by the innermost open scope."""
+    return _own(df.localCheckpoint(eager=True))
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free frames that :func:`persist` or :func:`checkpoint` returned,
+    and drop them from their scope."""
+    with _scopes_lock:
+        for frames in _scopes:
+            frames[:] = [f for f in frames if all(f is not d for d in dfs)]
+    for df in dfs:
+        df.unpersist(False)
+        # a checkpoint is a LogicalRDD over its own RDD's blocks, which no
+        # cache-manager entry names: unpersist that RDD
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+@contextmanager
+def cache_scope():
+    """Own every frame cached inside the block, and release those still
+    held when it ends."""
+    frames: list[DataFrame] = []
+    with _scopes_lock:
+        _scopes.append(frames)
+    try:
+        yield
+    finally:
+        with _scopes_lock:
+            del _scopes[next(i for i, f in enumerate(_scopes) if f is frames)]
+        release(*frames)

@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.operators import cluster as cluster_mod
 from codem_spark.operators import grid, hull, knn
 
@@ -217,7 +218,8 @@ def run_vcd(
     """Full VCD run -> (clustered change points, cluster summaries,
     product rasters). The clustered frame carries uint16 RGB columns (the
     reference's colored LAS product), has cull_cluster_ids applied and is
-    persisted: the caller unpersists it."""
+    persisted. All three read caches of the caller's cache scope
+    (``util.cache_scope``), which releases them."""
     cfg = cfg or VcdConfig()
     b = preprocess_filters(before, cfg) if "classification" in before.columns else before
     a = preprocess_filters(after, cfg) if "classification" in after.columns else after
@@ -242,14 +244,12 @@ def run_vcd(
         clustered = clustered.filter(
             ~F.col("cluster_id").isin(list(cfg.cull_cluster_ids))
         )
-    # the color-range agg materializes the cluster cache, the colored frame
-    # is cached from it, and that cache is the one the caller's handle holds
-    clustered = clustered.persist()
-    try:
-        colored = colored_clusters(clustered).persist()
-        colored.count()
-    finally:
-        clustered.unpersist()
+    # the color-range agg materializes the cluster cache, and the colored
+    # frame is cached from it
+    clustered = util.persist(clustered)
+    colored = util.persist(colored_clusters(clustered))
+    colored.count()
+    util.release(clustered)
     summaries = hull.cluster_summaries(colored)
     prods = products(sig, extent, cfg)
     return colored, summaries, prods

@@ -64,6 +64,23 @@ def persisted_rdd_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
+# modules whose every test must leave no persisted or checkpointed RDD
+_LEAK_GATED = ("test_entry.py", "test_cli.py")
+
+
+@pytest.fixture(autouse=True)
+def no_leftover_caches(request):
+    """Around each contract-query and CLI test: no RDD id persisted during
+    the test survives it."""
+    if request.path.name not in _LEAK_GATED:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    before = persisted_rdd_ids(spark)
+    yield
+    assert not persisted_rdd_ids(spark) - before, "the test left cached RDDs"
+
+
 def union_find_oracle(P: np.ndarray, tol: float) -> np.ndarray:
     """Single-machine exact connected components (edges = dist <= tol)."""
     n = len(P)

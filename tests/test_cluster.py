@@ -6,8 +6,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from codem_spark import util
 from codem_spark.operators import cluster
-from tests.conftest import SMALL_EXTENT, union_find_oracle
+from tests.conftest import SMALL_EXTENT, persisted_rdd_ids, union_find_oracle
 
 # Both routes of euclidean_cluster face every exact test: None keeps the
 # default cap (driver route at these sizes), 0 forces the distributed route.
@@ -118,6 +119,26 @@ def test_cross_tile_chain_still_connects(spark, monkeypatch, driver_max_rows):
         .sort_values("pid")
     )
     assert (got.cluster_id == 0).all()
+
+
+def test_distributed_route_keeps_only_the_checkpoints_its_result_reads(spark, monkeypatch):
+    """On the distributed route, the edge table and every superseded root
+    map are released as label propagation goes: once the result is
+    collected, only the tile kernel's checkpoint and the last root map are
+    live (the result reads both), and the caller's scope releases them."""
+    monkeypatch.setattr(cluster, "DRIVER_MAX_ROWS", 0)
+    # a chain across the whole extent: one component over many tiles, so
+    # the root map needs several propagation rounds
+    xs = np.arange(0.5, 1000.0, 1.0)
+    pdf = pd.DataFrame({"pid": np.arange(len(xs)), "x": xs, "y": 40.0, "z": 0.0})
+    before = persisted_rdd_ids(spark)
+    with util.cache_scope():
+        got = cluster.euclidean_cluster(
+            spark.createDataFrame(pdf), SMALL_EXTENT, tolerance=1.5, min_points=2
+        ).toPandas()
+        assert len(persisted_rdd_ids(spark) - before) == 2
+    assert not persisted_rdd_ids(spark) - before
+    assert len(got) == len(xs) and (got.cluster_id == 0).all()
 
 
 @ROUTES

@@ -12,7 +12,6 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import persisted_rdd_ids
 
 SF = "/root/testdata/sf0.01"
 
@@ -85,17 +84,14 @@ CAPS_FORCED = {
 
 
 def _run_counting_jobs(spark, name, run):
-    """The query's rows and the number of Spark jobs it ran, from a fresh
-    cache."""
+    """The query's rows and the number of Spark jobs it ran."""
     sc = spark.sparkContext
-    spark.catalog.clearCache()
     group = f"caps_forced_{name}_{run}"
     sc.setJobGroup(group, group)
     try:
         pdf = entrymod.queries()[name](spark, SF).toPandas()
     finally:
         sc.setJobGroup(None, None)
-        spark.catalog.clearCache()
     return pdf, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -121,16 +117,6 @@ def test_query_matches_oracle_with_caps_forced(spark, oracle_con, monkeypatch, n
     ddf = oracle_con.sql(entrymod.oracle_sql()[name]).df()
     assert len(sdf) > 0
     _compare(sdf, ddf)
-
-
-def test_minhash_lsh_query_releases_its_shingle_cache(spark):
-    """The contract query collects its verified pairs and releases the
-    shingle frame jaccard_verify persisted: nothing stays cached."""
-    spark.catalog.clearCache()
-    before = persisted_rdd_ids(spark)
-    out = entrymod.queries()["minhash_lsh"](spark, SF).toPandas()
-    assert len(out) > 0
-    assert not persisted_rdd_ids(spark) - before
 
 
 def test_entry_smoke(spark):

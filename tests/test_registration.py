@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from codem_spark import util
 from codem_spark.config import EngineConfig
 from codem_spark.functions.geo import decompose_similarity, similarity_matrix
 from codem_spark.registration import pipeline as P
@@ -133,12 +134,11 @@ def test_coarse_recovers_inverse(spark, clouds, foundation_sources, foundation_k
         M = CASES[case]
         aoi_df = spark.createDataFrame(_perturb(aoi0, M))
     cfg = EngineConfig(min_resolution=RES)
-    prep = P.preprocess(
-        foundation_sources[foundation_kind](), aoi_df, extent=EXT, cfg=cfg, resolution=RES
-    )
-    c = P.coarse_registration(prep, cfg)
-    prep.fnd_dsm.unpersist()
-    prep.aoi_dsm.unpersist()
+    with util.cache_scope():
+        prep = P.preprocess(
+            foundation_sources[foundation_kind](), aoi_df, extent=EXT, cfg=cfg, resolution=RES
+        )
+        c = P.coarse_registration(prep, cfg)
     got = np.array(c.matrix)
     resid = got @ M  # ~ identity if recovered
     d = decompose_similarity(resid)
@@ -160,14 +160,13 @@ def test_coarse_lsh_route_recovers_inverse(spark, clouds, case, monkeypatch):
     fnd, aoi0 = clouds
     M = CASES[case]
     cfg = EngineConfig(min_resolution=RES)
-    prep = P.preprocess(
-        spark.createDataFrame(fnd), spark.createDataFrame(_perturb(aoi0, M)),
-        extent=EXT, cfg=cfg, resolution=RES,
-    )
     monkeypatch.setattr(coarse, "BF_MATCH_CAPACITY", 0)
-    c = P.coarse_registration(prep, cfg)
-    prep.fnd_dsm.unpersist()
-    prep.aoi_dsm.unpersist()
+    with util.cache_scope():
+        prep = P.preprocess(
+            spark.createDataFrame(fnd), spark.createDataFrame(_perturb(aoi0, M)),
+            extent=EXT, cfg=cfg, resolution=RES,
+        )
+        c = P.coarse_registration(prep, cfg)
     d = decompose_similarity(np.array(c.matrix) @ M)
     assert c.n_pairs >= 5
     assert c.rmse_3d < 2.5
@@ -176,6 +175,42 @@ def test_coarse_lsh_route_recovers_inverse(spark, clouds, case, monkeypatch):
         assert abs(d[a]) < 1.0, f"{a}={d[a]}"
     for t in ("trans_x", "trans_y", "trans_z"):
         assert abs(d[t]) < 2.0 * RES, f"{t}={d[t]}"
+
+
+@pytest.mark.parametrize("route", ["brute_force", "lsh"])
+def test_coarse_match_does_not_depend_on_keypoint_partitioning(spark, clouds, monkeypatch, route):
+    """The same keypoints in 1, 3 or 17 partitions give bit-identical
+    putative pairs (values and order) and coarse matrices, on both match
+    routes: the driver sorts each collected side, and the LSH route its
+    pairs, by value."""
+    from codem_spark.registration import coarse, features
+
+    if route == "lsh":
+        monkeypatch.setattr(coarse, "BF_MATCH_CAPACITY", 0)
+    fnd, aoi0 = clouds
+    cfg = EngineConfig(min_resolution=RES)
+    runs = []
+    with util.cache_scope():
+        prep = P.preprocess(
+            spark.createDataFrame(fnd),
+            spark.createDataFrame(_perturb(aoi0, CASES["rot90_translate"])),
+            extent=EXT, cfg=cfg, resolution=RES,
+        )
+        kps = [
+            util.persist(features.extract_features(dsm, prep.extent, prep.resolution))
+            for dsm in (prep.fnd_dsm, prep.aoi_dsm)
+        ]
+        for n in (1, 3, 17):
+            capture: dict = {}
+            c = coarse.coarse_registration(
+                kps[0].repartition(n), kps[1].repartition(n), cfg, capture=capture
+            )
+            runs.append((capture["pairs"], c.matrix))
+    pairs0, matrix0 = runs[0]
+    assert len(pairs0) >= 5
+    for pairs, matrix in runs[1:]:
+        pd.testing.assert_frame_equal(pairs, pairs0, check_exact=True)
+        assert matrix == matrix0
 
 
 def test_fine_refines_to_subresolution(spark, clouds):
@@ -187,13 +222,13 @@ def test_fine_refines_to_subresolution(spark, clouds):
     M = CASES["rot90_translate"]
     aoi = _perturb(aoi0, M)
     cfg = EngineConfig(min_resolution=RES, icp_max_iter=15, icp_full_density=True)
-    prep = P.preprocess(
-        spark.createDataFrame(fnd), spark.createDataFrame(aoi), extent=EXT, cfg=cfg, resolution=RES
-    )
-    c = P.coarse_registration(prep, cfg)
-    f = P.fine_registration_stage(prep, c, cfg)
-    prep.fnd_dsm.unpersist()
-    prep.aoi_dsm.unpersist()
+    with util.cache_scope():
+        prep = P.preprocess(
+            spark.createDataFrame(fnd), spark.createDataFrame(aoi), extent=EXT, cfg=cfg,
+            resolution=RES,
+        )
+        c = P.coarse_registration(prep, cfg)
+        f = P.fine_registration_stage(prep, c, cfg)
     # AOI points are exact foundation subsets: ICP must snap near-exactly
     assert f.rmse_3d < 0.1
     resid = np.array(f.matrix) @ M
@@ -218,13 +253,13 @@ def test_fine_dsm_path_recovers_transform(spark, clouds):
     aoi = _perturb(aoi0, M)
     cfg = EngineConfig(min_resolution=RES, icp_max_iter=15)
     assert not cfg.icp_full_density  # DSM path IS the default
-    prep = P.preprocess(
-        spark.createDataFrame(fnd), spark.createDataFrame(aoi), extent=EXT, cfg=cfg, resolution=RES
-    )
-    c = P.coarse_registration(prep, cfg)
-    f = P.fine_registration_stage(prep, c, cfg)
-    prep.fnd_dsm.unpersist()
-    prep.aoi_dsm.unpersist()
+    with util.cache_scope():
+        prep = P.preprocess(
+            spark.createDataFrame(fnd), spark.createDataFrame(aoi), extent=EXT, cfg=cfg,
+            resolution=RES,
+        )
+        c = P.coarse_registration(prep, cfg)
+        f = P.fine_registration_stage(prep, c, cfg)
     resid = np.array(f.matrix) @ M
     d = decompose_similarity(resid)
     assert abs(d["scale"] - 1.0) < 0.01
@@ -298,28 +333,23 @@ def test_area_point_transforms_differ_by_half_pixel(spark, clouds):
     shift = np.eye(4)
     shift[:3, 3] = (12.0, -8.0, 1.0)
     aoi = _perturb(aoi0, shift)
-    raster = grid.grid_max(
-        spark.createDataFrame(aoi), EXT, RES
-    ).persist()
-    cfg = EngineConfig(min_resolution=RES, icp_max_iter=10)
     results = {}
-    for tag in ("Area", "Point"):
-        pts = grid.dsm_to_points(raster, EXT, RES, tag).withColumn(
-            "pid", F.xxhash64("x", "y", "z")
-        )
-        # full density: the half-pixel tagging distinction lives in the raw
-        # point coordinates; the DSM-path fine stage re-rasterizes (both
-        # taggings bin to the identical DSM) and would erase it by design
-        cfg = EngineConfig(min_resolution=RES, icp_max_iter=10, icp_full_density=True)
-        prep = P.preprocess(
-            spark.createDataFrame(fnd), pts, extent=EXT, cfg=cfg, resolution=RES
-        )
-        c = P.coarse_registration(prep, cfg)
-        f = P.fine_registration_stage(prep, c, cfg)
-        prep.fnd_dsm.unpersist()
-        prep.aoi_dsm.unpersist()
-        results[tag] = (np.array(c.matrix), np.array(f.matrix))
-    raster.unpersist()
+    with util.cache_scope():
+        raster = util.persist(grid.grid_max(spark.createDataFrame(aoi), EXT, RES))
+        for tag in ("Area", "Point"):
+            pts = grid.dsm_to_points(raster, EXT, RES, tag).withColumn(
+                "pid", F.xxhash64("x", "y", "z")
+            )
+            # full density: the half-pixel tagging distinction lives in the raw
+            # point coordinates; the DSM-path fine stage re-rasterizes (both
+            # taggings bin to the identical DSM) and would erase it by design
+            cfg = EngineConfig(min_resolution=RES, icp_max_iter=10, icp_full_density=True)
+            prep = P.preprocess(
+                spark.createDataFrame(fnd), pts, extent=EXT, cfg=cfg, resolution=RES
+            )
+            c = P.coarse_registration(prep, cfg)
+            f = P.fine_registration_stage(prep, c, cfg)
+            results[tag] = (np.array(c.matrix), np.array(f.matrix))
     half = 0.5 * RES
     # Engine-adapted contract: both taggings rasterize to the IDENTICAL DSM
     # (grid_max re-bins the points onto the same cells), so the coarse
@@ -352,11 +382,9 @@ def test_bandpass_keeps_keypoints_under_big_relief(spark):
     counts = {}
     for name, z in (("flat", flat), ("relief", relief)):
         pts = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": z}))
-        release: list = []
-        dsm = P._prep_dsm(pts, EXT, RES, cfg, release)
-        counts[name] = features.extract_features(dsm, EXT, RES).count()
-        for df in (dsm, *release):
-            df.unpersist()
+        with util.cache_scope():
+            dsm = P._prep_dsm(pts, EXT, RES, cfg)
+            counts[name] = features.extract_features(dsm, EXT, RES).count()
     assert counts["relief"] >= 0.5 * counts["flat"], counts
     assert counts["relief"] > 200, counts
 
@@ -392,48 +420,10 @@ def test_extract_features_pinned_on_multi_tile_dsm(spark):
     assert frame_digest(kp, list(kp.columns), ["gx", "gy"]) == "2ab8483808aa8745"
 
 
-def test_failed_keypoint_count_releases_upstream_dsm_caches(spark, monkeypatch):
-    """The preprocess intermediates (raw + band-passed DSM caches of both
-    sides) are released by coarse_registration even when the matcher's
-    first use of the keypoint frames (its bounded collect) raises."""
-    from codem_spark.registration import features
-
-    rng = np.random.default_rng(5)
-    n = 5_000
-    x = rng.uniform(0, 200, n)
-    y = rng.uniform(0, 200, n)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"pid": np.arange(n), "x": x, "y": y, "z": _surface(x, y)})
-    )
-    before = persisted_rdd_ids(spark)
-    prep = P.preprocess(pts, pts, (0.0, 0.0, 200.0, 200.0), resolution=RES)
-    upstream = persisted_rdd_ids(spark) - before
-    assert upstream  # preprocess materialized its upstream DSM caches
-
-    class _FailingKeypoints:
-        def persist(self):
-            return self
-
-        def select(self, *cols):
-            raise RuntimeError("keypoint collect failed")
-
-        def unpersist(self, blocking=False):
-            return self
-
-    monkeypatch.setattr(features, "extract_features", lambda *a, **k: _FailingKeypoints())
-    try:
-        with pytest.raises(RuntimeError, match="keypoint collect failed"):
-            P.coarse_registration(prep)
-        assert not upstream & persisted_rdd_ids(spark)
-    finally:
-        prep.release_upstream()
-        prep.fnd_dsm.unpersist()
-        prep.aoi_dsm.unpersist()
-
-
 def test_failed_fine_stage_releases_dsm_caches(spark, clouds, monkeypatch):
-    """register releases the DSM caches preprocess made when a stage after
-    coarse registration raises: no new persisted RDD is left behind."""
+    """register releases every DSM cache preprocess made (the raw,
+    band-passed and final DSMs of both sides) when a stage after coarse
+    registration raises: no new persisted RDD is left behind."""
     fnd, aoi = clouds
 
     def failing_fine(*_a, **_k):
@@ -583,14 +573,11 @@ def test_icp_pass_matches_brute_force(spark):
     ref_drift = np.hypot(*(p[:, :2] - (mxyz @ tile_pose[:3, :3].T + tile_pose[:3, 3])[:, :2]).T).max()
 
     ext, level = (0.0, 0.0, 100.0, 100.0), 3
-    fixed_tiled = icp._tile_fixed(spark.createDataFrame(fixed), ext, 2 * radius, level)
-    moving_tiled = icp._tile_moving(spark.createDataFrame(moving), tile_pose, ext, level)
-    try:
+    with util.cache_scope():
+        fixed_tiled = icp._tile_fixed(spark.createDataFrame(fixed), ext, 2 * radius, level)
+        moving_tiled = icp._tile_moving(spark.createDataFrame(moving), tile_pose, ext, level)
         kern = icp._pass_kernel_builder(pose, tile_pose, radius, True, 1.2, 2.5, True)
         got, drift = icp._sum_tiles(icp._pass_frame(moving_tiled, fixed_tiled, kern).collect())
-    finally:
-        fixed_tiled.unpersist()
-        moving_tiled.unpersist()
     assert ref_drift < radius  # inside the margin the halo was widened by
     n_at = icp._ACC_COLS.index("n")
     assert int(got[n_at]) == len(li)

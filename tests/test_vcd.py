@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from codem_spark import vcd
+from codem_spark import util, vcd
 from codem_spark.operators import hull
 from tests.conftest import persisted_rdd_ids
 
@@ -36,8 +36,10 @@ def before_after(spark):
 def test_vcd_detects_planted_changes(spark, before_after):
     before, after, n_new, n_fled = before_after
     cfg = vcd.VcdConfig(ground_height=1.0, tolerance=15.0, min_points=10, resolution=20.0, knn_radius=30.0)
-    clustered, summaries, prods = vcd.run_vcd(before, after, EXT, cfg)
-    s = summaries.toPandas()
+    with util.cache_scope():
+        _clustered, summaries, prods = vcd.run_vcd(before, after, EXT, cfg)
+        s = summaries.toPandas()
+        n_raised, n_lowered = prods["raised"].count(), prods["lowered"].count()
     # a sparse blob may legitimately split into >1 cluster at the chosen
     # tolerance — aggregate by status (New = raised, Fled = lowered)
     by_status = s.groupby("status").agg(n=("n_points", "sum"), dz=("mean_dz", "mean"))
@@ -50,13 +52,13 @@ def test_vcd_detects_planted_changes(spark, before_after):
     # footprint: union of hull footprints ~ the 40x40 planted box
     assert 800 < s[s.status == "New"].footprint_area.sum() < 2000
     # product rasters cover the change cells
-    assert prods["raised"].count() > 0 and prods["lowered"].count() > 0
-    clustered.unpersist()
+    assert n_raised > 0 and n_lowered > 0
 
 
-def test_run_vcd_returned_frame_holds_its_cache(spark):
-    """Unpersisting the clustered frame run_vcd returns releases the cache
-    run_vcd made for it."""
+def test_run_vcd_caches_live_until_the_callers_scope_ends(spark):
+    """The clustered frame run_vcd returns is cached, and every cache and
+    checkpoint run_vcd made (the kNN rounds, the cluster kernel, the
+    colored frame) is released when the caller's scope ends."""
     rng = np.random.default_rng(3)
     n = 5_000
     x = rng.uniform(0, 200, n)
@@ -66,10 +68,11 @@ def test_run_vcd_returned_frame_holds_its_cache(spark):
     after = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n) + n, "x": x, "y": y, "z": z}))
     start = persisted_rdd_ids(spark)
     cfg = vcd.VcdConfig(tolerance=10.0, min_points=5, resolution=20.0, knn_radius=30.0)
-    clustered, _summaries, _prods = vcd.run_vcd(before, after, (0.0, 0.0, 200.0, 200.0), cfg)
-    held = persisted_rdd_ids(spark) - start
-    clustered.unpersist()
-    assert len(held - persisted_rdd_ids(spark)) == 1
+    with util.cache_scope():
+        clustered, _summaries, _prods = vcd.run_vcd(before, after, (0.0, 0.0, 200.0, 200.0), cfg)
+        assert clustered.is_cached
+        assert persisted_rdd_ids(spark) - start
+    assert not persisted_rdd_ids(spark) - start
 
 
 def test_convex_hull_matches_known():
@@ -264,9 +267,8 @@ def test_class_labels_filter_before_clustering(spark, before_after):
         ground_height=1.0, tolerance=15.0, min_points=10, resolution=20.0,
         knn_radius=30.0, class_labels=(2, 6), trust_labels=True,
     )
-    clustered, summaries, _prods = vcd.run_vcd(before, after_cls, EXT, cfg)
-    s = summaries.toPandas()
+    with util.cache_scope():
+        s = vcd.run_vcd(before, after_cls, EXT, cfg)[1].toPandas()
     # the x<500 'New' building (class 6) survives; the x>=500 'Fled' one
     # (class 1) is filtered out before clustering
     assert set(s.status) == {"New"}
-    clustered.unpersist()
