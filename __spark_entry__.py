@@ -546,14 +546,11 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame([vals], columns=["has_pairs", "n_missing", "n_false"]))
 
 
-def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN LSH top-k with PLANTED ground truth: 50 query vectors are tiny
-    deterministic perturbations (per-component scale in [0.992, 1.008],
-    cosine ~0.99997) of data vectors; multi-table hyperplane LSH finds a
-    near-identical vector with miss probability ~(theta/pi*6)^8 ~ 1e-12,
-    and the exact re-rank must put the source at rank 1. Oracle: (50, 50)."""
-    from codem_spark.operators import similarity
-
+def _embeddings_with_planted(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The embeddings table as double arrays, and 50 planted copies of its
+    first 50 vectors (ids +10000): each component scaled by a deterministic
+    factor in [0.992, 1.008], so each copy has cosine ~0.99997 to its
+    source."""
     emb = _read(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -569,6 +566,18 @@ def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("embedding"),
     )
+    return emb, planted
+
+
+def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN LSH top-k with PLANTED ground truth: 50 query vectors are tiny
+    deterministic perturbations (per-component scale in [0.992, 1.008],
+    cosine ~0.99997) of data vectors; multi-table hyperplane LSH finds a
+    near-identical vector with miss probability ~(theta/pi*6)^8 ~ 1e-12,
+    and the exact re-rank must put the source at rank 1. Oracle: (50, 50)."""
+    from codem_spark.operators import similarity
+
+    emb, planted = _embeddings_with_planted(spark, sf_dir)
     top1 = similarity.cosine_topk_lsh(
         planted, emb, dim=64, k=1, n_planes=6, n_tables=8
     )
@@ -739,38 +748,14 @@ def _q_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from codem_spark import util
+    from codem_spark import synth, util
     from codem_spark.config import EngineConfig
-    from codem_spark.functions.geo import similarity_matrix
     from codem_spark.registration import pipeline as P
 
-    rng = np.random.default_rng(11)
-    n = 60_000
+    fnd_pd, aoi_pd, M = synth.registration_scene(60_000, 1000.0, 11)
     ext = (0.0, 0.0, 1000.0, 1000.0)
-    fx = rng.uniform(0, 1000, n)
-    fy = rng.uniform(0, 1000, n)
-    gx = np.floor(fx / 80).astype(np.int64)
-    gy = np.floor(fy / 80).astype(np.int64)
-    inside = ((fx - gx * 80) > 25) & ((fx - gx * 80) < 55) & ((fy - gy * 80) > 25) & ((fy - gy * 80) < 55)
-    h = ((gx * 73856093 + gy * 19349663) % 97) / 97.0 * 18 + 4
-    fz = (
-        10 * np.sin(fx * 2 * np.pi / 700 + 0.3) * np.cos(fy * 2 * np.pi / 900 - 1.7)
-        + np.where(inside, h, 0.0)
-        + 50.0
-    )
-    m = (fx > 200) & (fx < 800) & (fy > 200) & (fy < 800)
-    t = np.eye(4)
-    t[:3, 3] = (500.0, 500.0, 0.0)
-    ti = np.eye(4)
-    ti[:3, 3] = (-500.0, -500.0, 0.0)
-    shift = np.eye(4)
-    shift[:3, 3] = (40.0, 25.0, 2.0)
-    M = shift @ t @ similarity_matrix(1.0, 0, 0, 90.0) @ ti
-    A = np.column_stack([fx[m], fy[m], fz[m], np.ones(m.sum())]) @ M.T
-    fnd = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n), "x": fx, "y": fy, "z": fz}))
-    aoi = spark.createDataFrame(
-        pd.DataFrame({"pid": np.arange(int(m.sum())), "x": A[:, 0], "y": A[:, 1], "z": A[:, 2]})
-    )
+    fnd = spark.createDataFrame(fnd_pd)
+    aoi = spark.createDataFrame(aoi_pd)
     cfg = EngineConfig(min_resolution=4.0)
     with util.cache_scope():
         prep = P.preprocess(fnd, aoi, extent=ext, cfg=cfg, resolution=4.0)
@@ -953,21 +938,7 @@ def _q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — a closed-form oracle."""
     from codem_spark.operators import similarity
 
-    emb = _read(spark, f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = emb.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda v, i: v
-            * (
-                F.lit(0.992)
-                + F.pmod(F.col("vec_id") * 13 + i * 7, F.lit(5)).cast("double")
-                * F.lit(0.004)
-            ),
-        ).alias("embedding"),
-    )
+    emb, planted = _embeddings_with_planted(spark, sf_dir)
     both = emb.unionByName(planted)
     kept = similarity.embedding_cosine_dedup(both, dim=64, threshold=0.99)
     return kept.select("vec_id")

@@ -58,47 +58,14 @@ def _bench_registration_1m(spark):
     contract scenes (60k/20k pts) pin correctness; this leg evidences the
     100x story. Single pass (it is long); stage spread shows up in the
     suite passes instead."""
-    import numpy as np
-    import pandas as pd
-
-    from codem_spark import util
+    from codem_spark import synth, util
     from codem_spark.config import EngineConfig
-    from codem_spark.functions.geo import similarity_matrix
     from codem_spark.registration import pipeline as P
 
-    rng = np.random.default_rng(17)
-    n = 1_200_000
+    fnd_pd, aoi_pd, _ = synth.registration_scene(1_200_000, 2000.0, 17)
     ext = (0.0, 0.0, 2000.0, 2000.0)
-    fx = rng.uniform(0, 2000, n)
-    fy = rng.uniform(0, 2000, n)
-    gx = np.floor(fx / 80).astype(np.int64)
-    gy = np.floor(fy / 80).astype(np.int64)
-    inside = ((fx - gx * 80) > 25) & ((fx - gx * 80) < 55) & (
-        (fy - gy * 80) > 25
-    ) & ((fy - gy * 80) < 55)
-    h = ((gx * 73856093 + gy * 19349663) % 97) / 97.0 * 18 + 4
-    fz = (
-        10 * np.sin(fx * 2 * np.pi / 1400 + 0.3) * np.cos(fy * 2 * np.pi / 1800 - 1.7)
-        + np.where(inside, h, 0.0)
-        + 50.0
-    )
-    m = (fx > 400) & (fx < 1600) & (fy > 400) & (fy < 1600)
-    t = np.eye(4)
-    t[:3, 3] = (1000.0, 1000.0, 0.0)
-    ti = np.eye(4)
-    ti[:3, 3] = (-1000.0, -1000.0, 0.0)
-    shift = np.eye(4)
-    shift[:3, 3] = (40.0, 25.0, 2.0)
-    M = shift @ t @ similarity_matrix(1.0, 0, 0, 90.0) @ ti
-    A = np.column_stack([fx[m], fy[m], fz[m], np.ones(m.sum())]) @ M.T
-    fnd = spark.createDataFrame(
-        pd.DataFrame({"pid": np.arange(n), "x": fx, "y": fy, "z": fz})
-    )
-    aoi = spark.createDataFrame(
-        pd.DataFrame(
-            {"pid": np.arange(int(m.sum())), "x": A[:, 0], "y": A[:, 1], "z": A[:, 2]}
-        )
-    )
+    fnd = spark.createDataFrame(fnd_pd)
+    aoi = spark.createDataFrame(aoi_pd)
     cfg = EngineConfig(min_resolution=4.0)
     stages: dict[str, float] = {}
     with util.cache_scope():
@@ -112,7 +79,7 @@ def _bench_registration_1m(spark):
         f = P.fine_registration_stage(prep, c, cfg)
         stages["fine_icp"] = round(time.time() - t0, 3)
     total = sum(stages.values())
-    n_total = n + int(m.sum())
+    n_total = len(fnd_pd) + len(aoi_pd)
     return {
         "n_points": n_total,
         "stages": stages,

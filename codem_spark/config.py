@@ -20,13 +20,17 @@ from typing import Any
 
 @dataclass
 class EngineConfig:
+    """Each field is also a flag of ``codem-spark register`` (main.py):
+    ``--`` plus the field name with ``-`` for ``_``, with the field's default
+    and a parser that follows from it. ``metadata`` holds the flag's
+    ``help`` text and any ``aliases``."""
+
     # --- pipeline resolution (reference: main.py:108-114) ---
     min_resolution: float = 1.0
     # --- coarse (DSM) registration (reference: main.py:115-139) ---
-    # DSM_AKAZE_THRESHOLD: validated and written to config.json for CLI
-    # contract parity, but nothing reads it — the Harris keypoint detector
-    # thresholds on features.HARRIS_REL_THRESHOLD instead.
-    dsm_akaze_threshold: float = 0.0001
+    dsm_akaze_threshold: float = field(default=0.0001, metadata={"help": (
+        "accepted and recorded in config.json for reference CLI parity; "
+        "unused (the Harris detector has its own fixed threshold)")})
     dsm_lowes_ratio: float = 0.9
     dsm_ransac_max_iter: int = 10000
     dsm_ransac_threshold: float = 10.0
@@ -48,7 +52,9 @@ class EngineConfig:
     # default here matches the reference; full density is an engine extra
     # for callers who want sub-resolution refinement on exact point subsets.
     icp_full_density: bool = False
-    icp_save_residuals: bool = False
+    icp_save_residuals: bool = field(default=False, metadata={"help": (
+        "append per-point residual columns to the registered table "
+        "(reference --ICP_SAVE_RESIDUALS, main.py:318-323)")})
     # Clip both inputs to a bounded overlap window before registration
     # (reference TIGHT_SEARCH, main.py:366-373). The reference defaults this
     # OFF; the engine defaults it ON — at 10^12 rows the clip is the
@@ -56,7 +62,9 @@ class EngineConfig:
     # overlapping scenes it is a no-op for correctness (deliberate
     # divergence, documented in COVERAGE.md).
     tight_search: bool = True
-    # --- output quantization (reference: main.py:150-163) ---
+    # --- output quantization (reference --OFFSET_*/--SCALE_*,
+    # main.py:150-163): any non-auto value adds a LAS-style int32 copy of
+    # the registered table (io/tables.quantized_point_write) ---
     offset_x: str | int = "auto"
     offset_y: str | int = "auto"
     offset_z: str | int = "auto"

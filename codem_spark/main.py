@@ -17,14 +17,17 @@ completed stage.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
+import typing
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from codem_spark import util
+from codem_spark.config import EngineConfig
 
 
 def _bool_arg(s: str) -> bool:
@@ -35,6 +38,36 @@ def _csv_ints(s: str) -> tuple[int, ...]:
     return tuple(int(v) for v in s.split(",") if v.strip() != "")
 
 
+def _auto_or(num: type):
+    return lambda s: s if s == "auto" else num(s)
+
+
+def _add_config_args(p: argparse.ArgumentParser, cls: type) -> None:
+    """One flag per field of the config dataclass ``cls``: ``--`` plus the
+    field name with ``-`` for ``_``, the field's default, and a parser that
+    follows from that default."""
+    hints = typing.get_type_hints(cls)
+    for f in dataclasses.fields(cls):
+        d = f.default
+        if isinstance(d, bool):
+            kw = {"type": _bool_arg} if d else {"action": "store_true"}
+        elif isinstance(d, tuple):
+            kw = {"type": _csv_ints}
+        elif d == "auto":
+            kw = {"type": _auto_or(next(t for t in typing.get_args(hints[f.name])
+                                        if t is not str))}
+        elif d is None:
+            kw = {"type": float}
+        else:
+            kw = {"type": type(d)}
+        p.add_argument("--" + f.name.replace("_", "-"), *f.metadata.get("aliases", ()),
+                       dest=f.name, default=d, help=f.metadata.get("help"), **kw)
+
+
+def _config_from_args(cls: type, args: argparse.Namespace):
+    return cls(**{f.name: getattr(args, f.name) for f in dataclasses.fields(cls)})
+
+
 def _add_register_args(p: argparse.ArgumentParser) -> None:
     """The reference `codem` argparse contract (src/codem/main.py:182-396),
     minus presentation-only options (--log-type, --websocket-url, progress
@@ -42,72 +75,22 @@ def _add_register_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("foundation_file")
     p.add_argument("aoi_file")
     p.add_argument("--output-dir", required=True)
-    p.add_argument("--min-resolution", type=float, default=1.0)
     p.add_argument("--resolution", type=float, default=None,
                    help="pipeline resolution override (meters); default: estimated")
     p.add_argument("--fnd-units", default="m")
     p.add_argument("--aoi-units", default="m")
-    p.add_argument("--dsm-akaze-threshold", type=float, default=0.0001,
-                   help="accepted and recorded in config.json for reference CLI parity; "
-                        "unused (the Harris detector has its own fixed threshold)")
-    p.add_argument("--dsm-lowes-ratio", type=float, default=0.9)
-    p.add_argument("--dsm-ransac-max-iter", type=int, default=10000)
-    p.add_argument("--dsm-ransac-threshold", type=float, default=10.0)
-    p.add_argument("--dsm-strong-filter", type=float, default=10.0)
-    p.add_argument("--dsm-weak-filter", type=float, default=1.0)
-    p.add_argument("--dsm-solve-scale", type=_bool_arg, default=True)
-    p.add_argument("--icp-angle-threshold", type=float, default=0.001)
-    p.add_argument("--icp-distance-threshold", type=float, default=0.001)
-    p.add_argument("--icp-max-iter", type=int, default=100)
-    p.add_argument("--icp-rmse-threshold", type=float, default=0.0001)
-    p.add_argument("--icp-robust", type=_bool_arg, default=True)
-    p.add_argument("--icp-solve-scale", type=_bool_arg, default=True)
-    p.add_argument("--icp-save-residuals", action="store_true",
-                   help="append per-point residual columns to the registered table "
-                        "(reference --ICP_SAVE_RESIDUALS, main.py:318-323)")
-    # LAS-style output quantization (reference --OFFSET_*/--SCALE_*,
-    # main.py:150-163): any non-auto value adds a quantized int32 copy of
-    # the registered table (io/tables.quantized_point_write)
-    for ax in ("x", "y", "z"):
-        p.add_argument(f"--offset-{ax}", default="auto",
-                       type=lambda s: s if s == "auto" else int(s))
-        p.add_argument(f"--scale-{ax}", default="auto",
-                       type=lambda s: s if s == "auto" else float(s))
-    # reference --TIGHT_SEARCH defaults OFF (main.py:366-373); the engine
-    # defaults ON (partition pruning at scale — documented divergence)
-    p.add_argument("--tight-search", type=_bool_arg, default=True)
-    # engine extra: opt out of the reference's _dsm2pc early downsample and
-    # run fine ICP on the raw full-density clouds
-    p.add_argument("--icp-full-density", action="store_true")
+    _add_config_args(p, EngineConfig)
 
 
 def _add_vcd_args(p: argparse.ArgumentParser) -> None:
     """The reference `vcd` argparse contract (src/vcd/main.py:75-160), minus
     presentation-only options."""
+    from codem_spark.vcd import VcdConfig
+
     p.add_argument("before_file")
     p.add_argument("after_file")
     p.add_argument("--output-dir", required=True)
-    p.add_argument("--ground-height", type=float, default=1.0)
-    p.add_argument("--tolerance", "--cluster-tolerance", dest="tolerance",
-                   type=float, default=2.0)
-    p.add_argument("--min-points", type=int, default=30)
-    p.add_argument("--resolution", type=float, default=1.0)
-    p.add_argument("--knn-radius", type=float, default=50.0)
-    p.add_argument("--cull-cluster-ids", type=_csv_ints, default=(-1,),
-                   help="comma-separated cluster ids dropped from products/meshes "
-                        "(reference default '-1,0'; engine labels reserve only -1)")
-    p.add_argument("--class-labels", type=_csv_ints, default=(2, 6),
-                   help="classification labels kept before clustering "
-                        "(applies only when the input has a classification column)")
-    p.add_argument("--trust-labels", action="store_true",
-                   help="trust existing classifications: skip the noise/water drops")
-    p.add_argument("--compute-hag", action="store_true",
-                   help="dZ = TIN height-above-ground (before=ground) instead of "
-                        "nearest-3D-point dZ")
-    p.add_argument("--colormap", default="bwr",
-                   help="recorded in config; the engine ships its built-in "
-                        "diverging blue-white-red ramp")
-    p.add_argument("--spacing-override", type=float, default=None)
+    _add_config_args(p, VcdConfig)
 
 
 def _read_points(spark: SparkSession, path: str):
@@ -130,31 +113,10 @@ def _read_points(spark: SparkSession, path: str):
 
 
 def cmd_register(spark: SparkSession, args: argparse.Namespace) -> dict:
-    from codem_spark.config import EngineConfig
     from codem_spark.io import lineage
     from codem_spark.registration import pipeline as P
 
-    cfg = EngineConfig(
-        min_resolution=args.min_resolution,
-        dsm_akaze_threshold=args.dsm_akaze_threshold,
-        dsm_lowes_ratio=args.dsm_lowes_ratio,
-        dsm_ransac_max_iter=args.dsm_ransac_max_iter,
-        dsm_ransac_threshold=args.dsm_ransac_threshold,
-        dsm_strong_filter=args.dsm_strong_filter,
-        dsm_weak_filter=args.dsm_weak_filter,
-        dsm_solve_scale=args.dsm_solve_scale,
-        icp_angle_threshold=args.icp_angle_threshold,
-        icp_distance_threshold=args.icp_distance_threshold,
-        icp_max_iter=args.icp_max_iter,
-        icp_rmse_threshold=args.icp_rmse_threshold,
-        icp_robust=args.icp_robust,
-        icp_solve_scale=args.icp_solve_scale,
-        icp_save_residuals=args.icp_save_residuals,
-        icp_full_density=args.icp_full_density,
-        tight_search=args.tight_search,
-        offset_x=args.offset_x, offset_y=args.offset_y, offset_z=args.offset_z,
-        scale_x=args.scale_x, scale_y=args.scale_y, scale_z=args.scale_z,
-    )
+    cfg = _config_from_args(EngineConfig, args)
     os.makedirs(args.output_dir, exist_ok=True)
     cfg.dump(os.path.join(args.output_dir, "config.json"))
     # resume: a completed run (record + registered table with matching
@@ -228,15 +190,7 @@ def cmd_vcd(spark: SparkSession, args: argparse.Namespace) -> dict:
     from codem_spark.io import lineage
     from codem_spark.operators import grid
 
-    cfg = vcd.VcdConfig(
-        ground_height=args.ground_height, tolerance=args.tolerance,
-        min_points=args.min_points, resolution=args.resolution,
-        knn_radius=args.knn_radius,
-        trust_labels=args.trust_labels, compute_hag=args.compute_hag,
-        class_labels=tuple(args.class_labels),
-        cull_cluster_ids=tuple(args.cull_cluster_ids),
-        colormap=args.colormap, spacing_override=args.spacing_override,
-    )
+    cfg = _config_from_args(vcd.VcdConfig, args)
     os.makedirs(args.output_dir, exist_ok=True)
     with open(os.path.join(args.output_dir, "config.json"), "w") as fh:
         json.dump({**cfg.__dict__, "before": args.before_file, "after": args.after_file},

@@ -72,7 +72,7 @@ def _collect_capped(kp: DataFrame, cap: int) -> pd.DataFrame:
 def match_features(
     fnd_kp: DataFrame,
     aoi_kp: DataFrame,
-    lowes_ratio: float = 0.9,
+    lowes_ratio: float,
 ) -> pd.DataFrame:
     """k=2 Hamming kNN of AOI descriptors against foundation descriptors +
     Lowe ratio filter (reference dsm.py:185-197). Returns the putative-match
@@ -128,7 +128,7 @@ def _match_bf(fnd: pd.DataFrame, aoi: pd.DataFrame, lowes_ratio: float) -> pd.Da
 def _match_features_lsh(
     fnd_kp: DataFrame,
     aoi_kp: DataFrame,
-    lowes_ratio: float = 0.9,
+    lowes_ratio: float,
 ) -> pd.DataFrame:
     """LSH fallback for huge descriptor sets: candidate pairs collide on any
     16-bit band of any of the 4 descriptor lanes (catching near-Hamming
@@ -187,7 +187,7 @@ def _match_features_lsh(
     return pdf.sort_values(_PAIR_COLS, kind="stable").reset_index(drop=True)
 
 
-def umeyama(src: np.ndarray, dst: np.ndarray, solve_scale: bool = True) -> np.ndarray:
+def umeyama(src: np.ndarray, dst: np.ndarray, solve_scale: bool) -> np.ndarray:
     """Closed-form least-squares similarity transform src -> dst
     (Umeyama 1991, Eq. 38-43 — same formulation the reference implements at
     dsm.py:523-592). Returns a 4x4 homogeneous matrix."""
@@ -285,9 +285,9 @@ def _ransac_consensus_batch(
 
 def ransac_similarity(
     pairs: pd.DataFrame,
-    threshold: float = 10.0,
-    max_iter: int = 10000,
-    solve_scale: bool = True,
+    threshold: float,
+    max_iter: int,
+    solve_scale: bool,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Max-consensus similarity fit over putative pairs (reference
     dsm.py:232-257; residual threshold 10 m, <=10^4 trials, 3-point

@@ -1,6 +1,6 @@
 """Deterministic synthetic inputs (M0 of SURVEY.md §7).
 
-Two families:
+Three families:
 
 * ``pages(spark, n)`` — the input_hint table ``(url, warc_ts, html, text,
   lang)``; html is the invertible wrap of text (functions/text.py), so the
@@ -11,14 +11,19 @@ Two families:
   the LAS-style attribute columns the reference filters on
   (classification / return_number / intensity — FIXTURES.md §2,
   reference src/vcd/preprocessing/preprocess.py:163-166).
+* ``registration_scene(n, side, seed)`` — the seeded numpy scene with a
+  planted transform that the registration demos register.
 
-Everything is seedless-deterministic (pure functions of row id / url) so
-any executor count produces identical tables — required for run-to-run
-parity and for resume-from-checkpoint correctness.
+Apart from that scene, everything is seedless-deterministic (pure
+functions of row id / url) so any executor count produces identical
+tables — required for run-to-run parity and for resume-from-checkpoint
+correctness.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -136,3 +141,43 @@ def points_from_lineitem(df: DataFrame) -> DataFrame:
     out = out.withColumn("y", F.lit(y0) + geo.id_lane_col(F.col("pid"), 1) * F.lit(y1 - y0))
     return out.withColumn("z", geo.surface_z_col(F.col("x"), F.col("y")))
 
+
+def registration_scene(
+    n: int, side: float, seed: int
+) -> tuple[pd.DataFrame, pd.DataFrame, np.ndarray]:
+    """A registration scene with a planted transform: ``n`` foundation
+    points on a ``side`` x ``side`` square (terrain with wavelengths
+    0.7·side and 0.9·side plus an 80 m grid of buildings), the inner 60% as
+    the AOI, moved by a 90° turn about the centre and a (40, 25, 2) m shift.
+    Returns the foundation and AOI point tables (pid, x, y, z) and the
+    planted 4x4 matrix ``M`` (AOI = M @ foundation)."""
+    rng = np.random.default_rng(seed)
+    fx = rng.uniform(0, side, n)
+    fy = rng.uniform(0, side, n)
+    gx = np.floor(fx / 80).astype(np.int64)
+    gy = np.floor(fy / 80).astype(np.int64)
+    inside = ((fx - gx * 80) > 25) & ((fx - gx * 80) < 55) & (
+        (fy - gy * 80) > 25
+    ) & ((fy - gy * 80) < 55)
+    h = ((gx * 73856093 + gy * 19349663) % 97) / 97.0 * 18 + 4
+    fz = (
+        10 * np.sin(fx * 2 * np.pi / (0.7 * side) + 0.3)
+        * np.cos(fy * 2 * np.pi / (0.9 * side) - 1.7)
+        + np.where(inside, h, 0.0)
+        + 50.0
+    )
+    m = (fx > 0.2 * side) & (fx < 0.8 * side) & (fy > 0.2 * side) & (fy < 0.8 * side)
+    c = side / 2
+    t = np.eye(4)
+    t[:3, 3] = (c, c, 0.0)
+    ti = np.eye(4)
+    ti[:3, 3] = (-c, -c, 0.0)
+    shift = np.eye(4)
+    shift[:3, 3] = (40.0, 25.0, 2.0)
+    M = shift @ t @ geo.similarity_matrix(1.0, 0, 0, 90.0) @ ti
+    A = np.column_stack([fx[m], fy[m], fz[m], np.ones(m.sum())]) @ M.T
+    fnd = pd.DataFrame({"pid": np.arange(n), "x": fx, "y": fy, "z": fz})
+    aoi = pd.DataFrame(
+        {"pid": np.arange(int(m.sum())), "x": A[:, 0], "y": A[:, 1], "z": A[:, 2]}
+    )
+    return fnd, aoi, M

@@ -17,7 +17,7 @@ tile+halo kernels.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,32 +31,38 @@ Extent = tuple[float, float, float, float]
 
 @dataclass
 class VcdConfig:
+    """Each field is also a flag of ``codem-spark vcd`` (main.py), built the
+    way :class:`~codem_spark.config.EngineConfig` documents."""
+
     ground_height: float = 1.0  # dZ threshold (reference ground_height, vcd/main.py:33)
-    tolerance: float = 2.0  # cluster tolerance (":35")
+    tolerance: float = field(  # cluster tolerance (":35")
+        default=2.0, metadata={"aliases": ("--cluster-tolerance",)})
     min_points: int = 30  # cluster cull (":34")
     resolution: float = 1.0  # product raster resolution (":32")
     knn_radius: float = 50.0  # dZ join search bound
     # reference VcdRunConfig extras (vcd/main.py:20-37):
-    # TRUST_LABELS: keep existing classifications — only the returns filter
-    # runs; otherwise the noise/water class drops apply (":162-174")
-    trust_labels: bool = False
-    # COMPUTE_HAG: dZ = TIN height-above-ground (before=ground) instead of
-    # nearest-3D-point dZ (":194-221")
-    compute_hag: bool = False
-    # CLASS_LABELS: classifications kept before clustering (":234-239").
-    # Reference default (2, 6) = ground + building after its SMRF re-label;
-    # the engine keeps input labels as-is, so the filter only applies when a
-    # classification column exists.
-    class_labels: tuple[int, ...] = (2, 6)
-    # CULL_CLUSTER_IDS: cluster ids dropped after clustering (":245-249").
-    # Reference default (-1, 0): PDAL reserves 0 for 'unclustered'. Engine
-    # labels are min-pids with -1 = below-min_points, so 0 can be a REAL
-    # cluster here — the engine default culls only -1.
-    cull_cluster_ids: tuple[int, ...] = (-1,)
-    # COLORMAP (":140-147"): the engine ships one built-in diverging
-    # blue-white-red ramp (grid.colormap_encode); the name is recorded in
-    # config output for parity.
-    colormap: str = "bwr"
+    # TRUST_LABELS (":162-174")
+    trust_labels: bool = field(default=False, metadata={
+        "help": "trust existing classifications: skip the noise/water drops"})
+    # COMPUTE_HAG (":194-221")
+    compute_hag: bool = field(default=False, metadata={"help": (
+        "dZ = TIN height-above-ground (before=ground) instead of "
+        "nearest-3D-point dZ")})
+    # CLASS_LABELS (":234-239"). Reference default (2, 6) = ground +
+    # building after its SMRF re-label; the engine keeps input labels as-is.
+    class_labels: tuple[int, ...] = field(default=(2, 6), metadata={"help": (
+        "classification labels kept before clustering "
+        "(applies only when the input has a classification column)")})
+    # CULL_CLUSTER_IDS (":245-249"). PDAL reserves 0 for 'unclustered';
+    # engine labels are min-pids with -1 = below-min_points, so 0 can be a
+    # REAL cluster here.
+    cull_cluster_ids: tuple[int, ...] = field(default=(-1,), metadata={"help": (
+        "comma-separated cluster ids dropped from products/meshes "
+        "(reference default '-1,0'; engine labels reserve only -1)")})
+    # COLORMAP (":140-147"): the ramp is grid.colormap_encode
+    colormap: str = field(default="bwr", metadata={"help": (
+        "recorded in config; the engine ships its built-in "
+        "diverging blue-white-red ramp")})
     # SPACING override (vcd/main.py:95-99): accepted for CLI contract
     # parity; the reference parses it into VcdRunConfig but its pipeline
     # never consumes it (grep: only main.py references SPACING).

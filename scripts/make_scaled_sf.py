@@ -5,11 +5,13 @@ a 10x lineitem (same columns/distributions the queries touch: pid lanes
 from l_orderkey*8+l_linenumber with l_linenumber in 1..7, shipdate/flags/
 quantity/price/discount for the TPC-H rollup) and symlinks the sf0.1
 documents/embeddings/events tables (the text/embedding queries are
-corpus-scale, not point-scale). NOT driver data — used only by
-scripts/profile_queries.py for before/after scaling checks recorded in
-OPTIMIZATION_r06.md.
+corpus-scale, not point-scale). NOT driver data — for 10x-row runs of
+the bench suite:
 
-Usage: python scripts/make_scaled_sf.py [--rows 6000000] [--out /tmp/sf1]
+    python scripts/make_scaled_sf.py [--rows 6000000] [--out /tmp/sf1]
+    SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py
+
+The session takes its defaults: SPARK_GRAFT_CPUS or the host's core count.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ def main() -> None:
 
     from codem_spark.session import get_spark
 
-    spark = get_spark(app_name="make_scaled_sf", cpus=32, shuffle_partitions=64)
+    spark = get_spark(app_name="make_scaled_sf")
     os.makedirs(args.out, exist_ok=True)
     n = args.rows
     li = (
