@@ -13,9 +13,12 @@ from __future__ import annotations
 
 import dataclasses
 import json
+import math
 import os
 from dataclasses import dataclass, field
 from typing import Any
+
+import numpy as np
 
 
 @dataclass
@@ -141,6 +144,27 @@ class RegistrationParameters:
     # ``matrix`` when both datasets are metric; populated by pipeline.register
     # when unit factors are supplied.
     matrix_native: list[list[float]] | None = None
+
+    @classmethod
+    def from_fit(
+        cls, matrix: np.ndarray, msr: np.ndarray, n_pairs: int, iterations: int = 0
+    ) -> RegistrationParameters:
+        """The record of a fitted 4x4 similarity ``matrix``: its scale, Euler
+        angles and translation, and the RMSEs from ``msr``, the per-axis mean
+        squared residuals over its ``n_pairs`` pairs."""
+        from codem_spark.functions.geo import decompose_similarity
+
+        mx, my, mz = (float(v) for v in msr)
+        return cls(
+            matrix=matrix.tolist(),
+            n_pairs=n_pairs,
+            iterations=iterations,
+            rmse_x=math.sqrt(mx),
+            rmse_y=math.sqrt(my),
+            rmse_z=math.sqrt(mz),
+            rmse_3d=math.sqrt(mx + my + mz),
+            **decompose_similarity(matrix),
+        )
 
     def to_dict(self) -> dict[str, Any]:
         return dataclasses.asdict(self)

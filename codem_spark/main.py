@@ -31,7 +31,10 @@ from codem_spark.config import EngineConfig
 
 
 def _bool_arg(s: str) -> bool:
-    return s.lower() != "false"
+    v = s.lower()
+    if v not in ("true", "false"):
+        raise argparse.ArgumentTypeError(f"expected true or false, got {s!r}")
+    return v == "true"
 
 
 def _csv_ints(s: str) -> tuple[int, ...]:
@@ -130,19 +133,12 @@ def cmd_register(spark: SparkSession, args: argparse.Namespace) -> dict:
             return json.load(fh)
     fnd = _read_points(spark, args.foundation_file)
     aoi = _read_points(spark, args.aoi_file)
-    capture: dict = {}
+    # feature-match visualization PNG, written on every register run like
+    # the reference (_save_match_img, dsm.py:276-333)
     c, f, out = P.register(
         fnd, aoi, cfg=cfg, resolution=args.resolution,
         fnd_units=args.fnd_units, aoi_units=args.aoi_units,
-        capture=capture,
-    )
-    # feature-match visualization PNG, written on every register run like
-    # the reference (_save_match_img, dsm.py:276-333); from-scratch
-    # numpy raster + PNG encode — no cv2 in the container
-    from codem_spark.registration import viz as viz_mod
-
-    viz_mod.save_match_visualization(
-        capture, os.path.join(args.output_dir, "dsm_feature_matches.png")
+        match_image=os.path.join(args.output_dir, "dsm_feature_matches.png"),
     )
     if cfg.icp_save_residuals:
         # reference --ICP_SAVE_RESIDUALS (apply.py:375-391): append

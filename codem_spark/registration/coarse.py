@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from codem_spark import util
 from codem_spark.config import EngineConfig, RegistrationParameters
-from codem_spark.functions.geo import decompose_similarity
 from codem_spark.operators.dedup import band_keys
 
 _POP = np.array([bin(i).count("1") for i in range(65536)], dtype=np.int64)
@@ -188,29 +187,43 @@ def _match_features_lsh(
 
 
 def umeyama(src: np.ndarray, dst: np.ndarray, solve_scale: bool) -> np.ndarray:
-    """Closed-form least-squares similarity transform src -> dst
-    (Umeyama 1991, Eq. 38-43 — same formulation the reference implements at
-    dsm.py:523-592). Returns a 4x4 homogeneous matrix."""
-    n, m = src.shape
-    mu_src = src.mean(axis=0)
-    mu_dst = dst.mean(axis=0)
-    ds = dst - mu_dst
-    ss = src - mu_src
-    cov = ds.T @ ss / n
-    u, s, vt = np.linalg.svd(cov)
-    d = np.ones(m)
-    if np.linalg.det(cov) < 0 or (np.linalg.matrix_rank(cov) == m - 1 and np.linalg.det(u) * np.linalg.det(vt) < 0):
-        d[m - 1] = -1
-    r = u @ np.diag(d) @ vt
+    """Closed-form least-squares similarity transforms src -> dst for a stack
+    of point sets (Umeyama 1991, Eq. 38-43 — same formulation the reference
+    implements at dsm.py:523-592): (t, k, 3) pairs -> (t, 4, 4) homogeneous
+    matrices. A set whose SVD does not converge gets a NaN matrix, so every
+    residual under it is non-finite."""
+    t, k, _ = src.shape
+    mu_s = src.mean(axis=1)  # (t, 3)
+    mu_d = dst.mean(axis=1)
+    ss = src - mu_s[:, None, :]
+    ds = dst - mu_d[:, None, :]
+    cov = np.einsum("tki,tkj->tij", ds, ss) / k  # (t, 3, 3)
+    ok = np.ones(t, bool)
+    try:
+        u, s, vt = np.linalg.svd(cov)
+    except np.linalg.LinAlgError:
+        # one failing set fails the stacked call: find it, solve the rest
+        for i in range(t):
+            try:
+                np.linalg.svd(cov[i])
+            except np.linalg.LinAlgError:
+                ok[i] = False
+        cov = np.where(ok[:, None, None], cov, np.eye(3))
+        u, s, vt = np.linalg.svd(cov)
+    # numpy matrix_rank default tolerance: s.max() * max(M, N) * eps
+    rank = (s > (s[:, :1] * 3 * np.finfo(np.float64).eps)).sum(axis=1)
+    d = np.ones((t, 3))
+    flip = (np.linalg.det(cov) < 0) | ((rank == 2) & (np.linalg.det(u) * np.linalg.det(vt) < 0))
+    d[flip, 2] = -1.0
+    r = np.einsum("tij,tj,tjk->tik", u, d, vt)  # u @ diag(d) @ vt
     if solve_scale:
-        var_src = ss.var(axis=0).sum()
-        c = (s * d).sum() / max(var_src, 1e-300)
+        c = (s * d).sum(axis=1) / np.maximum(ss.var(axis=1).sum(axis=1), 1e-300)
     else:
-        c = 1.0
-    t = mu_dst - c * r @ mu_src
-    m4 = np.eye(4)
-    m4[:3, :3] = c * r
-    m4[:3, 3] = t
+        c = np.ones(t)
+    m4 = np.tile(np.eye(4), (t, 1, 1))
+    m4[:, :3, :3] = c[:, None, None] * r
+    m4[:, :3, 3] = mu_d - c[:, None] * np.einsum("tij,tj->ti", r, mu_s)
+    m4[~ok] = np.nan
     return m4
 
 
@@ -222,56 +235,22 @@ def _ransac_consensus_batch(
     solve_scale: bool,
 ) -> tuple[int, "np.ndarray | None"]:
     """Batched RANSAC consensus search: for every 3-point sample, the
-    umeyama similarity (stacked SVD) and its inlier count over all pairs;
-    returns (best_count, inlier mask of the FIRST best trial). Trials with
-    duplicate sample indices count -1 (the loop skipped them)."""
-    trials = len(samples)
-    eps = np.finfo(np.float64).eps
+    umeyama similarity and its inlier count over all pairs, in chunks of
+    ``_RANSAC_CHUNK`` trials; returns (best_count, inlier mask of the FIRST
+    best trial). Trials with duplicate sample indices count -1 (the loop
+    skipped them), as do trials with a non-finite residual."""
     best_count = -1
     best_inliers: np.ndarray | None = None
-    for lo in range(0, trials, _RANSAC_CHUNK):
+    for lo in range(0, len(samples), _RANSAC_CHUNK):
         sl = samples[lo : lo + _RANSAC_CHUNK]
-        t = len(sl)
-        s3 = src[sl]  # (t, 3, 3)
-        d3 = dst[sl]
         valid = (
             (sl[:, 0] != sl[:, 1]) & (sl[:, 0] != sl[:, 2]) & (sl[:, 1] != sl[:, 2])
         )
-        mu_s = s3.mean(axis=1)  # (t, 3)
-        mu_d = d3.mean(axis=1)
-        ss = s3 - mu_s[:, None, :]
-        ds = d3 - mu_d[:, None, :]
-        cov = np.einsum("tki,tkj->tij", ds, ss) / _MIN_SAMPLES  # (t, 3, 3)
-        try:
-            u, s, vt = np.linalg.svd(cov)
-        except np.linalg.LinAlgError:
-            # fall back: mark the whole chunk invalid except loop-solvable
-            for i in range(t):
-                if not valid[i]:
-                    continue
-                try:
-                    u1, s1, vt1 = np.linalg.svd(cov[i])
-                except np.linalg.LinAlgError:
-                    valid[i] = False
-            u, s, vt = np.linalg.svd(np.where(valid[:, None, None], cov, np.eye(3)))
-        det_cov = np.linalg.det(cov)
-        det_uvt = np.linalg.det(u) * np.linalg.det(vt)
-        # numpy matrix_rank default tolerance: s.max() * max(M, N) * eps
-        rank = (s > (s[:, :1] * 3 * eps)).sum(axis=1)
-        d = np.ones((t, 3))
-        flip = (det_cov < 0) | ((rank == 2) & (det_uvt < 0))
-        d[flip, 2] = -1.0
-        r = np.einsum("tij,tj,tjk->tik", u, d, vt)  # u @ diag(d) @ vt
-        if solve_scale:
-            var_src = ss.var(axis=1).sum(axis=1)  # (t,)
-            c = (s * d).sum(axis=1) / np.maximum(var_src, 1e-300)
-        else:
-            c = np.ones(t)
-        tv = mu_d - c[:, None] * np.einsum("tij,tj->ti", r, mu_s)
+        m = umeyama(src[sl], dst[sl], solve_scale)  # (t, 4, 4)
         # residuals of ALL pairs under every trial's transform (degenerate
         # trials can overflow to inf — masked out by the finite check)
         with np.errstate(over="ignore", invalid="ignore"):
-            proj = c[:, None, None] * np.einsum("nj,tij->tni", src, r) + tv[:, None, :]
+            proj = np.einsum("nj,tij->tni", src, m[:, :3, :3]) + m[:, None, :3, 3]
             res2 = ((proj - dst[None, :, :]) ** 2).sum(axis=2)  # (t, n)
         inl = res2 < threshold * threshold
         finite = np.isfinite(res2).all(axis=1)
@@ -300,25 +279,22 @@ def ransac_similarity(
     rng = np.random.default_rng(_RANSAC_SEED)
     trials = min(max_iter, 4 * n * n if n < 50 else max_iter)
     samples = rng.integers(0, n, size=(trials, _MIN_SAMPLES))
-    # Vectorized trial loop (optimization round r6): the per-trial Python
-    # loop (3-point umeyama + residual scan per trial) measured 1.25 s of
-    # driver-serial time per coarse solve at 10^4 trials. All trials now run
-    # as ONE batched pipeline — stacked 3x3 SVD, batched consensus counts —
-    # with identical sampling (same seeded draw), the same duplicate-index
-    # skip, numpy's own matrix_rank tolerance, and first-maximum selection
-    # exactly like the loop's strict '>' update rule.
+    # All trials run batched (a per-trial Python loop measured 1.25 s of
+    # driver-serial time per coarse solve at 10^4 trials): the same umeyama
+    # as the fits below, on stacks of 3-point samples, with first-maximum
+    # selection like a loop's strict '>' update rule.
     best_count, best_inliers = _ransac_consensus_batch(
         src, dst, samples, threshold, solve_scale
     )
     if best_inliers is None or best_count < _MIN_SAMPLES:
         raise ValueError("RANSAC failed to find a consensus set")
-    m = umeyama(src[best_inliers], dst[best_inliers], solve_scale)
+    m = umeyama(src[None, best_inliers], dst[None, best_inliers], solve_scale)[0]
     # one refinement pass on the refit inliers (standard; reference's
     # skimage ransac does the same internally)
     res = np.linalg.norm(src @ m[:3, :3].T + m[:3, 3] - dst, axis=1)
     inl = res < threshold
     if inl.sum() >= _MIN_SAMPLES:
-        m = umeyama(src[inl], dst[inl], solve_scale)
+        m = umeyama(src[None, inl], dst[None, inl], solve_scale)[0]
         best_inliers = inl
     return m, best_inliers
 
@@ -327,14 +303,11 @@ def coarse_registration(
     fnd_kp: DataFrame,
     aoi_kp: DataFrame,
     cfg: EngineConfig | None = None,
-    capture: dict | None = None,
-) -> RegistrationParameters:
+) -> tuple[RegistrationParameters, pd.DataFrame, np.ndarray]:
     """Full coarse stage: match -> RANSAC -> umeyama -> RMSE record
-    (the reference's registration.txt fields, dsm.py:404-432).
-
-    ``capture``: optional dict the stage fills with match diagnostics
-    (pairs frame, inlier mask, coarse matrix) — consumed by the
-    feature-match visualization (registration/viz.py)."""
+    (the reference's registration.txt fields, dsm.py:404-432). Returns the
+    record, the putative pairs and the inlier mask over them — what the
+    feature-match image (registration/viz.py) draws."""
     cfg = cfg or EngineConfig()
     pairs = match_features(fnd_kp, aoi_kp, cfg.dsm_lowes_ratio)
     m, inl = ransac_similarity(
@@ -343,24 +316,8 @@ def coarse_registration(
         max_iter=cfg.dsm_ransac_max_iter,
         solve_scale=cfg.dsm_solve_scale,
     )
-    if capture is not None:
-        capture.update(pairs=pairs, inliers=inl, coarse_matrix=m.tolist())
     src = pairs[["ax", "ay", "az"]].to_numpy(np.float64)[inl]
     dst = pairs[["fx", "fy", "fz"]].to_numpy(np.float64)[inl]
     res = src @ m[:3, :3].T + m[:3, 3] - dst
-    dec = decompose_similarity(m)
-    return RegistrationParameters(
-        matrix=m.tolist(),
-        omega=dec["omega"],
-        phi=dec["phi"],
-        kappa=dec["kappa"],
-        trans_x=dec["trans_x"],
-        trans_y=dec["trans_y"],
-        trans_z=dec["trans_z"],
-        scale=dec["scale"],
-        n_pairs=int(inl.sum()),
-        rmse_x=float(np.sqrt((res[:, 0] ** 2).mean())),
-        rmse_y=float(np.sqrt((res[:, 1] ** 2).mean())),
-        rmse_z=float(np.sqrt((res[:, 2] ** 2).mean())),
-        rmse_3d=float(np.sqrt((res**2).sum(axis=1).mean())),
-    )
+    params = RegistrationParameters.from_fit(m, (res**2).mean(axis=0), int(inl.sum()))
+    return params, pairs, inl

@@ -382,16 +382,6 @@ def fine_registration(
             sc.setJobDescription(None)
 
     n_final = int(acc[_ACC_COLS.index("n")])
-    rx2, ry2, rz2 = acc[len(_ACC_COLS):] / n_final  # per-axis mean squared residual
     t_final = remean @ t_c @ demean  # back to world frame
-    dec = decompose_similarity(t_final)
-    return RegistrationParameters(
-        matrix=t_final.tolist(),
-        omega=dec["omega"], phi=dec["phi"], kappa=dec["kappa"],
-        trans_x=dec["trans_x"], trans_y=dec["trans_y"], trans_z=dec["trans_z"],
-        scale=dec["scale"],
-        n_pairs=n_final,
-        iterations=n_iters,
-        rmse_x=math.sqrt(rx2), rmse_y=math.sqrt(ry2), rmse_z=math.sqrt(rz2),
-        rmse_3d=math.sqrt(rx2 + ry2 + rz2),
-    )
+    msr = acc[len(_ACC_COLS):] / n_final  # per-axis mean squared residual
+    return RegistrationParameters.from_fit(t_final, msr, n_final, n_iters)

@@ -19,17 +19,20 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codem_spark import util
 from codem_spark.config import EngineConfig, RegistrationParameters
+from codem_spark.functions import imagecodec
 from codem_spark.functions.geo import apply_transform_cols
 from codem_spark.operators import grid
 from codem_spark.operators import knn as knn_mod
 from codem_spark.registration import coarse as coarse_mod
 from codem_spark.registration import features
 from codem_spark.registration import icp as icp_mod
+from codem_spark.registration import viz
 
 Extent = tuple[float, float, float, float]
 
@@ -108,17 +111,6 @@ def _prep_dsm(
     return util.persist(q.select("gx", "gy", "z", "z_u8", F.col("bp_u8").alias("det_u8")))
 
 
-def estimate_pipeline_resolution(
-    fnd: DataFrame, aoi: DataFrame, extent: Extent, cfg: EngineConfig
-) -> float:
-    """Resolution negotiation (reference main.py:595-607): pipeline res =
-    max(fnd native res, aoi native res, MIN_RESOLUTION) — 'higher density
-    data is resampled to match the lower' (docs/details.md:12)."""
-    rf = grid.estimate_resolution(fnd, extent)
-    ra = grid.estimate_resolution(aoi, extent)
-    return max(rf, ra, cfg.min_resolution)
-
-
 def preprocess(
     fnd_points: DataFrame,
     aoi_points: DataFrame,
@@ -143,7 +135,13 @@ def preprocess(
             # full-extent mode: union bbox, no clip (the reference default)
             extent = grid.bbox_union(bf, ba)
     if resolution is None:
-        resolution = estimate_pipeline_resolution(fnd_points, aoi_points, extent, cfg)
+        # resolution negotiation (reference main.py:595-607): the coarser
+        # native resolution of the two — "higher density data is resampled
+        # to match the lower" (docs/details.md:12)
+        resolution = max(
+            grid.estimate_resolution(fnd_points, extent),
+            grid.estimate_resolution(aoi_points, extent),
+        )
     resolution = max(resolution, cfg.min_resolution)
     # The two sides' DSM chains are independent job DAGs — submit them from
     # two driver threads so their stages interleave on the same executors
@@ -160,18 +158,24 @@ def preprocess(
     return PreprocessResult(fnd_points, aoi_points, fnd_dsm, aoi_dsm, extent, resolution)
 
 
-def coarse_registration(
-    prep: PreprocessResult, cfg: EngineConfig | None = None,
-    capture: dict | None = None,
-) -> RegistrationParameters:
-    cfg = cfg or EngineConfig()
+def _coarse_stage(
+    prep: PreprocessResult, cfg: EngineConfig
+) -> tuple[RegistrationParameters, pd.DataFrame, np.ndarray]:
+    """Keypoints of both DSMs -> coarse.coarse_registration: (record,
+    putative pairs, inlier mask)."""
     # persist keypoints: the LSH route reads both frames again after the
     # matcher's bounded collects, which would otherwise rerun the Harris
     # tile kernels
     with util.cache_scope():
         fnd_kp = util.persist(features.extract_features(prep.fnd_dsm, prep.extent, prep.resolution))
         aoi_kp = util.persist(features.extract_features(prep.aoi_dsm, prep.extent, prep.resolution))
-        return coarse_mod.coarse_registration(fnd_kp, aoi_kp, cfg, capture=capture)
+        return coarse_mod.coarse_registration(fnd_kp, aoi_kp, cfg)
+
+
+def coarse_registration(
+    prep: PreprocessResult, cfg: EngineConfig | None = None
+) -> RegistrationParameters:
+    return _coarse_stage(prep, cfg or EngineConfig())[0]
 
 
 def fine_registration_stage(
@@ -291,7 +295,7 @@ def register(
     resolution: float | None = None,
     fnd_units: str | float = 1.0,
     aoi_units: str | float = 1.0,
-    capture: dict | None = None,
+    match_image: str | None = None,
 ) -> tuple[RegistrationParameters, RegistrationParameters, DataFrame]:
     """Full pipeline: returns (coarse, fine, registered AOI DataFrame).
 
@@ -302,6 +306,9 @@ def register(
     parameters carry ``matrix_native`` mapping AOI native units straight to
     foundation native units, and the registered AOI DataFrame is expressed
     in FOUNDATION native units. ``extent``, if given, is in meters.
+
+    ``match_image``: a path to write the feature-match PNG to
+    (registration/viz.py; reference dsm_feature_matches.png).
     """
     from codem_spark.functions import crs
 
@@ -314,19 +321,22 @@ def register(
     # on error paths too
     with util.cache_scope():
         prep = preprocess(fnd_m, aoi_m, extent, cfg, resolution)
-        c = coarse_registration(prep, cfg, capture=capture)
+        c, pairs, inliers = _coarse_stage(prep, cfg)
         f = fine_registration_stage(prep, c, cfg)
         native = crs.registration_to_native(np.array(f.matrix, np.float64), ff, af)
         f.matrix_native = native.tolist()
         out = apply_transform_cols(aoi_points, native)
-        if capture is not None:
-            # the u8 planes the match viz renders — pulled before the DSMs
-            # are released. BOUNDED collect: cell count grows with scene
-            # extent, so the raw planes are a driver OOM at 100x for a
-            # cosmetic PNG. Above ``VIZ_MAX_CELLS`` the planes are
-            # block-max-reduced to fit the cap (factor 1 = the exact plane).
-            capture["fnd_dsm_u8"] = _capped_u8_plane(prep.fnd_dsm)
-            capture["aoi_dsm_u8"] = _capped_u8_plane(prep.aoi_dsm)
-            capture["extent"] = prep.extent
-            capture["resolution"] = prep.resolution
+        if match_image is not None:
+            # the u8 planes are pulled before the DSMs are released
+            canvas = viz.render_match_image(
+                fnd_u8=_capped_u8_plane(prep.fnd_dsm),
+                aoi_u8=_capped_u8_plane(prep.aoi_dsm),
+                pairs=pairs,
+                inliers=inliers,
+                matrix=np.array(c.matrix, np.float64),
+                extent=prep.extent,
+                resolution=prep.resolution,
+            )
+            with open(match_image, "wb") as fh:
+                fh.write(imagecodec.encode_png(canvas))
         return c, f, out

@@ -92,19 +92,3 @@ def render_match_image(
             _draw_line(canvas, apx[i], apy[i], fpx[i] + xoff, fpy[i], _GREEN)
     return canvas
 
-
-def save_match_visualization(capture: dict, path: str) -> str:
-    """Write dsm_feature_matches.png from a register(..., capture=...) dict
-    (keys: fnd_dsm_u8, aoi_dsm_u8, pairs, inliers, coarse_matrix, extent,
-    resolution)."""
-    from codem_spark.functions import imagecodec
-
-    canvas = render_match_image(
-        capture["fnd_dsm_u8"], capture["aoi_dsm_u8"], capture["pairs"],
-        capture["inliers"], np.asarray(capture["coarse_matrix"], np.float64),
-        capture["extent"], capture["resolution"],
-    )
-    blob = imagecodec.encode_png(canvas)
-    with open(path, "wb") as fh:
-        fh.write(blob)
-    return path

@@ -167,3 +167,22 @@ def test_help_lists_the_pinned_options(capsys, command):
     assert exit_.value.code == 0
     shown = set(re.findall(r"(?<![\w-])--[a-z][a-z-]*", capsys.readouterr().out))
     assert shown == set(_OPTIONS[command])
+
+
+@pytest.mark.parametrize("value", ["0", "no", "off", "1", "yes", ""])
+@pytest.mark.parametrize("flag", ["--icp-robust", "--dsm-solve-scale", "--tight-search"])
+def test_bool_flags_reject_values_other_than_true_and_false(capsys, flag, value):
+    with pytest.raises(SystemExit) as exit_:
+        cli.main(["register", "a.parquet", "b.parquet", "--output-dir", "out", flag, value],
+                 spark=object())
+    assert exit_.value.code == 2
+    assert "expected true or false" in capsys.readouterr().err
+
+
+def test_bool_flags_take_true_and_false_in_any_case(monkeypatch, tmp_path):
+    got = _config_json(monkeypatch, tmp_path, [
+        "register", "--icp-robust", "TRUE", "--dsm-solve-scale", "False",
+        "--tight-search", "fAlSe", "--icp-solve-scale", "True",
+    ])
+    assert (got["icp_robust"], got["dsm_solve_scale"]) == (True, False)
+    assert (got["tight_search"], got["icp_solve_scale"]) == (False, True)

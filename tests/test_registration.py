@@ -201,16 +201,127 @@ def test_coarse_match_does_not_depend_on_keypoint_partitioning(spark, clouds, mo
             for dsm in (prep.fnd_dsm, prep.aoi_dsm)
         ]
         for n in (1, 3, 17):
-            capture: dict = {}
-            c = coarse.coarse_registration(
-                kps[0].repartition(n), kps[1].repartition(n), cfg, capture=capture
+            c, pairs, _inliers = coarse.coarse_registration(
+                kps[0].repartition(n), kps[1].repartition(n), cfg
             )
-            runs.append((capture["pairs"], c.matrix))
+            runs.append((pairs, c.matrix))
     pairs0, matrix0 = runs[0]
     assert len(pairs0) >= 5
     for pairs, matrix in runs[1:]:
         pd.testing.assert_frame_equal(pairs, pairs0, check_exact=True)
         assert matrix == matrix0
+
+
+# --------------------------------------------------------------------------
+# The coarse solver on the driver alone: no Spark.
+
+_PLANTED = similarity_matrix(1.7, 3.0, -5.0, 40.0, (120.0, -35.0, 8.0))
+
+
+def _lsq_similarity(src: np.ndarray, dst: np.ndarray, solve_scale: bool) -> np.ndarray:
+    """Least-squares similarity src -> dst for one point set, written out
+    independently of the engine (Umeyama 1991, Eq. 40-42, with the
+    reflection fix taken from det(U V^T))."""
+    ms, md = src.mean(axis=0), dst.mean(axis=0)
+    u, s, vt = np.linalg.svd((dst - md).T @ (src - ms))
+    d = np.array([1.0, 1.0, np.sign(np.linalg.det(u @ vt))])
+    r = u @ np.diag(d) @ vt
+    c = (s * d).sum() / ((src - ms) ** 2).sum() if solve_scale else 1.0
+    m = np.eye(4)
+    m[:3, :3] = c * r
+    m[:3, 3] = md - c * r @ ms
+    return m
+
+
+def _pair_table(seed: int = 5):
+    """150 putative pairs, 30 of them (20%) inliers of a planted similarity
+    at sigma 0.5 m, the rest uniform over the scene. -> (pairs, inlier mask)."""
+    rng = np.random.default_rng(seed)
+    n = 150
+    src = rng.uniform(0, 1000, (n, 3)) * [1, 1, 0.1]
+    dst = rng.uniform(-500, 1500, (n, 3)) * [1, 1, 0.1]
+    inl = np.zeros(n, bool)
+    inl[rng.choice(n, 30, replace=False)] = True
+    dst[inl] = src[inl] @ _PLANTED[:3, :3].T + _PLANTED[:3, 3] + rng.normal(0, 0.5, (30, 3))
+    pairs = pd.DataFrame(np.column_stack([dst, src]), columns=["fx", "fy", "fz", "ax", "ay", "az"])
+    return pairs, inl
+
+
+@pytest.mark.parametrize("solve_scale", [True, False])
+@pytest.mark.parametrize("k", [3, 200])
+def test_umeyama_recovers_planted_similarity(k, solve_scale):
+    from codem_spark.registration import coarse
+
+    truth = _PLANTED if solve_scale else similarity_matrix(1.0, 3.0, -5.0, 40.0, (120.0, -35.0, 8.0))
+    src = np.random.default_rng(k).uniform(-100, 100, (k, 3))
+    dst = src @ truth[:3, :3].T + truth[:3, 3]
+    m = coarse.umeyama(src[None], dst[None], solve_scale)[0]
+    np.testing.assert_allclose(m, truth, rtol=0, atol=1e-9)
+
+
+@pytest.mark.parametrize("solve_scale", [True, False])
+def test_umeyama_returns_a_rotation_on_a_coplanar_set(solve_scale):
+    """Points in the plane z = 0 mirrored in x: the best orthogonal fit is a
+    reflection, yet the 180 degree turn about y fits exactly, and the rank-2
+    sign rule must pick it."""
+    from codem_spark.registration import coarse
+
+    src = np.random.default_rng(3).uniform(-10, 10, (20, 3)) * [1, 1, 0]
+    dst = src * [-1, 1, 1] + [5.0, 6.0, 7.0]
+    m = coarse.umeyama(src[None], dst[None], solve_scale)[0]
+    r = m[:3, :3] / np.cbrt(np.linalg.det(m[:3, :3]))
+    assert np.linalg.det(r) == pytest.approx(1.0, abs=1e-12)
+    np.testing.assert_allclose(src @ m[:3, :3].T + m[:3, 3], dst, rtol=0, atol=1e-9)
+
+
+def test_umeyama_fails_only_the_set_whose_svd_fails():
+    """A NaN makes one set's SVD fail, which fails the stacked call: that
+    set gets a NaN matrix (RANSAC then counts its trial invalid) and the
+    others are solved as on their own."""
+    from codem_spark.registration import coarse
+
+    src = np.random.default_rng(4).normal(size=(5, 4, 3))
+    dst = src @ _PLANTED[:3, :3].T + _PLANTED[:3, 3]
+    src[2, 1, 0] = np.nan
+    m = coarse.umeyama(src, dst, True)
+    assert np.isnan(m[2]).all()
+    rest = [0, 1, 3, 4]
+    np.testing.assert_array_equal(m[rest], coarse.umeyama(src[rest], dst[rest], True))
+
+
+def test_ransac_similarity_finds_the_planted_inliers():
+    from codem_spark.registration import coarse
+
+    pairs, planted = _pair_table()
+    m, inl = coarse.ransac_similarity(pairs, threshold=10.0, max_iter=10000, solve_scale=True)
+    np.testing.assert_array_equal(inl, planted)
+    src = pairs[["ax", "ay", "az"]].to_numpy()
+    dst = pairs[["fx", "fy", "fz"]].to_numpy()
+    np.testing.assert_allclose(m, _lsq_similarity(src[planted], dst[planted], True),
+                               rtol=0, atol=1e-6)
+    np.testing.assert_allclose(m, _PLANTED, rtol=0, atol=1.0)
+
+
+def test_ransac_consensus_skips_duplicate_and_collinear_samples():
+    """A trial that draws one pair twice is skipped (it counts -1), and a
+    trial on three collinear points scores without winning: adding both to
+    the front of a batch leaves the consensus unchanged."""
+    from codem_spark.registration import coarse
+
+    pairs, planted = _pair_table()
+    src = pairs[["ax", "ay", "az"]].to_numpy()
+    dst = pairs[["fx", "fy", "fz"]].to_numpy()
+    out = np.flatnonzero(~planted)[:3]
+    src[out] = [100.0, 200.0, 10.0] + np.outer([0.0, 1.0, 3.0], [7.0, -2.0, 0.5])
+    i, j = np.flatnonzero(planted)[:2]
+    samples = np.random.default_rng(0).integers(0, len(src), (600, 3))
+    extra = np.array([[i, i, j], out])
+    base = coarse._ransac_consensus_batch(src, dst, samples, 10.0, True)
+    both = coarse._ransac_consensus_batch(src, dst, np.vstack([extra, samples]), 10.0, True)
+    assert base[0] == both[0] >= 25
+    np.testing.assert_array_equal(base[1], both[1])
+    assert coarse._ransac_consensus_batch(src, dst, extra[:1], 10.0, True)[0] == -1
+    assert coarse._ransac_consensus_batch(src, dst, extra[1:], 10.0, True)[0] >= 0
 
 
 def test_fine_refines_to_subresolution(spark, clouds):
